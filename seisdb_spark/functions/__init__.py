@@ -9,6 +9,7 @@ is an Arrow-batched ``mapInPandas``.
     vectors.py     dot/norm chains, sign-bucket LSH keys for embeddings
     cluster.py     iterative Lloyd k-means refinement (map-only assignment)
     graph.py       connected components (lazy union-find / pointer jumping)
+                   and superstep_loop, the shared fixpoint-loop scaffold
     multimodal.py  BinaryType payload + typed-metadata plumbing and decode
 """
 

@@ -26,11 +26,13 @@ Two forms:
   session threshold (then the round plan carries ZERO shuffle
   exchanges and runs THREE propagation hops, cutting the round count
   ~3x), sort-merge against the pre-clustered edge side otherwise.
-  ``localCheckpoint`` per round cuts lineage; ONE aggregate action per
-  round materializes the checkpoint and doubles as the convergence
-  certificate.  This is the same alternating-contraction idea as the
-  large-star/small-star CC algorithm; use it when the dup-pair edge
-  list itself outgrows one task (billions of edges).
+  The rounds run under :func:`superstep_loop`, the superstep scaffold
+  shared with k-core, BFS and SSSP: ``localCheckpoint`` per round cuts
+  lineage; ONE aggregate action per round materializes the checkpoint
+  and doubles as the convergence certificate.  This is the same
+  alternating-contraction idea as the large-star/small-star CC
+  algorithm; use it when the dup-pair edge list itself outgrows one
+  task (billions of edges).
 * :func:`cc_auto` — the ACTION-path dispatcher: materializes the pair
   list once, counts it, and picks the single-task form below
   :data:`CC_SINGLE_TASK_MAX_EDGES` edges and the distributed form above.
@@ -40,14 +42,17 @@ Two forms:
 
 from __future__ import annotations
 
+import itertools
 import logging
 import math
 import os
-from collections.abc import Iterator
-from contextlib import contextmanager
+import string
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager, nullcontext
+from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -55,20 +60,6 @@ from seisdb_spark.plancheck import final_plan
 
 _LOG = logging.getLogger(__name__)
 _RELEASE_FAILED_ONCE = False
-
-#: Executed per-round plans of the LAST :func:`connected_components` run
-#: (one entry per propagation round), captured for the scale harness: the
-#: returned labeling's plan only shows a projection over the last
-#: checkpointed iterate — the neighbour-min + pointer-jump joins execute
-#: behind localCheckpoint boundaries during the loop, so a predicate that
-#: reads only the final plan would certify nothing about the supersteps
-#: that dominate the cost (the KCORE_ROUND_PLANS discipline).
-CC_ROUND_PLANS: list[str] = []
-
-#: Monotone suffix for the per-round temp-view names (:func:`_cc_round`):
-#: unique per call so concurrent loops in one session (driver-thread
-#: overlap, guide §2.6) can never read each other's bindings.
-_CC_VIEW_SEQ = 0
 
 
 def release_checkpoint(df: DataFrame) -> None:
@@ -83,8 +74,9 @@ def release_checkpoint(df: DataFrame) -> None:
     A py4j surface drift (``queryExecution().analyzed().rdd()`` moving)
     would silently turn every release into a no-op and let long cascades
     re-accumulate blocks — so the first failure logs loudly (once per
-    process; r15 advice), and ``tests/test_graph_scale_shapes.py`` pins
-    that persistent-RDD count actually shrinks across a peel.
+    process; r15 advice), and ``tests/test_graph_cc.py``
+    (``test_release_checkpoint_drops_superseded_round_blocks``) pins that
+    the persistent-RDD count does not grow with the round count.
 
     Releasing also DEREGISTERS the df from the session-lifetime
     checkpoint list (``register_session_checkpoint``) when present:
@@ -171,11 +163,16 @@ def hint_broadcast_if_small(df: DataFrame, n_rows: int | None) -> DataFrame:
     labeling — the input is returned unchanged and the round keeps the
     shuffle join that AQE skew-handles.  Pure strategy hint: join results
     are identical either way."""
-    if n_rows is None:
-        return df
-    if n_rows * LOOP_STATE_ROW_BYTES <= _auto_broadcast_bytes(df.sparkSession):
+    if n_rows is not None and fits_broadcast(df.sparkSession, n_rows):
         return F.broadcast(df)
     return df
+
+
+def fits_broadcast(spark, n_rows: int) -> bool:
+    """Whether ``n_rows`` rows of loop state fit the session's broadcast
+    threshold (at :data:`LOOP_STATE_ROW_BYTES` per row) — the one gate
+    every driver loop sizes its round hints with."""
+    return n_rows * LOOP_STATE_ROW_BYTES <= _auto_broadcast_bytes(spark)
 
 
 #: Target bytes per partition of a loop's persisted edge checkpoint —
@@ -283,6 +280,129 @@ def partitioned_edge_checkpoint(
         )
 
 
+@dataclass(frozen=True)
+class Superstep:
+    """One executed :func:`superstep_loop` round: its number, its
+    certificate, and its executed (AQE-final) plan."""
+
+    round: int
+    cert: tuple
+    plan: str
+
+
+#: Per-round record of the LAST run of each named :func:`superstep_loop`
+#: (``"cc"``, ``"kcore"``, ``"bfs"``, ``"sssp"``), replaced when the next
+#: run of that name starts.  A loop's returned DataFrame only scans its
+#: final checkpoint — the rounds ran behind localCheckpoint boundaries —
+#: so round-plan checks (tests, the scale harness, plan dumps) read here.
+LAST_SUPERSTEPS: dict[str, list[Superstep]] = {}
+
+_VIEW_SEQ = itertools.count(1)
+_SQL_FIELDS = string.Formatter()
+
+
+def superstep_loop(
+    name: str,
+    tables: dict[str, DataFrame | Callable[[], DataFrame]],
+    carry: str,
+    round_sql: Callable[[tuple], str],
+    certificate: list[Column],
+    converged: Callable[[tuple, tuple], bool],
+    seed_cert: tuple,
+    max_rounds: int,
+    *,
+    owned: tuple[str, ...] = (),
+    aqe_off: bool = False,
+    fold: Callable[[int, DataFrame], None] | None = None,
+    cap_error: str | None = None,
+) -> tuple[DataFrame, int]:
+    """Run a checkpointed fixpoint loop — the one driver-side superstep
+    scaffold behind CC, k-core, BFS and SSSP.  Returns ``(final carry,
+    rounds run)``.
+
+    ``tables`` maps roles to the DataFrames the rounds read and is the
+    loop's live state: each round's result replaces ``tables[carry]``, and
+    ``fold`` may update other roles.  A role may hold a zero-argument
+    builder instead; it is built on the first round whose SQL names it.
+
+    A round: ``round_sql(prev_cert)`` returns ONE statement with
+    ``{role}`` placeholders; exactly those roles are bound to temp views
+    unique to this run (concurrent loops in one session never read each
+    other's bindings).  One statement is analyzed once — composing a round
+    op by op ran the analyzer per operation, ~0.55 s of driver time per
+    warm CC round at sf0.1 (r19).  The result is localCheckpointed lazily
+    (AQE-off when ``aqe_off``, so its outputPartitioning survives into the
+    checkpoint, see :func:`_aqe_off`), and ``certificate`` — aggregate
+    columns over it — is the round's one action: it materializes the
+    checkpoint and yields the scalars ``converged(prev, cert)`` decides on
+    (``seed_cert`` plays prev for round 1).  Past ``max_rounds`` the loop
+    raises ``RuntimeError(cap_error)``, or returns the last carry when
+    ``cap_error`` is None (a cap that is part of the semantics).  Every
+    round is recorded in :data:`LAST_SUPERSTEPS`.
+
+    The checkpoint is taken with every column renamed (``c`` -> ``c__``)
+    and read back through the inverse rename.  A checkpoint keeps the
+    analyzed plan's output attributes but the physical plan's
+    partitioning; the SQL's output is qualified (``e.src``) while the
+    partitioning attribute is not, and LogicalRDD.newInstance — run on
+    every second reference of a view in one statement — rewrites
+    partitioning by exact attribute equality, so the copy kept the stale
+    attribute and k-core's keep aggregate re-shuffled in every round after
+    the first.  The renamed aliases give both sides one unqualified
+    attribute (a same-name alias would not: the optimizer drops it).
+
+    Release: the initial carry and every round's checkpoint belong to the
+    loop.  A superseded carry is released once its successor has
+    materialized, unless ``fold(round, new_carry)`` took it into the
+    caller's result (BFS's hop table).  Built tables and the ``owned``
+    roles are released on every exit; on a raise (the cap included) so is
+    every loop checkpoint, since none of them escapes."""
+    spark = tables[carry].sparkSession
+    seq = next(_VIEW_SEQ)
+    views: dict[str, str] = {}
+    built: list[DataFrame] = []
+    live = [tables[carry]]
+    records = LAST_SUPERSTEPS[name] = []
+    cert, ok = seed_cert, False
+    try:
+        for i in range(1, max_rounds + 1):
+            sql = round_sql(cert)
+            for role in {f for _, f, _, _ in _SQL_FIELDS.parse(sql) if f}:
+                if not isinstance(tables[role], DataFrame):
+                    tables[role] = tables[role]()
+                    built.append(tables[role])
+                views[role] = f"seisdb_{name}_{role}_{seq}"
+                tables[role].createOrReplaceTempView(views[role])
+            out = spark.sql(sql.format_map(views))
+            cols = out.columns
+            out = out.toDF(*[f"{c}__" for c in cols])
+            with _aqe_off(spark) if aqe_off else nullcontext():
+                live.append(out.localCheckpoint(eager=False))
+            nxt = live[-1].toDF(*cols)
+            prev, cert = cert, tuple(nxt.agg(*certificate).first())
+            records.append(Superstep(i, cert, final_plan(out)))
+            if fold is None:
+                release_checkpoint(live.pop(0))
+            else:
+                fold(i, nxt)
+            tables[carry] = nxt
+            if converged(prev, cert):
+                ok = True
+                return nxt, i
+        if cap_error is not None:
+            raise RuntimeError(cap_error)
+        ok = True
+        return tables[carry], max_rounds
+    finally:
+        for view in views.values():
+            spark.catalog.dropTempView(view)
+        for df in built + [tables[role] for role in owned]:
+            release_checkpoint(df)
+        if not ok:
+            for df in live:
+                release_checkpoint(df)
+
+
 _CC_SCHEMA = T.StructType(
     [
         T.StructField("v", T.LongType(), False),
@@ -335,53 +455,55 @@ def cc_exact_lazy(
     return edges.mapInPandas(union_find, _CC_SCHEMA)
 
 
-def _cc_round_sql(e_view: str, m_view: str, broadcast_state: bool, hops: int) -> str:
-    """The FULL propagation round (``hops`` neighbour-min hops + one
-    pointer jump) as ONE SQL statement over two temp views.
+def _cc_round_sql(broadcast_state: bool) -> str:
+    """One propagation round as ONE :func:`superstep_loop` statement over
+    the symmetric edges ``{e}`` and the labeling ``{m}`` (v, l): neighbour-
+    min hops, then one pointer jump.  Labels are always existing vertex
+    ids (they start as vertex ids and only ever copy), so the jump join is
+    inner.
 
-    Why SQL and not the former per-hop DataFrame composition (r19, guide
-    §7.3 — planning time itself as the bottleneck): every PySpark
-    DataFrame transformation eagerly runs the analyzer over the whole
-    accumulated tree, so a 3-hop round paid ~17 incremental analyses plus
-    as many py4j round trips — measured 0.55 s of pure driver-side plan
-    construction per WARM round at sf0.1, ~2x the round's entire
-    distributed execution.  One ``spark.sql`` statement parses and
-    analyzes the identical tree ONCE (probe: build 8.1 -> 3.6 s over a
-    5-round loop, same session, results hash-identical and the executed
-    round plan node-for-node the same — zero shuffle exchanges, same
-    BroadcastHashJoin count, ReusedExchange still deduplicating the nb
-    broadcast).  Per-round driver work is what bounds the loop at ANY
-    data scale, so this is a 100 TB optimization, not an sf0.1 trick.
+    ``broadcast_state`` (the labeling's exact count fits the session
+    broadcast threshold, see :func:`fits_broadcast`): every state-side
+    join is broadcast, and neighbour-min keys on ``dst`` and aggregates by
+    ``src`` — the edge checkpoint's preserved partitioning key — so the
+    round plan carries ZERO shuffle exchanges.  The round then runs THREE
+    neighbour-min hops: with the state broadcast each extra hop is one
+    more map pass over the in-memory edge checkpoint, and fewer rounds
+    beat cheaper rounds while planning + stage scheduling is the round
+    cost floor (sf0.1 interleaved A/B: 2 hops = 7 rounds / 5.65 s, 3 hops
+    = 5 rounds / 5.02 s, 4 hops = 4 rounds / 6.14 s — per-round plan
+    growth overtakes the saved actions at 4).
 
-    Neighbour-min keying is by PHYSICAL regime, exactly as before (r18,
-    guide §2.4):
+    Otherwise (the 100 TB regime) ONE hop keyed on ``src``: the edge side
+    of the sort-merge join is already clustered AND sorted by src (see
+    :func:`partitioned_edge_checkpoint`), so only the |V|-row labeling
+    shuffles per round; the aggregate (by dst) moves map-side partial
+    minima, never edge rows.  Extra hops there would multiply the
+    per-round shuffle bytes to save a fraction of the rounds, and the
+    joins stay unhinted shuffle joins that AQE skew-handles.  Both regimes
+    converge to the identical labeling (each hop is a value no-op at the
+    fixpoint).
 
-    * ``broadcast_state``: the labeling is broadcast (gated on its exact
-      count), so the join costs nothing either way — key on ``dst`` and
-      aggregate by ``src``, the edge checkpoint's preserved partitioning
-      key, making the aggregate EXCHANGE-FREE (the round plan carries
-      zero shuffle exchanges).
-    * otherwise (the 100 TB regime): key on ``src`` — the edge side of
-      the sort-merge join is already clustered AND sorted by src (see
-      :func:`partitioned_edge_checkpoint`), so only the |V|-row labeling
-      shuffles per round; the aggregate (by dst) then moves map-side
-      partial minima, bounded by |V| per partition, never edge rows.
-      Scale rounds carry NO broadcast hints — the joins stay shuffle
-      joins that AQE skew-handles."""
+    The jump references the post-min labeling on BOTH sides (probe +
+    lookup); Catalyst's ReuseExchange deduplicates the identical subtrees,
+    so the neighbour-min executes once per round.  One jump per round:
+    r18 tried two, and round counts did not drop at either driver SF —
+    the cascade is bounded by the neighbour-min's propagation radius, not
+    label-tree height."""
     cte: list[str] = []
-    prev = m_view
-    for h in range(1, hops + 1):
+    prev = "{m}"
+    for h in range(1, (3 if broadcast_state else 1) + 1):
         if broadcast_state:
             nb = (
                 f"nb{h} AS (SELECT /*+ BROADCAST({prev}) */ e.src AS v, "
-                f"min({prev}.l) AS nb_l FROM {e_view} e "
+                f"min({prev}.l) AS nb_l FROM {{e}} e "
                 f"JOIN {prev} ON e.dst = {prev}.v GROUP BY e.src)"
             )
             m_hint = f"/*+ BROADCAST(nb{h}) */ "
         else:
             nb = (
                 f"nb{h} AS (SELECT e.dst AS v, "
-                f"min({prev}.l) AS nb_l FROM {e_view} e "
+                f"min({prev}.l) AS nb_l FROM {{e}} e "
                 f"JOIN {prev} ON e.src = {prev}.v GROUP BY e.dst)"
             )
             m_hint = ""
@@ -402,135 +524,52 @@ def _cc_round_sql(e_view: str, m_view: str, broadcast_state: bool, hops: int) ->
     )
 
 
-def _cc_round(
-    m: DataFrame, edges: DataFrame, n_vertices: int | None = None
-) -> DataFrame:
-    """One propagation round: neighbour-min (twice in the broadcast
-    regime) then pointer jump.
-
-    ``m`` is the current labeling (v, l); ``edges`` is symmetric.  Labels
-    are always existing vertex ids (they start as vertex ids and only ever
-    copy), so the pointer-jump join is inner.
-
-    ``n_vertices`` is the labeling's exact row count (the previous round's
-    convergence-certificate count — constant across rounds): when it fits
-    the session broadcast threshold, every state-side join in the round is
-    broadcast (see :func:`hint_broadcast_if_small`) and the round runs
-    THREE neighbour-min hops instead of one (r18 introduced two, r19
-    measured three): with the state broadcast each extra hop is one more
-    map pass over the in-memory edge checkpoint plus an exchange-free
-    aggregate — nearly free — and fewer rounds beat cheaper rounds while
-    driver-side planning + stage scheduling is the round cost floor
-    (sf0.1 interleaved A/B: 2 hops = 7 rounds / 5.65 s, 3 hops = 5
-    rounds / 5.02 s, 4 hops = 4 rounds / 6.14 s — per-round plan growth
-    overtakes the saved actions at 4, so 3 is the measured optimum).
-    Above the threshold (the 100 TB regime) every extra hop would
-    multiply the per-round shuffle bytes to save a fraction of the
-    rounds — a net loss — so scale rounds keep ONE hop; both regimes
-    converge to the identical labeling (each hop is a value no-op at the
-    fixpoint, and the certificate only reports convergence when a whole
-    round changed nothing).
-
-    The jump join references the post-min labeling ``m3`` on BOTH sides
-    (probe + lookup).  That is NOT a double computation: Catalyst's
-    ReuseExchange rule deduplicates the identical exchange subtrees, so
-    the neighbour-min aggregate executes once per round and the second
-    reference reads the reused shuffle/broadcast (verified in the
-    captured round plans — ``ReusedExchange`` over the m3 subtree).
-    One jump per round: r18 tried doubling it (label <- m1.l[m1.l[l]],
-    shared lookup, broadcast reused) and round counts did NOT drop at
-    either driver SF — the cascade is bounded by the neighbour-min's
-    propagation radius, not label-tree height.
-
-    The round is issued as ONE ``spark.sql`` statement over two
-    uniquely-named temp views (r19; see :func:`_cc_round_sql` for the
-    measured driver-planning rationale).  The views are dropped before
-    returning — ``spark.sql`` analyzes eagerly, so the returned
-    DataFrame no longer needs them."""
-    spark = m.sparkSession
-    broadcast_state = (
-        n_vertices is not None
-        and n_vertices * LOOP_STATE_ROW_BYTES <= _auto_broadcast_bytes(spark)
-    )
-    hops = 3 if broadcast_state else 1
-    global _CC_VIEW_SEQ
-    _CC_VIEW_SEQ += 1
-    e_view = f"seisdb_cc_e_{_CC_VIEW_SEQ}"
-    m_view = f"seisdb_cc_m_{_CC_VIEW_SEQ}"
-    edges.createOrReplaceTempView(e_view)
-    m.createOrReplaceTempView(m_view)
-    try:
-        return spark.sql(_cc_round_sql(e_view, m_view, broadcast_state, hops))
-    finally:
-        spark.catalog.dropTempView(e_view)
-        spark.catalog.dropTempView(m_view)
-
-
 def connected_components(
     pairs: DataFrame, src: str = "src", dst: str = "dst", max_rounds: int = 50
 ) -> tuple[DataFrame, int]:
-    """Iterate :func:`_cc_round` over a pair list to the fixpoint (no label
-    changed).  Returns ``(labels, rounds_run)``; labels are (v, component).
+    """Iterate :func:`_cc_round_sql` over a pair list to the fixpoint (no
+    label changed).  Returns ``(labels, rounds_run)``; labels are (v,
+    component).
 
     The input may be directed and asymmetric: edges are symmetrized
-    internally (labels propagate dst->src in :func:`_cc_round`, and the
-    initial labeling is built from ``src`` — without symmetrization a
-    dst-only vertex would silently never be labeled).  Each round
-    localCheckpoints the labeling — cutting the lineage that would
-    otherwise grow 4x per round.
+    internally (labels propagate dst->src, and the initial labeling is
+    built from ``src`` — without symmetrization a dst-only vertex would
+    silently never be labeled).  :func:`superstep_loop` checkpoints each
+    round's labeling, cutting the lineage that would otherwise grow 4x per
+    round, and releases the superseded one.
 
-    Convergence probe — the sssp certificate discipline: per-vertex
-    labels are monotone NON-INCREASING across rounds (neighbour-min
-    takes ``least``; the pointer jump maps l to m1's label for vertex l,
-    itself <= l) over a CONSTANT vertex set (every label is an existing
-    vertex id, so the jump's inner join drops nothing), so the
-    (row count, BIGINT label sum) pair is unchanged iff NO label
-    changed — and it comes from the SAME aggregate action that
-    materializes the round's checkpoint.  This replaces the earlier
-    nxt-join-previous probe, saving one |V|-row equi-join (two
-    exchanges) per round.  Overflow headroom (the PageRank discipline):
-    under ANSI mode (the Spark 4 default) an overflowing BIGINT sum
+    Convergence certificate: per-vertex labels are monotone
+    NON-INCREASING across rounds (neighbour-min takes ``least``; the
+    pointer jump maps l to the label of vertex l, itself <= l) over a
+    CONSTANT vertex set (every label is an existing vertex id, so the
+    jump's inner join drops nothing), so the (row count, BIGINT label sum)
+    pair is unchanged iff NO label changed — and it comes from the SAME
+    aggregate that materializes the round's checkpoint, with no compare
+    join.  Overflow headroom: under ANSI mode an overflowing BIGINT sum
     raises mid-loop; under non-ANSI it wraps mod 2^64, and a wrap could
     fake convergence only if one round's TOTAL label decrease were an
     exact positive multiple of 2^64 — impossible while |V| * max(vertex
-    id) < 2^64 (the x1000 tier is ~2.6e10 ids * 2.6e7 vertices ~ 7e17).
-    The precondition is GUARDED at runtime, not just documented (r17
-    advice): the seed aggregate takes try_sum (NULL, never a raise, on
-    overflow) plus max(l) — the max VERTEX id, since labels only
-    decrease — and the loop refuses to run when |V| * max_id >= 2^63
-    (the conservative signed bound), converting both failure modes
-    (ANSI mid-loop raise, non-ANSI silent wrap) into one principled
-    early refusal; densely re-map vertex ids first (zipWithIndex /
-    hash-rank) at that scale.  Past the guard, every round's sum is
-    bounded by the seed sum (labels are non-increasing), so the plain
-    F.sum in the loop can neither raise nor wrap.
-
-    Each round's executed plan is appended to :data:`CC_ROUND_PLANS`
-    for the scale harness (the final labeling's plan cannot show the
-    propagation joins), and the superseded previous round's
-    checkpointed blocks are released once the round's aggregate has
-    materialized its successor (the k-core discipline: driver state is
-    one (count, sum) pair + the CURRENT labeling; a 50-round cascade
-    must not hold 50 rounds of blocks)."""
-    CC_ROUND_PLANS.clear()
-    # count the pair list first (cheap: materializes the caller's lazy
-    # checkpoint, which the symmetrize below reads anyway) so the
-    # symmetric edge checkpoint's partition count is sized from the REAL
-    # row count (guide §2.2) — and lay it out hash-partitioned + sorted
-    # by src with the partitioning preserved into the checkpoint scan,
-    # so scale-regime rounds never re-shuffle or re-sort the edge side
-    # and broadcast-regime rounds get exchange-free neighbour-min
-    # aggregates (see partitioned_edge_checkpoint).
+    id) < 2^63.  The precondition is GUARDED at runtime: the seed
+    aggregate takes try_sum (NULL, never a raise) plus max(l) — the max
+    VERTEX id, since labels only decrease — and the loop refuses to run
+    when |V| * max_id >= 2^63, converting both failure modes into one
+    early refusal (densely re-map vertex ids first at that scale).  Past
+    the guard every round's sum is bounded by the seed sum, so the plain
+    sum in the loop can neither raise nor wrap."""
+    # count first so the symmetric edge checkpoint is sized from the REAL
+    # row count (guide §2.2), laid out hash-partitioned + sorted by src
+    # with the partitioning preserved into its scan: scale-regime rounds
+    # never re-shuffle or re-sort the edge side, and broadcast-regime
+    # rounds get exchange-free neighbour-min aggregates
     n_pairs = pairs.count()
     edges = partitioned_edge_checkpoint(
         symmetrize(pairs, src, dst), "src", 2 * n_pairs
     )
+    # lazy: the seed aggregate below is the materializing action
     m = (
         edges.select("src")
         .distinct()
         .select(F.col("src").alias("v"), F.col("src").alias("l"))
-        # lazy: the seed aggregate below is the materializing action —
-        # an eager build here would pay one extra job for the same pass
         .localCheckpoint(eager=False)
     )
     seed = m.agg(
@@ -538,12 +577,8 @@ def connected_components(
         F.try_sum("l").cast("bigint"),  # NULL (not an ANSI raise) on overflow
         F.max("l").cast("bigint"),
     ).first()
-    prev_cert = (seed[0], seed[1])
     n_vertices, max_id = int(seed[0] or 0), int(seed[2] or 0)
     if n_vertices * max_id >= 2**63:
-        # the (count, label-sum) certificate is only wrap-sound while the
-        # true label sums stay representable; refuse rather than risk a
-        # silently faked convergence on a future huge-id tier (r17 advice)
         release_checkpoint(edges)
         release_checkpoint(m)
         raise ValueError(
@@ -551,26 +586,20 @@ def connected_components(
             f"|V| ({n_vertices}) * max vertex id ({max_id}) >= 2^63 — "
             "densely re-map vertex ids before clustering at this scale"
         )
-    for i in range(1, max_rounds + 1):
-        nxt_join = _cc_round(m, edges, n_vertices)
-        nxt = nxt_join.localCheckpoint(eager=False)
-        cert = tuple(
-            nxt.agg(F.count(F.lit(1)), F.sum("l").cast("bigint")).first()
-        )
-        CC_ROUND_PLANS.append(final_plan(nxt_join))
-        release_checkpoint(m)  # the aggregate materialized nxt
-        m = nxt
-        if cert == prev_cert:
-            release_checkpoint(edges)  # the labeling no longer reads it
-            return m.select("v", F.col("l").alias("component")), i
-        prev_cert = cert
-    # non-convergence: nothing useful survives the raise, so release the
-    # symmetrized edge set AND the last labeling before failing — the
-    # convergence path releases edges but this path otherwise leaked both
-    # for the session lifetime (r16 advice).
-    release_checkpoint(edges)
-    release_checkpoint(m)
-    raise RuntimeError(f"connected_components did not converge in {max_rounds} rounds")
+    sql = _cc_round_sql(fits_broadcast(pairs.sparkSession, n_vertices))
+    labels, rounds = superstep_loop(
+        "cc",
+        {"e": edges, "m": m},
+        "m",
+        lambda _: sql,
+        [F.count(F.lit(1)), F.sum("l").cast("bigint")],
+        lambda prev, cert: cert == prev,
+        (seed[0], seed[1]),
+        max_rounds,
+        owned=("e",),
+        cap_error=f"connected_components did not converge in {max_rounds} rounds",
+    )
+    return labels.select("v", F.col("l").alias("component")), rounds
 
 
 #: Above this many verified dup pairs, :func:`cc_auto` switches from the

@@ -59,8 +59,11 @@ def shingle_tokens(docs: DataFrame, k: int = SHINGLE_K, distinct: bool = True) -
     """(doc_id, sh) word k-shingle rows per document.
 
     One narrow projection, no joins. Documents shorter than k words yield
-    no shingles (``sequence(1, 0)`` would count *down*; ``greatest(.., 0)``
-    guards it to an empty array).
+    no shingles: they are filtered out before the explode, because
+    ``sequence(1, n)`` counts DOWN for n < 1 (``sequence(1, 0)`` is
+    ``[1, 0]``), which indexes past the word array — an
+    ``INVALID_ARRAY_INDEX`` under ANSI, spurious shingles without it.  An
+    empty text splits to one empty word, so it is short too.
 
     ``distinct=True`` (a shuffle) is required wherever set semantics matter
     (Jaccard counts); MinHash signatures pass ``distinct=False`` because
@@ -80,11 +83,13 @@ def shingle_tokens(docs: DataFrame, k: int = SHINGLE_K, distinct: bool = True) -
     """
     parts = ", ".join(f"w[i + {j - 1}]" for j in range(k))
     shingles = (
-        f"transform(sequence(1, greatest(size(w) - {k - 1}, 0)), "
+        f"transform(sequence(1, size(w) - {k - 1}), "
         f"i -> concat_ws(' ', {parts}))"
     )
-    out = docs.select("doc_id", F.split(F.col("text"), " ").alias("w")).select(
-        "doc_id", F.explode(F.expr(shingles)).alias("sh")
+    out = (
+        docs.select("doc_id", F.split(F.col("text"), " ").alias("w"))
+        .where(F.size("w") >= k)
+        .select("doc_id", F.explode(F.expr(shingles)).alias("sh"))
     )
     return out.distinct() if distinct else out
 

@@ -254,8 +254,8 @@ DRIVER_WINDOW: list[str] = [
     # components over the ship-date-windowed co-purchase graph (the
     # documented 100 TB dedup-clustering path, functions/graph.py
     # connected_components, previously toy-unit-tested only — r15
-    # verdict item #1; recursive-CTE closure oracle, CC_ROUND_PLANS
-    # captured per round) — in for zorder_layout_gate (green r11-r15,
+    # verdict, first item; recursive-CTE closure oracle, round plans
+    # recorded per round) — in for zorder_layout_gate (green r11-r15,
     # five hard rows, rotation-eligible; the layout family keeps
     # streaming_zone_maps in-window and the Z-order pruning counts
     # stay pytest-oracle-checked every round).

@@ -10,9 +10,10 @@ peeling (k-core), and reachability/distance (multi-source BFS hop
 counts) — each expressed as plain DataFrame joins+aggregates, which is
 exactly how they run on any Spark cluster (GraphX/GraphFrames do the
 same join-shuffle per superstep / neighborhood-intersection under the
-hood).  The two driver-loop operators (k-core, BFS) capture each round's
-executed plan in ``KCORE_ROUND_PLANS`` / ``BFS_ROUND_PLANS`` so the
-scale harness can assert superstep plan shape, and register with
+hood).  The driver-loop operators (k-core, BFS, SSSP, and WCC via
+functions/graph.py) run on the shared ``superstep_loop`` primitive,
+which records each round's executed plan in ``LAST_SUPERSTEPS`` so the
+scale harness can assert superstep plan shape; they register with
 ``fixpoint=True`` so the bench/tier harnesses time the loop honestly
 (it runs at plan build under the registry cache).
 
@@ -40,26 +41,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from seisdb_spark.functions.graph import (
-    CC_ROUND_PLANS,  # noqa: F401  (re-exported: scale_stress reads round-
-    # plan lists via getattr(graph_queries, attr); the CC loop lives in
-    # functions/graph.py and mutates this list IN PLACE — clear/append,
-    # never rebind — so the alias stays live)
     connected_components,
-    hint_broadcast_if_small,
+    fits_broadcast,
+    partitioned_edge_checkpoint,
     release_checkpoint,
+    superstep_loop,
+    symmetrize,
 )
-from seisdb_spark.plancheck import final_plan, has_node
+from seisdb_spark.plancheck import has_node
 from seisdb_spark.queries.registry import query, register_session_checkpoint
 from seisdb_spark.sources.tables import load_table
-
-#: Executed per-round plans of the LAST driver-loop run (one entry per
-#: peel / frontier-expansion round), captured for the scale harness: the
-#: returned DataFrame's plan only shows the final aggregate over the last
-#: checkpointed iterate — the per-round joins execute behind localCheckpoint
-#: boundaries during the loop, so a plan predicate that reads only the final
-#: plan would certify nothing about the supersteps that dominate the cost.
-KCORE_ROUND_PLANS: list[str] = []
-BFS_ROUND_PLANS: list[str] = []
 
 
 def round_plans_ok(plans: list[str]) -> bool:
@@ -85,31 +76,6 @@ def round_plans_ok(plans: list[str]) -> bool:
         for p in plans
     )
 
-
-# shared with functions/graph.py (the CC pointer-jump loop): one release
-# implementation, one loud-on-drift signal, one persistent-RDD-shrink test
-_release_checkpoint = release_checkpoint
-
-#: Monotone suffix for per-loop temp-view names (the CC discipline —
-#: functions/graph._CC_VIEW_SEQ): unique per loop invocation so concurrent
-#: driver-thread loops in one session can never read each other's
-#: bindings.  One suffix per INVOCATION; within a loop the same name is
-#: re-bound per round via createOrReplaceTempView.
-_LOOP_VIEW_SEQ = 0
-
-
-def _loop_view_names(*roles: str) -> tuple[str, ...]:
-    global _LOOP_VIEW_SEQ
-    _LOOP_VIEW_SEQ += 1
-    return tuple(f"seisdb_loop_{r}_{_LOOP_VIEW_SEQ}" for r in roles)
-
-
-def _drop_views(spark, *names: str) -> None:
-    for n in names:
-        try:
-            spark.catalog.dropTempView(n)
-        except Exception:
-            pass  # best-effort cleanup; views die with the session anyway
 
 #: nano-rank scale: initial mass per node.
 PR_SCALE = 1_000_000_000
@@ -582,108 +548,59 @@ def kcore_core(
     the per-round degree aggregate needs NO exchange and the src-keyed
     survivor semi-join needs no edge-side shuffle.
 
-    Each peel is ONE driver action (the survivor-set count, which also
-    materializes the round's checkpoint and is the convergence test —
-    the keep set is folded INTO the survivor plan: its two broadcast-
-    hinted references share one computation via ReuseExchange, replacing
-    the r17 shape's separate keep checkpoint + count, i.e. two actions
-    per round became one).  The broadcast gate uses the initial node
-    count — a valid bound every round, since peeling only removes nodes;
-    above the session threshold the hints are no-ops and the round keeps
-    shuffle joins that AQE skew-handles (survivor checkpoints are then
-    built under AQE, trading the preserved partitioning for runtime
-    skew handling — at that scale the dst-keyed semi-join shuffles
-    anyway).
-
-    Each round's executed plan is appended to ``KCORE_ROUND_PLANS`` (the
-    scale harness asserts its predicate over them — the final membership
-    plan cannot show the peel joins), and superseded rounds' checkpointed
-    blocks are released once the next round has materialized; the
-    driver's only live state is two scalar edge counts plus the CURRENT
-    survivor set.
+    Each peel is ONE :func:`superstep_loop` statement (degree filter +
+    both semi-joins; the keep CTE's two broadcast-hinted references share
+    one computation via ReuseExchange) and ONE driver action: the survivor
+    count materializes the round's checkpoint and is the convergence
+    certificate — peeling only removes edges, so an unchanged (or zero)
+    count is the fixpoint.  The broadcast gate uses the initial node
+    count — a valid bound every round, since peeling only removes nodes.
+    Gated rounds are exchange-free, so their checkpoints are built AQE-off
+    to carry the src partitioning into the next round; above the session
+    threshold the hints drop, and the round keeps shuffle joins that AQE
+    skew-handles (at that scale the dst-keyed semi-join shuffles anyway).
 
     Raises RuntimeError if the fixpoint is not reached within
     ``max_peels``: the DuckDB oracle unrolls exactly that many peels, so
     an unconverged engine result would be compared against a
     mid-cascade oracle state — fail loudly instead (observed rounds at
     driver SFs: <= 5)."""
-    from seisdb_spark.functions.graph import (
-        LOOP_STATE_ROW_BYTES,
-        _aqe_off,
-        _auto_broadcast_bytes,
-        partitioned_edge_checkpoint,
-        symmetrize,
-    )
-
-    KCORE_ROUND_PLANS.clear()
-    spark = edges.sparkSession
     n_canonical = edges.count()  # sizes the symmetric layout
     e = partitioned_edge_checkpoint(
         symmetrize(edges, "u", "v"), "src", 2 * n_canonical, eager=False
     )
     # one aggregate action: materializes the symmetric checkpoint AND
     # yields the node count that gates every round's broadcast hints
-    # (count_distinct over the preserved src partitioning is itself
-    # exchange-free in its partial phase)
-    first = e.agg(
-        F.count(F.lit(1)).alias("m"), F.countDistinct("src").alias("nv")
-    ).first()
-    m, n_nodes = int(first[0] or 0), int(first[1] or 0)
-    broadcast_keep = (
-        n_nodes * LOOP_STATE_ROW_BYTES <= _auto_broadcast_bytes(spark)
-    )
-    e_owned = True  # the symmetric checkpoint is loop-built, never the input
-    # The whole peel (degree filter + both semi-joins) is ONE spark.sql
-    # statement over a per-round re-bound temp view (r19, guide §7.3 —
-    # the CC-round discipline, see functions/graph._cc_round_sql): the
-    # former per-op DataFrame composition paid ~8 eager analyzer passes
-    # of driver time per round; one SQL statement analyzes the identical
-    # tree once.  The keep CTE's two references still deduplicate via
-    # ReuseExchange, exactly as the two hinted DataFrame refs did.
-    (e_view,) = _loop_view_names("kcore_e")
+    first = e.agg(F.count(F.lit(1)), F.countDistinct("src")).first()
+    broadcast_keep = fits_broadcast(edges.sparkSession, int(first[1] or 0))
     hint = "/*+ BROADCAST(ku), BROADCAST(kv) */ " if broadcast_keep else ""
-    peel_sql = (
-        f"WITH keep AS (SELECT src FROM {e_view} "
+    peel = (
+        f"WITH keep AS (SELECT src FROM {{e}} "
         f"GROUP BY src HAVING count(*) >= {int(k)})\n"
-        f"SELECT {hint}e.src, e.dst FROM {e_view} e "
+        f"SELECT {hint}e.src, e.dst FROM {{e}} e "
         f"JOIN keep ku ON e.src = ku.src JOIN keep kv ON e.dst = kv.src"
     )
-    try:
-        for _ in range(max_peels):
-            if m == 0:
-                break
-            e.createOrReplaceTempView(e_view)
-            e2_join = spark.sql(peel_sql)
-            if broadcast_keep:
-                # exchange-free plan (broadcast semi-filters over the
-                # src-partitioned scan): build the checkpoint AQE-off so the
-                # scan's partitioning survives into the next round — nothing
-                # for AQE to do in a plan with no exchanges
-                with _aqe_off(spark):
-                    e2 = e2_join.localCheckpoint(eager=False)
-            else:
-                e2 = e2_join.localCheckpoint(eager=False)
-            m2 = e2.count()  # the round's ONE action: materialize + converge-test
-            KCORE_ROUND_PLANS.append(final_plan(e2_join))
-            if m2 == m:
-                _release_checkpoint(e2)  # same edge set — keep reporting on e
-                break
-            if e_owned:
-                _release_checkpoint(e)  # superseded survivor set
-            e, m, e_owned = e2, m2, True
-        else:
-            raise RuntimeError(
-                f"k-core peeling did not converge within {max_peels} rounds — "
-                "the unrolled oracle would compare a mid-cascade state; raise "
-                "KCORE_MAX_PEELS (and regenerate the oracle) deliberately"
-            )
-    finally:
-        _drop_views(spark, e_view)
+    core, _ = superstep_loop(
+        "kcore",
+        {"e": e},
+        "e",
+        lambda _: peel,
+        [F.count(F.lit(1))],
+        lambda prev, cert: cert in (prev, (0,)),
+        (first[0],),
+        max_peels,
+        aqe_off=broadcast_keep,
+        cap_error=(
+            f"k-core peeling did not converge within {max_peels} rounds — "
+            "the unrolled oracle would compare a mid-cascade state; raise "
+            "KCORE_MAX_PEELS (and regenerate the oracle) deliberately"
+        ),
+    )
     # at the fixpoint every endpoint has degree >= k by construction;
     # degrees read straight off the symmetric survivor set, exchange-free
     # when its partitioning survived (broadcast regime)
     return (
-        e.groupBy("src")
+        core.groupBy("src")
         .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))
         .select(F.col("src").cast("bigint").alias("part_id"), "core_degree")
     )
@@ -774,7 +691,7 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         return kcore_core(e)
     finally:
-        _release_checkpoint(e)
+        release_checkpoint(e)
 
 
 # ---------------------------------------------------------------------------
@@ -804,41 +721,29 @@ def bfs_hops(
     seeds are nodes divisible by ``seed_mod``; returns (part_id, hops) =
     distance to the NEAREST seed for every node within ``max_hops``.
 
-    Engine shape — the frontier-expansion superstep (the k-core loop's
-    sibling): per round ONE src-keyed equi-join of the symmetrized edge
-    table against the previous (checkpointed) frontier, a dst distinct,
-    and an anti-join against the visited set; driver state is ONE scalar
-    (frontier size).  The symmetrized view is a stateless projection over
-    the already-checkpointed edge set (re-projecting per round is map-only
-    — cheaper than materializing 2m rows a second time), each frontier is
-    localCheckpointed so round h+1 joins a materialized table, and the
-    visited set is a union of <= max_hops checkpointed frontiers — all of
-    them part of the OUTPUT, so unlike k-core's released survivor sets
-    nothing can be freed early, but the held-checkpoint count is bounded
-    by the hop cap, not the cascade length.  Each round's executed plan
-    is appended to ``BFS_ROUND_PLANS`` for the scale harness.
+    Engine shape — the frontier-expansion superstep: per round ONE
+    :func:`superstep_loop` statement (a src-keyed equi-join of the
+    symmetrized edges against the checkpointed previous frontier, a dst
+    distinct, and an anti-join against the visited set); driver state is
+    ONE scalar (frontier size, which is also the certificate: an empty
+    frontier can never refill).  Each new frontier is folded into the hop
+    table, a union of <= max_hops checkpointed frontiers — all of them
+    part of the OUTPUT, so unlike k-core's survivor sets nothing is freed
+    early, but the held-checkpoint count is bounded by the hop cap.
+
+    Regimes, per round from exact counts (guide 3.1/2.4): a frontier that
+    fits the session broadcast threshold is broadcast against the
+    stateless symmetric projection, so the hop never shuffles edge rows
+    (materializing a second 2m-row copy up front costs more than it saves
+    at driver SFs — measured +0.2 s/pass).  Above it, the hop sort-merges
+    against a symmetric copy checkpointed hash-partitioned + sorted by
+    src, built on the first such hop; only the frontier moves per hop.
 
     BFS levels are set-unique (level h = nodes reachable in h hops and
     not fewer — independent of visit order), so the hop table value-hashes
     across engines."""
-    from seisdb_spark.functions.graph import (
-        LOOP_STATE_ROW_BYTES,
-        _auto_broadcast_bytes,
-        partitioned_edge_checkpoint,
-        symmetrize,
-    )
-
-    BFS_ROUND_PLANS.clear()
     spark = edges.sparkSession
-    # symmetric view as ONE explode (r18): the union form scanned the
-    # canonical checkpoint twice per consumer.  Still a stateless
-    # projection - broadcast-regime hops are map-only over it, so
-    # materializing a second 2m-row copy up front would COST more than it
-    # saves at driver SFs (measured: +0.2 s/pass); the partitioned copy
-    # below is built lazily, only when a hop actually leaves the
-    # broadcast regime.
     sym = symmetrize(edges, "u", "v")
-    sym_part: DataFrame | None = None  # scale-regime representation
     seeds = (
         # filter BEFORE the distinct (guide 2.3): the mod filter keeps
         # ~1/seed_mod of the rows, so the distinct aggregates a sliver of
@@ -848,79 +753,48 @@ def bfs_hops(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # exact frontier/visited row counts (the seed count materializes the
-    # seed checkpoint the first round reads anyway) gate the round hints;
-    # above the session broadcast threshold the hints are no-ops and the
-    # hop keeps its shuffle joins (guide 3.1/2.4).
-    # Each hop (frontier expansion + dst distinct + visited anti-join) is
-    # ONE spark.sql statement over per-round re-bound temp views (r19,
-    # guide §7.3 — the CC-round discipline, see functions/graph.
-    # _cc_round_sql): the former per-op DataFrame composition paid ~6
-    # eager analyzer passes of driver time per hop; one SQL statement
-    # analyzes the identical tree once.  Join keying, regime gating, and
-    # hint gating are unchanged.
-    e_sym_view, e_part_view, f_view, d_view = _loop_view_names(
-        "bfs_esym", "bfs_epart", "bfs_f", "bfs_d"
+    tables = {
+        "e": sym,
+        "ep": lambda: partitioned_edge_checkpoint(
+            sym, "src", 2 * edges.count(), eager=False
+        ),
+        "f": seeds,
+        "d": seeds.select("node", F.lit(0).cast("bigint").alias("hops")),
+    }
+    n_visited = 0
+
+    def hop_sql(prev: tuple) -> str:
+        nonlocal n_visited
+        n_visited += prev[0]  # the seeds, then each new frontier
+        if fits_broadcast(spark, prev[0]):
+            e, h_f = "e", "/*+ BROADCAST(f) */ "
+        else:
+            e, h_f = "ep", ""
+        h_d = "/*+ BROADCAST(d) */ " if fits_broadcast(spark, n_visited) else ""
+        return (
+            f"WITH ex AS (SELECT {h_f}DISTINCT e.dst AS node "
+            f"FROM {{{e}}} e JOIN {{f}} f ON e.src = f.node)\n"
+            f"SELECT {h_d}ex.node FROM ex "
+            f"LEFT ANTI JOIN {{d}} d ON ex.node = d.node"
+        )
+
+    def fold(h: int, frontier: DataFrame) -> None:
+        tables["d"] = tables["d"].unionByName(
+            frontier.select("node", F.lit(h).cast("bigint").alias("hops"))
+        )
+
+    superstep_loop(
+        "bfs",
+        tables,
+        "f",
+        hop_sql,
+        [F.count(F.lit(1))],
+        lambda _, cert: cert == (0,),
+        (seeds.count(),),
+        max_hops,
+        fold=fold,
     )
-    sym.createOrReplaceTempView(e_sym_view)
-    try:
-        n_frontier = seeds.count()
-        n_visited = n_frontier
-        bcast_limit = _auto_broadcast_bytes(spark)
-        dist = seeds.select("node", F.lit(0).cast("bigint").alias("hops"))
-        frontier = seeds
-        for h in range(1, max_hops + 1):
-            if n_frontier * LOOP_STATE_ROW_BYTES <= bcast_limit:
-                # broadcast regime: the frontier is broadcast; the edge
-                # side is the in-stage projection - the hop never
-                # shuffles edge rows
-                e_view, h_frontier = e_sym_view, "/*+ BROADCAST(f) */ "
-            else:
-                # scale regime (frontier over the threshold): sort-merge
-                # against a symmetric copy checkpointed hash-partitioned
-                # + sorted by src with the partitioning preserved into
-                # the scan - built ONCE, on the first scale hop; the
-                # edge side then never re-shuffles or re-sorts, only the
-                # frontier moves per hop
-                if sym_part is None:
-                    sym_part = partitioned_edge_checkpoint(
-                        sym, "src", 2 * edges.count(), eager=False
-                    )
-                    sym_part.createOrReplaceTempView(e_part_view)
-                e_view, h_frontier = e_part_view, ""
-            h_dist = (
-                "/*+ BROADCAST(d) */ "
-                if n_visited * LOOP_STATE_ROW_BYTES <= bcast_limit
-                else ""
-            )
-            frontier.createOrReplaceTempView(f_view)
-            dist.createOrReplaceTempView(d_view)
-            nxt_join = spark.sql(
-                f"WITH ex AS (SELECT {h_frontier}DISTINCT e.dst AS node "
-                f"FROM {e_view} e JOIN {f_view} f ON e.src = f.node)\n"
-                f"SELECT {h_dist}ex.node FROM ex "
-                f"LEFT ANTI JOIN {d_view} d ON ex.node = d.node"
-            )
-            nxt = nxt_join.localCheckpoint(eager=False)
-            c = nxt.count()
-            n_frontier, n_visited = c, n_visited + c
-            BFS_ROUND_PLANS.append(final_plan(nxt_join))
-            if c == 0:
-                _release_checkpoint(nxt)  # empty frontier: nothing to keep
-                break
-            dist = dist.unionByName(
-                nxt.select("node", F.lit(h).cast("bigint").alias("hops"))
-            )
-            frontier = nxt
-    finally:
-        # the hop table reads only the (materialized) seed/frontier
-        # checkpoints - the scale-regime edge checkpoint (if any hop
-        # built it) is dead once the expansion exits; finally so a
-        # mid-loop failure cannot strand it
-        if sym_part is not None:
-            _release_checkpoint(sym_part)
-        _drop_views(spark, e_sym_view, e_part_view, f_view, d_view)
-    return dist.select(
+    return tables["d"].select(
         F.col("node").cast("bigint").alias("part_id"), F.col("hops").alias("hops")
     )
 
@@ -982,7 +856,6 @@ SSSP_WEIGHT_MOD = 8
 #: using <= SSSP_MAX_EDGES edges" is a total semantics either way, no
 #: convergence guard needed.
 SSSP_MAX_EDGES = 8
-SSSP_ROUND_PLANS: list[str] = []
 
 
 def sssp_cost(
@@ -999,38 +872,27 @@ def sssp_cost(
     tentative cost can IMPROVE in later rounds (a cheap many-hop path
     beats an expensive direct edge — pinned by a planted pytest), so the
     loop state is the full tentative-cost table, re-derived and
-    checkpointed each round (superseded rounds released, the k-core
-    discipline), not an append-only union of frontiers.  Each round is
+    checkpointed each round by :func:`superstep_loop` (superseded rounds
+    released), not an append-only union of frontiers.  Each round is
     ONE src-keyed equi-join of the weighted symmetric edge projection
     against the previous cost table + ONE min-combiner aggregate —
     map-side partials collapse the per-node candidate set before the
-    shuffle, the textbook distributed Bellman-Ford superstep.  Driver
-    state is two scalars (the (row count, cost sum) convergence
-    certificate).  The loop early-exits at the observed fixpoint (see
-    SSSP_MAX_EDGES — a pure optimization; the pinned max_edges=1 budget
-    cap still runs exactly one round because the exit can only trigger
-    AFTER a completed, value-identical round).  Exact BIGINT min-plus
-    arithmetic (costs <= max_edges * 8), so the table value-hashes
-    across engines."""
-    from seisdb_spark.functions.graph import (
-        LOOP_STATE_ROW_BYTES,
-        _auto_broadcast_bytes,
-        partitioned_edge_checkpoint,
-        symmetrize,
-    )
+    shuffle, the textbook distributed Bellman-Ford superstep.  The edge
+    side follows the BFS regimes (broadcast cost table over the stateless
+    projection; a src-partitioned edge checkpoint, built on the first
+    round over the threshold, above it).
 
-    SSSP_ROUND_PLANS.clear()
+    Certificate: the new table is a node-superset of the old (old rows
+    pass through the min-combiner) and min-plus costs only DECREASE, so
+    (row count, exact-BIGINT cost sum) is unchanged iff the table is
+    unchanged; the loop exits there — a PURE optimization, every skipped
+    round is a value no-op, so the result still equals the oracle's full
+    unrolled ladder (observed: fixpoint at round ~4 of 8 at driver SFs).
+    Exact BIGINT min-plus arithmetic (costs <= max_edges * 8), so the
+    table value-hashes across engines."""
     spark = edges.sparkSession
     w = (F.lit(1) + (F.col("u") + F.col("v")) % SSSP_WEIGHT_MOD).cast("bigint")
-    # symmetric weighted view as ONE explode (r18): the union form scanned
-    # the canonical checkpoint twice per consumer.  Broadcast-regime
-    # rounds are map-only over this stateless projection; the partitioned
-    # checkpoint below is built lazily, only when a round actually leaves
-    # the broadcast regime (materializing it up front costs more than it
-    # saves at driver SFs - measured +0.3 s/pass).
     sym = symmetrize(edges.select("u", "v", w.alias("w")), "u", "v", "w")
-    sym_part: DataFrame | None = None  # scale-regime representation
-    bcast_limit = _auto_broadcast_bytes(edges.sparkSession)
     dist = (
         # filter BEFORE the distinct (guide 2.3): the mod filter keeps
         # ~1/seed_mod of the rows entering the aggregate
@@ -1040,96 +902,44 @@ def sssp_cost(
         .select("node", F.lit(0).cast("bigint").alias("cost"))
         .localCheckpoint(eager=False)
     )
-    # the seed table is a checkpoint THIS function created - owned, so it
-    # is released as soon as round 1 materializes (r15 advice: the owned
-    # flag protects only the CALLER's input, and sssp's caller passes raw
-    # edges, never a checkpoint it needs back)
-    dist_owned = True
-    prev_cert = None
-    # exact cost-table row count (the seed count materializes the seed
-    # checkpoint round 1 reads anyway; afterwards it rides the convergence
-    # certificate): without the gated hint the weighted edge projection
-    # shuffle-writes by src every round for a dist join AQE converts to
-    # broadcast after the fact (guide 3.1/2.4; the k-core measurement).
-    # Above the session broadcast threshold the hint is a no-op.
-    n_dist = dist.count()
-    # Each relaxation round (weighted expand + union + min-combiner) is
-    # ONE spark.sql statement over per-round re-bound temp views (r19,
-    # guide §7.3 — the CC-round discipline, see functions/graph.
-    # _cc_round_sql): the former per-op DataFrame composition paid ~6
-    # eager analyzer passes of driver time per round; one SQL statement
-    # analyzes the identical tree once.  Join keying, regime gating, and
-    # the union+min-combiner shape are unchanged.
-    e_sym_view, e_part_view, d_view = _loop_view_names(
-        "sssp_esym", "sssp_epart", "sssp_d"
+    cert_cols = [F.count(F.lit(1)), F.sum("cost").cast("bigint")]
+
+    def relax_sql(prev: tuple) -> str:
+        if fits_broadcast(spark, prev[0]):
+            e, h_d = "e", "/*+ BROADCAST(d) */ "
+        else:
+            e, h_d = "ep", ""
+        # the relax join is INLINED as the second union child rather than
+        # bound through a CTE: Union's constraint propagation
+        # (UnionBase.rewriteConstraints) crashes on a CTE-shaped child
+        # whose constraints reference the pre-alias attribute ("key not
+        # found: node#NNL" on this Spark) — the inline form plans the same
+        return (
+            f"SELECT node, min(cost) AS cost FROM (\n"
+            f"  SELECT d.node, d.cost FROM {{d}} d\n"
+            f"  UNION ALL\n"
+            f"  SELECT {h_d}e.dst AS node, d.cost + e.w AS cost "
+            f"FROM {{{e}}} e JOIN {{d}} d ON e.src = d.node\n"
+            f") GROUP BY node"
+        )
+
+    costs, _ = superstep_loop(
+        "sssp",
+        {
+            "e": sym,
+            "ep": lambda: partitioned_edge_checkpoint(
+                sym, "src", 2 * edges.count(), eager=False
+            ),
+            "d": dist,
+        },
+        "d",
+        relax_sql,
+        cert_cols,
+        lambda prev, cert: cert == prev,
+        tuple(dist.agg(*cert_cols).first()),
+        max_edges,
     )
-    sym.createOrReplaceTempView(e_sym_view)
-    try:
-        for _ in range(max_edges):
-            if n_dist * LOOP_STATE_ROW_BYTES <= bcast_limit:
-                # broadcast dist: edges never shuffle
-                e_view, h_dist = e_sym_view, "/*+ BROADCAST(d) */ "
-            else:
-                # scale regime: sort-merge against a symmetric copy
-                # checkpointed hash-partitioned + sorted by src with the
-                # partitioning preserved into the scan - built ONCE, on
-                # the first scale round; the edge side then never
-                # re-shuffles or re-sorts, only the cost table moves
-                if sym_part is None:
-                    sym_part = partitioned_edge_checkpoint(
-                        sym, "src", 2 * edges.count(), eager=False
-                    )
-                    sym_part.createOrReplaceTempView(e_part_view)
-                e_view, h_dist = e_part_view, ""
-            dist.createOrReplaceTempView(d_view)
-            # the relax join is INLINED as the second union child rather
-            # than bound through a CTE: Union's constraint propagation
-            # (UnionBase.rewriteConstraints) crashes on a CTE-shaped
-            # child whose constraints reference the pre-alias attribute
-            # ("key not found: node#NNL" on this Spark) — the inline
-            # form rewrites cleanly and plans identically
-            new_join = spark.sql(
-                f"SELECT node, min(cost) AS cost FROM (\n"
-                f"  SELECT d.node, d.cost FROM {d_view} d\n"
-                f"  UNION ALL\n"
-                f"  SELECT {h_dist}e.dst AS node, d.cost + e.w AS cost "
-                f"FROM {e_view} e JOIN {d_view} d ON e.src = d.node\n"
-                f") GROUP BY node"
-            )
-            new = new_join.localCheckpoint(eager=False)
-            # one aggregate action materializes the checkpoint AND yields
-            # the convergence certificate: `new` is a node-superset of
-            # dist by construction (dist rows pass through the
-            # min-combiner) and min-plus costs only ever DECREASE, so
-            # (row count, exact-BIGINT cost sum) is unchanged iff the
-            # table is unchanged - no compare join needed, and the early
-            # exit is a PURE optimization (every skipped round is a value
-            # no-op; the result still equals the oracle's full unrolled
-            # ladder - the BFS empty-frontier discipline; observed:
-            # fixpoint at round ~4 of 8 at driver SFs, halving the honest
-            # loop price)
-            cert = tuple(
-                new.agg(
-                    F.count(F.lit(1)), F.sum("cost").cast("bigint")
-                ).first()
-            )
-            SSSP_ROUND_PLANS.append(final_plan(new_join))
-            if dist_owned:
-                _release_checkpoint(dist)
-            dist, dist_owned = new, True
-            n_dist = int(cert[0] or 0)
-            if cert == prev_cert:
-                break
-            prev_cert = cert
-    finally:
-        # the returned cost table is the final round's own (materialized)
-        # checkpoint - the scale-regime edge checkpoint (if any round
-        # built it) is dead once the loop exits; finally so a mid-loop
-        # failure cannot strand it
-        if sym_part is not None:
-            _release_checkpoint(sym_part)
-        _drop_views(spark, e_sym_view, e_part_view, d_view)
-    return dist.select(
+    return costs.select(
         F.col("node").cast("bigint").alias("part_id"),
         F.col("cost").alias("min_cost"),
     )
@@ -1212,7 +1022,7 @@ def graph_sssp_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         return sssp_cost(e)
     finally:
-        _release_checkpoint(e)
+        release_checkpoint(e)
 
 
 @query(
@@ -1253,7 +1063,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         return bfs_hops(e)
     finally:
-        _release_checkpoint(e)
+        release_checkpoint(e)
 
 
 # ---------------------------------------------------------------------------
@@ -1360,8 +1170,8 @@ def _wcc_oracle() -> str:
     "equi-join + aggregate hops (three when the labeling is broadcast-"
     "small - r19-measured optimum: extra hops are nearly free there "
     "and cut the round count) and one label-keyed jump equi-join over the "
-    "checkpointed previous labeling, captured in CC_ROUND_PLANS for the "
-    "scale harness (broadcast-regime rounds plan with ZERO shuffle "
+    "checkpointed previous labeling, recorded per round by superstep_loop "
+    "for the scale harness (broadcast-regime rounds plan with ZERO shuffle "
     "exchanges over the src-partitioned symmetric edge checkpoint); superseded labelings are released (the k-core "
     "discipline); driver state is one (count, label-sum) certificate "
     "pair read off the SAME aggregate that materializes the round's "
@@ -1392,7 +1202,7 @@ def graph_wcc_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
             e, "u", "v", max_rounds=WCC_MAX_ROUNDS
         )
     finally:
-        _release_checkpoint(e)
+        release_checkpoint(e)
     return labels.select(
         F.col("v").cast("bigint").alias("part_id"),
         F.col("component").cast("bigint").alias("component_id"),

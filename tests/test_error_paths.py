@@ -248,3 +248,21 @@ def test_release_checkpoint_deregisters_session_list(spark):
         f"session checkpoint list grew {n_after_first} -> {n_after_second} "
         "across fixpoint bench passes (dead refs accumulating)"
     )
+
+
+@pytest.mark.parametrize("distinct", [True, False])
+def test_short_documents_yield_no_shingles(spark, distinct):
+    """Documents shorter than SHINGLE_K words — empty, 1 and 2 words — give
+    no shingles under the session's real settings (ANSI on), instead of an
+    INVALID_ARRAY_INDEX from ``sequence(1, 0)`` counting down; a 3-word
+    document gives exactly its one shingle."""
+    from seisdb_spark.functions.text import SHINGLE_K, shingle_tokens
+
+    assert SHINGLE_K == 3
+    docs = spark.createDataFrame(
+        [(0, ""), (1, "one"), (2, "a b"), (3, "x y z")], "doc_id long, text string"
+    )
+    got = sorted(
+        (r.doc_id, r.sh) for r in shingle_tokens(docs, distinct=distinct).collect()
+    )
+    assert got == [(3, "x y z")]

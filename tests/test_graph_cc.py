@@ -6,6 +6,7 @@ driver query's closure over real LSH-verified pairs."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from seisdb_spark.functions.graph import cc_auto, cc_exact_lazy, connected_components
 from seisdb_spark.queries.registry import REGISTRY
@@ -260,29 +261,38 @@ def test_wcc_window_predicate_reaches_the_parquet_scan(spark):
     assert "l_extendedprice" not in scan[0] and "l_comment" not in scan[0]
 
 
-def test_nonconvergence_releases_edges_and_labeling(spark):
-    """The non-convergence RuntimeError path must release the symmetrized
-    edge checkpoint AND the last labeling before raising — before the r16
-    fix the error path leaked both for the session lifetime (only the
-    convergence path released edges)."""
-    import pytest
+@pytest.mark.parametrize("loop", ["cc", "kcore"])
+def test_nonconvergence_releases_edges_and_labeling(spark, loop):
+    """A round-cap RuntimeError must release every checkpoint the loop
+    built (edges, the initial and the last state) before raising —
+    nothing the loop built escapes a raise.  Before the r16 fix CC's
+    error path leaked both edges and labeling; k-core's leaked its last
+    survivor set until the loops shared superstep_loop."""
+    from seisdb_spark.queries.graph_queries import kcore_core
 
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
 
-    # a 60-node chain needs >= 5 pointer-jump rounds; cap at 2 to force
-    # the non-convergence path
-    pairs = _pairs_df(spark, [(i, i + 1) for i in range(59)])
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, "doc_a", "doc_b", max_rounds=2)
+        if loop == "cc":
+            # a 60-node chain needs >= 5 pointer-jump rounds; cap at 2
+            pairs = _pairs_df(spark, [(i, i + 1) for i in range(59)])
+            connected_components(pairs, "doc_a", "doc_b", max_rounds=2)
+        else:
+            # a 30-edge path off a triangle peels one leaf per k=2 round
+            path = [(3, 100)] + [(100 + i, 101 + i) for i in range(29)]
+            edges = spark.createDataFrame(
+                [(1, 2), (1, 3), (2, 3)] + path, "u long, v long"
+            )
+            kcore_core(edges, k=2, max_peels=1)
 
     after = jsc.getPersistentRDDs().size()
     # <= 0, not == 0: the async ContextCleaner may reclaim a PRIOR test's
     # RDD between the two samples, making the delta negative — the pin is
     # that this cascade adds nothing
     assert after - before <= 0, (
-        f"{after - before} checkpoints retained after a failed cascade — "
-        "the error path is leaking"
+        f"{after - before} checkpoints retained after a failed {loop} "
+        "cascade — the error path is leaking"
     )
 
 
@@ -363,36 +373,60 @@ def test_hint_broadcast_if_small_gates_on_known_row_count(spark):
     assert hint_broadcast_if_small(df, None) is df, "unknown count: no hint"
 
 
-def test_cc_round_is_exchange_free_under_broadcast_gate(spark):
-    """r18 optimization pin (guide §3.1/§2.4): in the broadcast regime
-    (labeling's exact count under the session threshold) every captured
-    propagation round executes with ZERO shuffle exchanges — the
-    neighbour-min joins broadcast the labeling, and its aggregate groups
-    by ``src``, the symmetric edge checkpoint's PRESERVED partitioning
-    key (partitioned_edge_checkpoint builds it AQE-off so the LogicalRDD
-    keeps hashpartitioning(src)), so even the aggregate needs no
-    exchange.  nb's broadcast is still reused across both m1 references.
-    Before the gate, checkpoint scans' unknown stats forced SMJ plans
-    whose edge-side exchanges AQE materialized before converting (the
-    measured ~70% of round cost at sf0.1)."""
-    from seisdb_spark.functions.graph import CC_ROUND_PLANS
-    from seisdb_spark.plancheck import count_exchanges, has_node
+#: max shuffle exchanges per broadcast-regime round: CC and k-core
+#: aggregate by the edge checkpoint's preserved src partitioning; BFS's
+#: dst distinct and SSSP's node min-combiner each shuffle once
+ROUND_EXCHANGE_BUDGET = {"cc": 0, "kcore": 0, "bfs": 1, "sssp": 1}
 
-    # a 60-node chain: multi-round cascade, tiny labeling -> gate hints
-    pairs = [(i, i + 1) for i in range(60)]
-    labels, rounds = connected_components(_pairs_df(spark, pairs), "doc_a", "doc_b")
-    got = {r.v: r.component for r in labels.collect()}
-    assert got == _truth_min_labels(pairs)
-    assert rounds >= 2  # two-hop rounds: ceil of the one-hop cascade / 2
-    assert len(CC_ROUND_PLANS) == rounds
-    for p in CC_ROUND_PLANS:
-        assert count_exchanges(p) == 0, (
-            f"round plan has {count_exchanges(p)} shuffle exchanges — the "
-            f"broadcast-regime round regressed:\n{p[:800]}"
+
+@pytest.mark.parametrize("loop", sorted(ROUND_EXCHANGE_BUDGET))
+def test_broadcast_round_shuffle_exchanges(spark, monkeypatch, loop):
+    """Optimization pin (guide §3.1/§2.4) over every superstep_loop
+    caller: with the loop state under the session broadcast threshold,
+    each recorded round stays within its shuffle-exchange budget.  At
+    least 2 edge partitions are forced — with one, every partitioning
+    requirement holds trivially and the pin passes vacuously.  k-core is
+    the regression this catches: its survivor checkpoints lost their src
+    partitioning (one keep-aggregate exchange in every round after the
+    first) until the primitive renamed the round output before
+    checkpointing.  CC rounds must also broadcast (no sort-merge join)
+    and reuse the neighbour-min broadcast across both jump references."""
+    import seisdb_spark.functions.graph as G
+    from seisdb_spark.plancheck import count_exchanges, has_node
+    from seisdb_spark.queries.graph_queries import bfs_hops, kcore_core, sssp_cost
+
+    monkeypatch.setattr(G, "EDGE_ROWS_PER_TASK", 16)
+    rng = np.random.default_rng(12)
+    pairs = [
+        (a, b) for a in range(60) for b in range(a + 1, 60) if rng.random() < 0.3
+    ]
+    pairs += [(59 + i, 60 + i) for i in range(20)]  # a 20-edge tail
+    edges = spark.createDataFrame(pairs, "u long, v long")
+    if loop == "cc":
+        labels, _ = connected_components(edges, "u", "v")
+        assert {r.v: r.component for r in labels.collect()} == _truth_min_labels(
+            pairs
         )
-        assert has_node(p, "BroadcastHashJoin")
-        assert not has_node(p, "SortMergeJoin")
-        assert has_node(p, "ReusedExchange"), "nb broadcast not reused"
+    elif loop == "kcore":
+        assert kcore_core(edges, k=13).count() > 0
+    elif loop == "bfs":
+        assert bfs_hops(edges, seed_mod=50).count() > 0
+    else:
+        assert sssp_cost(edges, seed_mod=50).count() > 0
+
+    rounds = G.LAST_SUPERSTEPS[loop]
+    assert len(rounds) >= 2
+    assert [s.round for s in rounds] == list(range(1, len(rounds) + 1))
+    exchanges = [count_exchanges(s.plan) for s in rounds]
+    assert max(exchanges) <= ROUND_EXCHANGE_BUDGET[loop], (
+        f"{loop} per-round shuffle exchanges {exchanges} — the "
+        f"broadcast-regime round regressed:\n{rounds[-1].plan[:1200]}"
+    )
+    if loop == "cc":
+        for s in rounds:
+            assert has_node(s.plan, "BroadcastHashJoin")
+            assert not has_node(s.plan, "SortMergeJoin")
+            assert has_node(s.plan, "ReusedExchange"), "nb broadcast not reused"
 
 
 def test_cc_scale_regime_round_keys_the_join_on_the_partition_key(spark):
@@ -404,7 +438,7 @@ def test_cc_scale_regime_round_keys_the_join_on_the_partition_key(spark):
     partitioning leads with the edge table's join column (src exchanges
     would be edge-side), while labeling-side exchanges are allowed.  Both
     regimes must produce the identical labeling."""
-    from seisdb_spark.functions.graph import CC_ROUND_PLANS
+    from seisdb_spark.functions.graph import LAST_SUPERSTEPS
 
     pairs = [(i, i + 1) for i in range(60)]
     labels_b, rounds_b = connected_components(
@@ -429,7 +463,7 @@ def test_cc_scale_regime_round_keys_the_join_on_the_partition_key(spark):
             _pairs_df(spark, pairs), "doc_a", "doc_b"
         )
         got_s = {r.v: r.component for r in labels_s.collect()}
-        scale_plans = list(CC_ROUND_PLANS)
+        scale_plans = [s.plan for s in LAST_SUPERSTEPS["cc"]]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         G.EDGE_ROWS_PER_TASK = old_rows_per_task

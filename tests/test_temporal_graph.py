@@ -887,6 +887,7 @@ def test_sssp_early_exit_engages_and_preserves_values(spark):
     farthest node's cost only appears in round 7, so with max_edges=8
     the loop must run at least 7 rounds and still produce the exact
     per-hop prefix sums."""
+    from seisdb_spark.functions.graph import LAST_SUPERSTEPS
     from seisdb_spark.queries import graph_queries as gq
     from seisdb_spark.queries.registry import REGISTRY
     from tests.conftest import SF_DIR
@@ -895,8 +896,8 @@ def test_sssp_early_exit_engages_and_preserves_values(spark):
         ("graph_sssp_cost", SF_DIR), None
     )
     REGISTRY["graph_sssp_cost"].spark(spark, SF_DIR)
-    assert 0 < len(gq.SSSP_ROUND_PLANS) < gq.SSSP_MAX_EDGES, (
-        f"early exit did not engage: {len(gq.SSSP_ROUND_PLANS)} rounds"
+    assert 0 < len(LAST_SUPERSTEPS["sssp"]) < gq.SSSP_MAX_EDGES, (
+        f"early exit did not engage: {len(LAST_SUPERSTEPS['sssp'])} rounds"
     )
 
     # path 0-1-2-...-7, seed node 0 (seed_mod large so only 0 qualifies);
@@ -915,4 +916,4 @@ def test_sssp_early_exit_engages_and_preserves_values(spark):
         c += w(i, i + 1)
         want[i + 1] = c
     assert got == want
-    assert len(gq.SSSP_ROUND_PLANS) >= 7  # no exit before the true fixpoint
+    assert len(LAST_SUPERSTEPS["sssp"]) >= 7  # no exit before the true fixpoint

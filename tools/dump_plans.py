@@ -7,14 +7,14 @@ plan claim in OPTIMIZATION_r{N}.md is checked against committed
 queries the returned DataFrame's plan shows only the final aggregate over
 the last checkpointed iterate — the supersteps execute behind
 localCheckpoint boundaries at plan build — so this tool additionally
-appends the captured per-round executed plans (``*_ROUND_PLANS``) when the
-query family exposes them; building the plan runs the loop once, which is
-exactly what populates those lists.
+appends the loop's per-round executed plans from
+``functions.graph.LAST_SUPERSTEPS``; building the plan runs the loop once,
+which is exactly what records them.
 
 Usage:
     python tools/dump_plans.py before [query ...]      # default: bench set
     python tools/dump_plans.py after graph_kcore_membership ...
-Writes plans/r18/<query>_<tag>.txt (override dir with --out-dir).
+Writes plans/r20/<query>_<tag>.txt (override dir with --out-dir).
 """
 
 from __future__ import annotations
@@ -27,12 +27,12 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-#: query -> (module attr holding that loop's captured round plans)
+#: query -> the superstep_loop name whose round record it appends
 ROUND_PLAN_SOURCES = {
-    "graph_kcore_membership": "KCORE_ROUND_PLANS",
-    "graph_bfs_hops": "BFS_ROUND_PLANS",
-    "graph_sssp_cost": "SSSP_ROUND_PLANS",
-    "graph_wcc_membership": "CC_ROUND_PLANS",
+    "graph_kcore_membership": "kcore",
+    "graph_bfs_hops": "bfs",
+    "graph_sssp_cost": "sssp",
+    "graph_wcc_membership": "cc",
 }
 
 
@@ -40,14 +40,14 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("tag", choices=["before", "after"])
     ap.add_argument("names", nargs="*")
-    ap.add_argument("--out-dir", default="plans/r18")
+    ap.add_argument("--out-dir", default="plans/r20")
     ap.add_argument(
         "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
     args = ap.parse_args()
 
+    from seisdb_spark.functions.graph import LAST_SUPERSTEPS
     from seisdb_spark.queries import REGISTRY
-    from seisdb_spark.queries import graph_queries
     from seisdb_spark.session import get_spark
 
     names = args.names or [n for n, s in REGISTRY.items() if s.bench]
@@ -60,20 +60,21 @@ def main() -> None:
         spec = REGISTRY[name]
         # bypass the plan cache so a prior invocation in this process can't
         # hand back a stale plan (and so fixpoint loops re-run, repopulating
-        # their round-plan lists for the capture below)
+        # their round records for the capture below)
         spark.__dict__.get("_seisdb_plan_cache", {}).pop((name, args.sf_dir), None)
         df = spec.spark(spark, args.sf_dir)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
         out = [f"== {name} [{args.tag}] sf_dir={args.sf_dir} ==\n", buf.getvalue()]
-        attr = ROUND_PLAN_SOURCES.get(name)
-        if attr:
-            plans = getattr(graph_queries, attr)
-            out.append(f"\n== captured per-round executed plans ({attr}, "
-                       f"{len(plans)} rounds) ==\n")
-            for i, p in enumerate(plans, 1):
-                out.append(f"\n-- round {i} --\n{p}\n")
+        loop = ROUND_PLAN_SOURCES.get(name)
+        if loop:
+            rounds = LAST_SUPERSTEPS[loop]
+            out.append(f"\n== per-round executed plans (superstep loop {loop!r}, "
+                       f"{len(rounds)} rounds) ==\n")
+            for step in rounds:
+                out.append(f"\n-- round {step.round} (certificate {step.cert}) --\n"
+                           f"{step.plan}\n")
         path = os.path.join(args.out_dir, f"{name}_{args.tag}.txt")
         with open(path, "w") as fh:
             fh.write("".join(out))

@@ -56,13 +56,16 @@ SRC_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ID_OFFSET = 10**7  # multiple of DECON_BENCH_MOD: holdout fraction preserved
 
 
-def _graph_round_plans_ok(attr: str) -> bool:
-    """Assert graph_queries' captured driver-loop round plans (the peel /
+def _graph_round_plans_ok(loop: str) -> bool:
+    """Assert the last ``loop`` run's recorded round plans (the peel /
     frontier supersteps run behind localCheckpoint boundaries at plan
     build — the final plan the harness sees cannot show them)."""
+    from seisdb_spark.functions.graph import LAST_SUPERSTEPS
     from seisdb_spark.queries import graph_queries
 
-    return graph_queries.round_plans_ok(getattr(graph_queries, attr))
+    return graph_queries.round_plans_ok(
+        [s.plan for s in LAST_SUPERSTEPS.get(loop, [])]
+    )
 
 #: The stress set: the heaviest composed pipelines + the two round-6 ops.
 #: Each entry: name -> plan predicate (applied at BOTH scales).
@@ -490,16 +493,16 @@ STRESS_QUERIES = {
     # asserts over the captured per-round plans: every peel superstep is
     # equi-join-only, partition-local, JVM-side, and reads its
     # predecessor through a checkpoint scan instead of re-running the
-    # loop history (graph_queries.KCORE_ROUND_PLANS, populated by the
-    # run the harness just timed; time_query defeats the plan cache for
-    # fixpoint specs, so the plans are from THIS corpus).  Runs on the
-    # graphscale corpus like the other graph-structure operators.
+    # loop history (functions/graph.LAST_SUPERSTEPS["kcore"], recorded
+    # by the run the harness just timed; time_query defeats the plan
+    # cache for fixpoint specs, so the plans are from THIS corpus).  Runs
+    # on the graphscale corpus like the other graph-structure operators.
     "graph_kcore_membership": lambda p: (
         not has_node(p, "CartesianProduct")
         and not has_node(p, "NestedLoopJoin")
         and not has_node(p, "rangepartitioning")
         and not has_node(p, "BatchEvalPython")
-        and _graph_round_plans_ok("KCORE_ROUND_PLANS")
+        and _graph_round_plans_ok("kcore")
     ),
     # multi-source BFS: same driver-loop discipline — the final hop-table
     # plan is a union of checkpointed frontier scans, and every captured
@@ -510,7 +513,7 @@ STRESS_QUERIES = {
         and not has_node(p, "NestedLoopJoin")
         and not has_node(p, "rangepartitioning")
         and not has_node(p, "BatchEvalPython")
-        and _graph_round_plans_ok("BFS_ROUND_PLANS")
+        and _graph_round_plans_ok("bfs")
     ),
     # bounded Bellman-Ford: every relaxation round ONE src-keyed
     # equi-join + ONE min-combiner aggregate over the checkpointed cost
@@ -520,7 +523,7 @@ STRESS_QUERIES = {
         and not has_node(p, "NestedLoopJoin")
         and not has_node(p, "rangepartitioning")
         and not has_node(p, "BatchEvalPython")
-        and _graph_round_plans_ok("SSSP_ROUND_PLANS")
+        and _graph_round_plans_ok("sssp")
     ),
     # distributed pointer-jumping WCC (the 100 TB dedup-clustering form,
     # functions/graph.py connected_components): every propagation round is
@@ -532,7 +535,7 @@ STRESS_QUERIES = {
         and not has_node(p, "NestedLoopJoin")
         and not has_node(p, "rangepartitioning")
         and not has_node(p, "BatchEvalPython")
-        and _graph_round_plans_ok("CC_ROUND_PLANS")
+        and _graph_round_plans_ok("cc")
     ),
     # TWAP: ONE (user, day)-keyed exchange shared by the lead() window
     # and the aggregate — never a join, never a global sort
@@ -996,8 +999,8 @@ def main() -> int:
         else:
             base_dir, big_dir = SRC_DIR, scale_dir
         # evaluate each corpus's predicate IMMEDIATELY after its run: the
-        # fixpoint graph predicates read module-global *_ROUND_PLANS,
-        # which the NEXT run overwrites — deferring both evaluations past
+        # fixpoint graph predicates read LAST_SUPERSTEPS, which the NEXT
+        # run of the same loop overwrites — deferring both evaluations past
         # the big-corpus run would silently certify the base row against
         # the big corpus's round plans (r15 advice)
         t_base, p_base = time_query(
