@@ -87,7 +87,8 @@ def pq_encode(
     paid the k folds three times.  CollapseProject cannot undo the
     hoist: a produced attribute referenced more than once is only
     inlined when cheap, and the fold array is not.  Measured
-    (tools/ab_pq_encode.py, interleaved, identical signatures): 1.62 ->
+    (tools/ab_pq_encode.py at commit 2e88616, interleaved, identical
+    signatures): 1.62 ->
     0.84 s warm on the sf0.1 encode, cold 1.53 -> 0.84 s.  The UNROLLED
     subscript-chain alternative (full codegen, no HOF) measured 3.5 s
     warm + 4.5 s cold — the fold loop beats 1024 inlined terms even

@@ -16,15 +16,20 @@ declarative plan over long tables — no buffer, no loop, no driver collect:
       -> A4 start offsets                      (cumulative window per proc)
       -> E4/E5/E6 partitioned parquet + db_meta
 
-Scale posture: the only wide shuffle is the groupBy(proc, gll_id) assembly,
-keyed on the natural output key; the dimension sides (selected points, valid
-steps) are broadcast; encode is embarrassingly parallel per row.  At 100 TB
-each (proc, step, force) snapshot file is one input task and AQE handles the
-rest — nothing below ever sees more than one point's series at once.
+Scale posture: the fact side shuffles twice — the groupBy(proc, gll_id)
+assembly, keyed on the natural output key, and the A4 start-offset window,
+which re-shuffles the encoded records (one compressed blob per point) by
+proc.  The dimension sides (selected points, valid steps) are broadcast; the
+per-force snapshot scans are unioned under one decode and semi-joined with
+the valid steps once; encode is embarrassingly parallel per row (pinned by
+tests/test_sgt_pipeline.py::test_build_plan_decodes_snapshots_once_and_semi_joins_once).
+At 100 TB each (proc, step, force) snapshot file is one input task and AQE
+handles the rest — nothing below ever sees more than one point's series at
+once.  What differs between SGT and DGF is data: ``specfem.KINDS``.
 
 Determinism contract (golden-tested): float32 arithmetic end-to-end in the
 encode (min/subtract/max/divide/scale in float32, truncating cast), matching
-DSGT.py:138-152 bit-for-bit; series order is the canonical struct sort
+DSGT.py:138-152 bit-for-bit; series order is the kind's struct sort
 (force, para, step) for SGT / (para, force, step) for DGF — the reference's
 two serialization orders (DSGT.py:131-135 vs DDGF.py:128-132).
 
@@ -46,17 +51,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from seisdb_spark.schemas import (
-    CANONICAL_FORDER,
-    DB_META_SCHEMA,
-    DB_VERSION,
-    ENCODING_LEVEL_DEFAULT,
-    INDEX27,
-    REORDER27,
-    STRAIN_PARAS,
-    DISP_PARAS,
-)
+from seisdb_spark.schemas import DB_VERSION, ENCODING_LEVEL_DEFAULT, INDEX27, REORDER27
 from seisdb_spark.sources import specfem
+from seisdb_spark.sources.specfem import KINDS
 
 
 # ---------------------------------------------------------------------------
@@ -90,23 +87,13 @@ def select_gll_points(ibool: DataFrame, points_per_element: int = 27) -> DataFra
 # ---------------------------------------------------------------------------
 # P3 + J3: temporal stride + exists-in-all-3-forces
 # ---------------------------------------------------------------------------
-def valid_steps(
-    spark: SparkSession,
-    force_dirs: list[str],
-    name_data: str,
-    step0: int,
-    step1: int,
-    dstep: int,
+def steps_in_all_forces(
+    spark: SparkSession, listing: DataFrame, n_force: int, step0: int, step1: int, dstep: int
 ) -> DataFrame:
-    """(proc, step) pairs in the stride that exist in all 3 force dirs.
-
-    The reference's DCheck_valid_step (DDBbase.py:55-84) is a driver-side
-    os.path.exists loop; here it is a file-listing DataFrame (metadata only,
-    content column pruned) joined against the stride sequence — the
-    "present in N and E and Z" predicate is a 3-way alignment expressed as
-    count(distinct force) == 3 (SURVEY §2.2 P3 / §2.3 J3).
-    """
-    listing = specfem.snapshot_listing(spark, force_dirs, name_data)
+    """(proc, step) pairs of the stride ``range(step0, step1, dstep)`` that
+    ``listing`` (any frame with proc, force and step columns) holds for all
+    ``n_force`` forces — the "present in N and E and Z" predicate as
+    count(distinct force) == n_force (SURVEY §2.2 P3 / §2.3 J3)."""
     # Build the stride driver-side: it is a handful of int literals, and
     # F.sequence(step0, step1-1, dstep) raises "illegal sequence boundaries"
     # at runtime when step1 <= step0, where the degenerate range should flow
@@ -118,27 +105,32 @@ def valid_steps(
     present = (
         listing.groupBy("proc", "step")
         .agg(F.countDistinct("force").alias("nf"))
-        .filter(F.col("nf") == len(force_dirs))
-        .select("proc", "step")
+        .filter(F.col("nf") == n_force)
     )
-    out = present.join(F.broadcast(candidates), "step", "inner").select("proc", "step")
-    return out
+    return present.join(F.broadcast(candidates), "step", "inner").select("proc", "step")
+
+
+def valid_steps(
+    spark: SparkSession,
+    force_dirs: list[str],
+    name_data: str,
+    step0: int,
+    step1: int,
+    dstep: int,
+) -> DataFrame:
+    """(proc, step) pairs in the stride that exist in all force dirs.
+
+    The reference's DCheck_valid_step (DDBbase.py:55-84) is a driver-side
+    os.path.exists loop; here it is a file-listing DataFrame (metadata only,
+    content column pruned) joined against the stride sequence.
+    """
+    listing = specfem.snapshot_listing(spark, force_dirs, name_data)
+    return steps_in_all_forces(spark, listing, len(force_dirs), step0, step1, dstep)
 
 
 # ---------------------------------------------------------------------------
 # J1/J2 + R1 + R2: gather and ordered assembly
 # ---------------------------------------------------------------------------
-def _unpivot(df: DataFrame, paras: tuple[str, ...]) -> DataFrame:
-    stack_args = ", ".join(f"{i}, {p}" for i, p in enumerate(paras))
-    return df.selectExpr(
-        "proc",
-        "force",
-        "step",
-        *(c for c in ("i_spec", "i_gll", "gll_id") if c in df.columns),
-        f"stack({len(paras)}, {stack_args}) as (para, value)",
-    )
-
-
 def assemble_series(
     snapshots: DataFrame,
     points: DataFrame,
@@ -148,48 +140,34 @@ def assemble_series(
     """(proc, gll_id, i_spec, i_gll, n_values, series) — the reference's 4-D
     buffer + per-point flatten (DSGT.py:86-135) as one declarative plan.
 
-    The gather is a broadcast equi-join (J1 on the (i_spec, i_gll) cell for
-    strain, J2 on gll_id for displacement); the assembly is
-    ``sort_array(collect_list(struct(...)))`` whose struct field order IS the
-    serialization order: (force, para, step) for SGT — [force][para][time],
-    DSGT.py:131-135 — and (para, force, step) for DGF — [para][force][time],
-    DDGF.py:128-132.  collect_list alone is non-deterministic; the sort is
-    the correctness requirement (SURVEY §7 risk #1).
+    The gather is a broadcast equi-join on the kind's gather key (the
+    dimension side is broadcast, so the fact stream never shuffles for it);
+    the assembly is ``sort_array(collect_list(struct(...)))`` whose struct
+    field order IS the kind's serialization order (``Kind.series_order``).
+    collect_list alone is non-deterministic; the sort is the correctness
+    requirement (SURVEY §7 risk #1).
     """
-    if kind == "SGT":
-        paras, sort_fields = STRAIN_PARAS, ("force", "para", "step")
-        join_keys = ["proc", "i_spec", "i_gll"]
-    elif kind == "DGF":
-        paras, sort_fields = DISP_PARAS, ("para", "force", "step")
-        join_keys = ["proc", "gll_id"]
-    else:
-        raise ValueError(f"kind must be SGT or DGF, got {kind}")
-
-    long = _unpivot(snapshots, paras)
-    if kind == "SGT":
-        # J1: dimension side (selected points) is broadcast; the fact stream
-        # never shuffles for the gather, and the join attaches gll_id.
-        gathered = long.join(F.broadcast(points), join_keys, "inner")
-    else:
-        # J2: semi-gather by global id; keep the owner-cell columns from the
-        # points side for the output record.
-        gathered = long.join(F.broadcast(points), join_keys, "inner")
-
-    gathered = gathered.join(F.broadcast(steps), ["proc", "step"], "left_semi")
-
-    series = (
+    spec = KINDS[kind]
+    stack_args = ", ".join(f"{i}, {p}" for i, p in enumerate(spec.paras))
+    long = snapshots.selectExpr(
+        "proc", "force", "step", *spec.cell_key,
+        f"stack({len(spec.paras)}, {stack_args}) as (para, value)",
+    )
+    gathered = long.join(F.broadcast(points), spec.gather_key, "inner").join(
+        F.broadcast(steps), ["proc", "step"], "left_semi"
+    )
+    return (
         gathered.groupBy("proc", "gll_id")
         .agg(
             F.first("i_spec").alias("i_spec"),
             F.first("i_gll").alias("i_gll"),
             F.transform(
-                F.sort_array(F.collect_list(F.struct(*sort_fields, "value"))),
+                F.sort_array(F.collect_list(F.struct(*spec.series_order, "value"))),
                 lambda x: x["value"],
             ).alias("series"),
         )
         .withColumn("n_values", F.size("series").cast("long"))
     )
-    return series
 
 
 # ---------------------------------------------------------------------------
@@ -281,14 +259,14 @@ def db_meta(
     station: str,
     kind: str,
     n_force: int,
-    n_para: int,
     dt: float,
     nspec: int,
-    forder: str = CANONICAL_FORDER,
 ) -> DataFrame:
-    """The HDF5 scalar attrs (DSGT.py:186-194) as a per-proc metadata table.
-    ``proc_name`` is the reference's zero-padded processor prefix
-    (L4, DWidgets.py:9-11) so consumers can resolve original filenames."""
+    """The HDF5 scalar attrs (DSGT.py:186-194) as a per-proc metadata table;
+    ``nparas`` and ``forder`` come from the kind table.  ``proc_name`` is
+    the reference's zero-padded processor prefix (L4, DWidgets.py:9-11) so
+    consumers can resolve original filenames."""
+    spec = KINDS[kind]
     per_proc = records.groupBy("proc").agg(F.count(F.lit(1)).alias("ngll"))
     nstep = steps.groupBy("proc").agg(F.count(F.lit(1)).alias("nstep"))
     return (
@@ -301,11 +279,11 @@ def db_meta(
             F.col("ngll").cast("long"),
             F.col("nstep").cast("long"),
             F.lit(n_force).alias("nforce"),
-            F.lit(n_para).alias("nparas"),
+            F.lit(len(spec.paras)).alias("nparas"),
             F.lit(float(dt)).alias("dt"),
             F.lit(nspec).alias("nspec"),
             F.lit(kind).alias("kind"),
-            F.lit(forder).alias("forder"),
+            F.lit(spec.forder).alias("forder"),
             F.lit(DB_VERSION).alias("version"),
         )
     )
@@ -403,11 +381,13 @@ def decode_records(
 ) -> DataFrame:
     """Inverse of encode+assemble: dezlib -> dequantize
     (``code/max_code*scale + offset``, the implied decode of DSGT.py:148-152)
-    -> explode back to long (proc, gll_id, force, para, step_idx, value).
+    -> explode back to long (proc, gll_id, force, para, step_idx, value) in
+    the kind's serialization order.
     Reconstruction error bound: |x̂ - x| <= scale/max_code (one LSB,
     truncating encode) — property-tested."""
     max_code = 2**encoding_level - 1
     code_dtype = np.uint8 if encoding_level == 8 else np.uint16
+    order = KINDS[kind].series_order
     out_schema = T.StructType(
         [
             T.StructField("proc", T.IntegerType(), False),
@@ -425,22 +405,17 @@ def decode_records(
             for row in pdf.itertuples(index=False):
                 codes = np.frombuffer(zlib.decompress(row.blob), dtype=code_dtype)
                 vals = codes.astype(np.float64) / max_code * row.scale + row.offset
-                n_step = codes.size // (n_force * n_para)
-                if kind == "SGT":  # [force][para][time]
-                    force = np.repeat(np.arange(n_force, dtype=np.int32), n_para * n_step)
-                    para = np.tile(np.repeat(np.arange(n_para, dtype=np.int32), n_step), n_force)
-                else:  # DGF: [para][force][time]
-                    para = np.repeat(np.arange(n_para, dtype=np.int32), n_force * n_step)
-                    force = np.tile(np.repeat(np.arange(n_force, dtype=np.int32), n_step), n_para)
-                step_idx = np.tile(np.arange(n_step, dtype=np.int32), n_force * n_para)
+                size = {"force": n_force, "para": n_para, "step": codes.size // (n_force * n_para)}
+                idx = np.unravel_index(np.arange(codes.size), [size[f] for f in order])
+                pos = {f: i.astype(np.int32) for f, i in zip(order, idx)}
                 frames.append(
                     pd.DataFrame(
                         {
                             "proc": np.full(codes.size, row.proc, dtype=np.int32),
                             "gll_id": np.full(codes.size, row.gll_id, dtype=np.int32),
-                            "force": force,
-                            "para": para,
-                            "step_idx": step_idx,
+                            "force": pos["force"],
+                            "para": pos["para"],
+                            "step_idx": pos["step"],
                             "value": vals,
                         }
                     )
@@ -456,74 +431,56 @@ def decode_records(
 # ---------------------------------------------------------------------------
 # end-to-end composition (the reference's create_db)
 # ---------------------------------------------------------------------------
-def sgt_build(
-    spark: SparkSession,
-    model_glob: str,
-    force_dirs: list[str],
-    nspec: int,
-    step0: int,
-    step1: int,
-    dstep: int,
-    *,
-    network: str = "XX",
-    station: str = "STA",
-    dt: float = 0.1,
-    points_per_element: int = 27,
-    encoding_level: int = ENCODING_LEVEL_DEFAULT,
-    name_data: str = "strain_field",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def _make_build(kind: str, doc: str):
+    """The one create_db body behind ``sgt_build`` and ``dgf_build``."""
+    spec = KINDS[kind]
+
+    def build(
+        spark: SparkSession,
+        model_glob: str,
+        force_dirs: list[str],
+        nspec: int,
+        step0: int,
+        step1: int,
+        dstep: int,
+        *,
+        network: str = "XX",
+        station: str = "STA",
+        dt: float = 0.1,
+        points_per_element: int = 27,
+        encoding_level: int = ENCODING_LEVEL_DEFAULT,
+        name_data: str = spec.name_data,
+    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+        ibool = specfem.read_ibool(spark, model_glob, nspec)
+        points = select_gll_points(ibool, points_per_element)
+        steps = valid_steps(spark, force_dirs, name_data, step0, step1, dstep)
+        # the reference raises when no step survives P3 (DDBbase.py:82-84);
+        # the eager probe here is a metadata-only listing query, not a data read
+        if not steps.head(1):
+            raise ValueError("no valid steps: no snapshot step exists in all force dirs")
+        snaps = specfem.read_snapshots(spark, force_dirs, nspec, kind, name_data)
+        series = assemble_series(snaps, points, steps, kind)
+        records = add_start_offsets(encode_records(series, encoding_level))
+        meta = db_meta(
+            spark, records, steps, network=network, station=station, kind=kind,
+            n_force=len(force_dirs), dt=dt, nspec=nspec,
+        )
+        return records, meta, steps
+
+    build.__name__ = build.__qualname__ = f"{kind.lower()}_build"
+    build.__doc__ = doc
+    return build
+
+
+sgt_build = _make_build(
+    "SGT",
     """The full SGT create_db (DSGT.py:40-196) as one lazy plan.
 
     Returns (records_with_start, db_meta, valid_steps); caller writes with
-    write_db.  Nothing is collected; every stage is a DataFrame.
-    """
-    ibool = specfem.read_ibool(spark, model_glob, nspec)
-    points = select_gll_points(ibool, points_per_element)
-    steps = valid_steps(spark, force_dirs, name_data, step0, step1, dstep)
-    # the reference raises when no step survives P3 (DDBbase.py:82-84); the
-    # eager probe here is a metadata-only listing query, not a data read
-    if not steps.head(1):
-        raise ValueError("no valid steps: no snapshot step exists in all force dirs")
-    snaps = specfem.read_strain_snapshots(spark, force_dirs, nspec, name_data)
-    series = assemble_series(snaps, points, steps, kind="SGT")
-    records = add_start_offsets(encode_records(series, encoding_level))
-    meta = db_meta(
-        spark, records, steps,
-        network=network, station=station, kind="SGT",
-        n_force=3, n_para=6, dt=dt, nspec=nspec, forder="NEZ",
-    )
-    return records, meta, steps
-
-
-def dgf_build(
-    spark: SparkSession,
-    model_glob: str,
-    force_dirs: list[str],
-    nspec: int,
-    step0: int,
-    step1: int,
-    dstep: int,
-    *,
-    network: str = "XX",
-    station: str = "STA",
-    dt: float = 0.1,
-    points_per_element: int = 27,
-    encoding_level: int = ENCODING_LEVEL_DEFAULT,
-    name_data: str = "disp",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+    write_db.  Nothing is collected; every stage is a DataFrame.""",
+)
+dgf_build = _make_build(
+    "DGF",
     """The full DGF create_db (DDGF.py:40-190): displacement scan S5,
-    id-gather J2, [para][force][time] flatten, same encode tail."""
-    ibool = specfem.read_ibool(spark, model_glob, nspec)
-    points = select_gll_points(ibool, points_per_element)
-    steps = valid_steps(spark, force_dirs, name_data, step0, step1, dstep)
-    if not steps.head(1):
-        raise ValueError("no valid steps: no snapshot step exists in all force dirs")
-    snaps = specfem.read_disp_snapshots(spark, force_dirs, None, name_data)
-    series = assemble_series(snaps, points, steps, kind="DGF")
-    records = add_start_offsets(encode_records(series, encoding_level))
-    meta = db_meta(
-        spark, records, steps,
-        network=network, station=station, kind="DGF",
-        n_force=3, n_para=3, dt=dt, nspec=nspec, forder="ENZ",
-    )
-    return records, meta, steps
+    id-gather J2, [para][force][time] flatten, same encode tail.""",
+)

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from seisdb_spark.sources.specfem import KINDS
+
 # CPython bytes-object overhead baked into the reference's header `length`
 # dataset (sys.getsizeof(b"...") - len(b"...") on CPython 3 x86-64).
 _SIZEOF_OVERHEAD = 33
@@ -57,12 +59,6 @@ _PACK_RESULT_SCHEMA = T.StructType(
 )
 
 
-def _data_suffix(kind: str) -> str:
-    if kind.upper() not in ("SGT", "DGF"):
-        raise ValueError("kind must be 'SGT' or 'DGF'")
-    return "sgt_data" if kind.upper() == "SGT" else "dgf_data"
-
-
 def export_reference_data_bins(
     records: DataFrame, saving_dir: str, kind: str = "SGT"
 ) -> pd.DataFrame:
@@ -74,7 +70,7 @@ def export_reference_data_bins(
     Returns a small pandas frame (one row per proc: path, n_blobs, n_bytes)
     — the only data that ever reaches the driver.
     """
-    suffix = _data_suffix(kind)
+    suffix = KINDS[kind].data_suffix
     parts = (
         records.select("proc", "start", "length", "blob")
         .repartition("proc")
@@ -189,12 +185,11 @@ def reference_headers(records: DataFrame, meta: DataFrame) -> DataFrame:
     return joined.select("proc", *empties, *[c for c in attrs.columns if c != "proc"])
 
 
-def export_reference_format(
-    records: DataFrame, meta: DataFrame, saving_dir: str, kind: str = "SGT"
-) -> pd.DataFrame:
+def export_reference_format(records: DataFrame, meta: DataFrame, saving_dir: str) -> pd.DataFrame:
     """Full reference-layout export: per-proc blob ``.bin`` files plus the
     header table at ``<saving_dir>/headers_parquet``.  Returns the per-proc
-    pack summary.
+    pack summary.  The kind (and so the file suffix) is ``meta``'s ``kind``
+    column; a meta holding more than one kind raises ``ValueError``.
 
     ``records`` feeds two actions (the pack and the header write); it is
     persisted for the duration so the upstream build lineage — the
@@ -205,22 +200,25 @@ def export_reference_format(
     reference writer always creates the per-proc file (DSGT.py:118-126
     opens it before the record loop), and a consumer iterating procs from
     the header table must not hit a missing file."""
-    suffix = _data_suffix(kind)
     records = records.persist()
     try:
+        meta_rows = meta.select("proc", "kind").distinct().collect()
+        kinds = sorted({r.kind for r in meta_rows})
+        if len(kinds) != 1:
+            raise ValueError(f"db_meta must hold exactly one kind, got {kinds}")
+        kind = kinds[0]
         summary = export_reference_data_bins(records, saving_dir, kind)
         reference_headers(records, meta).write.mode("overwrite").parquet(
             os.path.join(saving_dir, "headers_parquet")
         )
     finally:
         records.unpersist()
-    meta_procs = [r.proc for r in meta.select("proc").distinct().collect()]
-    empty = sorted(set(meta_procs) - set(summary.proc))
+    empty = sorted({r.proc for r in meta_rows} - set(summary.proc))
     if empty:
         os.makedirs(saving_dir, exist_ok=True)
         rows = []
         for proc in empty:
-            path = os.path.join(saving_dir, f"proc{proc:06d}_{suffix}.bin")
+            path = os.path.join(saving_dir, f"proc{proc:06d}_{KINDS[kind].data_suffix}.bin")
             open(path, "wb").close()
             rows.append((proc, path, 0, 0))
         summary = (
@@ -255,13 +253,14 @@ def _header_row_payload(row) -> tuple[dict, dict]:
     return datasets, attrs
 
 
-def write_hdf5_headers(spark, saving_dir: str, kind: str = "SGT") -> list[str]:
+def write_hdf5_headers(spark, saving_dir: str) -> list[str]:
     """Convert the parquet header table into the reference's literal
     ``proc%06d_header.hdf5`` / ``proc%06d_dgf_header.hdf5`` files
-    (DSGT.py:119 / DDGF.py:116).  Uses h5py when available; otherwise the
-    built-in minimal spec-subset writer (pipeline/hdf5_min.py — this
-    container ships no HDF5 bindings), whose output is structurally
-    verified by an independent parser in tests/test_hdf5_min.py.  The
+    (DSGT.py:119 / DDGF.py:116), the suffix chosen by each row's ``type``.
+    Uses h5py when available; otherwise the built-in minimal spec-subset
+    writer (pipeline/hdf5_min.py — this container ships no HDF5 bindings),
+    whose output is structurally verified by an independent parser in
+    tests/test_hdf5_min.py.  The
     parquet header table remains the canonical queryable surface."""
     try:
         import h5py
@@ -269,7 +268,6 @@ def write_hdf5_headers(spark, saving_dir: str, kind: str = "SGT") -> list[str]:
         h5py = None
     from seisdb_spark.pipeline.hdf5_min import write_hdf5
 
-    header_suffix = "header" if kind.upper() == "SGT" else "dgf_header"
     rows = (
         spark.read.parquet(os.path.join(saving_dir, "headers_parquet"))
         .toPandas()
@@ -277,7 +275,8 @@ def write_hdf5_headers(spark, saving_dir: str, kind: str = "SGT") -> list[str]:
     )
     out: list[str] = []
     for row in rows.itertuples(index=False):
-        path = os.path.join(saving_dir, f"{row.proc_name}_{header_suffix}.hdf5")
+        suffix = KINDS[row.type].header_suffix
+        path = os.path.join(saving_dir, f"{row.proc_name}_{suffix}.hdf5")
         datasets, attrs = _header_row_payload(row)
         if h5py is None:
             write_hdf5(path, datasets, attrs)

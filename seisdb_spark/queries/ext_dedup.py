@@ -129,8 +129,9 @@ def repeated_passage_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The pipeline's stages as named builders (the query composes them verbatim)
-# so tools/profile_decades.py can time each stage separately at x100/x1000 —
-# the r11 verdict's superlinear-decade attribution ask.
+# so a profiler (tools/profile_decades.py at commit 2e88616) can time each
+# stage separately at x100/x1000 — the r11 verdict's superlinear-decade
+# attribution ask.
 def passage_grams(docs: DataFrame) -> DataFrame:
     """Every word PASSAGE_GRAM_WORDS-gram, md5-fingerprinted at every
     position: (doc_id, i, g).  Map-only (tokenize + explode + hash).
@@ -139,7 +140,7 @@ def passage_grams(docs: DataFrame) -> DataFrame:
     the 32-char hex string: the gram table is the largest thing this
     pipeline shuffles (~1 row per corpus token), and an 8-byte key more
     than halves the exchange bytes of the distinct/flag/join stages — the
-    decade profile (tools/profile_decades.py) showed those exchanges, not
+    decade profile (tools/profile_decades.py at commit 2e88616) showed those exchanges, not
     the data, were the x1000 superlinear term.  Collision odds are
     n^2 / 2^61 expected colliding PAIRS (~0.02 at the 2.3e8-gram x1000
     stress corpus, ~1e-10 at the sf0.01 oracle gate), and a collision can
@@ -189,7 +190,7 @@ def passage_flagged_positions(grams: DataFrame) -> DataFrame:
     accumulators, and the OLD shape shipped the same hot-gram rows
     through its g-keyed join partition anyway (plus a second exchange
     and a second md5 pass); measured interleaved at sf0.1
-    (tools/ab_passage.py, identical span sets): 1.14 -> 0.68 s median.
+    (tools/ab_passage.py at commit 2e88616, identical span sets): 1.14 -> 0.68 s median.
     """
     over_g = Window.partitionBy("g")
     if PASSAGE_MIN_DOCS == 2:
@@ -215,7 +216,8 @@ def passage_rep(grams: DataFrame) -> DataFrame:
     :func:`passage_flagged_positions` (one gram scan, one exchange); this
     builder and :func:`passage_hits` remain as the independently-shaped
     A-side of tools/ab_passage.py and the stage decomposition of
-    tools/profile_decades.py."""
+    tools/profile_decades.py (both at commit 2e88616), and the reference
+    side of tests/test_extensions.py's equivalence test."""
     return (
         grams.select("g", "doc_id")
         .distinct()

@@ -9,8 +9,11 @@ Reference citations:
     /root/reference/seisdb/DSEM_Utils/__init__.py:3-8
   - encoding level (8-bit quantization default): /root/reference/seisdb/DDBbase.py:22
   - 27 points per element default: /root/reference/seisdb/DDBbase.py:21
-  - SGT has 6 strain components x 3 forces: /root/reference/seisdb/DSGT.py:32-33
-  - DGF has 3 displacement components x 3 forces: /root/reference/seisdb/DDGF.py:32-33
+
+The per-kind constants (SGT's 6 strain components, DGF's 3 displacement
+components, serialization orders, file suffixes; DSGT.py:32-33 /
+DDGF.py:32-33) and the long snapshot schemas live in the kind table,
+``sources/specfem.py KINDS``, next to the decode kernels.
 """
 
 from __future__ import annotations
@@ -37,18 +40,6 @@ REORDER27: tuple[int, ...] = tuple(
 )
 
 ENCODING_LEVEL_DEFAULT = 8  # DDBbase.py:22 — uint8 codes
-SGT_N_FORCES = 3
-SGT_N_PARAS = 6  # xx, yy, zz, xy, xz, yz strain components
-DGF_N_FORCES = 3
-DGF_N_PARAS = 3  # ux, uy, uz
-
-STRAIN_PARAS = ("exx", "eyy", "ezz", "exy", "exz", "eyz")
-DISP_PARAS = ("ux", "uy", "uz")
-
-# Canonical serialization order for assembled series (SURVEY §2.6 R2):
-# the reference's SGT and DGF disagree ('NEZ' vs 'ENZ', DSGT.py:193 /
-# DDGF.py:187); we fix one canonical (force, para, step) order and record it.
-CANONICAL_FORDER = "NEZ"
 DB_VERSION = "0.1.0"
 
 # ---------------------------------------------------------------- schemas
@@ -62,64 +53,5 @@ IBOOL_SCHEMA = T.StructType(
         T.StructField("i_spec", T.IntegerType(), False),
         T.StructField("i_gll", T.IntegerType(), False),
         T.StructField("gll_id", T.IntegerType(), False),
-    ]
-)
-
-# Strain snapshot, long form (one row per (proc, force, step, cell)).
-STRAIN_SCHEMA = T.StructType(
-    [
-        T.StructField("proc", T.IntegerType(), False),
-        T.StructField("force", T.IntegerType(), False),
-        T.StructField("step", T.IntegerType(), False),
-        T.StructField("i_spec", T.IntegerType(), False),
-        T.StructField("i_gll", T.IntegerType(), False),
-    ]
-    + [T.StructField(p, T.FloatType(), False) for p in STRAIN_PARAS]
-)
-
-# Displacement snapshot, long form (one row per (proc, force, step, gll)).
-DISP_SCHEMA = T.StructType(
-    [
-        T.StructField("proc", T.IntegerType(), False),
-        T.StructField("force", T.IntegerType(), False),
-        T.StructField("step", T.IntegerType(), False),
-        T.StructField("gll_id", T.IntegerType(), False),
-    ]
-    + [T.StructField(p, T.FloatType(), False) for p in DISP_PARAS]
-)
-
-# Output record: one row per selected GLL point (replaces blob file + HDF5
-# header, SURVEY §1.1): header columns + compressed blob + decoded arrays.
-RECORD_SCHEMA = T.StructType(
-    [
-        T.StructField("network", T.StringType(), False),
-        T.StructField("station", T.StringType(), False),
-        T.StructField("proc", T.IntegerType(), False),
-        T.StructField("gll_id", T.IntegerType(), False),
-        T.StructField("i_spec", T.IntegerType(), False),
-        T.StructField("i_gll", T.IntegerType(), False),
-        T.StructField("offset", T.DoubleType(), False),
-        T.StructField("scale", T.DoubleType(), False),
-        T.StructField("length", T.LongType(), False),
-        T.StructField("start", T.LongType(), False),
-        T.StructField("blob", T.BinaryType(), False),
-    ]
-)
-
-# db_meta: the HDF5 scalar attrs (DSGT.py:186-194) as a one-row table.
-DB_META_SCHEMA = T.StructType(
-    [
-        T.StructField("network", T.StringType(), False),
-        T.StructField("station", T.StringType(), False),
-        T.StructField("proc", T.IntegerType(), False),
-        T.StructField("ngll", T.LongType(), False),
-        T.StructField("nstep", T.LongType(), False),
-        T.StructField("nforce", T.IntegerType(), False),
-        T.StructField("nparas", T.IntegerType(), False),
-        T.StructField("dt", T.DoubleType(), False),
-        T.StructField("nspec", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("forder", T.StringType(), False),
-        T.StructField("version", T.StringType(), False),
     ]
 )

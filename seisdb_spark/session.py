@@ -33,8 +33,9 @@ def get_spark(app_name: str = "seisdb-spark", shuffle_partitions: int | None = N
         # partitions == 32) the x1000 stress corpus forced ~300 MB+ sort
         # spills per task and made every corpus-keyed exchange superlinear
         # across the x100->x1000 decade (rep-stage delta 15 s -> 256 s for
-        # 10x the rows; tools/profile_decades.py).  Starting at 512 and
-        # letting AQE coalesce to advisoryPartitionSizeInBytes keeps
+        # 10x the rows; tools/profile_decades.py at commit 2e88616).
+        # Starting at 512 and letting AQE coalesce to
+        # advisoryPartitionSizeInBytes keeps
         # small-SF plans identical (coalesced post-shuffle) while large
         # corpora get memory-sized sort runs — on a real 1000-executor
         # cluster this would be set to a few x total cores.

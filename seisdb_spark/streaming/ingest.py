@@ -7,28 +7,26 @@ Design notes (100 TB posture):
     (user_id, session) — the same shuffle keys as the batch twins, so state
     distributes across executors; the watermark bounds state size.
   * Snapshot ingest is decode-only per microbatch (narrow, no shuffle):
-    files land, are decoded by the SAME mapInPandas kernels as the batch
-    scan (sources/specfem.py), and append to a staging table. The wide
-    assembly/encode runs once at finalize over the staging table — the
-    correct split because SGT encoding needs each point's FULL time series
-    (a per-key sort over all steps), which a running stream cannot emit
-    incrementally without holding every sample in state anyway.
+    files land, go through the batch scan's own reader
+    (``specfem.read_snapshots``: the same filename rule, force tagging and
+    one mapInPandas decode, fed by a streaming binaryFile reader), and
+    append to a staging table. The wide assembly/encode runs once at
+    finalize over the staging table — the correct split because SGT
+    encoding needs each point's FULL time series (a per-key sort over all
+    steps), which a running stream cannot emit incrementally without
+    holding every sample in state anyway.
 """
 
 from __future__ import annotations
 
 import os
 import threading
-from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from seisdb_spark.schemas import STRAIN_SCHEMA, STRAIN_PARAS
-from seisdb_spark.sources.specfem import N_GLL_PER_ELEMENT, SNAPSHOT_RE, decode_strain
+from seisdb_spark.sources.specfem import KINDS, read_snapshots
 
 # A streaming file source needs its schema up front; the events table's
 # physical ts layout has drifted upstream once already (timestamp[ns] in
@@ -317,51 +315,19 @@ def snapshot_ingest_stream(
     max_files_per_trigger: int = 3,
 ):
     """Stream SPECFEM snapshot files as they land (S6 streaming variant):
-    binaryFile source per force dir -> the SAME strain decode kernel as the
-    batch scan -> append to a staging parquet table via foreachBatch.
+    a streaming binaryFile reader per force dir -> the batch scan's reader
+    and strain decode (``specfem.read_snapshots``) -> append to a staging
+    parquet table via foreachBatch.
 
     Returns the started StreamingQuery; callers trigger availableNow (tests)
     or leave it running (production). Decode is narrow — each microbatch is
     files-in, long-rows-out, no shuffle, no state."""
-    force_by_dir = {os.path.normpath(d): i for i, d in enumerate(force_dirs)}
-
-    streams = []
-    for d in force_dirs:
-        glob = os.path.join(d, f"proc*_{name_data}_Step_*.bin")
-        streams.append(
-            spark.readStream.format("binaryFile")
-            .schema(BINARYFILE_SCHEMA)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .load(glob)
-            .select("path", "content")
-        )
-    binaries = streams[0]
-    for s in streams[1:]:
-        binaries = binaries.unionByName(s)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = SNAPSHOT_RE.search(os.path.basename(path))
-                if not m:
-                    continue
-                proc, step = int(m.group(1)), int(m.group(3))
-                force = force_by_dir[os.path.normpath(os.path.dirname(path.removeprefix("file:")))]
-                full = decode_strain(bytes(content), nspec)
-                nsp = full.shape[1]
-                ncell = nsp * N_GLL_PER_ELEMENT
-                cols = {
-                    "proc": np.full(ncell, proc, dtype=np.int32),
-                    "force": np.full(ncell, force, dtype=np.int32),
-                    "step": np.full(ncell, step, dtype=np.int32),
-                    "i_spec": np.repeat(np.arange(nsp, dtype=np.int32), N_GLL_PER_ELEMENT),
-                    "i_gll": np.tile(np.arange(N_GLL_PER_ELEMENT, dtype=np.int32), nsp),
-                }
-                for i, para in enumerate(STRAIN_PARAS):
-                    cols[para] = full[i].ravel()
-                yield pd.DataFrame(cols)
-
-    decoded = binaries.mapInPandas(decode, STRAIN_SCHEMA)
+    reader = (
+        spark.readStream.format("binaryFile")
+        .schema(BINARYFILE_SCHEMA)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+    )
+    decoded = read_snapshots(spark, force_dirs, nspec, "SGT", name_data, reader)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(staging_dir)
@@ -386,31 +352,26 @@ def finalize_sgt_from_staging(
     encoding_level: int | None = None,
 ):
     """Run the batch assembly + encode tail over the streamed-in staging
-    table. Steps valid = present in all 3 forces *in the staged data* (the
-    staging table is the listing); otherwise identical to pipeline.sgt_build."""
+    table. Steps valid = present in all forces *in the staged data* (the
+    staging table is the listing, under the same predicate as
+    pipeline.valid_steps); otherwise identical to pipeline.sgt_build."""
     from seisdb_spark.pipeline.build import (
         add_start_offsets,
         assemble_series,
         encode_records,
         select_gll_points,
+        steps_in_all_forces,
     )
     from seisdb_spark.schemas import ENCODING_LEVEL_DEFAULT
     from seisdb_spark.sources.specfem import read_ibool
 
     snaps = spark.read.parquet(staging_dir)
-    candidates = list(range(step0, step1, dstep))
-    steps = (
-        snaps.select("proc", "step", "force")
-        .distinct()
-        .filter(F.col("step").isin(candidates))
-        .groupBy("proc", "step")
-        .agg(F.countDistinct("force").alias("nf"))
-        .filter(F.col("nf") == 3)
-        .select("proc", "step")
-    )
+    # forder names one force per letter (N, E, Z)
+    n_force = len(KINDS["SGT"].forder)
+    steps = steps_in_all_forces(spark, snaps, n_force, step0, step1, dstep)
     ibool = read_ibool(spark, model_glob, nspec)
     points = select_gll_points(ibool, points_per_element)
-    series = assemble_series(snaps, points, steps, kind="SGT")
+    series = assemble_series(snaps, points, steps, "SGT")
     level = ENCODING_LEVEL_DEFAULT if encoding_level is None else encoding_level
     return add_start_offsets(encode_records(series, level))
 

@@ -224,8 +224,8 @@ def test_reference_header_files_match_parquet_table(spark, tmp_path):
         m["dstep"],
     )
     out = str(tmp_path / "db")
-    export_reference_format(records, meta, out, kind="SGT")
-    paths = write_hdf5_headers(spark, out, kind="SGT")
+    export_reference_format(records, meta, out)
+    paths = write_hdf5_headers(spark, out)
     assert len(paths) == 2 and all(p.endswith("_header.hdf5") for p in paths)
 
     table = (

@@ -34,7 +34,7 @@ def _export(spark, m, tmp_path, kind):
         station="USC",
     )
     out = str(tmp_path / f"refdb_{kind}")
-    summary = export_reference_format(records, meta, out, kind=kind)
+    summary = export_reference_format(records, meta, out)
     return out, summary
 
 
@@ -114,7 +114,7 @@ def test_empty_proc_still_gets_bin_and_header(spark, fixture_meta, tmp_path):
     from pyspark.sql import functions as F
 
     summary = export_reference_format(
-        records.filter(F.col("proc") != 0), meta, out, kind="SGT"
+        records.filter(F.col("proc") != 0), meta, out
     )
     assert list(summary.proc) == list(range(NPROCS))
     row0 = summary[summary.proc == 0].iloc[0]
@@ -134,7 +134,7 @@ def test_hdf5_headers_written_without_h5py(spark, fixture_meta, tmp_path):
     in tests/test_hdf5_min.py)."""
     m = fixture_meta
     out, _ = _export(spark, m, tmp_path, "SGT")
-    paths = write_hdf5_headers(spark, out, kind="SGT")
+    paths = write_hdf5_headers(spark, out)
     assert [os.path.basename(p) for p in paths] == [
         f"proc{p:06d}_header.hdf5" for p in range(m["nprocs"])
     ]
@@ -144,3 +144,40 @@ def test_hdf5_headers_written_without_h5py(spark, fixture_meta, tmp_path):
         ds, attrs = read_hdf5(p)
         assert set(ds) == {"index", "start", "length", "offset", "scale"}
         assert attrs["type"] == "SGT"
+
+
+def test_dgf_hdf5_header_names(spark, fixture_meta, tmp_path):
+    """The header file suffix follows the header table's ``type``: a DGF
+    export writes the reference's ``proc%06d_dgf_header.hdf5`` (DDGF.py:116)
+    next to ``proc%06d_dgf_data.bin``."""
+    m = fixture_meta
+    out, _ = _export(spark, m, tmp_path, "DGF")
+    paths = write_hdf5_headers(spark, out)
+    assert [os.path.basename(p) for p in paths] == [
+        f"proc{p:06d}_dgf_header.hdf5" for p in range(m["nprocs"])
+    ]
+    assert sorted(f for f in os.listdir(out) if f.endswith(".bin")) == [
+        f"proc{p:06d}_dgf_data.bin" for p in range(m["nprocs"])
+    ]
+
+
+def test_export_rejects_meta_with_two_kinds(spark, fixture_meta, tmp_path):
+    """The kind is read from db_meta, so a meta that mixes kinds has no one
+    file layout and must be refused before anything is written."""
+    from pyspark.sql import functions as F
+
+    m = fixture_meta
+    records, meta, _ = sgt_build(
+        spark,
+        os.path.join(m["model_dir"], "proc*_ibool.bin"),
+        m["force_dirs"],
+        m["nspec"],
+        m["step0"],
+        m["step1"],
+        m["dstep"],
+    )
+    mixed = meta.unionByName(meta.withColumn("kind", F.lit("DGF")))
+    out = str(tmp_path / "refdb_mixed")
+    with pytest.raises(ValueError, match="exactly one kind"):
+        export_reference_format(records, mixed, out)
+    assert not os.path.exists(out)

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import zlib
 
 import numpy as np
@@ -405,3 +406,82 @@ def test_append_to_db_incremental_station(spark, fixture_meta, sgt_records, tmp_
     assert got_records2.filter("station = 'LAX'").count() == len(pdf)
     # the conf flip is scoped: static default restored after the call
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
+
+
+# ---------------------------------------------------------------- plan shape
+def _subtrees(plan: str) -> list[tuple[str, str]]:
+    """(node line, subtree text) for every node of a plan tree string."""
+    lines = plan.splitlines()
+    cols = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    out = []
+    for i, (line, col) in enumerate(zip(lines, cols)):
+        end = next((j for j in range(i + 1, len(lines)) if cols[j] <= col), len(lines))
+        out.append((line.strip(" :+-"), "\n".join(lines[i + 1 : end])))
+    return out
+
+
+def test_build_plan_decodes_snapshots_once_and_semi_joins_once(spark, fixture_meta):
+    """The executed build: the force scans are unioned under ONE snapshot
+    decode (a MapInPandas directly over the binaryFile scans), the valid
+    steps are semi-joined ONCE, and the fact side shuffles exactly twice —
+    the (proc, gll_id) assembly and the per-proc start-offset window."""
+    from seisdb_spark.plancheck import final_plan
+
+    m = fixture_meta
+    records, _meta, _steps = sgt_build(
+        spark,
+        os.path.join(m["model_dir"], "proc*_ibool.bin"),
+        m["force_dirs"],
+        m["nspec"],
+        m["step0"],
+        m["step1"],
+        m["dstep"],
+    )
+    records.collect()
+    nodes = _subtrees(final_plan(records))
+    # a snapshot decode emits force; it sits on the scans, not on another map
+    snapshot_decodes = [
+        node for node, sub in nodes
+        if node.startswith("MapInPandas") and "force#" in node
+        and "FileScan binaryFile" in sub and "MapInPandas" not in sub
+    ]
+    assert len(snapshot_decodes) == 1, snapshot_decodes
+    assert sum("LeftSemi" in node for node, _ in nodes) == 1
+    # fact-side shuffles: every Exchange not below a broadcast
+    broadcast_side = "\n".join(sub for node, sub in nodes if node.startswith("BroadcastExchange"))
+    fact_keys = sorted(
+        re.sub(r"#\d+", "", re.search(r"hashpartitioning\((.*), \d+\)", node).group(1))
+        for node, _ in nodes
+        if node.startswith("Exchange") and node not in broadcast_side
+    )
+    assert fact_keys == ["proc", "proc, gll_id"]
+
+
+def test_stray_snapshot_files_are_skipped(spark, tmp_path):
+    """Files the snapshot glob matches but the filename rule does not (a
+    non-numeric step or proc) are ignored by the listing and the decode
+    alike: valid steps and built records are unchanged.  Under ANSI a cast
+    of their empty proc/step match would fail the whole job."""
+    from seisdb_spark.pipeline import generate_fixture
+
+    m = generate_fixture(str(tmp_path / "fx"), nprocs=1, nspec=2, step1=40)
+    args = (
+        spark, f"{m['model_dir']}/proc*_ibool.bin", m["force_dirs"], m["nspec"],
+        m["step0"], m["step1"], m["dstep"],
+    )
+
+    def built():
+        steps = valid_steps(
+            spark, m["force_dirs"], "strain_field", m["step0"], m["step1"], m["dstep"]
+        ).toPandas().sort_values(["proc", "step"]).reset_index(drop=True)
+        records = sgt_build(*args)[0].toPandas().sort_values(["proc", "gll_id"])
+        return steps, records.reset_index(drop=True)
+
+    want_steps, want_records = built()
+    for d in m["force_dirs"]:
+        for name in ("proc000000_strain_field_Step_old.bin", "procABCDEF_strain_field_Step_0.bin"):
+            with open(os.path.join(d, name), "wb") as fh:
+                fh.write(b"not a snapshot")
+    got_steps, got_records = built()
+    pd.testing.assert_frame_equal(got_steps, want_steps)
+    pd.testing.assert_frame_equal(got_records, want_records)

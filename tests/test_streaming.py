@@ -5,7 +5,10 @@ SGT records to the batch build."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
+import pytest
 
 from seisdb_spark.pipeline import generate_fixture, sgt_build
 from seisdb_spark.queries.registry import REGISTRY
@@ -143,13 +146,18 @@ def test_events_ts_layout_tripwire(spark, tmp_path):
         events_ts_layout(spark, str(bad / "events.parquet"))
 
 
-def test_snapshot_stream_ingest_encode_equals_batch(spark, tmp_path):
+@pytest.mark.parametrize("dirs", ["absolute", "relative"])
+def test_snapshot_stream_ingest_encode_equals_batch(spark, tmp_path, monkeypatch, dirs):
     """Files stream in (binaryFile source, 3 per microbatch), decode via the
     same kernel, land in staging; the finalize encode over staged rows must
-    produce byte-identical records to the batch sgt_build."""
+    produce byte-identical records to the batch sgt_build.  Force dirs given
+    relative to the working directory work as they do in the batch build."""
     m = generate_fixture(str(tmp_path / "fx"), nprocs=1, nspec=2, step1=40)
     staging = str(tmp_path / "staging")
     ckpt = str(tmp_path / "ckpt")
+    if dirs == "relative":
+        monkeypatch.chdir(tmp_path)
+        m["force_dirs"] = [os.path.relpath(d, tmp_path) for d in m["force_dirs"]]
 
     q = snapshot_ingest_stream(
         spark, m["force_dirs"], m["nspec"], staging, ckpt
