@@ -3,10 +3,13 @@ the stream to completion (availableNow trigger, memory sink) and returns the
 final result table, so the driver's DuckDB oracle can hash-compare it like
 any batch query — streamed-vs-batch equivalence IS the correctness claim.
 
-The long-running form (real triggers, watermark-driven append emission,
-foreachBatch snapshot ingest into the encode tail) lives in
-``seisdb_spark.streaming`` and is batch-equivalence tested in
-tests/test_streaming.py.
+The foreachBatch twins run on ``streaming.run_logs``: each microbatch
+writes its partials to ``<root>/<log>/batch-<batch_id>`` in overwrite mode
+(idempotent under checkpoint replays), the checkpoint is ``<root>/ckpt``,
+and the twin compacts the merged logs.  ``<root>`` is ``out_dir`` or a
+per-(process, sf_dir) temp tree (``_probe_root``).  Snapshot ingest into
+the encode tail lives in ``seisdb_spark.streaming`` and is
+batch-equivalence tested in tests/test_streaming.py.
 """
 
 from __future__ import annotations
@@ -30,6 +33,8 @@ from seisdb_spark.queries import relational  # noqa: F401
 from seisdb_spark.queries import temporal  # noqa: F401
 from seisdb_spark.streaming import (
     read_events_stream,
+    read_table_stream,
+    run_logs,
     run_to_memory,
     sessionize_stream,
     tumbling_counts_stream,
@@ -79,46 +84,6 @@ def _probe_root(prefix: str, sf_dir: str, out_dir: str | None) -> str:
         _register_probe_cleanup(out_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     return out_dir
-
-
-def _ingest_log(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str | None,
-    prefix: str,
-    subdir: str,
-    reader,
-    per_batch,
-) -> DataFrame:
-    """The single-log scan-once-at-ingest skeleton shared by the
-    observation/partial twins (SCD2, gap-fill, funnel, CDC, OHLC):
-    compact each arriving microbatch with ``per_batch`` (a stage shared
-    with the batch twin), persist it under a batch_id-derived OVERWRITE
-    path — idempotent under checkpoint replays, the replay-safety
-    invariant lands here ONCE — then return the merged log for the
-    caller's read-side compaction.  Twins with more than one log table
-    (cohort) or a pre-published static side (zone maps) keep their own
-    bodies."""
-    import os
-
-    out_dir = _probe_root(prefix, sf_dir, out_dir)
-    log_dir = os.path.join(out_dir, subdir)
-    ckpt = os.path.join(out_dir, "ckpt")
-
-    def compact(bdf: DataFrame, batch_id: int) -> None:
-        per_batch(bdf).write.mode("overwrite").parquet(
-            os.path.join(log_dir, f"batch-{batch_id}")
-        )
-
-    q = (
-        reader(spark, sf_dir)
-        .writeStream.foreachBatch(compact)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.option("recursiveFileLookup", "true").parquet(log_dir)
 
 
 def _share_oracle(twin: str, source: str) -> None:
@@ -219,8 +184,6 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_incremental_dedup(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
-    import os
-
     from pyspark.sql import functions as F
 
     from seisdb_spark.functions.text import (
@@ -234,7 +197,6 @@ def streaming_incremental_dedup(
         _verify_jaccard,
     )
     from seisdb_spark.sources.tables import load_table
-    from seisdb_spark.streaming import read_documents_stream
 
     def bands_of(sh):
         sig = with_token_hash(sh).groupBy("doc_id").agg(*minhash_agg_exprs())
@@ -250,18 +212,8 @@ def streaming_incremental_dedup(
     corpus_sh = shingle_tokens(corpus).persist()
     corpus_bands = bands_of(corpus_sh).persist()
 
-
-    # Staging root is DETERMINISTIC per (process, sf_dir) — not a fresh
-    # mkdtemp per call — and the previous run's tree is removed up front, so
-    # repeat invocations never accumulate temp trees for the process
-    # lifetime.  Callers wanting the artifacts visible pass out_dir.
-    root = _probe_root("probe", sf_dir, out_dir)
-    pairs_dir = os.path.join(root, "pairs")
-    ckpt = os.path.join(root, "ckpt")
-
-    def probe(bdf: DataFrame, batch_id: int) -> None:
-        batch = bdf.filter(F.col("doc_id") % 10 == 0)
-        bsh = shingle_tokens(batch)
+    def pairs(bdf: DataFrame) -> DataFrame:
+        bsh = shingle_tokens(bdf.filter(F.col("doc_id") % 10 == 0))
         cand = (
             bands_of(bsh)
             .alias("a")
@@ -272,7 +224,7 @@ def streaming_incremental_dedup(
             .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
             .distinct()
         )
-        (
+        return (
             _verify_jaccard(corpus_sh.unionByName(bsh), cand)
             .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
             .select(
@@ -280,32 +232,15 @@ def streaming_incremental_dedup(
                 F.col("doc_b").alias("corpus_doc"),
                 F.round("jaccard", 4).alias("jaccard"),
             )
-            # batch_id-derived OVERWRITE path: a checkpoint-recovery replay
-            # of an already-committed epoch rewrites its own directory
-            # instead of appending duplicates — foreachBatch's contract is
-            # at-least-once per batch_id, so the sink must be idempotent
-            # per batch_id to get the exactly-once the doc string claims
-            .write.mode("overwrite")
-            .parquet(os.path.join(pairs_dir, f"batch-{batch_id}"))
         )
 
-    q = (
-        read_documents_stream(spark, sf_dir)
-        .writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    [out] = run_logs(
+        read_table_stream(spark, sf_dir, "documents"),
+        _probe_root("probe", sf_dir, out_dir),
+        {"pairs": pairs},
+        (corpus_bands, corpus_sh),
     )
-    try:
-        q.awaitTermination()
-    finally:
-        corpus_bands.unpersist()
-        corpus_sh.unpersist()
-    return (
-        spark.read.schema("batch_doc long, corpus_doc long, jaccard double")
-        .option("recursiveFileLookup", "true")
-        .parquet(pairs_dir)
-    )
+    return out
 
 
 # stream==batch equivalence: the streaming probe's oracle IS the batch
@@ -357,7 +292,6 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from seisdb_spark.queries.extensions import QC_WEIGHT_MOD, QC_WEIGHT_SHIFT
-    from seisdb_spark.streaming import read_documents_stream
 
     sum_w = F.expr(
         "aggregate(transform(split(text, ' '), "
@@ -365,7 +299,7 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"as bigint) % {QC_WEIGHT_MOD} - {QC_WEIGHT_SHIFT}), "
         "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
     )
-    scored = read_documents_stream(spark, sf_dir).select(
+    scored = read_table_stream(spark, sf_dir, "documents").select(
         "lang",
         sum_w.alias("sum_w"),
     )
@@ -427,14 +361,11 @@ _share_quality_oracle()
 def streaming_decontamination(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
-    import os
-
     from pyspark.sql import functions as F
 
     from seisdb_spark.functions.text import shingle_tokens
     from seisdb_spark.queries.extensions import DECON_BENCH_MOD, DECON_SHINGLE_K
     from seisdb_spark.sources.tables import load_table
-    from seisdb_spark.streaming import read_documents_stream
 
     is_bench = F.col("doc_id") % DECON_BENCH_MOD == 0
     bench_sh = (
@@ -446,46 +377,28 @@ def streaming_decontamination(
         .persist()
     )
 
-    root = _probe_root("decon", sf_dir, out_dir)
-    hits_dir = os.path.join(root, "hits")
-    ckpt = os.path.join(root, "ckpt")
-
-    def probe(bdf: DataFrame, batch_id: int) -> None:
+    def hits(bdf: DataFrame) -> DataFrame:
         # distinct=False: the countDistinct aggregate dedups after the tiny
         # hit set exists — same redundant-shuffle removal as decon_join
         batch_sh = shingle_tokens(
             bdf.filter(~is_bench), k=DECON_SHINGLE_K, distinct=False
         )
-        (
+        return (
             batch_sh.join(F.broadcast(bench_sh), "sh")
             .groupBy("doc_id")
             .agg(
                 F.countDistinct("sh").alias("n_shared_shingles"),
                 F.countDistinct("bench_id").alias("n_bench_docs"),
             )
-            # idempotent per batch_id (overwrite of a batch-derived path),
-            # so checkpoint-recovery replays cannot duplicate per-doc rows
-            # — same fix as the incremental-dedup probe above
-            .write.mode("overwrite")
-            .parquet(os.path.join(hits_dir, f"batch-{batch_id}"))
         )
 
-    q = (
-        read_documents_stream(spark, sf_dir)
-        .writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    [out] = run_logs(
+        read_table_stream(spark, sf_dir, "documents"),
+        _probe_root("decon", sf_dir, out_dir),
+        {"hits": hits},
+        (bench_sh,),
     )
-    try:
-        q.awaitTermination()
-    finally:
-        bench_sh.unpersist()
-    return (
-        spark.read.schema("doc_id long, n_shared_shingles long, n_bench_docs long")
-        .option("recursiveFileLookup", "true")
-        .parquet(hits_dir)
-    )
+    return out
 
 
 _share_oracle("streaming_decontamination", "decontamination_overlap")
@@ -509,21 +422,9 @@ _share_oracle("streaming_decontamination", "decontamination_overlap")
 def streaming_novelty_probe(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
-
     from seisdb_spark.streaming.ingest import novelty_probe
 
-    # deliberately NOT _probe_root: novelty_probe manages (and wipes) its
-    # own staging tree, so only the keying + cleanup registration happen here
-    if out_dir is None:
-        key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        out_dir = os.path.join(
-            tempfile.gettempdir(), f"seisdb_stream_novelty_{os.getpid()}_{key}"
-        )
-        _register_probe_cleanup(out_dir)
-    return novelty_probe(spark, sf_dir, out_dir)
+    return novelty_probe(spark, sf_dir, _probe_root("novelty", sf_dir, out_dir))
 
 
 def _set_novelty_probe_oracle() -> None:
@@ -574,35 +475,14 @@ _set_novelty_probe_oracle()
 def streaming_int4_quantize(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
-    import os
-
     from seisdb_spark.queries.extensions import int4_block_quantize_df
-    from seisdb_spark.streaming import read_embeddings_stream
 
-    out_dir = _probe_root("int4", sf_dir, out_dir)
-    codes_dir = os.path.join(out_dir, "codes")
-    ckpt = os.path.join(out_dir, "ckpt")
-
-    def quantize(bdf: DataFrame, batch_id: int) -> None:
-        (
-            int4_block_quantize_df(bdf)
-            .write.mode("overwrite")
-            .parquet(os.path.join(codes_dir, f"batch-{batch_id}"))
-        )
-
-    q = (
-        read_embeddings_stream(spark, sf_dir)
-        .writeStream.foreachBatch(quantize)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    [out] = run_logs(
+        read_table_stream(spark, sf_dir, "embeddings"),
+        _probe_root("int4", sf_dir, out_dir),
+        {"codes": int4_block_quantize_df},
     )
-    q.awaitTermination()
-    return (
-        spark.read.schema("vec_id long, codes string, qerr double")
-        .option("recursiveFileLookup", "true")
-        .parquet(codes_dir)
-    )
+    return out
 
 
 # stream==batch equivalence: the streaming quantizer's oracle IS the batch
@@ -629,43 +509,25 @@ _share_oracle("streaming_int4_quantize", "embedding_int4_block_quantize")
 def streaming_hll_rollup(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
-    import os
-
     from pyspark.sql import functions as F
 
     from seisdb_spark.queries.extensions import HLL_LGK
     from seisdb_spark.sources.tables import load_table
-    from seisdb_spark.streaming import read_documents_stream
 
-    out_dir = _probe_root("hll", sf_dir, out_dir)
-    sk_dir = os.path.join(out_dir, "sketches")
-    ckpt = os.path.join(out_dir, "ckpt")
-
-    def sketch(bdf: DataFrame, batch_id: int) -> None:
-        (
+    def sketch(bdf: DataFrame) -> DataFrame:
+        return (
             bdf.select(
                 "lang", "source", F.explode(F.split("text", " ")).alias("w")
             )
             .filter(F.col("w") != "")
             .groupBy("lang", "source")
             .agg(F.expr(f"hll_sketch_agg(w, {HLL_LGK})").alias("sk"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(sk_dir, f"batch-{batch_id}"))
         )
 
-    q = (
-        read_documents_stream(spark, sf_dir)
-        .writeStream.foreachBatch(sketch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    partials = (
-        spark.read.schema("lang string, source string, sk binary")
-        .option("recursiveFileLookup", "true")
-        .parquet(sk_dir)
+    [partials] = run_logs(
+        read_table_stream(spark, sf_dir, "documents"),
+        _probe_root("hll", sf_dir, out_dir),
+        {"sketches": sketch},
     )
     merged = partials.groupBy("lang").agg(
         F.countDistinct("source").cast("int").alias("n_sources"),
@@ -720,9 +582,6 @@ _share_oracle("streaming_hll_rollup", "hll_sketch_rollup")
 def streaming_topk_rollup(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
-    import os
-
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from seisdb_spark.queries.extensions import (
@@ -732,11 +591,6 @@ def streaming_topk_rollup(
         hh_tracked_capacity,
     )
     from seisdb_spark.sources.tables import load_table
-    from seisdb_spark.streaming import read_documents_stream
-
-    out_dir = _probe_root("topk", sf_dir, out_dir)
-    sk_dir = os.path.join(out_dir, "sketches")
-    ckpt = os.path.join(out_dir, "ckpt")
 
     # the exact referee needs the full table regardless; its vocab is
     # materialized once (Zipf-small) and sizes the capacity via the same
@@ -758,33 +612,19 @@ def streaming_topk_rollup(
     ).collect()[0]["nd"]
     tracked = hh_tracked_capacity(int(est_nd))
 
-    def sketch(bdf: DataFrame, batch_id: int) -> None:
-        (
+    def sketch(bdf: DataFrame) -> DataFrame:
+        return (
             bdf.select(F.explode(F.split("text", " ")).alias("w"))
             .filter(F.col("w") != "")
             .agg(
                 F.expr(f"approx_top_k_accumulate(w, {tracked})").alias("st")
             )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sk_dir, f"batch-{batch_id}"))
         )
 
-    q = (
-        read_documents_stream(spark, sf_dir)
-        .writeStream.foreachBatch(sketch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    partials = (
-        spark.read.schema(
-            "st struct<sketch:binary,maxItemsTracked:int,"
-            "itemDataType:string,itemDataTypeDDL:string>"
-        )
-        .option("recursiveFileLookup", "true")
-        .parquet(sk_dir)
+    [partials] = run_logs(
+        read_table_stream(spark, sf_dir, "documents"),
+        _probe_root("topk", sf_dir, out_dir),
+        {"sketches": sketch},
     )
     # combine the persisted partials and read back the FULL tracked list
     # (the batch gate's tie-safe probe shape)
@@ -830,9 +670,6 @@ _share_oracle("streaming_topk_rollup", "heavy_hitters_gate")
 def streaming_cm_rollup(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
-    import math
-    import os
-
     from pyspark.sql import functions as F
 
     from seisdb_spark.functions import cms
@@ -841,35 +678,17 @@ def streaming_cm_rollup(
         cm_gate_report,
     )
     from seisdb_spark.sources.tables import load_table
-    from seisdb_spark.streaming import read_documents_stream
 
-    out_dir = _probe_root("cm", sf_dir, out_dir)
-    sk_dir = os.path.join(out_dir, "sketches")
-    ckpt = os.path.join(out_dir, "ckpt")
-
-    def sketch(bdf: DataFrame, batch_id: int) -> None:
+    def sketch(bdf: DataFrame) -> DataFrame:
         tok_b = bdf.select(
             "source", F.explode(F.split("text", " ")).alias("w")
         ).filter(F.col("w") != "")
-        (
-            cms.cm_partials(tok_b, "w", ["source"])
-            .write.mode("overwrite")
-            .parquet(os.path.join(sk_dir, f"batch-{batch_id}"))
-        )
+        return cms.cm_partials(tok_b, "w", ["source"])
 
-    q = (
-        read_documents_stream(spark, sf_dir)
-        .writeStream.foreachBatch(sketch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    partials = (
-        spark.read.schema("source string, d int, col int, n long")
-        .option("recursiveFileLookup", "true")
-        .parquet(sk_dir)
+    [partials] = run_logs(
+        read_table_stream(spark, sf_dir, "documents"),
+        _probe_root("cm", sf_dir, out_dir),
+        {"sketches": sketch},
     )
     merged = cms.cm_merge(partials).localCheckpoint(eager=True)
     probes = spark.createDataFrame(
@@ -912,8 +731,6 @@ _share_oracle("streaming_cm_rollup", "cm_sketch_gate")
 def streaming_kmv_rollup(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
-    import os
-
     from pyspark.sql import functions as F
 
     from seisdb_spark.functions import kmv
@@ -923,38 +740,20 @@ def streaming_kmv_rollup(
         kmv_source_vocab,
     )
     from seisdb_spark.sources.tables import load_table
-    from seisdb_spark.streaming import read_documents_stream
 
-    out_dir = _probe_root("kmv", sf_dir, out_dir)
-    sk_dir = os.path.join(out_dir, "signatures")
-    ckpt = os.path.join(out_dir, "ckpt")
-
-    def sign(bdf: DataFrame, batch_id: int) -> None:
+    def sign(bdf: DataFrame) -> DataFrame:
         sw_b = (
             bdf.filter(F.col("source").isin(*KMV_GATE_SOURCES))
             .select("source", F.explode(F.split("text", " ")).alias("w"))
             .filter(F.col("w") != "")
             .distinct()
         )
-        (
-            kmv.kmv_sketch(sw_b, "w", ["source"])
-            .write.mode("overwrite")
-            .parquet(os.path.join(sk_dir, f"batch-{batch_id}"))
-        )
+        return kmv.kmv_sketch(sw_b, "w", ["source"])
 
-    q = (
-        read_documents_stream(spark, sf_dir)
-        .writeStream.foreachBatch(sign)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    partials = (
-        spark.read.schema("source string, ks array<bigint>")
-        .option("recursiveFileLookup", "true")
-        .parquet(sk_dir)
+    [partials] = run_logs(
+        read_table_stream(spark, sf_dir, "documents"),
+        _probe_root("kmv", sf_dir, out_dir),
+        {"signatures": sign},
     )
     # bottom-k union across batches per source: flatten the collected
     # per-batch arrays, dedup, sort, keep k — exact and associative
@@ -995,45 +794,21 @@ _share_oracle("streaming_kmv_rollup", "kmv_jaccard_gate")
 def streaming_lm_score(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
-    import os
-
     from seisdb_spark.queries.extensions import (
         lm_score_df,
         train_lm_from_corpus,
     )
-    from seisdb_spark.streaming import read_documents_stream
-
-    out_dir = _probe_root("lm", sf_dir, out_dir)
-    scores_dir = os.path.join(out_dir, "scores")
-    ckpt = os.path.join(out_dir, "ckpt")
 
     # Train once, BEFORE the stream starts: the count tables come back
     # localCheckpointed (materialized), so each microbatch joins against
     # computed state — no per-batch re-train, no reference re-scan.
     bc, cc, vocab = train_lm_from_corpus(spark, sf_dir)
-
-    def score(bdf: DataFrame, batch_id: int) -> None:
-        (
-            lm_score_df(bdf, bc, cc, vocab)
-            .write.mode("overwrite")
-            .parquet(os.path.join(scores_dir, f"batch-{batch_id}"))
-        )
-
-    q = (
-        read_documents_stream(spark, sf_dir)
-        .writeStream.foreachBatch(score)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    [out] = run_logs(
+        read_table_stream(spark, sf_dir, "documents"),
+        _probe_root("lm", sf_dir, out_dir),
+        {"scores": lambda bdf: lm_score_df(bdf, bc, cc, vocab)},
     )
-    q.awaitTermination()
-    return (
-        spark.read.schema(
-            "doc_id long, n_bigrams long, mean_nll_nano long, ppl_keep int"
-        )
-        .option("recursiveFileLookup", "true")
-        .parquet(scores_dir)
-    )
+    return out
 
 
 # stream==batch equivalence: the streaming scorer's oracle IS the batch
@@ -1060,39 +835,13 @@ _share_oracle("streaming_lm_score", "ngram_lm_perplexity")
 def streaming_quantile_rollup(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
-    import os
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from seisdb_spark.functions import histq
     from seisdb_spark.sources.tables import load_table
-    from seisdb_spark.streaming import read_documents_stream
 
-    out_dir = _probe_root("hq", sf_dir, out_dir)
-    sk_dir = os.path.join(out_dir, "hist")
-    ckpt = os.path.join(out_dir, "ckpt")
-
-    def sketch(bdf: DataFrame, batch_id: int) -> None:
-        (
-            histq.hist_partials(bdf, "n_chars", ["source"])
-            .write.mode("overwrite")
-            .parquet(os.path.join(sk_dir, f"batch-{batch_id}"))
-        )
-
-    q = (
-        read_documents_stream(spark, sf_dir)
-        .writeStream.foreachBatch(sketch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    partials = (
-        spark.read.schema("source string, bin long, n long")
-        .option("recursiveFileLookup", "true")
-        .parquet(sk_dir)
+    [partials] = run_logs(
+        read_table_stream(spark, sf_dir, "documents"),
+        _probe_root("hq", sf_dir, out_dir),
+        {"hist": lambda bdf: histq.hist_partials(bdf, "n_chars", ["source"])},
     )
     merged = histq.hist_merge(partials)
     qb = histq.hist_quantile_bins(merged)
@@ -1129,42 +878,24 @@ _share_oracle("streaming_quantile_rollup", "hist_quantile_rollup")
 def streaming_lm_train(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
-    import os
-
     from pyspark.sql import functions as F
 
     from seisdb_spark.functions import ngram_lm as lm
     from seisdb_spark.queries.extensions import LM_REF_SOURCES, lm_score_df
     from seisdb_spark.sources.tables import load_table
-    from seisdb_spark.streaming import read_documents_stream
 
-    out_dir = _probe_root("lmt", sf_dir, out_dir)
-    model_dir = os.path.join(out_dir, "model")
-    ckpt = os.path.join(out_dir, "ckpt")
-
-    def train(bdf: DataFrame, batch_id: int) -> None:
+    def train(bdf: DataFrame) -> DataFrame:
         ref = bdf.filter(F.col("source").isin(*LM_REF_SOURCES))
-        (
+        return (
             lm.bigram_pairs(ref)
             .groupBy("w1", "w2")
             .agg(F.count(F.lit(1)).cast("long").alias("c12"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(model_dir, f"batch-{batch_id}"))
         )
 
-    q = (
-        read_documents_stream(spark, sf_dir)
-        .writeStream.foreachBatch(train)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    partials = (
-        spark.read.schema("w1 string, w2 string, c12 long")
-        .option("recursiveFileLookup", "true")
-        .parquet(model_dir)
+    [partials] = run_logs(
+        read_table_stream(spark, sf_dir, "documents"),
+        _probe_root("lmt", sf_dir, out_dir),
+        {"model": train},
     )
     # addition-merge across batches, then derive the model exactly as
     # batch training does (train_bigram_lm's one-scan shape): context
@@ -1210,38 +941,13 @@ _share_oracle("streaming_lm_train", "ngram_lm_perplexity")
 def streaming_weighted_sample(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
-    import os
-
     from seisdb_spark.queries.extensions import es_priorities, es_take_topk
-    from seisdb_spark.streaming import read_documents_stream
 
-    out_dir = _probe_root("es", sf_dir, out_dir)
-    cand_dir = os.path.join(out_dir, "candidates")
-    ckpt = os.path.join(out_dir, "ckpt")
-
-    def sample(bdf: DataFrame, batch_id: int) -> None:
-        (
-            es_take_topk(es_priorities(bdf))
-            .drop("rank")  # ranks are batch-local; the merge re-ranks
-            .write.mode("overwrite")
-            .parquet(os.path.join(cand_dir, f"batch-{batch_id}"))
-        )
-
-    q = (
-        read_documents_stream(spark, sf_dir)
-        .writeStream.foreachBatch(sample)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    candidates = (
-        spark.read.schema(
-            "lang string, doc_id long, weight long, es_key long"
-        )
-        .option("recursiveFileLookup", "true")
-        .parquet(cand_dir)
+    [candidates] = run_logs(
+        read_table_stream(spark, sf_dir, "documents"),
+        _probe_root("es", sf_dir, out_dir),
+        # ranks are batch-local; the merge re-ranks
+        {"candidates": lambda bdf: es_take_topk(es_priorities(bdf)).drop("rank")},
     )
     return es_take_topk(candidates)
 
@@ -1274,8 +980,6 @@ _share_oracle("streaming_weighted_sample", "weighted_sample_wor")
 def streaming_zone_maps(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
-    import os
-
     from pyspark.sql import functions as F
 
     from seisdb_spark.functions.zorder import (
@@ -1290,54 +994,27 @@ def streaming_zone_maps(
     )
     from seisdb_spark.queries.extensions import zorder_events_xy
     from seisdb_spark.sources.tables import load_table
-    from seisdb_spark.streaming import read_events_stream
-
-    out_dir = _probe_root("zm", sf_dir, out_dir)
-    zm_dir = os.path.join(out_dir, "zonemaps")
-    m_dir = os.path.join(out_dir, "matched")
-    ckpt = os.path.join(out_dir, "ckpt")
 
     bounds = grid_bounds(
         zorder_events_xy(load_table(spark, sf_dir, "events")), "x", "y"
     )
 
-    def maps(bdf: DataFrame, batch_id: int) -> None:
-        g_b = grid_bins_fixed(zorder_events_xy(bdf), "x", "y", bounds)
-        probes = probes_df(bdf.sparkSession)
-        (
-            zone_maps(layout_explode(g_b))
-            .write.mode("overwrite")
-            .parquet(os.path.join(zm_dir, f"batch-{batch_id}"))
-        )
-        (
-            matched_counts(g_b, probes)
-            .write.mode("overwrite")
-            .parquet(os.path.join(m_dir, f"batch-{batch_id}"))
-        )
+    def bins(bdf: DataFrame) -> DataFrame:
+        return grid_bins_fixed(zorder_events_xy(bdf), "x", "y", bounds)
 
-    q = (
-        read_events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(maps)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    zm_log, m_log = run_logs(
+        read_events_stream(spark, sf_dir),
+        _probe_root("zm", sf_dir, out_dir),
+        {
+            "zonemaps": lambda bdf: zone_maps(layout_explode(bins(bdf))),
+            "matched": lambda bdf: matched_counts(
+                bins(bdf), probes_df(bdf.sparkSession)
+            ),
+        },
     )
-    q.awaitTermination()
-
-    zm = zone_merge(
-        spark.read.schema(
-            "layout string, bucket long, min_bx long, max_bx long, "
-            "min_by long, max_by long, n_rows long"
-        )
-        .option("recursiveFileLookup", "true")
-        .parquet(zm_dir)
-    )
-    matched = (
-        spark.read.schema("probe string, rows_matched long")
-        .option("recursiveFileLookup", "true")
-        .parquet(m_dir)
-        .groupBy("probe")
-        .agg(F.sum("rows_matched").cast("long").alias("rows_matched"))
+    zm = zone_merge(zm_log)
+    matched = m_log.groupBy("probe").agg(
+        F.sum("rows_matched").cast("long").alias("rows_matched")
     )
     return scan_counts(zm, probes_df(spark)).join(
         F.broadcast(matched), "probe"
@@ -1376,11 +1053,11 @@ def streaming_scd2_build(
     from pyspark.sql import functions as F
 
     from seisdb_spark.queries.relational import scd2_deltas, scd2_intervals
-    from seisdb_spark.streaming import read_orders_stream
 
-    merged = _ingest_log(
-        spark, sf_dir, out_dir, "scd2", "changelog",
-        read_orders_stream, scd2_deltas,
+    [merged] = run_logs(
+        read_table_stream(spark, sf_dir, "orders"),
+        _probe_root("scd2", sf_dir, out_dir),
+        {"changelog": scd2_deltas},
     )
     partials = merged.groupBy("o_custkey", "o_orderdate").agg(
         F.sum("delta_cents").alias("delta_cents")
@@ -1419,11 +1096,13 @@ def streaming_gapfill(
     from pyspark.sql import functions as F
 
     from seisdb_spark.queries.relational import gapfill_from_obs, gapfill_obs
-    from seisdb_spark.streaming import read_events_stream
 
-    merged = _ingest_log(
-        spark, sf_dir, out_dir, "gf", "obs", read_events_stream, gapfill_obs
-    ).groupBy("user_id", "hour").agg(
+    [obs] = run_logs(
+        read_events_stream(spark, sf_dir),
+        _probe_root("gf", sf_dir, out_dir),
+        {"obs": gapfill_obs},
+    )
+    merged = obs.groupBy("user_id", "hour").agg(
         F.sum("n_events").cast("long").alias("n_events"),
         F.max("obs_max").alias("obs_max"),
     )
@@ -1457,8 +1136,6 @@ _share_oracle("streaming_gapfill", "timeseries_gapfill")
 def streaming_cohort_retention(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
-    import os
-
     from pyspark.sql import functions as F
 
     from seisdb_spark.queries.relational import (
@@ -1466,42 +1143,16 @@ def streaming_cohort_retention(
         cohort_from_parts,
         cohort_signups,
     )
-    from seisdb_spark.streaming import read_events_stream
 
-    out_dir = _probe_root("cohort", sf_dir, out_dir)
-    sign_dir = os.path.join(out_dir, "signups")
-    act_dir = os.path.join(out_dir, "activity")
-    ckpt = os.path.join(out_dir, "ckpt")
-
-    def compact(bdf: DataFrame, batch_id: int) -> None:
-        cohort_signups(bdf).write.mode("overwrite").parquet(
-            os.path.join(sign_dir, f"batch-{batch_id}")
-        )
-        cohort_activity(bdf).write.mode("overwrite").parquet(
-            os.path.join(act_dir, f"batch-{batch_id}")
-        )
-
-    q = (
-        read_events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(compact)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    signups, activity = run_logs(
+        read_events_stream(spark, sf_dir),
+        _probe_root("cohort", sf_dir, out_dir),
+        {"signups": cohort_signups, "activity": cohort_activity},
     )
-    q.awaitTermination()
-
-    signups = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(sign_dir)
-        .groupBy("user_id")
-        .agg(F.min("cohort_month").alias("cohort_month"))
+    return cohort_from_parts(
+        signups.groupBy("user_id").agg(F.min("cohort_month").alias("cohort_month")),
+        activity.distinct(),
     )
-    activity = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(act_dir)
-        .distinct()
-    )
-    return cohort_from_parts(signups, activity)
 
 
 # stream==batch equivalence: min/set-union partials merge exactly, the
@@ -1539,11 +1190,11 @@ def streaming_funnel_steps(
         funnel_steps_from_log,
         funnel_typed,
     )
-    from seisdb_spark.streaming import read_events_stream
 
-    merged = _ingest_log(
-        spark, sf_dir, out_dir, "funnel", "log",
-        read_events_stream, funnel_typed,
+    [merged] = run_logs(
+        read_events_stream(spark, sf_dir),
+        _probe_root("funnel", sf_dir, out_dir),
+        {"log": funnel_typed},
     )
     return funnel_steps_from_log(merged)
 
@@ -1578,11 +1229,11 @@ def streaming_cdc_apply(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
     from seisdb_spark.queries.temporal import cdc_compact, cdc_log, cdc_snapshot
-    from seisdb_spark.streaming import read_orders_stream
 
-    partials = _ingest_log(
-        spark, sf_dir, out_dir, "cdc", "partials",
-        read_orders_stream, lambda bdf: cdc_compact(cdc_log(bdf)),
+    [partials] = run_logs(
+        read_table_stream(spark, sf_dir, "orders"),
+        _probe_root("cdc", sf_dir, out_dir),
+        {"partials": lambda bdf: cdc_compact(cdc_log(bdf))},
     )
     return cdc_snapshot(partials)
 
@@ -1614,11 +1265,11 @@ def streaming_ohlc_bars(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
     from seisdb_spark.queries.temporal import ohlc_bars, ohlc_partials
-    from seisdb_spark.streaming import read_events_stream
 
-    partials = _ingest_log(
-        spark, sf_dir, out_dir, "ohlc", "partials",
-        read_events_stream, ohlc_partials,
+    [partials] = run_logs(
+        read_events_stream(spark, sf_dir),
+        _probe_root("ohlc", sf_dir, out_dir),
+        {"partials": ohlc_partials},
     )
     return ohlc_bars(partials)
 
@@ -1658,11 +1309,11 @@ def streaming_pagerank_topk(
         pagerank_pairs,
         pagerank_topk,
     )
-    from seisdb_spark.streaming import read_lineitem_stream
 
-    merged = _ingest_log(
-        spark, sf_dir, out_dir, "pr", "edgelog",
-        read_lineitem_stream, pagerank_pairs,
+    [merged] = run_logs(
+        read_table_stream(spark, sf_dir, "lineitem"),
+        _probe_root("pr", sf_dir, out_dir),
+        {"edgelog": pagerank_pairs},
     )
     return pagerank_topk(pagerank_edges(merged))
 
@@ -1711,11 +1362,11 @@ def streaming_wcc_membership(
         copurchase_edges,
         wcc_obs,
     )
-    from seisdb_spark.streaming import read_lineitem_stream
 
-    merged = _ingest_log(
-        spark, sf_dir, out_dir, "wcc", "obslog",
-        read_lineitem_stream, wcc_obs,
+    [merged] = run_logs(
+        read_table_stream(spark, sf_dir, "lineitem"),
+        _probe_root("wcc", sf_dir, out_dir),
+        {"obslog": wcc_obs},
     )
     e = copurchase_edges(merged)
     # dead once the loop exits (the labeling reads only its own final
@@ -1774,11 +1425,11 @@ def streaming_triangle_counts(
         copurchase_obs,
         triangle_census,
     )
-    from seisdb_spark.streaming import read_lineitem_stream
 
-    merged = _ingest_log(
-        spark, sf_dir, out_dir, "tri", "obslog",
-        read_lineitem_stream, copurchase_obs,
+    [merged] = run_logs(
+        read_table_stream(spark, sf_dir, "lineitem"),
+        _probe_root("tri", sf_dir, out_dir),
+        {"obslog": copurchase_obs},
     )
     return triangle_census(copurchase_edges(merged))
 

@@ -7,6 +7,12 @@ implemented here as a file-source stream into the same decode + encode tail
 the batch pipeline uses. Event analytics (tumbling / session windows with
 watermarks) stream over the driver's events table and are batch-equivalence
 tested against their twins in queries/relational.py.
+
+Every foreachBatch path runs on one microbatch-log primitive
+(``start_logs`` / ``run_logs`` / ``read_log``): microbatch ``batch_id``
+writes each log to ``<root>/<log>/batch-<batch_id>`` in overwrite mode, so
+a replayed microbatch rewrites its own directory. Snapshot ingest stages
+to ``<staging_dir>/snapshots/batch-<batch_id>``.
 """
 
 from seisdb_spark.streaming.ingest import (  # noqa: F401
@@ -14,15 +20,15 @@ from seisdb_spark.streaming.ingest import (  # noqa: F401
     enrich_stream_static,
     finalize_sgt_from_staging,
     novelty_probe,
-    read_documents_stream,
-    read_embeddings_stream,
     read_events_stream,
-    read_lineitem_stream,
-    read_orders_stream,
+    read_log,
+    read_table_stream,
+    run_logs,
     run_to_memory,
     sessionize_stream,
     sliding_counts_stream,
     snapshot_ingest_stream,
+    start_logs,
     tumbling_counts_stream,
 )
 from seisdb_spark.streaming.stateful import (  # noqa: F401

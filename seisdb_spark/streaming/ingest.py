@@ -1,30 +1,39 @@
 """Structured Streaming ingest: watermarked event-time windows over the
-events stream, and a SPECFEM snapshot file stream feeding the batch encode
-tail via foreachBatch.
+events stream, the microbatch-log primitive every foreachBatch path runs
+on, and a SPECFEM snapshot file stream feeding the batch encode tail.
 
 Design notes (100 TB posture):
   * Event aggregations keep state keyed by (window, event_type) /
     (user_id, session) — the same shuffle keys as the batch twins, so state
     distributes across executors; the watermark bounds state size.
+  * Microbatch logs: :func:`start_logs` is the one foreachBatch sink.  Each
+    microbatch writes one directory per log,
+    ``<root>/<log>/batch-<batch_id>``, in overwrite mode, so a batch that
+    Spark replays after a crash (foreachBatch is at-least-once per
+    batch_id) rewrites its own directory instead of adding its rows twice.
+    :func:`read_log` reads a log back; :func:`run_logs` runs a stream to
+    completion with its checkpoint at ``<root>/ckpt`` and returns its logs.
   * Snapshot ingest is decode-only per microbatch (narrow, no shuffle):
     files land, go through the batch scan's own reader
     (``specfem.read_snapshots``: the same filename rule, force tagging and
-    one mapInPandas decode, fed by a streaming binaryFile reader), and
-    append to a staging table. The wide assembly/encode runs once at
-    finalize over the staging table — the correct split because SGT
-    encoding needs each point's FULL time series (a per-key sort over all
-    steps), which a running stream cannot emit incrementally without
-    holding every sample in state anyway.
+    one mapInPandas decode, fed by a streaming binaryFile reader), and are
+    staged in the log ``<staging_dir>/snapshots/batch-<batch_id>``. The
+    wide assembly/encode runs once at finalize over the staged log — the
+    correct split because SGT encoding needs each point's FULL time series
+    (a per-key sort over all steps), which a running stream cannot emit
+    incrementally without holding every sample in state anyway.
 """
 
 from __future__ import annotations
 
 import os
 import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from seisdb_spark.sources.specfem import KINDS, read_snapshots
 
@@ -170,50 +179,25 @@ def read_events_stream(
     return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
-DOCUMENTS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
+def read_table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-source stream over one table of ``sf_dir`` (documents, embeddings,
+    orders, lineitem, ...), one file per microbatch.  The stream schema is
+    the BATCH-resolved schema of the same files (one footer probe), passed
+    through the drift tripwire every batch load applies: a user-supplied
+    schema on a file stream is not validated against the footers, so a
+    drifted physical layout would otherwise be a silent wrong answer.  The
+    events table has its own reader (:func:`read_events_stream`), which
+    branches on the ts layout."""
+    from seisdb_spark.sources.tables import check_table_schema
 
-
-EMBEDDINGS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ]
-)
-
-
-def read_embeddings_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source stream over the embeddings table — the arriving-vector
-    side of streaming quantize-on-ingest (no timestamp columns, no conf
-    side effects)."""
+    name = f"{table}.parquet"
+    path = os.path.join(sf_dir, name)
+    schema = spark.read.parquet(path).schema
+    check_table_schema(table, schema, path)
     return (
-        spark.readStream.schema(EMBEDDINGS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
-
-
-def read_documents_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source stream over the documents table — the arriving-corpus
-    side of streaming curation (no timestamp columns, no conf side
-    effects)."""
-    return (
-        spark.readStream.schema(DOCUMENTS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("pathGlobFilter", "documents.parquet")
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", name)
         .parquet(sf_dir)
     )
 
@@ -305,6 +289,67 @@ def run_to_memory(
     return stream_df.sparkSession.table(name)
 
 
+def start_logs(
+    stream: DataFrame,
+    root: str,
+    checkpoint: str,
+    logs: dict[str, Callable[[DataFrame], DataFrame]],
+) -> StreamingQuery:
+    """The one foreachBatch sink: microbatch ``batch_id`` writes
+    ``per_batch(bdf)`` of every ``name: per_batch`` in ``logs`` to
+    ``<root>/<name>/batch-<batch_id>`` with mode("overwrite"), then the
+    stream is started under ``checkpoint`` with the availableNow trigger.
+
+    foreachBatch is at-least-once per batch_id: a crash after the sink ran
+    but before the checkpoint commit replays the batch on restart, over the
+    same offsets.  Overwriting a batch_id-derived path makes that replay
+    rewrite its own directory instead of appending its rows a second time,
+    so every log holds each input row's contribution exactly once."""
+
+    def sink(bdf: DataFrame, batch_id: int) -> None:
+        for name, per_batch in logs.items():
+            per_batch(bdf).write.mode("overwrite").parquet(
+                os.path.join(root, name, f"batch-{batch_id}")
+            )
+
+    return (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def read_log(spark: SparkSession, root: str, name: str) -> DataFrame:
+    """Read back one log written by :func:`start_logs`: the union of its
+    ``batch-<id>`` directories, with the schema its parquet footers carry."""
+    return spark.read.option("recursiveFileLookup", "true").parquet(
+        os.path.join(root, name)
+    )
+
+
+def run_logs(
+    stream: DataFrame,
+    root: str,
+    logs: dict[str, Callable[[DataFrame], DataFrame]],
+    persisted: tuple[DataFrame, ...] = (),
+) -> list[DataFrame]:
+    """Run :func:`start_logs` to completion (checkpoint ``<root>/ckpt``),
+    unpersist the ``persisted`` static sides the per-batch functions read,
+    and return the logs in ``logs`` order."""
+    q = start_logs(stream, root, os.path.join(root, "ckpt"), logs)
+    try:
+        q.awaitTermination()
+    finally:
+        for df in persisted:
+            df.unpersist()
+    return [read_log(stream.sparkSession, root, name) for name in logs]
+
+
+#: the log ``snapshot_ingest_stream`` stages decoded snapshot rows in
+SNAPSHOT_LOG = "snapshots"
+
+
 def snapshot_ingest_stream(
     spark: SparkSession,
     force_dirs: list[str],
@@ -313,30 +358,26 @@ def snapshot_ingest_stream(
     checkpoint_dir: str,
     name_data: str = "strain_field",
     max_files_per_trigger: int = 3,
-):
+) -> StreamingQuery:
     """Stream SPECFEM snapshot files as they land (S6 streaming variant):
     a streaming binaryFile reader per force dir -> the batch scan's reader
-    and strain decode (``specfem.read_snapshots``) -> append to a staging
-    parquet table via foreachBatch.
+    and strain decode (``specfem.read_snapshots``) -> the staging log
+    ``<staging_dir>/snapshots/batch-<id>`` via :func:`start_logs`.
 
-    Returns the started StreamingQuery; callers trigger availableNow (tests)
-    or leave it running (production). Decode is narrow — each microbatch is
-    files-in, long-rows-out, no shuffle, no state."""
+    Returns the started StreamingQuery.  Its trigger is availableNow: it
+    stages every file present at start, then stops; await it, then run
+    :func:`finalize_sgt_from_staging`.  Restarting it on the same
+    checkpoint stages only files that arrived since, and a replayed
+    microbatch rewrites its own directory.  Decode is narrow — each
+    microbatch is files-in, long-rows-out, no shuffle, no state."""
     reader = (
         spark.readStream.format("binaryFile")
         .schema(BINARYFILE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
     )
     decoded = read_snapshots(spark, force_dirs, nspec, "SGT", name_data, reader)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(staging_dir)
-
-    return (
-        decoded.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_logs(
+        decoded, staging_dir, checkpoint_dir, {SNAPSHOT_LOG: lambda bdf: bdf}
     )
 
 
@@ -352,9 +393,10 @@ def finalize_sgt_from_staging(
     encoding_level: int | None = None,
 ):
     """Run the batch assembly + encode tail over the streamed-in staging
-    table. Steps valid = present in all forces *in the staged data* (the
-    staging table is the listing, under the same predicate as
-    pipeline.valid_steps); otherwise identical to pipeline.sgt_build."""
+    log (``<staging_dir>/snapshots``). Steps valid = present in all forces
+    *in the staged data* (the staged log is the listing, under the same
+    predicate as pipeline.valid_steps); otherwise identical to
+    pipeline.sgt_build."""
     from seisdb_spark.pipeline.build import (
         add_start_offsets,
         assemble_series,
@@ -365,7 +407,7 @@ def finalize_sgt_from_staging(
     from seisdb_spark.schemas import ENCODING_LEVEL_DEFAULT
     from seisdb_spark.sources.specfem import read_ibool
 
-    snaps = spark.read.parquet(staging_dir)
+    snaps = read_log(spark, staging_dir, SNAPSHOT_LOG)
     # forder names one force per letter (N, E, Z)
     n_force = len(KINDS["SGT"].forder)
     steps = steps_in_all_forces(spark, snaps, n_force, step0, step1, dstep)
@@ -399,9 +441,8 @@ def novelty_probe(
       microbatches (Spark never reuses exchanges across foreachBatch
       actions); production writes it as a gram-bucketed parquet table so
       the per-batch membership join prunes buckets instead of scanning;
-    * per-batch results land in a batch_id-derived OVERWRITE path —
-      idempotent under checkpoint-recovery replays (foreachBatch is
-      at-least-once per batch_id);
+    * per-batch results land in the log ``<out_root>/scores``
+      (:func:`run_logs`), idempotent under checkpoint-recovery replays;
     * per-batch cost scales with the batch: the batch gram set is the
       (small) build side of the membership join, the corpus side is
       pruned/streamed, never collected.
@@ -409,7 +450,6 @@ def novelty_probe(
     Returns the union of all batch outputs:
     (doc_id, n_shingles, n_novel, novelty).
     """
-    import os
     import shutil
 
     from seisdb_spark.functions.text import shingle_tokens
@@ -425,15 +465,10 @@ def novelty_probe(
         .persist()
     )
 
-    shutil.rmtree(out_root, ignore_errors=True)
-    scores_dir = os.path.join(out_root, "scores")
-    ckpt = os.path.join(out_root, "ckpt")
-
-    def probe(bdf: DataFrame, batch_id: int) -> None:
-        batch = bdf.filter(batch_pred)
-        bsh = shingle_tokens(batch)
+    def scores(bdf: DataFrame) -> DataFrame:
+        bsh = shingle_tokens(bdf.filter(batch_pred))
         novel = F.sum(F.when(F.col("in_corpus").isNull(), 1).otherwise(0))
-        (
+        return (
             bsh.join(corpus_grams, "sh", "left")
             .groupBy("doc_id")
             .agg(
@@ -443,66 +478,11 @@ def novelty_probe(
                     novel.cast("double") / F.count(F.lit(1)), 6
                 ).alias("novelty"),
             )
-            .write.mode("overwrite")
-            .parquet(os.path.join(scores_dir, f"batch-{batch_id}"))
         )
 
-    q = (
-        read_documents_stream(spark, sf_dir)
-        .writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    shutil.rmtree(out_root, ignore_errors=True)
+    [out] = run_logs(
+        read_table_stream(spark, sf_dir, "documents"), out_root,
+        {"scores": scores}, (corpus_grams,),
     )
-    try:
-        q.awaitTermination()
-    finally:
-        corpus_grams.unpersist()
-    return spark.read.schema(
-        "doc_id long, n_shingles long, n_novel long, novelty double"
-    ).parquet(os.path.join(scores_dir, "batch-*"))
-
-
-def read_lineitem_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source stream over the lineitem table — the arriving edge-
-    observation side of the streaming PageRank edge-log twin.  Same
-    batch-resolved-schema + drift-tripwire discipline as
-    ``read_orders_stream`` (a user-supplied schema on a file stream is
-    not validated against the footers)."""
-    from seisdb_spark.sources.tables import check_table_schema
-
-    path = os.path.join(sf_dir, "lineitem.parquet")
-    schema = spark.read.parquet(path).schema
-    check_table_schema("lineitem", schema, path)
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("pathGlobFilter", "lineitem.parquet")
-        .parquet(sf_dir)
-    )
-
-
-def read_orders_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source stream over the orders table — the arriving change-log
-    side of the streaming SCD2 build.  The stream schema is the BATCH-
-    resolved schema of the same files (one footer probe), never a
-    hard-coded one: a user-supplied schema on a file stream is not
-    validated against the footers, so a drifted physical layout (the
-    events.ts lesson) would be a silent-wrong-answer bug here too."""
-    from seisdb_spark.sources.tables import check_table_schema
-
-    path = os.path.join(sf_dir, "orders.parquet")
-    schema = spark.read.parquet(path).schema
-    # the same one-line drift tripwire every batch load applies — a
-    # drifted physical layout must fail HERE, not deep inside scd2_deltas
-    check_table_schema("orders", schema, path)
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("pathGlobFilter", "orders.parquet")
-        .parquet(sf_dir)
-    )
+    return out

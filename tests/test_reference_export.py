@@ -38,10 +38,26 @@ def _export(spark, m, tmp_path, kind):
     return out, summary
 
 
+@pytest.fixture(scope="session")
+def exported(spark, fixture_meta, tmp_path_factory):
+    """``exported(kind)`` -> (out, summary): one build + export per kind per
+    session, shared by the tests that only read the export (writing HDF5
+    headers next to it adds files no other test reads)."""
+    cache = {}
+
+    def get(kind):
+        if kind not in cache:
+            tmp = tmp_path_factory.mktemp(f"export_{kind}")
+            cache[kind] = _export(spark, fixture_meta, tmp, kind)
+        return cache[kind]
+
+    return get
+
+
 @pytest.mark.parametrize("kind", ["SGT", "DGF"])
-def test_data_bin_bytes_equal_golden_writer(spark, fixture_meta, tmp_path, kind):
+def test_data_bin_bytes_equal_golden_writer(fixture_meta, exported, kind):
     m = fixture_meta
-    out, summary = _export(spark, m, tmp_path, kind)
+    out, summary = exported(kind)
     assert list(summary.proc) == list(range(NPROCS))
     gold_fn = golden.golden_sgt if kind == "SGT" else golden.golden_dgf
     suffix = "sgt_data" if kind == "SGT" else "dgf_data"
@@ -57,9 +73,9 @@ def test_data_bin_bytes_equal_golden_writer(spark, fixture_meta, tmp_path, kind)
         assert got == want, f"{kind} proc {proc} blob file differs"
 
 
-def test_header_table_matches_golden(spark, fixture_meta, tmp_path):
+def test_header_table_matches_golden(spark, fixture_meta, exported):
     m = fixture_meta
-    out, _ = _export(spark, m, tmp_path, "SGT")
+    out, _ = exported("SGT")
     hdr = (
         spark.read.parquet(os.path.join(out, "headers_parquet"))
         .toPandas()
@@ -127,13 +143,13 @@ def test_empty_proc_still_gets_bin_and_header(spark, fixture_meta, tmp_path):
     assert h0["proc_name"] == "proc000000"  # attrs still come from meta
 
 
-def test_hdf5_headers_written_without_h5py(spark, fixture_meta, tmp_path):
+def test_hdf5_headers_written_without_h5py(spark, fixture_meta, exported):
     """The literal-.hdf5 conversion no longer needs h5py: the minimal
     spec-subset writer (pipeline/hdf5_min.py) produces one parseable file
     per proc (full content parity vs the parquet header table is covered
     in tests/test_hdf5_min.py)."""
     m = fixture_meta
-    out, _ = _export(spark, m, tmp_path, "SGT")
+    out, _ = exported("SGT")
     paths = write_hdf5_headers(spark, out)
     assert [os.path.basename(p) for p in paths] == [
         f"proc{p:06d}_header.hdf5" for p in range(m["nprocs"])
@@ -146,12 +162,12 @@ def test_hdf5_headers_written_without_h5py(spark, fixture_meta, tmp_path):
         assert attrs["type"] == "SGT"
 
 
-def test_dgf_hdf5_header_names(spark, fixture_meta, tmp_path):
+def test_dgf_hdf5_header_names(spark, fixture_meta, exported):
     """The header file suffix follows the header table's ``type``: a DGF
     export writes the reference's ``proc%06d_dgf_header.hdf5`` (DDGF.py:116)
     next to ``proc%06d_dgf_data.bin``."""
     m = fixture_meta
-    out, _ = _export(spark, m, tmp_path, "DGF")
+    out, _ = exported("DGF")
     paths = write_hdf5_headers(spark, out)
     assert [os.path.basename(p) for p in paths] == [
         f"proc{p:06d}_dgf_header.hdf5" for p in range(m["nprocs"])

@@ -184,6 +184,40 @@ def test_snapshot_stream_ingest_encode_equals_batch(spark, tmp_path, monkeypatch
         assert bytes(srow.blob) == bytes(brow.blob), f"blob mismatch at {idx}"
 
 
+def test_snapshot_stream_replayed_batch_is_not_staged_twice(spark, tmp_path):
+    """foreachBatch is at-least-once: when the staging sink ran but the
+    checkpoint commit did not, a restart replays the batch.  Simulated by
+    deleting the commit log and every offset after batch 0, then running
+    the stream again: finalize must encode what the first run encoded, not
+    every staged sample twice."""
+    m = generate_fixture(str(tmp_path / "fx"), nprocs=1, nspec=2, step1=40)
+    staging = str(tmp_path / "staging")
+    ckpt = str(tmp_path / "ckpt")
+    model_glob = f"{m['model_dir']}/proc*_ibool.bin"
+
+    def ingest_and_finalize() -> pd.DataFrame:
+        snapshot_ingest_stream(
+            spark, m["force_dirs"], m["nspec"], staging, ckpt
+        ).awaitTermination()
+        return finalize_sgt_from_staging(
+            spark, staging, model_glob, m["nspec"], m["step0"], m["step1"], m["dstep"]
+        ).toPandas().set_index(["proc", "gll_id"]).sort_index()
+
+    first = ingest_and_finalize()
+    assert os.listdir(os.path.join(ckpt, "commits"))
+    # a log entry is "<batch_id>" plus its checksum ".<batch_id>.crc"
+    for log, keep_through in (("commits", -1), ("offsets", 0)):
+        log_dir = os.path.join(ckpt, log)
+        for name in os.listdir(log_dir):
+            if int(name.removeprefix(".").removesuffix(".crc")) > keep_through:
+                os.remove(os.path.join(log_dir, name))
+    replayed = ingest_and_finalize()
+
+    assert list(replayed.index) == list(first.index)
+    assert list(replayed.n_values) == list(first.n_values)
+    assert [bytes(b) for b in replayed.blob] == [bytes(b) for b in first.blob]
+
+
 def test_stateful_running_totals_across_microbatches(spark, tmp_path):
     """applyInPandasWithState: per-user totals must accumulate across
     microbatches (state carries over), and the final update per user must
@@ -949,25 +983,33 @@ def test_funnel_stream_split_matches_batch(spark, tmp_path):
     assert len(os.listdir(os.path.join(out, "log"))) == 3
 
 
-def test_read_orders_stream_schema_tripwire(spark, tmp_path):
-    """A drifted orders layout must fail at the stream reader's one-line
+@pytest.mark.parametrize("table", ["orders", "documents"])
+def test_read_table_stream_schema_tripwire(spark, tmp_path, table):
+    """A drifted table layout must fail at the stream reader's one-line
     tripwire (same contract as batch load_table), not deep inside the
-    SCD2 stages."""
+    stages that consume the stream."""
     import pandas as pd
     import pytest
 
-    from seisdb_spark.streaming import read_orders_stream
+    from seisdb_spark.streaming import read_table_stream
 
+    drifted = {
+        "orders": {
+            "o_orderkey": [1], "o_custkey": [1], "o_orderstatus": ["O"],
+            "o_totalprice": ["not-a-number"],  # drifted: string, not double
+            "o_orderdate": pd.to_datetime(["2024-01-01"]).astype("datetime64[us]"),
+            "o_orderpriority": ["1-URGENT"],
+        },
+        "documents": {
+            "doc_id": [1], "text": ["a b c"], "lang": ["en"], "source": ["web"],
+            "n_chars": ["5"],  # drifted: string, not an integer
+        },
+    }[table]
     bad = tmp_path / "bad"
     bad.mkdir()
-    pd.DataFrame(
-        {"o_orderkey": [1], "o_custkey": [1], "o_orderstatus": ["O"],
-         "o_totalprice": ["not-a-number"],  # drifted: string, not double
-         "o_orderdate": pd.to_datetime(["2024-01-01"]).astype("datetime64[us]"),
-         "o_orderpriority": ["1-URGENT"]}
-    ).to_parquet(bad / "orders.parquet", index=False)
+    pd.DataFrame(drifted).to_parquet(bad / f"{table}.parquet", index=False)
     with pytest.raises(TypeError, match="testdata schema changed"):
-        read_orders_stream(spark, str(bad))
+        read_table_stream(spark, str(bad), table)
 
 
 def test_pagerank_stream_split_matches_batch(spark, tmp_path):
