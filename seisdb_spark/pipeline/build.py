@@ -4,28 +4,37 @@ This is the Spark-first re-expression of the reference's entire reason to
 exist: `/root/reference/seisdb/DSGT.py:40-196` (SGT) and `DDGF.py:40-190`
 (DGF).  The reference materializes a dense ``float32[n_gll, n_step, 3,
 n_para]`` RAM buffer per processor and loops; here the same semantics are a
-declarative plan over long tables — no buffer, no loop, no driver collect:
+declarative plan over long tables — no buffer, no loop, and the only driver
+collect is the valid-step list (file names, not data):
 
     ibool long table
       -> P1 27-of-125 positional filter        (filter isin, pushdown)
       -> D1 first-occurrence dedup             (row_number window per gll_id)
       -> J1 gather                             (broadcast equi-join on cell)
-      -> P3 temporal stride + existence        (semi-join against listing)
+      -> P3 temporal stride + existence        (semi-join against the step list)
       -> R1/R2 ordered assembly + flatten      (sort_array(collect_list(struct)))
       -> A1/A2 offset/scale  E1 quantize  E2 zlib   (one Arrow-batched map)
       -> A4 start offsets                      (cumulative window per proc)
       -> E4/E5/E6 partitioned parquet + db_meta
 
-Scale posture: the fact side shuffles twice — the groupBy(proc, gll_id)
-assembly, keyed on the natural output key, and the A4 start-offset window,
-which re-shuffles the encoded records (one compressed blob per point) by
-proc.  The dimension sides (selected points, valid steps) are broadcast; the
-per-force snapshot scans are unioned under one decode and semi-joined with
-the valid steps once; encode is embarrassingly parallel per row (pinned by
+Scale posture: the valid (proc, step) list is file-name metadata, small at
+any scale, so it is collected once per build: the emptiness check, the
+semi-join's build side and db_meta's ``nstep`` all read that one list as a
+local relation, and no records plan lists the snapshot dirs again.  The fact
+side shuffles twice — the groupBy(proc, gll_id) assembly, keyed on the
+natural output key, and the A4 start-offset window, which re-shuffles the
+encoded records (one compressed blob per point) by proc.  The dimension
+sides (selected points, valid steps) are broadcast; the per-force snapshot
+scans are unioned under one decode and semi-joined with the valid steps
+once; encode is embarrassingly parallel per row (pinned by
 tests/test_sgt_pipeline.py::test_build_plan_decodes_snapshots_once_and_semi_joins_once).
-At 100 TB each (proc, step, force) snapshot file is one input task and AQE
-handles the rest — nothing below ever sees more than one point's series at
-once.  What differs between SGT and DGF is data: ``specfem.KINDS``.
+db_meta is computed from the selected points and the step list, not from
+the records, so writing it never re-runs the decode/assemble/encode
+lineage.  At 100 TB each (proc, step, force) snapshot file is one input
+task and AQE handles the rest — nothing below ever sees more than one
+point's series at once.  What differs between SGT and DGF is data:
+``specfem.KINDS``; the batch build and the staged stream share one tail,
+:func:`build_records`.
 
 Determinism contract (golden-tested): float32 arithmetic end-to-end in the
 encode (min/subtract/max/divide/scale in float32, truncating cast), matching
@@ -251,8 +260,7 @@ def add_start_offsets(records: DataFrame) -> DataFrame:
 # E4/E5/E6: partitioned sink + db_meta
 # ---------------------------------------------------------------------------
 def db_meta(
-    spark: SparkSession,
-    records: DataFrame,
+    points: DataFrame,
     steps: DataFrame,
     *,
     network: str,
@@ -265,12 +273,18 @@ def db_meta(
     """The HDF5 scalar attrs (DSGT.py:186-194) as a per-proc metadata table;
     ``nparas`` and ``forder`` come from the kind table.  ``proc_name`` is
     the reference's zero-padded processor prefix (L4, DWidgets.py:9-11) so
-    consumers can resolve original filenames."""
+    consumers can resolve original filenames.
+
+    ``ngll`` counts the selected ``points`` of each proc and ``nstep`` its
+    valid ``steps``; the inner join keeps the procs with at least one valid
+    step.  Every snapshot file holds every cell of its proc, so each of
+    those points becomes exactly one record: the meta equals a count over
+    the records without running their lineage."""
     spec = KINDS[kind]
-    per_proc = records.groupBy("proc").agg(F.count(F.lit(1)).alias("ngll"))
+    ngll = points.groupBy("proc").agg(F.count(F.lit(1)).alias("ngll"))
     nstep = steps.groupBy("proc").agg(F.count(F.lit(1)).alias("nstep"))
     return (
-        per_proc.join(nstep, "proc", "left")
+        ngll.join(nstep, "proc")
         .select(
             F.lit(network).alias("network"),
             F.lit(station).alias("station"),
@@ -290,14 +304,17 @@ def db_meta(
 
 
 def _write_partitioned(
-    records: DataFrame, meta: DataFrame, path: str, network: str, station: str
+    records: DataFrame, meta: DataFrame, path: str, network: str, station: str, **options
 ) -> None:
     out = records.withColumn("network", F.lit(network)).withColumn("station", F.lit(station))
-    out.select(
+    cols = (
         "network", "station", "proc", "gll_id", "i_spec", "i_gll",
         "n_values", "offset", "scale", "length", "start", "blob",
-    ).write.mode("overwrite").partitionBy("network", "station").parquet(f"{path}/records")
-    meta.write.mode("overwrite").partitionBy("network", "station").parquet(f"{path}/db_meta")
+    )
+    for df, name in ((out.select(*cols), "records"), (meta, "db_meta")):
+        df.write.mode("overwrite").options(**options).partitionBy(
+            "network", "station"
+        ).parquet(f"{path}/{name}")
 
 
 def write_db(records: DataFrame, meta: DataFrame, path: str, network: str, station: str) -> None:
@@ -318,17 +335,10 @@ def append_to_db(
     records and meta are untouched. This is the incremental-build workflow
     the reference lacks (its layout is write-once per run, DDBbase.py:33-53):
     at 100 TB a new station lands as one partition write, never a DB rewrite.
+    The mode is a writer option, which takes precedence over the session
+    conf, so no other write in the session sees it.
     """
-    spark = records.sparkSession
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        _write_partitioned(records, meta, path, network, station)
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+    _write_partitioned(records, meta, path, network, station, partitionOverwriteMode="dynamic")
 
 
 def read_db(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
@@ -431,6 +441,25 @@ def decode_records(
 # ---------------------------------------------------------------------------
 # end-to-end composition (the reference's create_db)
 # ---------------------------------------------------------------------------
+def build_records(
+    spark: SparkSession,
+    model_glob: str,
+    nspec: int,
+    snapshots: DataFrame,
+    steps: DataFrame,
+    kind: str = "SGT",
+    points_per_element: int = 27,
+    encoding_level: int = ENCODING_LEVEL_DEFAULT,
+) -> tuple[DataFrame, DataFrame]:
+    """The create_db tail over decoded ``snapshots`` and valid ``steps``:
+    ibool -> 27-point selection -> assembly -> encode -> start offsets.
+    Returns (selected points, records_with_start).  The batch build and
+    the staged stream (``streaming.finalize_sgt_from_staging``) both run it."""
+    points = select_gll_points(specfem.read_ibool(spark, model_glob, nspec), points_per_element)
+    series = assemble_series(snapshots, points, steps, kind)
+    return points, add_start_offsets(encode_records(series, encoding_level))
+
+
 def _make_build(kind: str, doc: str):
     """The one create_db body behind ``sgt_build`` and ``dgf_build``."""
     spec = KINDS[kind]
@@ -451,18 +480,19 @@ def _make_build(kind: str, doc: str):
         encoding_level: int = ENCODING_LEVEL_DEFAULT,
         name_data: str = spec.name_data,
     ) -> tuple[DataFrame, DataFrame, DataFrame]:
-        ibool = specfem.read_ibool(spark, model_glob, nspec)
-        points = select_gll_points(ibool, points_per_element)
-        steps = valid_steps(spark, force_dirs, name_data, step0, step1, dstep)
-        # the reference raises when no step survives P3 (DDBbase.py:82-84);
-        # the eager probe here is a metadata-only listing query, not a data read
-        if not steps.head(1):
+        # one metadata-only listing job; every consumer reads the collected
+        # list, and the reference raises when no step survives P3
+        # (DDBbase.py:82-84)
+        step_list = valid_steps(spark, force_dirs, name_data, step0, step1, dstep).collect()
+        if not step_list:
             raise ValueError("no valid steps: no snapshot step exists in all force dirs")
+        steps = spark.createDataFrame(step_list, "proc int, step int")
         snaps = specfem.read_snapshots(spark, force_dirs, nspec, kind, name_data)
-        series = assemble_series(snaps, points, steps, kind)
-        records = add_start_offsets(encode_records(series, encoding_level))
+        points, records = build_records(
+            spark, model_glob, nspec, snaps, steps, kind, points_per_element, encoding_level
+        )
         meta = db_meta(
-            spark, records, steps, network=network, station=station, kind=kind,
+            points, steps, network=network, station=station, kind=kind,
             n_force=len(force_dirs), dt=dt, nspec=nspec,
         )
         return records, meta, steps
@@ -477,7 +507,7 @@ sgt_build = _make_build(
     """The full SGT create_db (DSGT.py:40-196) as one lazy plan.
 
     Returns (records_with_start, db_meta, valid_steps); caller writes with
-    write_db.  Nothing is collected; every stage is a DataFrame.""",
+    write_db.  Only the valid-step list is collected; data stays lazy.""",
 )
 dgf_build = _make_build(
     "DGF",

@@ -18,12 +18,11 @@ land on the executor-visible filesystem (the reference's layout is
 inherently file-per-proc; at 100 TB per-proc files parallelize across the
 fleet exactly like the reference's per-proc jobs did on one node).
 
-Headers: this container has no h5py, so headers are written as ONE parquet
-table (``headers_parquet/``, a row per proc: array columns = the HDF5
-datasets, scalar columns = the attrs).  :func:`write_hdf5_headers` converts
-that table into literal ``.hdf5`` files when h5py is importable and raises
-``NotImplementedError`` otherwise (honest stub, same policy as the
-multimodal image decode).
+Headers: written as ONE parquet table (``headers_parquet/``, a row per
+proc: array columns = the HDF5 datasets, scalar columns = the attrs).
+:func:`write_hdf5_headers` converts that table into literal ``.hdf5`` files
+with the built-in minimal HDF5 writer (``pipeline/hdf5_min.py``), which
+needs no HDF5 bindings.
 
 Documented deviation: the reference header's ``length`` dataset stores
 ``sys.getsizeof(blob)`` = ``len(blob) + 33`` (CPython bytes-object header,
@@ -257,15 +256,10 @@ def write_hdf5_headers(spark, saving_dir: str) -> list[str]:
     """Convert the parquet header table into the reference's literal
     ``proc%06d_header.hdf5`` / ``proc%06d_dgf_header.hdf5`` files
     (DSGT.py:119 / DDGF.py:116), the suffix chosen by each row's ``type``.
-    Uses h5py when available; otherwise the built-in minimal spec-subset
-    writer (pipeline/hdf5_min.py — this container ships no HDF5 bindings),
-    whose output is structurally verified by an independent parser in
-    tests/test_hdf5_min.py.  The
-    parquet header table remains the canonical queryable surface."""
-    try:
-        import h5py
-    except ImportError:  # container has no h5py: pure-Python subset writer
-        h5py = None
+    Written by the minimal spec-subset writer (pipeline/hdf5_min.py), whose
+    output is structurally verified by an independent parser in
+    tests/test_hdf5_min.py.  The parquet header table remains the canonical
+    queryable surface."""
     from seisdb_spark.pipeline.hdf5_min import write_hdf5
 
     rows = (
@@ -277,14 +271,6 @@ def write_hdf5_headers(spark, saving_dir: str) -> list[str]:
     for row in rows.itertuples(index=False):
         suffix = KINDS[row.type].header_suffix
         path = os.path.join(saving_dir, f"{row.proc_name}_{suffix}.hdf5")
-        datasets, attrs = _header_row_payload(row)
-        if h5py is None:
-            write_hdf5(path, datasets, attrs)
-        else:  # pragma: no cover - container has no h5py
-            with h5py.File(path, "w") as f:
-                for name, arr in datasets.items():
-                    f.create_dataset(name, data=arr)
-                for k, v in attrs.items():
-                    f.attrs[k] = v
+        write_hdf5(path, *_header_row_payload(row))
         out.append(path)
     return out

@@ -3,9 +3,8 @@
 The reference stores per-proc headers as HDF5 (`DSGT.py:119,172-194`): five
 1-D datasets (``index``/``start``/``length`` int64, ``offset``/``scale``
 float64) plus nine scalar root attributes.  That is a tiny, fixed subset of
-the HDF5 format, so when ``h5py`` is unavailable (this container) the
-files are emitted directly against the public HDF5 File Format
-Specification (version 0 superblock, version 1 object headers, contiguous
+the HDF5 format, so the files are emitted directly, with no HDF5
+bindings, against the public HDF5 File Format Specification (version 0 superblock, version 1 object headers, contiguous
 layout):
 
     superblock v0 -> root group object header (symbol-table message +
@@ -17,8 +16,8 @@ Scope limits (all that the reference layout needs): little-endian int64 /
 float64 / fixed ASCII strings, 1-D contiguous datasets, scalar attributes,
 a single flat root group, <= 8 datasets (one symbol-table leaf node).
 Writes are structurally cross-checked by an INDEPENDENT spec-driven parser
-in tests/test_hdf5_min.py; ``h5py`` is preferred at runtime when present
-(pipeline/export.py::write_hdf5_headers).
+in tests/test_hdf5_min.py; pipeline/export.py::write_hdf5_headers is the
+caller.
 """
 
 from __future__ import annotations

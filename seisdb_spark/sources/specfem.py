@@ -81,15 +81,6 @@ def split_fortran_records(buf: bytes) -> list[bytes]:
     return out
 
 
-def read_samples_at(buf: bytes, offset_samples: int, count: int, dtype=np.float32) -> np.ndarray:
-    """S2: raw offset scan — seek to ``offset*itemsize`` and read ``count``
-    items, the reference's marker-skipping access pattern
-    (``bin_reader.py:53-74``)."""
-    itemsize = np.dtype(dtype).itemsize
-    start = offset_samples * itemsize
-    return np.frombuffer(buf, dtype=dtype, count=count, offset=start)
-
-
 def decode_ibool(buf: bytes, nspec: int) -> np.ndarray:
     """S4: ibool scan -> (NSPEC, 125) int32, shifted to 0-based ids."""
     payload = split_fortran_records(buf)[0]

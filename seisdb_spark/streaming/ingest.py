@@ -18,7 +18,8 @@ Design notes (100 TB posture):
     (``specfem.read_snapshots``: the same filename rule, force tagging and
     one mapInPandas decode, fed by a streaming binaryFile reader), and are
     staged in the log ``<staging_dir>/snapshots/batch-<batch_id>``. The
-    wide assembly/encode runs once at finalize over the staged log — the
+    wide assembly/encode runs once at finalize over the staged log, through
+    the batch build's own tail (``pipeline.build.build_records``) — the
     correct split because SGT encoding needs each point's FULL time series
     (a per-key sort over all steps), which a running stream cannot emit
     incrementally without holding every sample in state anyway.
@@ -35,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from seisdb_spark.schemas import ENCODING_LEVEL_DEFAULT
 from seisdb_spark.sources.specfem import KINDS, read_snapshots
 
 # A streaming file source needs its schema up front; the events table's
@@ -139,10 +141,9 @@ def _hold_nanos_conf(spark: SparkSession) -> None:
         _nanos_holds[id(spark)] = [listener, prior, 0]
 
 
-def read_events_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source stream over the events table with event-time ``ts``.
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source stream over the events table with event-time ``ts``, one
+    file per microbatch.
 
     Probes the batch-resolved ts layout once (tables.events_ts_layout) and
     declares the matching stream schema — a user-supplied schema on a file
@@ -162,7 +163,7 @@ def read_events_stream(
     def _stream(schema: T.StructType) -> DataFrame:
         return (
             spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .option("maxFilesPerTrigger", 1)
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
@@ -357,12 +358,12 @@ def snapshot_ingest_stream(
     staging_dir: str,
     checkpoint_dir: str,
     name_data: str = "strain_field",
-    max_files_per_trigger: int = 3,
 ) -> StreamingQuery:
     """Stream SPECFEM snapshot files as they land (S6 streaming variant):
     a streaming binaryFile reader per force dir -> the batch scan's reader
     and strain decode (``specfem.read_snapshots``) -> the staging log
-    ``<staging_dir>/snapshots/batch-<id>`` via :func:`start_logs`.
+    ``<staging_dir>/snapshots/batch-<id>`` via :func:`start_logs`, three
+    files per microbatch.
 
     Returns the started StreamingQuery.  Its trigger is availableNow: it
     stages every file present at start, then stops; await it, then run
@@ -373,7 +374,7 @@ def snapshot_ingest_stream(
     reader = (
         spark.readStream.format("binaryFile")
         .schema(BINARYFILE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 3)
     )
     decoded = read_snapshots(spark, force_dirs, nspec, "SGT", name_data, reader)
     return start_logs(
@@ -390,32 +391,22 @@ def finalize_sgt_from_staging(
     step1: int,
     dstep: int,
     points_per_element: int = 27,
-    encoding_level: int | None = None,
-):
-    """Run the batch assembly + encode tail over the streamed-in staging
-    log (``<staging_dir>/snapshots``). Steps valid = present in all forces
-    *in the staged data* (the staged log is the listing, under the same
-    predicate as pipeline.valid_steps); otherwise identical to
-    pipeline.sgt_build."""
-    from seisdb_spark.pipeline.build import (
-        add_start_offsets,
-        assemble_series,
-        encode_records,
-        select_gll_points,
-        steps_in_all_forces,
-    )
-    from seisdb_spark.schemas import ENCODING_LEVEL_DEFAULT
-    from seisdb_spark.sources.specfem import read_ibool
+    encoding_level: int = ENCODING_LEVEL_DEFAULT,
+) -> DataFrame:
+    """The SGT records of the streamed-in staging log
+    (``<staging_dir>/snapshots``), through the batch build's own tail
+    (``pipeline.build.build_records``).  The valid steps are those present
+    in all forces *in the staged data*: the staged log is the listing,
+    under the same predicate as ``pipeline.valid_steps``."""
+    from seisdb_spark.pipeline.build import build_records, steps_in_all_forces
 
     snaps = read_log(spark, staging_dir, SNAPSHOT_LOG)
     # forder names one force per letter (N, E, Z)
-    n_force = len(KINDS["SGT"].forder)
-    steps = steps_in_all_forces(spark, snaps, n_force, step0, step1, dstep)
-    ibool = read_ibool(spark, model_glob, nspec)
-    points = select_gll_points(ibool, points_per_element)
-    series = assemble_series(snaps, points, steps, "SGT")
-    level = ENCODING_LEVEL_DEFAULT if encoding_level is None else encoding_level
-    return add_start_offsets(encode_records(series, level))
+    steps = steps_in_all_forces(spark, snaps, len(KINDS["SGT"].forder), step0, step1, dstep)
+    _points, records = build_records(
+        spark, model_glob, nspec, snaps, steps, "SGT", points_per_element, encoding_level
+    )
+    return records
 
 
 def novelty_probe(

@@ -43,6 +43,55 @@ def fixture_meta(tmp_path_factory):
     return generate_fixture(root, nprocs=NPROCS, nspec=NSPEC)
 
 
+def _built(spark, m, kind):
+    from seisdb_spark.pipeline import dgf_build, sgt_build
+
+    build = sgt_build if kind == "SGT" else dgf_build
+    return build(
+        spark,
+        os.path.join(m["model_dir"], "proc*_ibool.bin"),
+        m["force_dirs"],
+        m["nspec"],
+        m["step0"],
+        m["step1"],
+        m["dstep"],
+        network="CI",
+        station="USC",
+    )
+
+
+def _collected(built):
+    records, meta, steps = built
+    pdf = records.toPandas().sort_values(["proc", "gll_id"]).reset_index(drop=True)
+    return pdf, meta, steps
+
+
+@pytest.fixture(scope="session")
+def sgt_built(spark, fixture_meta):
+    """The default fixture's SGT build: lazy (records, meta, steps)."""
+    return _built(spark, fixture_meta, "SGT")
+
+
+@pytest.fixture(scope="session")
+def dgf_built(spark, fixture_meta):
+    """The default fixture's DGF build: lazy (records, meta, steps)."""
+    return _built(spark, fixture_meta, "DGF")
+
+
+@pytest.fixture(scope="session")
+def sgt_records(sgt_built):
+    """(records as pandas sorted by proc, gll_id; meta; steps) of the
+    session SGT build, run once."""
+    return _collected(sgt_built)
+
+
+@pytest.fixture(scope="session")
+def dgf_records(dgf_built):
+    """(records as pandas sorted by proc, gll_id; meta; steps) of the
+    session DGF build, run once."""
+    return _collected(dgf_built)
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

@@ -203,28 +203,19 @@ def test_write_read_roundtrip_mixed_types(tmp_path):
     assert got_attrs["version"] == "v1.0"
 
 
-def test_reference_header_files_match_parquet_table(spark, tmp_path):
-    """End-to-end: SGT build -> reference export -> literal .hdf5 header
-    files; every file's datasets/attrs must equal its parquet header row
-    (the surface DSGT.py:172-194 writes)."""
-    from seisdb_spark.pipeline import generate_fixture, sgt_build
+def test_reference_header_files_match_parquet_table(spark, sgt_records, tmp_path):
+    """End-to-end: SGT build (the session build of the default 2-proc
+    fixture) -> reference export -> literal .hdf5 header files; every
+    file's datasets/attrs must equal its parquet header row (the surface
+    DSGT.py:172-194 writes)."""
     from seisdb_spark.pipeline.export import (
         export_reference_format,
         write_hdf5_headers,
     )
 
-    m = generate_fixture(str(tmp_path / "fx"), nprocs=2, nspec=2, step1=40)
-    records, meta, _steps = sgt_build(
-        spark,
-        f"{m['model_dir']}/proc*_ibool.bin",
-        m["force_dirs"],
-        m["nspec"],
-        m["step0"],
-        m["step1"],
-        m["dstep"],
-    )
+    pdf, meta, _steps = sgt_records
     out = str(tmp_path / "db")
-    export_reference_format(records, meta, out)
+    export_reference_format(spark.createDataFrame(pdf), meta, out)
     paths = write_hdf5_headers(spark, out)
     assert len(paths) == 2 and all(p.endswith("_header.hdf5") for p in paths)
 

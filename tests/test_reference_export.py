@@ -10,8 +10,6 @@ import os
 import pytest
 
 from seisdb_spark.pipeline import (
-    db_meta,
-    dgf_build,
     export_reference_format,
     sgt_build,
     write_hdf5_headers,
@@ -20,35 +18,19 @@ from tests import golden_numpy as golden
 from tests.conftest import NPROCS
 
 
-def _export(spark, m, tmp_path, kind):
-    build = sgt_build if kind == "SGT" else dgf_build
-    records, meta, steps = build(
-        spark,
-        os.path.join(m["model_dir"], "proc*_ibool.bin"),
-        m["force_dirs"],
-        m["nspec"],
-        m["step0"],
-        m["step1"],
-        m["dstep"],
-        network="CI",
-        station="USC",
-    )
-    out = str(tmp_path / f"refdb_{kind}")
-    summary = export_reference_format(records, meta, out)
-    return out, summary
-
-
 @pytest.fixture(scope="session")
-def exported(spark, fixture_meta, tmp_path_factory):
-    """``exported(kind)`` -> (out, summary): one build + export per kind per
-    session, shared by the tests that only read the export (writing HDF5
-    headers next to it adds files no other test reads)."""
+def exported(spark, tmp_path_factory, sgt_records, dgf_records):
+    """``exported(kind)`` -> (out, summary): one export per kind per
+    session of the session build (``sgt_records``/``dgf_records``), shared
+    by the tests that only read the export (writing HDF5 headers next to it
+    adds files no other test reads)."""
     cache = {}
 
     def get(kind):
         if kind not in cache:
-            tmp = tmp_path_factory.mktemp(f"export_{kind}")
-            cache[kind] = _export(spark, fixture_meta, tmp, kind)
+            pdf, meta, _steps = {"SGT": sgt_records, "DGF": dgf_records}[kind]
+            out = str(tmp_path_factory.mktemp(f"export_{kind}") / f"refdb_{kind}")
+            cache[kind] = out, export_reference_format(spark.createDataFrame(pdf), meta, out)
         return cache[kind]
 
     return get

@@ -19,7 +19,6 @@ import pytest
 from seisdb_spark.pipeline import (
     assemble_series,
     decode_records,
-    dgf_build,
     element_gll_ids,
     encode_records,
     read_db,
@@ -32,34 +31,16 @@ from seisdb_spark.schemas import INDEX27, N_GLL_PER_ELEMENT
 from seisdb_spark.sources import specfem
 from tests import golden_numpy as golden
 
-# fixture_meta (and NSPEC/NPROCS) live in tests/conftest.py, shared with
-# tests/test_reference_export.py
+# fixture_meta (and NSPEC/NPROCS) and the session builds sgt_built/dgf_built,
+# sgt_records/dgf_records live in tests/conftest.py, shared with the other
+# build-level modules
 from tests.conftest import NPROCS, NSPEC  # noqa: F401,E402
-
-
-@pytest.fixture(scope="session")
-def sgt_records(spark, fixture_meta):
-    m = fixture_meta
-    records, meta, steps = sgt_build(
-        spark,
-        os.path.join(m["model_dir"], "proc*_ibool.bin"),
-        m["force_dirs"],
-        m["nspec"],
-        m["step0"],
-        m["step1"],
-        m["dstep"],
-        network="CI",
-        station="USC",
-    )
-    pdf = records.toPandas().sort_values(["proc", "gll_id"]).reset_index(drop=True)
-    return pdf, meta, steps
 
 
 # ---------------------------------------------------------------- decode path
 def test_fortran_parser_cross_validates(fixture_meta):
     """The engine's in-memory record parser and the golden module's
-    independent file-handle reader agree on fixture bytes (S1); raw-offset
-    reads (S2) agree with record slicing."""
+    independent file-handle reader agree on fixture bytes (S1)."""
     m = fixture_meta
     ib_path = os.path.join(m["model_dir"], "proc000000_ibool.bin")
     with open(ib_path, "rb") as fh:
@@ -74,12 +55,6 @@ def test_fortran_parser_cross_validates(fixture_meta):
     np.testing.assert_array_equal(
         specfem.decode_strain(sbuf, m["nspec"]),
         golden.load_strain_full(strain_path, m["nspec"]),
-    )
-    # S2: the reference's sample-offset access (skip 1 leading marker word)
-    n = m["nspec"] * N_GLL_PER_ELEMENT
-    rec0 = specfem.split_fortran_records(sbuf)[0]
-    np.testing.assert_array_equal(
-        specfem.read_samples_at(sbuf, 1, n), np.frombuffer(rec0, dtype="<f4")
     )
 
 
@@ -126,18 +101,9 @@ def test_sgt_matches_golden_bit_exact(fixture_meta, sgt_records):
         assert (mine["n_values"] == 18 * len(m["valid_steps"])).all()
 
 
-def test_dgf_matches_golden_bit_exact(spark, fixture_meta):
+def test_dgf_matches_golden_bit_exact(fixture_meta, dgf_records):
     m = fixture_meta
-    records, _meta, _steps = dgf_build(
-        spark,
-        os.path.join(m["model_dir"], "proc*_ibool.bin"),
-        m["force_dirs"],
-        m["nspec"],
-        m["step0"],
-        m["step1"],
-        m["dstep"],
-    )
-    pdf = records.toPandas().sort_values(["proc", "gll_id"]).reset_index(drop=True)
+    pdf, _meta, _steps = dgf_records
     for proc in range(m["nprocs"]):
         g = golden.golden_dgf(
             m["model_dir"], m["force_dirs"], proc, m["nspec"],
@@ -342,21 +308,12 @@ def test_storage_ratio_parity(fixture_meta, sgt_records):
     assert ratio > 4, f"storage ratio {ratio:.2f} too low"
 
 
-def test_dgf_roundtrip_error_bound(spark, fixture_meta):
+def test_dgf_roundtrip_error_bound(spark, fixture_meta, dgf_records):
     """DGF decode path: the [para][force][time] layout (DDGF.py:128-132)
     reconstructs within one LSB — the axis order differs from SGT and is
     exactly what decode_records(kind='DGF') must invert."""
     m = fixture_meta
-    records, _meta, _steps = dgf_build(
-        spark,
-        os.path.join(m["model_dir"], "proc*_ibool.bin"),
-        m["force_dirs"],
-        m["nspec"],
-        m["step0"],
-        m["step1"],
-        m["dstep"],
-    )
-    pdf = records.toPandas()
+    pdf, _meta, _steps = dgf_records
     decoded = decode_records(
         spark.createDataFrame(pdf), n_force=3, n_para=3, kind="DGF"
     ).toPandas()
@@ -420,25 +377,20 @@ def _subtrees(plan: str) -> list[tuple[str, str]]:
     return out
 
 
-def test_build_plan_decodes_snapshots_once_and_semi_joins_once(spark, fixture_meta):
+def _executed_nodes(records) -> list[tuple[str, str]]:
+    from seisdb_spark.plancheck import final_plan
+
+    records.collect()
+    return _subtrees(final_plan(records))
+
+
+def test_build_plan_decodes_snapshots_once_and_semi_joins_once(sgt_built):
     """The executed build: the force scans are unioned under ONE snapshot
     decode (a MapInPandas directly over the binaryFile scans), the valid
     steps are semi-joined ONCE, and the fact side shuffles exactly twice —
     the (proc, gll_id) assembly and the per-proc start-offset window."""
-    from seisdb_spark.plancheck import final_plan
-
-    m = fixture_meta
-    records, _meta, _steps = sgt_build(
-        spark,
-        os.path.join(m["model_dir"], "proc*_ibool.bin"),
-        m["force_dirs"],
-        m["nspec"],
-        m["step0"],
-        m["step1"],
-        m["dstep"],
-    )
-    records.collect()
-    nodes = _subtrees(final_plan(records))
+    records, _meta, _steps = sgt_built
+    nodes = _executed_nodes(records)
     # a snapshot decode emits force; it sits on the scans, not on another map
     snapshot_decodes = [
         node for node, sub in nodes
@@ -485,3 +437,66 @@ def test_stray_snapshot_files_are_skipped(spark, tmp_path):
     got_steps, got_records = built()
     pd.testing.assert_frame_equal(got_steps, want_steps)
     pd.testing.assert_frame_equal(got_records, want_records)
+
+
+def test_semi_join_build_side_reads_no_file(sgt_built):
+    """The valid steps are collected once per build: the LeftSemi's
+    broadcast side is that local list, not another listing of the
+    snapshot dirs."""
+    records, _meta, _steps = sgt_built
+    [semi] = [sub for node, sub in _executed_nodes(records) if "LeftSemi" in node]
+    broadcast = "\n".join(
+        sub for node, sub in _subtrees(semi) if node.startswith("BroadcastExchange")
+    )
+    assert broadcast and "binaryFile" not in broadcast, broadcast
+
+
+def test_db_meta_reads_no_snapshot_file(sgt_built):
+    """db_meta comes from the selected points and the step list: its plan
+    reads the ibool files and no snapshot file."""
+    _records, meta, _steps = sgt_built
+    files = meta.inputFiles()
+    assert files and all(specfem.IBOOL_RE.search(f) for f in files), files
+    assert not any("_Step_" in f for f in files), files
+
+
+def test_build_and_write_run_at_most_15_jobs(spark, fixture_meta, tmp_path):
+    """One build + write runs the snapshot lineage once: the step listing,
+    the records write and the meta write together run at most 15 Spark
+    jobs on the default fixture (the meta used to recompute every record,
+    and the steps were listed three times: 24 jobs)."""
+    m = fixture_meta
+    sc = spark.sparkContext
+    group = "test-build-and-write-jobs"
+    sc.setJobGroup(group, "sgt_build + write_db")
+    try:
+        records, meta, _steps = sgt_build(
+            spark, os.path.join(m["model_dir"], "proc*_ibool.bin"), m["force_dirs"],
+            m["nspec"], m["step0"], m["step1"], m["dstep"],
+        )
+        write_db(records, meta, str(tmp_path / "db"), network="CI", station="USC")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 15, len(jobs)
+
+
+@pytest.mark.parametrize("kind", ["SGT", "DGF"])
+def test_db_meta_rows_equal_record_counts_and_valid_steps(
+    spark, fixture_meta, request, kind
+):
+    """Each meta row's ngll is its proc's record count and nstep its number
+    of valid steps (the P3 listing, computed independently here)."""
+    m = fixture_meta
+    pdf, meta, _steps = request.getfixturevalue(f"{kind.lower()}_records")
+    steps = valid_steps(
+        spark, m["force_dirs"], specfem.KINDS[kind].name_data,
+        m["step0"], m["step1"], m["dstep"],
+    ).toPandas()
+    got = sorted(tuple(r) for r in meta.select("proc", "ngll", "nstep").collect())
+    want = sorted(
+        (proc, len(grp), int((steps["proc"] == proc).sum()))
+        for proc, grp in pdf.groupby("proc")
+    )
+    assert got == want

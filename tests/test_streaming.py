@@ -10,7 +10,7 @@ import os
 import pandas as pd
 import pytest
 
-from seisdb_spark.pipeline import generate_fixture, sgt_build
+from seisdb_spark.pipeline import generate_fixture
 from seisdb_spark.queries.registry import REGISTRY
 from seisdb_spark.streaming import (
     finalize_sgt_from_staging,
@@ -147,12 +147,15 @@ def test_events_ts_layout_tripwire(spark, tmp_path):
 
 
 @pytest.mark.parametrize("dirs", ["absolute", "relative"])
-def test_snapshot_stream_ingest_encode_equals_batch(spark, tmp_path, monkeypatch, dirs):
+def test_snapshot_stream_ingest_encode_equals_batch(
+    spark, fixture_meta, sgt_records, tmp_path, monkeypatch, dirs
+):
     """Files stream in (binaryFile source, 3 per microbatch), decode via the
     same kernel, land in staging; the finalize encode over staged rows must
-    produce byte-identical records to the batch sgt_build.  Force dirs given
-    relative to the working directory work as they do in the batch build."""
-    m = generate_fixture(str(tmp_path / "fx"), nprocs=1, nspec=2, step1=40)
+    produce byte-identical records to the batch sgt_build (the session
+    build of the same fixture).  Force dirs given relative to the working
+    directory work as they do in the batch build."""
+    m = dict(fixture_meta)
     staging = str(tmp_path / "staging")
     ckpt = str(tmp_path / "ckpt")
     if dirs == "relative":
@@ -169,11 +172,8 @@ def test_snapshot_stream_ingest_encode_equals_batch(spark, tmp_path, monkeypatch
         spark, staging, model_glob, m["nspec"], m["step0"], m["step1"], m["dstep"]
     ).toPandas().set_index(["proc", "gll_id"]).sort_index()
 
-    records, _meta, _steps = sgt_build(
-        spark, model_glob, m["force_dirs"], m["nspec"],
-        m["step0"], m["step1"], m["dstep"],
-    )
-    batch = records.toPandas().set_index(["proc", "gll_id"]).sort_index()
+    pdf, _meta, _steps = sgt_records
+    batch = pdf.set_index(["proc", "gll_id"]).sort_index()
 
     assert list(streamed.index) == list(batch.index)
     for col in ("offset", "scale", "length", "start", "n_values"):
