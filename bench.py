@@ -3,15 +3,19 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
 and print ONE JSON line with per-query and total wall-clock seconds.
 
-Each query is executed to completion via a count() action (full plan runs,
-nothing collected to the driver).  Per query: one cold pass (reported
-separately — JVM/codegen/Python-worker warmup), then timed passes whose
-MEDIAN is the reported number, so sub-second movements between rounds are
-signal rather than single-sample noise.  Pass counts are per-class:
-N_WARM=5 for plan-cached queries, N_WARM_FIXPOINT=3 for driver-loop
-fixpoint queries (each pass rebuilds the whole loop, ~8-30 s at sf0.1; a
-median of 3 still rejects a stray GC pause and bounds the bench's wall
-clock).  Both counts are published on the contract line.
+A pass times one registry call, which builds a fresh plan, plus
+plancheck.run_plan on it: the query's own physical plan runs to
+completion with every output column evaluated and the rows discarded on
+the executors.  Jobs a query runs while its plan is built (a fixpoint
+driver loop, a sketch collected into a broadcast) are timed in every
+pass.  Per query: one cold pass (reported separately —
+JVM/codegen/Python-worker warmup), then timed passes whose MEDIAN is the
+reported number, so sub-second movements between rounds are signal
+rather than single-sample noise.  Pass counts are per-class: N_WARM=5
+for plain queries, N_WARM_FIXPOINT=3 for driver-loop fixpoint queries
+(each pass reruns the whole loop, ~8-30 s at sf0.1; a median of 3 still
+rejects a stray GC pause and bounds the bench's wall clock).  Both
+counts are published on the contract line.
 
 The contract line also carries value_fixpoint / value_nonfixpoint
 subtotals: r15's honest-fixpoint repricing moved the headline 27.9 ->
@@ -54,7 +58,7 @@ NORM_FLAG_RATIO = 1.5
 #: bench box oscillates 1.25-2x intra-day on identical code, so raw
 #: cross-round per-query deltas needed a three-capture adjudication
 #: protocol.  These three are the r15-adjudication controls — cheap,
-#: plan-cached, shuffle-light queries spanning the three table families
+#: shuffle-light queries spanning the three table families
 #: (lineitem agg, broadcast gather join, documents text scan) whose only
 #: plausible movers are the MACHINE.  Every capture publishes
 #: control_median_sec (their median) on the contract line and a
@@ -98,6 +102,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
 
+    from seisdb_spark.plancheck import run_plan
     from seisdb_spark.queries import REGISTRY
     from seisdb_spark.session import get_spark
 
@@ -152,19 +157,11 @@ def main() -> None:
     per_query: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
 
-    def timed_pass(name, spec) -> float:
-        # Fixpoint queries (k-core peel, BFS frontier) execute their loop
-        # at PLAN BUILD: under the registry plan cache a warm re-collect
-        # times only the final aggregate (~70x under the honest cost for
-        # k-core — the r14 headline caveat).  Defeating the cache inside
-        # the timed region prices construction+execution every pass.
-        if spec.fixpoint:
-            spark.__dict__.get("_seisdb_plan_cache", {}).pop(
-                (name, sf_dir), None
-            )
+    def timed_pass(spec) -> float:
         t0 = time.perf_counter()
-        spec.spark(spark, sf_dir).count()
+        run_plan(spec.spark(spark, sf_dir))
         return time.perf_counter() - t0
+
     # One trivial job before the loop: session/JVM/scheduler spin-up and the
     # first parquet listing otherwise land entirely on whichever query sorts
     # first (ann_signbucket_topk absorbed ~4 s of it), making its cold time
@@ -172,7 +169,7 @@ def main() -> None:
     # Python-worker, and footer costs — the part that belongs to it.
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
     for name, spec in sorted(bench_specs.items()):
-        cold[name] = round(timed_pass(name, spec), 4)
+        cold[name] = round(timed_pass(spec), 4)
         samples: list[float] = []
         # fixpoint queries re-run their whole driver loop every pass
         # (~8-30 s each at sf0.1); 3 warm passes bound the bench's wall
@@ -180,7 +177,7 @@ def main() -> None:
         # their pass-to-pass variance is dominated by the loop itself,
         # not scheduler noise
         for _ in range(N_WARM_FIXPOINT if spec.fixpoint else N_WARM):
-            samples.append(timed_pass(name, spec))
+            samples.append(timed_pass(spec))
         per_query[name] = round(statistics.median(samples), 4)
         spread[name] = [round(min(samples), 4), round(max(samples), 4)]
 

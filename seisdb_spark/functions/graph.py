@@ -76,26 +76,8 @@ def release_checkpoint(df: DataFrame) -> None:
     re-accumulate blocks — so the first failure logs loudly (once per
     process; r15 advice), and ``tests/test_graph_cc.py``
     (``test_release_checkpoint_drops_superseded_round_blocks``) pins that
-    the persistent-RDD count does not grow with the round count.
-
-    Releasing also DEREGISTERS the df from the session-lifetime
-    checkpoint list (``register_session_checkpoint``) when present:
-    loop callers (sssp/bfs/wcc and the streaming twins) release their
-    copurchase_edges copy at build time, and without the removal each
-    fixpoint bench pass appended one dead DataFrame ref that only
-    ``clear_plan_cache`` would prune — unbounded list growth in a
-    long-lived service running loop queries between hook calls (r17
-    advice)."""
+    the persistent-RDD count does not grow with the round count."""
     global _RELEASE_FAILED_ONCE
-    try:
-        lst = df.sparkSession.__dict__.get("_seisdb_session_checkpoints")
-        if lst is not None:
-            for i, tracked in enumerate(lst):
-                if tracked is df:
-                    del lst[i]
-                    break
-    except Exception:
-        pass  # deregistration is best-effort; the unpersist below is the point
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:

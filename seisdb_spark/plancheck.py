@@ -1,5 +1,12 @@
-"""Executed-plan shape introspection (used by plan-shape tests and the
-scale-stress harness).
+"""Full plan execution and executed-plan shape introspection (used by
+bench.py, the scale-stress harnesses and the plan-shape tests).
+
+:func:`run_plan` is the one full-execution primitive: it runs a
+DataFrame's own physical plan to completion and counts rows on the
+executors.  Unlike ``count()`` it prunes no output column, unlike
+``collect()`` it ships no row to the driver, and unlike a sink write it
+executes through df's own QueryExecution, so a later :func:`final_plan`
+reads the AQE plan that actually ran.
 
 Plan assertions match the AQE-FINAL physical plan.  ``executedPlan()`` on an
 executed AdaptiveSparkPlan stringifies as ``<final plan> == Initial Plan ==
@@ -22,6 +29,11 @@ across Spark releases).
 from __future__ import annotations
 
 import re
+
+
+def run_plan(df) -> int:
+    """Execute df's physical plan to completion; return its row count."""
+    return df._jdf.queryExecution().executedPlan().execute().count()
 
 
 def final_plan(df) -> str:

@@ -13,9 +13,9 @@ same join-shuffle per superstep / neighborhood-intersection under the
 hood).  The driver-loop operators (k-core, BFS, SSSP, and WCC via
 functions/graph.py) run on the shared ``superstep_loop`` primitive,
 which records each round's executed plan in ``LAST_SUPERSTEPS`` so the
-scale harness can assert superstep plan shape; they register with
-``fixpoint=True`` so the bench/tier harnesses time the loop honestly
-(it runs at plan build under the registry cache).
+scale harness can assert superstep plan shape.  Their loop runs at
+plan build, inside every registry call; they register with
+``fixpoint=True`` so bench.py gives them fewer timed passes.
 
 Exact-integer discipline: ranks live in BIGINT "nano-rank" units
 (initial rank 10^9 per node) and every per-edge contribution is a BIGINT
@@ -49,7 +49,7 @@ from seisdb_spark.functions.graph import (
     symmetrize,
 )
 from seisdb_spark.plancheck import has_node
-from seisdb_spark.queries.registry import query, register_session_checkpoint
+from seisdb_spark.queries.registry import query
 from seisdb_spark.sources.tables import load_table
 
 
@@ -141,11 +141,8 @@ def pagerank_edges(pairs: DataFrame) -> DataFrame:
     first time the plan executes and every superstep joins the persisted
     copy instead of re-running the scan + distinct + degree window — the
     'persist the edges, shuffle only ranks' shape every production
-    PageRank uses.  (Under the registry plan cache the checkpoint then
-    lives for the session — acceptable for the query-at-a-time harness
-    and a few MB at driver scale; a long-lived multi-graph service calls
-    registry.clear_plan_cache, which evicts the plans and releases the
-    checkpoints registered below — the r16 watch item's hook.)
+    PageRank uses.  Each call makes a new checkpoint; Spark's context
+    cleaner drops its blocks once the JVM collects the DataFrame.
     """
     pairs = pagerank_pairs(pairs)
     fwd = pairs.select(
@@ -175,9 +172,7 @@ def pagerank_edges(pairs: DataFrame) -> DataFrame:
         "d", F.count(F.lit(1)).over(Window.partitionBy("src"))
     ).sortWithinPartitions("src")
     with _aqe_off(pairs.sparkSession):
-        cp = win.localCheckpoint(eager=False)
-    register_session_checkpoint(cp)
-    return cp
+        return win.localCheckpoint(eager=False)
 
 
 def pagerank_topk(edges_deg: DataFrame) -> DataFrame:
@@ -284,7 +279,7 @@ def copurchase_edges(li: DataFrame) -> DataFrame:
         .select("u", F.explode("ps").alias("v"))
         .where(F.col("u") < F.col("v"))
     )
-    cp = (
+    return (
         pairs.select(
             F.col("u").cast("bigint").alias("u"),
             F.col("v").cast("bigint").alias("v"),
@@ -292,12 +287,6 @@ def copurchase_edges(li: DataFrame) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # tracked so clear_plan_cache can release it: the triangle census's
-    # CACHED plan reads this checkpoint on every execution (loop queries
-    # release their copy at build time instead — double-release of an
-    # already-unpersisted RDD is a no-op, so both disciplines coexist)
-    register_session_checkpoint(cp)
-    return cp
 
 
 def copurchase_obs(li: DataFrame) -> DataFrame:
@@ -673,9 +662,9 @@ def _kcore_oracle() -> str:
     "(observed: 5 at sf0.01), so both engines provably describe the "
     "same iterate.  Exact integer degrees; the fixpoint is unique "
     "(k-cores are order-independent), so the membership value-hashes.  "
-    "fixpoint=True: the peel runs at plan build, so the bench/tier "
-    "harnesses defeat the plan cache and time construction+execution — "
-    "the headline number prices the cascade, not the final aggregate.",
+    "fixpoint=True: the peel runs at plan build, which the bench/tier "
+    "harnesses time with the execution — the headline number prices "
+    "the cascade, not the final aggregate.",
     bench=True,
     fixpoint=True,
 )
@@ -1046,9 +1035,9 @@ def graph_sssp_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle provably describe the same iterate with no convergence "
     "guard.  BFS levels are set-unique (independent of visit order) and "
     "hop counts exact integers, so the table value-hashes.  "
-    "fixpoint=True: the expansion runs at plan build — the bench/tier "
-    "harnesses defeat the plan cache so the headline number prices the "
-    "loop, not the final union scan.",
+    "fixpoint=True: the expansion runs at plan build, which the "
+    "bench/tier harnesses time with the execution — the headline number "
+    "prices the loop, not the final union scan.",
     bench=True,
     fixpoint=True,
 )
@@ -1181,8 +1170,8 @@ def _wcc_oracle() -> str:
     "Component ids are min part ids — set-unique, independent of round "
     "order — so the membership table value-hashes.  The oracle is the "
     "same closure as a DuckDB recursive CTE (the dedup_cluster_"
-    "components pattern).  fixpoint=True: the loop runs at plan build — "
-    "bench/tier harnesses defeat the plan cache and price it honestly.",
+    "components pattern).  fixpoint=True: the loop runs at plan build, "
+    "which the bench/tier harnesses time with the execution.",
     bench=True,
     fixpoint=True,
 )
@@ -1192,9 +1181,9 @@ def graph_wcc_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the returned labeling reads only its own final-round checkpoint
     # (connected_components symmetrizes into — and releases — its own
     # edge copy), so the windowed co-purchase checkpoint this call built
-    # is dead once the loop exits; without the release each fixpoint
-    # bench pass (plan cache defeated) retained one edge-set RDD for the
-    # session (r16 advice).  finally: the non-convergence RuntimeError
+    # is dead once the loop exits; without the release each call
+    # retained one edge-set RDD until the JVM collected it (r16 advice).
+    # finally: the non-convergence RuntimeError
     # must not skip it — that would re-create the leak on exactly the
     # error path the loop itself releases its own copies on.
     try:

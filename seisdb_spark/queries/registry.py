@@ -32,10 +32,9 @@ class QuerySpec:
     doc: str = ""
     bench: bool = False  # include in bench.py headline set
     #: True for driver-loop fixpoint queries (k-core peel, BFS frontier):
-    #: their iterations execute at PLAN BUILD, so under the registry plan
-    #: cache a warm re-collect times only the final aggregate (~70x under
-    #: the honest cost for k-core).  bench.py and tools/scale_stress.py
-    #: defeat the cache and time construction+execution for these.
+    #: their loop runs at plan build, so one pass costs far more than a
+    #: plain query's; bench.py gives them fewer timed passes
+    #: (N_WARM_FIXPOINT) and a subtotal of their own.
     fixpoint: bool = False
 
 
@@ -51,38 +50,22 @@ def query(
 ):
     """Decorator registering a Spark query with its DuckDB oracle twin.
 
-    The registered callable memoizes the *lazy* analyzed DataFrame per
-    ``(session, sf_dir)`` — a prepared-plan cache.  Queries here are pure
-    plan builders (no parameters beyond the table directory), so the plan is
-    a pure function of its key; re-invoking returns the same DataFrame and
-    skips the py4j plan-construction round-trips (~0.1-0.9 s for the wide
-    LSH plans), while every execution still runs from scratch.  The cache
-    dict lives ON the session object (``spark._seisdb_plan_cache``), not at
-    module level: the session -> cache -> DataFrame -> session reference
-    cycle is then self-contained, so a stopped session dropped by its caller
-    is cycle-collected immediately — no module global pins its JVM refs
-    until some later invocation.  False hits are impossible: a fresh
-    SparkSession starts with no cache attribute.
+    The registered callable is ``fn`` itself: every call builds a fresh
+    plan, so a harness that times ``spec.spark(...)`` plus
+    :func:`seisdb_spark.plancheck.run_plan` prices the plan build (and
+    any jobs it runs, such as a driver loop or a sketch collected into
+    a broadcast) together with the execution.  A streaming twin's
+    DataFrame reads a per-(process, sf_dir) staging root, so the next
+    call of the same twin with the same sf_dir invalidates the
+    DataFrame an earlier call returned.
     """
 
     def deco(fn: SparkQuery) -> SparkQuery:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-
-        def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-            cache = spark.__dict__.setdefault("_seisdb_plan_cache", {})
-            key = (name, sf_dir)
-            df = cache.get(key)
-            if df is None:
-                df = fn(spark, sf_dir)
-                cache[key] = df
-            return df
-
-        cached.__name__ = fn.__name__
-        cached.__doc__ = fn.__doc__
         REGISTRY[name] = QuerySpec(
             name=name,
-            spark=cached,
+            spark=fn,
             oracle=oracle,
             doc=doc,
             bench=bench,
@@ -91,42 +74,3 @@ def query(
         return fn
 
     return deco
-
-
-def register_session_checkpoint(df: DataFrame) -> None:
-    """Track a lazy localCheckpoint that a cached query plan will hold for
-    the session (pagerank_edges / copurchase_edges: the 'persist the
-    edges, shuffle only ranks' side of every superstep), so
-    :func:`clear_plan_cache` can release its blocks when the plans are
-    evicted.  The list lives ON the session object for the same
-    cycle-collection reason as the plan cache itself."""
-    df.sparkSession.__dict__.setdefault(
-        "_seisdb_session_checkpoints", []
-    ).append(df)
-
-
-def clear_plan_cache(spark: SparkSession) -> int:
-    """Evict every cached query plan AND release the session-lifetime edge
-    checkpoints those plans hold — the unpersist hook a long-lived
-    multi-graph service needs (a query-at-a-time harness never does: the
-    checkpoints are a few MB and die with the session).  Returns the
-    number of evicted plans.  Safe ordering: the plans are dropped FIRST,
-    so the REGISTRY can never hand out a plan whose checkpoint blocks are
-    gone (lazy localCheckpoints have no lineage to recompute from);
-    re-invoking a registry query afterwards rebuilds plan and checkpoint
-    from scratch.
-
-    INVALIDATION CONTRACT (r17 advice): DataFrames a caller obtained from
-    the registry BEFORE the clear are invalidated by it — the hook cannot
-    reach references it does not hold, so re-executing such a DataFrame
-    fails on the released checkpoint blocks (no lineage to recompute
-    from).  A long-lived service must treat this hook as a generation
-    boundary: call it only when no pre-clear DataFrame will be executed
-    again, and re-obtain every query result from the registry
-    afterwards."""
-    from seisdb_spark.functions.graph import release_checkpoint
-
-    evicted = len(spark.__dict__.pop("_seisdb_plan_cache", {}))
-    for df in spark.__dict__.pop("_seisdb_session_checkpoints", []):
-        release_checkpoint(df)
-    return evicted

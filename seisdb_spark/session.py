@@ -55,6 +55,11 @@ def get_spark(app_name: str = "seisdb-spark", shuffle_partitions: int | None = N
         # this floor matters at 100 TB).
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce a persisted frame's shuffles too: with the
+        # default (false) a cached groupBy materializes initialPartitionNum
+        # (512) partitions however few rows it holds, and every later read
+        # of the cache runs 512 tasks
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

@@ -77,20 +77,6 @@ def test_constant_series_zero_scale_guard():
     assert offset == 7.5 and scale == 0.0
     assert not codes.any()
 
-def test_plan_cache_lives_on_session_and_returns_same_plan(spark):
-    """The registry's prepared-plan cache is stored ON the session object
-    (session -> cache -> DataFrame -> session is a self-contained cycle, so
-    a dropped session is cycle-collected); repeat invocation returns the
-    identical DataFrame object."""
-    from seisdb_spark.queries.registry import REGISTRY
-    from tests.conftest import SMOKE_SF_DIR
-
-    fn = REGISTRY["a3_counts"].spark
-    d1 = fn(spark, SMOKE_SF_DIR)
-    d2 = fn(spark, SMOKE_SF_DIR)
-    assert d1 is d2
-    assert ("a3_counts", SMOKE_SF_DIR) in spark.__dict__["_seisdb_plan_cache"]
-
 
 def test_schema_drift_tripwire_all_tables(spark, tmp_path):
     """Physical-type drift WITHIN a logical class loads untouched (it hits
@@ -163,91 +149,6 @@ def test_extra_conf_malformed_tokens_raise(monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", bad)
         with pytest.raises(ValueError, match="key=value"):
             get_spark(app_name="extra-conf-probe")
-
-
-def test_clear_plan_cache_releases_session_checkpoints(spark):
-    """clear_plan_cache is the long-lived-service unpersist hook (r16
-    watch item): it must evict every cached plan, release the
-    session-lifetime edge checkpoints those plans hold (pagerank_edges /
-    copurchase_edges), and leave the registry fully functional — a
-    re-invoked query rebuilds plan and checkpoint from scratch and
-    returns identical values."""
-    import pandas as pd
-
-    from seisdb_spark.queries.registry import REGISTRY, clear_plan_cache
-    from tests.conftest import SMOKE_SF_DIR
-
-    def run():
-        return (
-            REGISTRY["graph_pagerank_topk"]
-            .spark(spark, SMOKE_SF_DIR)
-            .toPandas()
-            .sort_values(["node_id"])
-            .reset_index(drop=True)
-        )
-
-    want = run()
-    jsc = spark.sparkContext._jsc
-    held = jsc.getPersistentRDDs().size()
-    assert held >= 1  # the pagerank edge checkpoint is materialized
-    assert (
-        len(spark.__dict__.get("_seisdb_session_checkpoints", [])) >= 1
-    ), "pagerank_edges did not register its session checkpoint"
-
-    evicted = clear_plan_cache(spark)
-    assert evicted >= 1
-    assert jsc.getPersistentRDDs().size() < held, (
-        "clear_plan_cache did not release the edge checkpoint blocks"
-    )
-    assert "_seisdb_plan_cache" not in spark.__dict__
-    assert "_seisdb_session_checkpoints" not in spark.__dict__
-
-    # the evicted plan must NOT be reachable anymore (re-executing it
-    # would read released checkpoint blocks); re-invocation rebuilds
-    pd.testing.assert_frame_equal(run(), want)
-
-
-def test_release_checkpoint_deregisters_session_list(spark):
-    """Loop queries (sssp/bfs/wcc and the streaming graph twins) release
-    their copurchase_edges checkpoint at build time; before the r17-advice
-    fix the build-time registration stayed in the session-lifetime list, so
-    each plan-cache-defeated bench pass appended one dead DataFrame ref
-    that only clear_plan_cache would prune.  release_checkpoint must now
-    deregister the df, so the list does not grow across fixpoint passes."""
-    from seisdb_spark.functions.graph import release_checkpoint
-    from seisdb_spark.queries.registry import (
-        REGISTRY,
-        register_session_checkpoint,
-    )
-    from tests.conftest import SMOKE_SF_DIR
-
-    # direct contract: register then release removes the exact entry
-    df = spark.range(3).localCheckpoint(eager=True)
-    register_session_checkpoint(df)
-    lst = spark.__dict__["_seisdb_session_checkpoints"]
-    assert any(d is df for d in lst)
-    release_checkpoint(df)
-    assert not any(d is df for d in lst), (
-        "release_checkpoint left the released df registered for the "
-        "session lifetime"
-    )
-
-    # end-to-end: two plan-cache-defeated passes of a fixpoint loop query
-    # (the bench protocol) must not grow the session list
-    def defeated_pass():
-        REGISTRY["graph_sssp_cost"].spark(spark, SMOKE_SF_DIR).count()
-        spark.__dict__.get("_seisdb_plan_cache", {}).pop(
-            ("graph_sssp_cost", SMOKE_SF_DIR), None
-        )
-
-    defeated_pass()
-    n_after_first = len(spark.__dict__.get("_seisdb_session_checkpoints", []))
-    defeated_pass()
-    n_after_second = len(spark.__dict__.get("_seisdb_session_checkpoints", []))
-    assert n_after_second == n_after_first, (
-        f"session checkpoint list grew {n_after_first} -> {n_after_second} "
-        "across fixpoint bench passes (dead refs accumulating)"
-    )
 
 
 @pytest.mark.parametrize("distinct", [True, False])

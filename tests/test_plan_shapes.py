@@ -5,8 +5,9 @@ tools/scale_stress.py carries one executed-plan predicate per stressed
 query (no cartesian products, single keyed exchanges, broadcast sides
 staying broadcast...).  Until round 12 those only ran when a tier run
 was taken, so a plan regression could sit unnoticed between tier
-refreshes.  This test executes each stressed query at sf0.01 and asserts
-its own predicate on the AQE-final plan — the same check the tier rows
+refreshes.  This test builds and runs each stressed query at sf0.01 with
+``run_plan`` (the scale harness's own action) and asserts its own
+predicate on the AQE-final plan — the same check the tier rows
 certify, now on every suite run.
 
 Queries whose predicate is only meaningful on a derived corpus are
@@ -22,10 +23,10 @@ from __future__ import annotations
 
 import pytest
 
-from seisdb_spark.plancheck import final_plan
+from seisdb_spark.plancheck import final_plan, run_plan
 from seisdb_spark.queries import REGISTRY
 from tests.conftest import SF_DIR
-from tools.scale_stress import DIR_OVERRIDE, OUTPUT_UNBOUNDED, STRESS_QUERIES
+from tools.scale_stress import DIR_OVERRIDE, STRESS_QUERIES
 
 CHECKED = sorted(
     n for n in STRESS_QUERIES if DIR_OVERRIDE.get(n) != "richvocab"
@@ -34,21 +35,11 @@ CHECKED = sorted(
 
 @pytest.mark.parametrize("name", CHECKED)
 def test_stress_plan_predicate_holds_at_gate_sf(spark, name):
-    spec = REGISTRY[name]
-    if spec.fixpoint:
-        # driver-loop queries capture their per-round superstep plans as
-        # a side effect of the loop, which runs at plan build — defeat
-        # the plan cache so the round plans the predicate inspects are
-        # from THIS corpus, not whichever invocation cached the plan
-        spark.__dict__.get("_seisdb_plan_cache", {}).pop((name, SF_DIR), None)
-    df = spec.spark(spark, SF_DIR)
-    if name in OUTPUT_UNBOUNDED:
-        # corpus-scaled outputs stay executor-side (SF_DIR is
-        # env-overridable — a collect() here re-creates the harness-OOM
-        # failure mode time_query's own-plan RDD count exists to avoid)
-        df._jdf.queryExecution().executedPlan().execute().count()
-    else:
-        df.collect()
+    # a fresh registry call, so a driver loop's round plans (recorded at
+    # plan build) are from THIS corpus; run_plan executes df's own plan,
+    # which final_plan then reads
+    df = REGISTRY[name].spark(spark, SF_DIR)
+    run_plan(df)
     plan = final_plan(df)
     assert STRESS_QUERIES[name](plan), (
         f"{name}: scale-harness plan predicate failed at {SF_DIR} — "

@@ -378,9 +378,9 @@ def _subtrees(plan: str) -> list[tuple[str, str]]:
 
 
 def _executed_nodes(records) -> list[tuple[str, str]]:
-    from seisdb_spark.plancheck import final_plan
+    from seisdb_spark.plancheck import final_plan, run_plan
 
-    records.collect()
+    run_plan(records)
     return _subtrees(final_plan(records))
 
 
@@ -458,6 +458,18 @@ def test_db_meta_reads_no_snapshot_file(sgt_built):
     files = meta.inputFiles()
     assert files and all(specfem.IBOOL_RE.search(f) for f in files), files
     assert not any("_Step_" in f for f in files), files
+
+
+@pytest.mark.parametrize("kind", ["SGT", "DGF"])
+def test_scale_stress_sgt_plan_contract_holds(request, kind):
+    """tools/scale_stress_sgt.py's scale-invariant contract holds on the
+    executed plan of the full records frame, the plan it times."""
+    from seisdb_spark.plancheck import final_plan, run_plan
+    from tools.scale_stress_sgt import plan_ok
+
+    records, _meta, _steps = request.getfixturevalue(f"{kind.lower()}_built")
+    run_plan(records)
+    assert plan_ok(final_plan(records)) == (True, "ok")
 
 
 def test_build_and_write_run_at_most_15_jobs(spark, fixture_meta, tmp_path):

@@ -40,9 +40,8 @@ def _plant_orders(tmp_path, rows) -> str:
 
 
 def _plant_events(tmp_path, rows, name: str = "planted_ev") -> str:
-    # distinct dir per planted corpus: the registry memoizes the analyzed
-    # plan per (session, sf_dir), so re-planting the SAME path would hand
-    # the second query a stale file listing
+    # distinct dir per planted corpus, so each query reads only the rows
+    # its own test planted
     sf_dir = str(tmp_path / name)
     os.makedirs(sf_dir, exist_ok=True)
     pdf = pd.DataFrame(
@@ -892,9 +891,6 @@ def test_sssp_early_exit_engages_and_preserves_values(spark):
     from seisdb_spark.queries.registry import REGISTRY
     from tests.conftest import SF_DIR
 
-    spark.__dict__.get("_seisdb_plan_cache", {}).pop(
-        ("graph_sssp_cost", SF_DIR), None
-    )
     REGISTRY["graph_sssp_cost"].spark(spark, SF_DIR)
     assert 0 < len(LAST_SUPERSTEPS["sssp"]) < gq.SSSP_MAX_EDGES, (
         f"early exit did not engage: {len(LAST_SUPERSTEPS['sssp'])} rounds"

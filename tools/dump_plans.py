@@ -57,12 +57,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     for name in sorted(names):
-        spec = REGISTRY[name]
-        # bypass the plan cache so a prior invocation in this process can't
-        # hand back a stale plan (and so fixpoint loops re-run, repopulating
-        # their round records for the capture below)
-        spark.__dict__.get("_seisdb_plan_cache", {}).pop((name, args.sf_dir), None)
-        df = spec.spark(spark, args.sf_dir)
+        # a fixpoint loop runs in this call, recording the round plans
+        # appended below
+        df = REGISTRY[name].spark(spark, args.sf_dir)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")

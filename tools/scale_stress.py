@@ -48,7 +48,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from seisdb_spark.plancheck import count_exchanges, final_plan, has_node  # noqa: E402
+from seisdb_spark.plancheck import count_exchanges, final_plan, has_node, run_plan  # noqa: E402
 from seisdb_spark.queries import REGISTRY  # noqa: E402
 from seisdb_spark.sources.tables import load_table  # noqa: E402
 
@@ -494,8 +494,8 @@ STRESS_QUERIES = {
     # equi-join-only, partition-local, JVM-side, and reads its
     # predecessor through a checkpoint scan instead of re-running the
     # loop history (functions/graph.LAST_SUPERSTEPS["kcore"], recorded
-    # by the run the harness just timed; time_query defeats the plan
-    # cache for fixpoint specs, so the plans are from THIS corpus).  Runs
+    # by the run the harness just timed; every time_query run rebuilds
+    # the plan, so the plans are from THIS corpus).  Runs
     # on the graphscale corpus like the other graph-structure operators.
     "graph_kcore_membership": lambda p: (
         not has_node(p, "CartesianProduct")
@@ -570,25 +570,6 @@ STRESS_QUERIES = {
         and not has_node(p, "rangepartitioning")
         and not has_node(p, "BatchEvalPython")
     ),
-}
-
-#: Queries whose RESULT row count scales with the corpus (everything else
-#: returns gates/top-ks/group summaries): timed via the noop sink, never
-#: collected to the driver (see time_query).
-OUTPUT_UNBOUNDED = {
-    "timeseries_gapfill",
-    "scd2_history_build",
-    "pointintime_balance_lookup",
-    "window_range_trailing_day",  # one output row per event
-    "intersect_all_priorities",  # bag semantics: output ~ half the orders
-    "cdc_snapshot_apply",  # one row per live customer key
-    "ohlc_time_bars",  # bars ~ types x hours; the events replicas shift hours
-    "anomaly_trailing_zscore",  # flagged rows ~ a few percent of events
-    "twap_daily_value",  # one row per active (user, day)
-    "graph_kcore_membership",  # one row per core node (~19k x factor)
-    "graph_bfs_hops",  # one row per reached node (~20k x factor)
-    "graph_sssp_cost",  # one row per reachable node (~20k x factor)
-    "graph_wcc_membership",  # one row per windowed node (~17k x factor)
 }
 
 #: Queries stressed on a DERIVED corpus instead of the plain scaled one.
@@ -872,38 +853,23 @@ def time_query(
     """Median wall time over n warm runs (one untimed warm-up) + the
     AQE-final executed plan of the last run.
 
-    Each timed run EVICTS the registry's per-(name, sf_dir) plan cache and
-    rebuilds the DataFrame: re-collecting the SAME DataFrame object lets
-    Spark skip every completed shuffle map stage (shuffle-output reuse), so
-    a cached handle times only the result stage — for shuffle-bearing
-    queries that silently drops the map-side scan/tokenize cost from the
-    measurement (caught when a full-corpus tokenize 'ran' in 29 ms at
-    x100).  A fresh DataFrame re-executes all stages; generated code still
-    comes warm from Spark's codegen cache (same source), which is the
-    warm-executor steady state the scaling claim is about."""
+    Each timed run is one registry call, which builds a fresh plan, plus
+    ``run_plan`` on it; both are inside the timed region.  A fresh
+    DataFrame re-executes every stage (re-running the SAME DataFrame
+    object lets Spark skip its completed shuffle map stages, which once
+    timed a full-corpus tokenize at 29 ms at x100), and a fixpoint
+    query's loop, which runs at plan build, is priced every run.
+    Generated code still comes warm from Spark's codegen cache (same
+    source), which is the warm-executor steady state the scaling claim
+    is about.  ``run_plan`` keeps rows on the executors, so a
+    corpus-sized output never reaches the driver, and executes df's own
+    QueryExecution, so ``final_plan`` reads the AQE plan that ran."""
     spec = REGISTRY[name]
 
-    def fresh() -> "DataFrame":
-        spark.__dict__.get("_seisdb_plan_cache", {}).pop((name, sf_dir), None)
-        return spec.spark(spark, sf_dir)
-
-    def run(df: "DataFrame") -> None:
-        # gate-style queries return bounded frames — collect() is the
-        # honest full-pipeline action.  Queries whose OUTPUT scales with
-        # the corpus (the gap-fill grid, per-lineitem enrichment rows)
-        # must NOT ship the result to the driver — a 100M-row collect is
-        # a harness OOM, not an operator cost.  Executing the frame's OWN
-        # physical plan as a JVM-side RDD count runs every stage (physical
-        # RDD count prunes nothing) and discards rows executor-side —
-        # crucially through df's queryExecution, so the AQE plan
-        # final_plan() inspects afterwards is the plan that actually ran
-        # (a noop-sink write creates a SEPARATE QueryExecution and would
-        # leave df's plan un-finalized: assertions would silently run
-        # against the pre-AQE initial plan).
-        if name in OUTPUT_UNBOUNDED:
-            df._jdf.queryExecution().executedPlan().execute().count()
-        else:
-            df.collect()
+    def run() -> "DataFrame":
+        df = spec.spark(spark, sf_dir)
+        run_plan(df)
+        return df
 
     def reclaim_shuffle_disk() -> None:
         # Shuffle files of a completed pass are only deleted when the JVM
@@ -916,7 +882,7 @@ def time_query(
         spark.sparkContext._jvm.System.gc()
 
     if warmup:
-        run(fresh())  # warm-up: codegen + file listing
+        run()  # warm-up: codegen + file listing
     # --no-warmup is the x1000 single-pass protocol: a >30-minute tier
     # pass cannot afford a second full execution just to warm codegen,
     # and for fixpoint queries every pass rebuilds the loop anyway — the
@@ -927,19 +893,8 @@ def time_query(
         # ShuffleDependency is still strongly reachable via py4j and the
         # collection frees only the pass-before-last's files
         reclaim_shuffle_disk()
-        if spec.fixpoint:
-            # driver-loop queries (k-core peel, BFS frontier) iterate at
-            # PLAN BUILD — timing only run(df) would price the final
-            # aggregate (~70x under k-core's honest cost, the r14
-            # headline caveat); fresh() defeats the plan cache, so
-            # putting it inside the timed region prices the loop too
-            t0 = time.time()
-            df = fresh()
-            run(df)
-        else:
-            df = fresh()
-            t0 = time.time()
-            run(df)
+        t0 = time.time()
+        df = run()
         times.append(time.time() - t0)
     return statistics.median(times), final_plan(df)
 

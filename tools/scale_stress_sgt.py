@@ -12,23 +12,27 @@ synthesizes x10/x100 fixtures and asserts the executed-plan scale claims:
   a SPECFEM run grows — with the snapshot VALUE count as the work measure:
   base = 2 procs x 375 pts x 8 steps; x10 doubles procs and elements and
   x2.5 steps; x100 is 8 procs x 1875 pts x 40 steps.
-* plan asserts at EVERY scale: the point and step dimension sides stay
-  BROADCAST (never a fact-side SortMergeJoin), no CartesianProduct, no
-  rangepartitioning, and the TOTAL shuffle-exchange count is CONSTANT
-  across scales — exactly one fact-side (proc, gll_id) assembly exchange,
-  one (proc, gll_id) exchange on the tiny ibool dimension side (D1 dedup,
-  per-proc mesh — orders of magnitude below the snapshot stream), and the
-  metadata-only listing aggregation pair; a scale-dependent plan shape
-  (AQE flipping a broadcast to SMJ, a new exchange appearing) fails the
-  run.
+* plan asserts at EVERY scale, on the executed plan of the full records
+  frame: the point and step dimension sides stay BROADCAST (never a
+  fact-side SortMergeJoin), no CartesianProduct, no rangepartitioning,
+  and the TOTAL shuffle-exchange count is CONSTANT across scales —
+  exactly three: one fact-side (proc, gll_id) assembly exchange, one
+  (proc, gll_id) exchange on the tiny ibool dimension side (D1 dedup,
+  per-proc mesh — orders of magnitude below the snapshot stream), and
+  the (proc) exchange of the A4 start-offset window.  The valid-step
+  list is a local relation (collected once per build), so no listing
+  aggregate is in the plan.  A scale-dependent plan shape (AQE flipping
+  a broadcast to SMJ, a new exchange appearing) fails the run.
 * decode parallelism: snapshots arrive via the binaryFile source (one
   input SPLIT per file, packed into tasks by size) — the scan partition
   count is recorded per scale to show the decode stage fans out instead
   of serializing on the driver.
-* near-linear wall time: timed end-to-end through encode (sum(length)
-  forces every blob) with the median of --runs runs; the ratio table is
-  the deliverable (written into BENCH_SCALE.md by hand, like the
-  extension harness's).
+* near-linear wall time: each timed run builds the records plan (the
+  step listing runs here) and executes it with ``run_plan``, so every
+  column of every record, start offsets included, is computed; the
+  median of --runs runs is reported, and the ratio table is the
+  deliverable (written into BENCH_SCALE.md by hand, like the extension
+  harness's).
 
 Usage: python tools/scale_stress_sgt.py [--factor 10] [--runs 3]
 Writes BENCH_SCALE_SGT_x{factor}.json.
@@ -46,11 +50,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from seisdb_spark.pipeline import fixtures  # noqa: E402
 from seisdb_spark.pipeline.build import dgf_build, sgt_build  # noqa: E402
-from seisdb_spark.plancheck import count_exchanges, final_plan, has_node  # noqa: E402
+from seisdb_spark.plancheck import count_exchanges, final_plan, has_node, run_plan  # noqa: E402
 
 #: factor -> (nprocs, nspec, step1); value count scales as
 #: (nprocs/2) * (nspec/3) * (steps/8) = factor with dstep fixed at 10.
@@ -99,39 +101,37 @@ def plan_ok(plan: str) -> tuple[bool, str]:
         "no_smj": not has_node(plan, "SortMergeJoin"),
         "no_cartesian": not has_node(plan, "CartesianProduct"),
         "no_rangepart": not has_node(plan, "rangepartitioning"),
-        # assembly + ibool-D1 (both (proc, gll_id)-keyed) + the two listing
-        # aggs + the timing agg's SinglePartition = 5, at EVERY scale
-        "const_exchanges": count_exchanges(plan) == 5,
+        # assembly + ibool-D1 (both (proc, gll_id)-keyed) + the A4
+        # start-offset window's (proc) = 3, at EVERY scale
+        "const_exchanges": count_exchanges(plan) == 3,
         "two_gll_exchanges": len(
             re.findall(r"(?i)hashpartitioning\(proc#\d+,\s*gll_id", plan)
         ) == 2,
+        "one_proc_exchange": len(
+            re.findall(r"(?i)hashpartitioning\(proc#\d+,\s*\d+\)", plan)
+        ) == 1,
     }
     bad = [k for k, v in checks.items() if not v]
     return not bad, ",".join(bad) or "ok"
 
 
 def time_build(spark, meta: dict, kind: str, runs: int):
-    # warm-up run pays codegen/listing caches; timed runs rebuild the plan
-    # from scratch (no registry cache here — sgt_build is a plain function)
-    records, _, _ = run_build(spark, meta, kind)
-    agg = records.agg(F.count(F.lit(1)).alias("n"), F.sum("length").alias("b"))
-    agg.collect()
-    times, last = [], None
+    # warm-up run pays codegen/listing caches; each timed run builds a
+    # fresh plan and runs it
+    run_plan(run_build(spark, meta, kind)[0])
+    times = []
     for _ in range(runs):
-        records, _, _ = run_build(spark, meta, kind)
-        last = records.agg(F.count(F.lit(1)).alias("n"), F.sum("length").alias("b"))
         t0 = time.time()
-        row = last.collect()[0]
+        records, _, _ = run_build(spark, meta, kind)
+        rows = run_plan(records)
         times.append(time.time() - t0)
-    ok, why = plan_ok(final_plan(last))
-    snaps_parts = records.rdd.getNumPartitions()
+    ok, why = plan_ok(final_plan(records))
     return {
-        "rows": row.n,
-        "blob_bytes": int(row.b),
+        "rows": rows,
         "t_sec": round(statistics.median(times), 3),
         "plan_ok": ok,
         "plan_detail": why,
-        "out_partitions": snaps_parts,
+        "out_partitions": records.rdd.getNumPartitions(),
     }
 
 
