@@ -45,7 +45,6 @@ from __future__ import annotations
 import itertools
 import logging
 import math
-import os
 import string
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager, nullcontext
@@ -102,26 +101,13 @@ LOOP_STATE_ROW_BYTES = 32
 
 
 def _auto_broadcast_bytes(spark) -> int:
-    """The session's own ``spark.sql.autoBroadcastJoinThreshold`` in bytes
-    (0 when disabled/unparseable) — the gated-broadcast helpers below size
+    """The session's own ``spark.sql.autoBroadcastJoinThreshold`` in bytes,
+    as Spark's SQLConf parses it (plain bytes or a k/m/g(b) suffix); 0 when
+    broadcasting is disabled (-1).  The gated-broadcast helpers below size
     against the SAME knob the planner uses, so one production setting
     governs both the optimizer's estimates and our exact-count hints."""
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).strip().lower()
-    mult = 1
-    for suf, m in (
-        ("kb", 2**10), ("mb", 2**20), ("gb", 2**30), ("tb", 2**40),
-        ("k", 2**10), ("m", 2**20), ("g", 2**30), ("t", 2**40), ("b", 1),
-    ):
-        if raw.endswith(suf):
-            mult, raw = m, raw[: -len(suf)]
-            break
-    try:
-        n = int(float(raw))
-    except ValueError:
-        return 0
-    return max(n * mult, 0)
+    conf = spark._jsparkSession.sessionState().conf()
+    return max(conf.autoBroadcastJoinThreshold(), 0)
 
 
 def hint_broadcast_if_small(df: DataFrame, n_rows: int | None) -> DataFrame:
@@ -159,11 +145,8 @@ def fits_broadcast(spark, n_rows: int) -> bool:
 
 #: Target bytes per partition of a loop's persisted edge checkpoint —
 #: guide §2.2/§6: partitions in the 100 MB - 1 GB band, derived from the
-#: ACTUAL row count rather than a constant tuned for one scale.  Env-
-#: overridable for deployments with different executor memory budgets.
-EDGE_PARTITION_TARGET_BYTES = int(
-    os.environ.get("SEISDB_EDGE_PARTITION_BYTES", str(128 * 1024 * 1024))
-)
+#: ACTUAL row count rather than a constant tuned for one scale.
+EDGE_PARTITION_TARGET_BYTES = 128 * 1024 * 1024
 #: Conservative serialized footprint of one symmetric edge row (2-3 bigint
 #: fields as an UnsafeRow) used only for partition-count sizing.
 EDGE_ROW_BYTES = 24

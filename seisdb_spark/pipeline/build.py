@@ -5,22 +5,25 @@ exist: `/root/reference/seisdb/DSGT.py:40-196` (SGT) and `DDGF.py:40-190`
 (DGF).  The reference materializes a dense ``float32[n_gll, n_step, 3,
 n_para]`` RAM buffer per processor and loops; here the same semantics are a
 declarative plan over long tables — no buffer, no loop, and the only driver
-collect is the valid-step list (file names, not data):
+work is one listing of the snapshot dirs (file names, not data):
 
     ibool long table
       -> P1 27-of-125 positional filter        (filter isin, pushdown)
       -> D1 first-occurrence dedup             (row_number window per gll_id)
       -> J1 gather                             (broadcast equi-join on cell)
-      -> P3 temporal stride + existence        (semi-join against the step list)
+      -> P3 temporal stride + existence        (driver step list; semi-join)
       -> R1/R2 ordered assembly + flatten      (sort_array(collect_list(struct)))
       -> A1/A2 offset/scale  E1 quantize  E2 zlib   (one Arrow-batched map)
       -> A4 start offsets                      (cumulative window per proc)
       -> E4/E5/E6 partitioned parquet + db_meta
 
-Scale posture: the valid (proc, step) list is file-name metadata, small at
-any scale, so it is collected once per build: the emptiness check, the
-semi-join's build side and db_meta's ``nstep`` all read that one list as a
-local relation, and no records plan lists the snapshot dirs again.  The fact
+Scale posture: the driver lists each force dir once per build (one
+``pathGlobFilter`` directory listing, no Spark job) and keeps the (proc,
+force, step) names as Python data.  The P3 check over that listing gives
+the valid (proc, step) list: the emptiness check, the semi-join's build side
+and db_meta's ``nstep`` all read it as a local relation.  The decode reads
+only the files whose step is in the stride: a ``_metadata.file_name`` filter
+prunes the same frames' file index before any byte is read.  The fact
 side shuffles twice — the groupBy(proc, gll_id) assembly, keyed on the
 natural output key, and the A4 start-offset window, which re-shuffles the
 encoded records (one compressed blob per point) by proc.  The dimension
@@ -52,7 +55,8 @@ Deviations from the reference (documented in SURVEY §7):
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
+from collections import defaultdict
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -96,27 +100,20 @@ def select_gll_points(ibool: DataFrame, points_per_element: int = 27) -> DataFra
 # ---------------------------------------------------------------------------
 # P3 + J3: temporal stride + exists-in-all-3-forces
 # ---------------------------------------------------------------------------
-def steps_in_all_forces(
-    spark: SparkSession, listing: DataFrame, n_force: int, step0: int, step1: int, dstep: int
-) -> DataFrame:
-    """(proc, step) pairs of the stride ``range(step0, step1, dstep)`` that
-    ``listing`` (any frame with proc, force and step columns) holds for all
-    ``n_force`` forces — the "present in N and E and Z" predicate as
-    count(distinct force) == n_force (SURVEY §2.2 P3 / §2.3 J3)."""
-    # Build the stride driver-side: it is a handful of int literals, and
-    # F.sequence(step0, step1-1, dstep) raises "illegal sequence boundaries"
-    # at runtime when step1 <= step0, where the degenerate range should flow
-    # through as empty and surface as the pipeline's explicit
-    # "no valid steps" ValueError (reference: DDBbase.py:82-84).
-    candidates = spark.createDataFrame(
-        [(s,) for s in range(step0, step1, dstep)], "step int"
-    )
-    present = (
-        listing.groupBy("proc", "step")
-        .agg(F.countDistinct("force").alias("nf"))
-        .filter(F.col("nf") == n_force)
-    )
-    return present.join(F.broadcast(candidates), "step", "inner").select("proc", "step")
+def stride_steps(
+    listing: Iterable[tuple[int, int, int]], n_force: int, stride: range
+) -> list[tuple[int, int]]:
+    """Sorted (proc, step) pairs of ``stride`` that ``listing`` ((proc,
+    force, step) triples) holds for all ``n_force`` forces: the "present in
+    N and E and Z" predicate (SURVEY §2.2 P3 / §2.3 J3) as plain Python over
+    file-name data, like the reference's os.path.exists loop.  A degenerate
+    stride (step1 <= step0) is an empty range, so nothing survives and the
+    build raises its explicit "no valid steps" error (DDBbase.py:82-84)."""
+    forces = defaultdict(set)
+    for proc, force, step in listing:
+        if step in stride:
+            forces[proc, step].add(force)
+    return sorted(key for key, fs in forces.items() if len(fs) == n_force)
 
 
 def valid_steps(
@@ -127,14 +124,19 @@ def valid_steps(
     step1: int,
     dstep: int,
 ) -> DataFrame:
-    """(proc, step) pairs in the stride that exist in all force dirs.
+    """(proc, step) pairs in the stride that exist in all force dirs, as a
+    local frame.
 
     The reference's DCheck_valid_step (DDBbase.py:55-84) is a driver-side
-    os.path.exists loop; here it is a file-listing DataFrame (metadata only,
-    content column pruned) joined against the stride sequence.
+    os.path.exists loop; here the driver lists each dir once
+    (``specfem.snapshot_frames``) and :func:`stride_steps` checks the
+    listed names.  No Spark job runs and no file is read.
     """
-    listing = specfem.snapshot_listing(spark, force_dirs, name_data)
-    return steps_in_all_forces(spark, listing, len(force_dirs), step0, step1, dstep)
+    frames = specfem.snapshot_frames(spark, force_dirs, name_data)
+    step_list = stride_steps(
+        specfem.snapshot_listing(frames), len(force_dirs), range(step0, step1, dstep)
+    )
+    return spark.createDataFrame(step_list, "proc int, step int")
 
 
 # ---------------------------------------------------------------------------
@@ -478,16 +480,17 @@ def _make_build(kind: str, doc: str):
         dt: float = 0.1,
         points_per_element: int = 27,
         encoding_level: int = ENCODING_LEVEL_DEFAULT,
-        name_data: str = spec.name_data,
     ) -> tuple[DataFrame, DataFrame, DataFrame]:
-        # one metadata-only listing job; every consumer reads the collected
-        # list, and the reference raises when no step survives P3
-        # (DDBbase.py:82-84)
-        step_list = valid_steps(spark, force_dirs, name_data, step0, step1, dstep).collect()
+        # each dir is listed once, here; the step check, the semi-join,
+        # db_meta and the stride-pruned decode all read that listing, and
+        # the reference raises when no step survives P3 (DDBbase.py:82-84)
+        frames = specfem.snapshot_frames(spark, force_dirs, spec.name_data)
+        stride = range(step0, step1, dstep)
+        step_list = stride_steps(specfem.snapshot_listing(frames), len(force_dirs), stride)
         if not step_list:
             raise ValueError("no valid steps: no snapshot step exists in all force dirs")
         steps = spark.createDataFrame(step_list, "proc int, step int")
-        snaps = specfem.read_snapshots(spark, force_dirs, nspec, kind, name_data)
+        snaps = specfem.read_snapshots(specfem.stride_frames(frames, stride), nspec, kind)
         points, records = build_records(
             spark, model_glob, nspec, snaps, steps, kind, points_per_element, encoding_level
         )
@@ -507,7 +510,8 @@ sgt_build = _make_build(
     """The full SGT create_db (DSGT.py:40-196) as one lazy plan.
 
     Returns (records_with_start, db_meta, valid_steps); caller writes with
-    write_db.  Only the valid-step list is collected; data stays lazy.""",
+    write_db.  Only the snapshot file names are read on the driver; data
+    stays lazy.""",
 )
 dgf_build = _make_build(
     "DGF",

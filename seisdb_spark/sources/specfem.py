@@ -6,9 +6,10 @@ handles and raw byte offsets on a single node
 `ibool_reader.py:14-33`, `disp_reader.py:13-25`,
 `strainfield_reader.py:13-72`).  Here the same formats are decoded
 *distributedly*: files arrive as ``(path, content)`` rows from Spark's
-``binaryFile`` source (one task per file, no driver involvement, scales to
-millions of snapshot files), and pure-numpy kernels inside ``mapInPandas``
-(Arrow-batched) turn each file into long rows against an explicit schema.
+``binaryFile`` source (the driver lists each snapshot dir once, by name
+only; the bytes are read in the tasks, one input split per file), and
+pure-numpy kernels inside ``mapInPandas`` (Arrow-batched) turn each file
+into long rows against an explicit schema.
 Everything that differs between the SGT and DGF databases (file name,
 paras, decode kernel, serialization order, suffixes) is one entry of
 ``KINDS``; the build, the stream and the export read it from there.
@@ -42,7 +43,6 @@ from urllib.parse import urlparse
 
 import numpy as np
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -197,10 +197,6 @@ def _local_abspath(path: str) -> str:
     return path if urlparse(path).scheme else os.path.abspath(path)
 
 
-def _binary_files(spark: SparkSession, path_glob: str) -> DataFrame:
-    return spark.read.format("binaryFile").load(_local_abspath(path_glob))
-
-
 def read_ibool(spark: SparkSession, path_glob: str, nspec: int) -> DataFrame:
     """Distributed S4: every proc's ibool file -> long (proc, i_spec, i_gll,
     gll_id) rows.  One task per file; ids already 0-based."""
@@ -223,80 +219,82 @@ def read_ibool(spark: SparkSession, path_glob: str, nspec: int) -> DataFrame:
                     }
                 )
 
-    return _binary_files(spark, path_glob).select("path", "content").mapInPandas(
-        decode, IBOOL_SCHEMA
-    )
+    files = spark.read.format("binaryFile").load(_local_abspath(path_glob))
+    return files.select("path", "content").mapInPandas(decode, IBOOL_SCHEMA)
 
 
-def _snapshot_files(
+def snapshot_frames(
     spark: SparkSession, force_dirs: list[str], name_data: str, reader=None
-) -> DataFrame:
-    """(proc, force, step, content): every snapshot file of every force dir.
+) -> list[DataFrame]:
+    """One binaryFile frame per force dir, in ``force_dirs`` order: that
+    order defines force ids 0/1/2, mirroring the reference's dNEZ_dirList
+    convention (DSGT.py:103-111).  ``reader`` is a batch (default) or
+    streaming binaryFile reader.
 
-    ``force_dirs`` order defines force ids 0/1/2, mirroring the reference's
-    dNEZ_dirList convention (DSGT.py:103-111); each dir's scan is tagged
-    with its id as a literal, so relative dirs work in batch and stream
-    alike.  ``reader`` is a batch (default) or streaming binaryFile reader.
-    The one filename rule is ``SNAPSHOT_RE``: a file the glob matches but
-    the rule does not (``proc000000_x_Step_old.bin``) is dropped before
-    proc and step are cast.  A dir with no matching file
-    yields zero rows, not a PATH_NOT_FOUND error, so an empty dir surfaces
-    through the build's explicit "no valid steps" check, as in the
-    reference (DDBbase.py:82-84)."""
-    reader = reader or spark.read.format("binaryFile")
-    parts = []
-    for force, d in enumerate(force_dirs):
-        glob = _local_abspath(os.path.join(d, f"proc*_{name_data}_Step_*.bin"))
-        try:
-            files = reader.load(glob)
-        except AnalysisException:
-            files = spark.createDataFrame([], "path string, content binary")
-        parts.append(files.select("path", "content", F.lit(force).alias("force")))
-    files = functools.reduce(DataFrame.unionByName, parts)
-    base = F.element_at(F.split("path", "/"), -1)
-    return files.filter(base.rlike(SNAPSHOT_RE.pattern)).select(
-        F.regexp_extract(base, SNAPSHOT_RE.pattern, 1).cast("int").alias("proc"),
-        "force",
-        F.regexp_extract(base, SNAPSHOT_RE.pattern, 3).cast("int").alias("step"),
-        "content",
+    Each dir is loaded as a directory under a ``pathGlobFilter``, not as a
+    glob path, so Spark lists it once, on the driver, when the frame is
+    made: no listing job at any file count.  An empty dir yields a frame of
+    no files (the build's "no valid steps" check, DDBbase.py:82-84); a
+    missing dir fails with PATH_NOT_FOUND, which names it."""
+    reader = (reader or spark.read.format("binaryFile")).option(
+        "pathGlobFilter", f"proc*_{name_data}_Step_*.bin"
     )
+    return [reader.load(_local_abspath(d)) for d in force_dirs]
 
 
-def snapshot_listing(spark: SparkSession, force_dirs: list[str], name_data: str) -> DataFrame:
-    """(proc, force, step) file listing (path metadata only — the content
-    column is pruned, so no file bytes are read).  Feeds the P3 valid-step
-    filter (DDBbase.py:55-84) as a join instead of a driver-side
-    os.path.exists loop."""
-    return _snapshot_files(spark, force_dirs, name_data).select("proc", "force", "step")
+def snapshot_listing(frames: list[DataFrame]) -> list[tuple[int, int, int]]:
+    """(proc, force, step) of every snapshot file in the batch ``frames``,
+    parsed with ``SNAPSHOT_RE`` from the names the driver listed when the
+    frames were made: no job runs and no file is read.  A name the glob
+    matches but the rule does not (``proc000000_x_Step_old.bin``) is
+    skipped."""
+    return [
+        (int(m.group(1)), force, int(m.group(3)))
+        for force, frame in enumerate(frames)
+        for m in (SNAPSHOT_RE.search(os.path.basename(f)) for f in frame.inputFiles())
+        if m
+    ]
 
 
-def read_snapshots(
-    spark: SparkSession,
-    force_dirs: list[str],
-    nspec: int,
-    kind: str,
-    name_data: str | None = None,
-    reader=None,
-) -> DataFrame:
-    """Distributed S5/S6: the per-force snapshot dirs -> one long
-    ``KINDS[kind].schema`` DataFrame.  The force scans are unioned first and
-    decoded by ONE mapInPandas (one Arrow/Python boundary per scan), batch
-    or streaming alike (see :func:`_snapshot_files`)."""
+def stride_frames(frames: list[DataFrame], stride: range) -> list[DataFrame]:
+    """The batch ``frames`` cut to the files whose step, parsed from the
+    name, is in the non-empty ``stride``.  The filter is on
+    ``_metadata.file_name``, so it prunes each frame's file index and no
+    other file is read.  It is stride arithmetic, of one size at any file
+    count; ``try_cast`` turns a stray name's step into null under ANSI, and
+    the file is dropped."""
+    step = F.regexp_extract("_metadata.file_name", SNAPSHOT_RE.pattern, 3).try_cast("int")
+    lo, hi = sorted((stride[0], stride[-1]))
+    in_stride = step.between(lo, hi) & ((step - stride.start) % stride.step == 0)
+    return [frame.filter(in_stride) for frame in frames]
+
+
+def read_snapshots(frames: list[DataFrame], nspec: int, kind: str) -> DataFrame:
+    """Distributed S5/S6: the per-force snapshot frames of
+    :func:`snapshot_frames` -> one long ``KINDS[kind].schema`` DataFrame.
+    Each frame is tagged with its force id as a literal, and the frames are
+    unioned under ONE mapInPandas (one Arrow/Python boundary), batch or
+    streaming alike.  The decode parses proc and step from each file name
+    with ``SNAPSHOT_RE`` and skips a name the rule does not match."""
     spec = KINDS[kind]
-    files = _snapshot_files(spark, force_dirs, name_data or spec.name_data, reader)
+    files = functools.reduce(
+        DataFrame.unionByName,
+        [f.select("path", "content", F.lit(i).alias("force")) for i, f in enumerate(frames)],
+    )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for proc, force, step, content in zip(
-                pdf["proc"], pdf["force"], pdf["step"], pdf["content"]
-            ):
+            for path, force, content in zip(pdf["path"], pdf["force"], pdf["content"]):
+                m = SNAPSHOT_RE.search(os.path.basename(path))
+                if not m:
+                    continue
                 cell, values = spec.cells(bytes(content), nspec)
                 n = values.shape[1]
                 yield pd.DataFrame(
                     {
-                        "proc": np.full(n, proc, dtype=np.int32),
+                        "proc": np.full(n, int(m.group(1)), dtype=np.int32),
                         "force": np.full(n, force, dtype=np.int32),
-                        "step": np.full(n, step, dtype=np.int32),
+                        "step": np.full(n, int(m.group(3)), dtype=np.int32),
                         **cell,
                         **dict(zip(spec.paras, values)),
                     }
@@ -305,9 +303,8 @@ def read_snapshots(
     return files.mapInPandas(decode, spec.schema)
 
 
-def read_strain_snapshots(
-    spark: SparkSession, force_dirs: list[str], nspec: int, name_data: str = "strain_field"
-) -> DataFrame:
-    """Distributed S6: strain snapshots -> long SGT rows (i_spec, i_gll,
-    exx..eyz per force and step)."""
-    return read_snapshots(spark, force_dirs, nspec, "SGT", name_data)
+def read_strain_snapshots(spark: SparkSession, force_dirs: list[str], nspec: int) -> DataFrame:
+    """Distributed S6: every strain snapshot of ``force_dirs`` -> long SGT
+    rows (i_spec, i_gll, exx..eyz per force and step)."""
+    frames = snapshot_frames(spark, force_dirs, KINDS["SGT"].name_data)
+    return read_snapshots(frames, nspec, "SGT")

@@ -14,9 +14,10 @@ Design notes (100 TB posture):
     :func:`read_log` reads a log back; :func:`run_logs` runs a stream to
     completion with its checkpoint at ``<root>/ckpt`` and returns its logs.
   * Snapshot ingest is decode-only per microbatch (narrow, no shuffle):
-    files land, go through the batch scan's own reader
-    (``specfem.read_snapshots``: the same filename rule, force tagging and
-    one mapInPandas decode, fed by a streaming binaryFile reader), and are
+    files land, go through the batch scan's own frames and decode
+    (``specfem.snapshot_frames`` with a streaming binaryFile reader, then
+    ``specfem.read_snapshots``: the same file filter, force tagging,
+    filename rule and one mapInPandas decode), and are
     staged in the log ``<staging_dir>/snapshots/batch-<batch_id>``. The
     wide assembly/encode runs once at finalize over the staged log, through
     the batch build's own tail (``pipeline.build.build_records``) — the
@@ -37,7 +38,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from seisdb_spark.schemas import ENCODING_LEVEL_DEFAULT
-from seisdb_spark.sources.specfem import KINDS, read_snapshots
+from seisdb_spark.sources.specfem import KINDS, read_snapshots, snapshot_frames
 
 # A streaming file source needs its schema up front; the events table's
 # physical ts layout has drifted upstream once already (timestamp[ns] in
@@ -357,13 +358,12 @@ def snapshot_ingest_stream(
     nspec: int,
     staging_dir: str,
     checkpoint_dir: str,
-    name_data: str = "strain_field",
 ) -> StreamingQuery:
     """Stream SPECFEM snapshot files as they land (S6 streaming variant):
-    a streaming binaryFile reader per force dir -> the batch scan's reader
-    and strain decode (``specfem.read_snapshots``) -> the staging log
-    ``<staging_dir>/snapshots/batch-<id>`` via :func:`start_logs`, three
-    files per microbatch.
+    a streaming binaryFile frame per force dir (``specfem.snapshot_frames``)
+    -> the batch build's strain decode (``specfem.read_snapshots``) -> the
+    staging log ``<staging_dir>/snapshots/batch-<id>`` via
+    :func:`start_logs`, three files per microbatch.
 
     Returns the started StreamingQuery.  Its trigger is availableNow: it
     stages every file present at start, then stops; await it, then run
@@ -376,7 +376,8 @@ def snapshot_ingest_stream(
         .schema(BINARYFILE_SCHEMA)
         .option("maxFilesPerTrigger", 3)
     )
-    decoded = read_snapshots(spark, force_dirs, nspec, "SGT", name_data, reader)
+    frames = snapshot_frames(spark, force_dirs, KINDS["SGT"].name_data, reader)
+    decoded = read_snapshots(frames, nspec, "SGT")
     return start_logs(
         decoded, staging_dir, checkpoint_dir, {SNAPSHOT_LOG: lambda bdf: bdf}
     )
@@ -396,13 +397,16 @@ def finalize_sgt_from_staging(
     """The SGT records of the streamed-in staging log
     (``<staging_dir>/snapshots``), through the batch build's own tail
     (``pipeline.build.build_records``).  The valid steps are those present
-    in all forces *in the staged data*: the staged log is the listing,
-    under the same predicate as ``pipeline.valid_steps``."""
-    from seisdb_spark.pipeline.build import build_records, steps_in_all_forces
+    in all forces *in the staged data*: the distinct (proc, force, step) of
+    the staged log, collected in one job, is the listing, checked by the
+    batch build's own predicate (``pipeline.build.stride_steps``)."""
+    from seisdb_spark.pipeline.build import build_records, stride_steps
 
     snaps = read_log(spark, staging_dir, SNAPSHOT_LOG)
+    listing = snaps.select("proc", "force", "step").distinct().collect()
     # forder names one force per letter (N, E, Z)
-    steps = steps_in_all_forces(spark, snaps, len(KINDS["SGT"].forder), step0, step1, dstep)
+    step_list = stride_steps(listing, len(KINDS["SGT"].forder), range(step0, step1, dstep))
+    steps = spark.createDataFrame(step_list, "proc int, step int")
     _points, records = build_records(
         spark, model_glob, nspec, snaps, steps, "SGT", points_per_element, encoding_level
     )

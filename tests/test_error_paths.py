@@ -6,10 +6,12 @@ flow through as empty rather than crashing."""
 from __future__ import annotations
 
 import os
+import re
 import struct
 
 import numpy as np
 import pytest
+from pyspark.errors import AnalysisException
 
 from seisdb_spark.pipeline import sgt_build, valid_steps
 from seisdb_spark.sources.specfem import split_fortran_records
@@ -43,6 +45,23 @@ def test_empty_force_dir_reports_no_valid_steps(spark, fixture_meta, tmp_path):
             spark,
             os.path.join(m["model_dir"], "proc*_ibool.bin"),
             empty_dirs,
+            m["nspec"],
+            m["step0"],
+            m["step1"],
+            m["dstep"],
+        )
+
+
+def test_missing_force_dir_error_names_the_dir(spark, fixture_meta, tmp_path):
+    """A force dir that does not exist fails the build with an error that
+    names it, not with the "no valid steps" of an empty dir."""
+    m = fixture_meta
+    missing = str(tmp_path / "Z")
+    with pytest.raises(AnalysisException, match=re.escape(missing)):
+        sgt_build(
+            spark,
+            os.path.join(m["model_dir"], "proc*_ibool.bin"),
+            [*m["force_dirs"][:2], missing],
             m["nspec"],
             m["step0"],
             m["step1"],

@@ -472,26 +472,117 @@ def test_scale_stress_sgt_plan_contract_holds(request, kind):
     assert plan_ok(final_plan(records)) == (True, "ok")
 
 
-def test_build_and_write_run_at_most_15_jobs(spark, fixture_meta, tmp_path):
-    """One build + write runs the snapshot lineage once: the step listing,
-    the records write and the meta write together run at most 15 Spark
-    jobs on the default fixture (the meta used to recompute every record,
-    and the steps were listed three times: 24 jobs)."""
-    m = fixture_meta
+def _jobs_run(spark, action) -> int:
+    """Number of Spark jobs ``action()`` runs, through ``statusTracker``."""
     sc = spark.sparkContext
-    group = "test-build-and-write-jobs"
-    sc.setJobGroup(group, "sgt_build + write_db")
+    group = f"test-jobs-{id(action)}"
+    sc.setJobGroup(group, "counted action")
     try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_build_and_write_run_at_most_11_jobs(spark, fixture_meta, tmp_path):
+    """One build + write lists the snapshot dirs once, on the driver, and
+    runs the snapshot lineage once: the records write and the meta write
+    together run at most 11 Spark jobs on the default fixture (24 when the
+    meta recomputed every record and the steps were listed three times, 15
+    while the step check was a Spark listing plan)."""
+    m = fixture_meta
+
+    def build_and_write():
         records, meta, _steps = sgt_build(
             spark, os.path.join(m["model_dir"], "proc*_ibool.bin"), m["force_dirs"],
             m["nspec"], m["step0"], m["step1"], m["dstep"],
         )
         write_db(records, meta, str(tmp_path / "db"), network="CI", station="USC")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 15, len(jobs)
+
+    jobs = _jobs_run(spark, build_and_write)
+    assert 0 < jobs <= 11, jobs
+
+
+@pytest.fixture(scope="module")
+def every_step_tree(tmp_path_factory):
+    """A strain tree with a snapshot at every step (60 per proc and force
+    dir, 120 files in a full dir), built at stride 10."""
+    from seisdb_spark.pipeline import generate_fixture
+
+    root = str(tmp_path_factory.mktemp("every_step"))
+    return generate_fixture(
+        root, nprocs=2, nspec=2, step1=60, dstep=1, kinds=("strain_field",)
+    )
+
+
+def _files_read(df) -> dict[str, int]:
+    """Run df's plan; 'number of files read' of each executed file scan,
+    keyed by the scan's root paths."""
+    from seisdb_spark.plancheck import run_plan
+
+    run_plan(df)
+    todo, read = [df._jdf.queryExecution().executedPlan()], {}
+    while todo:
+        node = todo.pop()
+        name, kids = node.getClass().getSimpleName(), node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        elif name == "FileSourceScanExec":
+            root = node.relation().location().rootPaths().mkString(",")
+            read[root] = read.get(root, 0) + node.metrics().apply("numFiles").value()
+    return read
+
+
+def test_build_reads_only_snapshot_files_in_the_stride(spark, every_step_tree):
+    """The decode reads a snapshot file only when its step is in the
+    stride: the executed records plan's snapshot scans read exactly the
+    stride's files on disk (all 356 when the decode read every listed
+    file), and the records still equal the golden encoder's."""
+    m = every_step_tree
+    stride = range(0, 60, 10)
+    records, _meta, _steps = sgt_build(
+        spark, f"{m['model_dir']}/proc*_ibool.bin", m["force_dirs"], m["nspec"],
+        stride.start, stride.stop, stride.step,
+    )
+    in_stride = sum(
+        int(specfem.SNAPSHOT_RE.search(name).group(3)) in stride
+        for d in m["force_dirs"] for name in os.listdir(d)
+    )
+    read = _files_read(records)
+    snapshot_reads = [n for root, n in read.items() if "_ibool" not in root]
+    assert len(snapshot_reads) == len(m["force_dirs"]), read
+    assert sum(snapshot_reads) == in_stride == 32, read
+
+    pdf = records.toPandas().sort_values("gll_id")
+    g = golden.golden_sgt(
+        m["model_dir"], m["force_dirs"], 0, m["nspec"], stride.start, stride.stop, stride.step
+    )
+    mine = pdf[pdf["proc"] == 0]
+    assert list(mine["gll_id"]) == list(g["names"])
+    assert [bytes(b) for b in mine["blob"]] == g["blob"]
+
+
+def test_valid_steps_on_large_dirs_runs_at_most_one_job(spark, every_step_tree):
+    """Each force dir is listed once, on the driver: valid_steps over dirs
+    of more than 32 snapshot files (where a glob path's listing is itself a
+    parallel Spark job per dir) runs at most one job, collect included."""
+    m = every_step_tree
+    assert all(len(os.listdir(d)) > 32 for d in m["force_dirs"])
+    got = []
+    jobs = _jobs_run(
+        spark,
+        lambda: got.extend(
+            valid_steps(spark, m["force_dirs"], "strain_field", 0, 60, 10).collect()
+        ),
+    )
+    assert jobs <= 1, jobs
+    assert sorted(tuple(r) for r in got) == [
+        (p, s) for p in range(2) for s in (0, 10, 20, 40, 50)
+    ]
 
 
 @pytest.mark.parametrize("kind", ["SGT", "DGF"])

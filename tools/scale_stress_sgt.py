@@ -20,19 +20,19 @@ synthesizes x10/x100 fixtures and asserts the executed-plan scale claims:
   (proc, gll_id) exchange on the tiny ibool dimension side (D1 dedup,
   per-proc mesh — orders of magnitude below the snapshot stream), and
   the (proc) exchange of the A4 start-offset window.  The valid-step
-  list is a local relation (collected once per build), so no listing
-  aggregate is in the plan.  A scale-dependent plan shape (AQE flipping
-  a broadcast to SMJ, a new exchange appearing) fails the run.
+  list is a local relation (the driver's one listing of the snapshot
+  dirs, checked in Python), so no listing aggregate is in the plan.  A
+  scale-dependent plan shape (AQE flipping a broadcast to SMJ, a new
+  exchange appearing) fails the run.
 * decode parallelism: snapshots arrive via the binaryFile source (one
   input SPLIT per file, packed into tasks by size) — the scan partition
   count is recorded per scale to show the decode stage fans out instead
   of serializing on the driver.
-* near-linear wall time: each timed run builds the records plan (the
-  step listing runs here) and executes it with ``run_plan``, so every
-  column of every record, start offsets included, is computed; the
-  median of --runs runs is reported, and the ratio table is the
-  deliverable (written into BENCH_SCALE.md by hand, like the extension
-  harness's).
+* near-linear wall time: each timed run builds the records plan and
+  executes it with ``run_plan``, so every column of every record, start
+  offsets included, is computed; the median of --runs runs is reported,
+  and the ratio table is the deliverable (written into BENCH_SCALE.md by
+  hand, like the extension harness's).
 
 Usage: python tools/scale_stress_sgt.py [--factor 10] [--runs 3]
 Writes BENCH_SCALE_SGT_x{factor}.json.
