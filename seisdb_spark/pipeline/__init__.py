@@ -8,8 +8,8 @@ Modules:
     transformations (select points -> valid steps -> assemble -> encode ->
     partitioned sink) plus the inverse read/decode path.
   - ``export``: the reference's literal on-disk layout (per-proc
-    concatenated-blob ``.bin`` + header table) for consumers of the
-    original format.
+    concatenated-blob ``.bin``, ``.hdf5`` header and header-table row, in
+    one pass) for consumers of the original format.
 """
 
 from seisdb_spark.pipeline.build import (  # noqa: F401
@@ -27,10 +27,5 @@ from seisdb_spark.pipeline.build import (  # noqa: F401
     valid_steps,
     write_db,
 )
-from seisdb_spark.pipeline.export import (  # noqa: F401
-    export_reference_data_bins,
-    export_reference_format,
-    reference_headers,
-    write_hdf5_headers,
-)
+from seisdb_spark.pipeline.export import export_reference_format  # noqa: F401
 from seisdb_spark.pipeline.fixtures import cached_fixture, generate_fixture  # noqa: F401

@@ -16,8 +16,8 @@ Scope limits (all that the reference layout needs): little-endian int64 /
 float64 / fixed ASCII strings, 1-D contiguous datasets, scalar attributes,
 a single flat root group, <= 8 datasets (one symbol-table leaf node).
 Writes are structurally cross-checked by an INDEPENDENT spec-driven parser
-in tests/test_hdf5_min.py; pipeline/export.py::write_hdf5_headers is the
-caller.
+in tests/test_hdf5_min.py; pipeline/export.py::export_reference_format
+calls it once per proc, from the task that writes the proc's ``.bin``.
 """
 
 from __future__ import annotations

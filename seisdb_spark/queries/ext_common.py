@@ -74,18 +74,37 @@ def _shingle_cte(src: str = "documents") -> str:
 
 _SHINGLE_CTE = _shingle_cte()
 
+_HEX_ALPHA = "0123456789abcdef"
+
+
+def _hash_bucket_sql(expr: str) -> str:
+    """First 4 hex digits of md5 -> integer in [0, 65536), DuckDB side."""
+    digits = [
+        f"(strpos('{_HEX_ALPHA}', substr(md5({expr}), {k}, 1)) - 1)"
+        for k in (1, 2, 3, 4)
+    ]
+    return f"({digits[0]} * 4096 + {digits[1]} * 256 + {digits[2]} * 16 + {digits[3]})"
+
+
+def _hash32_sql(expr: str) -> str:
+    """First 8 hex digits of md5 -> BIGINT in [0, 2^32), DuckDB side
+    (mirrors sources/tables.py::shard_assignment digit for digit)."""
+    digits = [
+        f"(strpos('{_HEX_ALPHA}', substr(md5({expr}), {k}, 1)) - 1)"
+        for k in range(1, 9)
+    ]
+    return "(" + " + ".join(
+        f"{d} * {16 ** (8 - k)}" for k, d in enumerate(digits, start=1)
+    ) + ")"
+
+
 # One md5 per shingle, parsed to a 32-bit int by summing per-hex-digit
 # strpos lookups (DuckDB's equivalent of Spark's conv(hex,16,10)); the 12
 # signature lanes are (A*h+B) mod P transforms of it — in lockstep with
 # functions/text.py::with_token_hash / minhash_agg_exprs.
-_HEXPARSE = " + ".join(
-    f"(strpos('0123456789abcdef', substr(md5(sh), {j + 1}, 1)) - 1) * {16 ** (7 - j)}"
-    for j in range(8)
-)
-
 _SIG_CTE = f"""
     sigsrc AS (
-        SELECT doc_id, {_HEXPARSE} AS h FROM shingle
+        SELECT doc_id, {_hash32_sql("sh")} AS h FROM shingle
     ),
     sig AS (
         SELECT doc_id,
@@ -207,34 +226,3 @@ def _lsh_candidates(docs: DataFrame) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-
-
-def _duck_hexparse8(expr: str) -> str:
-    """DuckDB twin of Spark's conv(substring(md5(x),1,8),16,10)."""
-    return " + ".join(
-        f"(strpos('0123456789abcdef', substr(md5({expr}), {j + 1}, 1)) - 1)"
-        f" * {16 ** (7 - j)}"
-        for j in range(8)
-    )
-_HEX_ALPHA = "0123456789abcdef"
-
-
-def _hash_bucket_sql(expr: str) -> str:
-    """First 4 hex digits of md5 -> integer in [0, 65536), DuckDB side."""
-    digits = [
-        f"(strpos('{_HEX_ALPHA}', substr(md5({expr}), {k}, 1)) - 1)"
-        for k in (1, 2, 3, 4)
-    ]
-    return f"({digits[0]} * 4096 + {digits[1]} * 256 + {digits[2]} * 16 + {digits[3]})"
-
-
-def _hash32_sql(expr: str) -> str:
-    """First 8 hex digits of md5 -> BIGINT in [0, 2^32), DuckDB side
-    (mirrors sources/tables.py::shard_assignment digit for digit)."""
-    digits = [
-        f"(strpos('{_HEX_ALPHA}', substr(md5({expr}), {k}, 1)) - 1)"
-        for k in range(1, 9)
-    ]
-    return "(" + " + ".join(
-        f"{d} * {16 ** (8 - k)}" for k, d in enumerate(digits, start=1)
-    ) + ")"

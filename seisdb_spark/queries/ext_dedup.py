@@ -43,7 +43,6 @@ from seisdb_spark.queries.ext_common import (
     _CAND_CTE,
     _SHINGLE_CTE,
     _SIG_CTE,
-    _duck_hexparse8,
     _hash32_sql,
     _hash_bucket_sql,
     _jaccard_on_candidates,
@@ -1381,7 +1380,7 @@ def _set_keep_best_oracle() -> None:
         WITH cc AS ({cc_sql}),
         tokq AS (
             SELECT d.doc_id, cc.canonical_id AS cluster_id,
-                   CAST(sum(({_duck_hexparse8("word")}) % {QC_WEIGHT_MOD}
+                   CAST(sum({_hash32_sql("word")} % {QC_WEIGHT_MOD}
                             - {QC_WEIGHT_SHIFT}) AS BIGINT) AS quality_w
             FROM (
                 SELECT doc_id, unnest(string_split(text, ' ')) AS word

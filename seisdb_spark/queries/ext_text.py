@@ -28,7 +28,7 @@ from seisdb_spark.functions.text import (
 from seisdb_spark.queries.ext_common import (
     STOPWORD_PATTERN,
     _TOK_CTE,
-    _duck_hexparse8,
+    _hash32_sql,
 )
 
 
@@ -347,7 +347,7 @@ WINNOW_W = 4  # winnowing window (consecutive k-gram hashes)
     "doc_winnowing_fingerprints",
     oracle=f"""
         WITH grams AS (
-            SELECT doc_id, i, {_duck_hexparse8(f"substr(text, i, {WINNOW_K})")} AS h
+            SELECT doc_id, i, {_hash32_sql(f"substr(text, i, {WINNOW_K})")} AS h
             FROM documents,
                  unnest(generate_series(1, greatest(len(text) - {WINNOW_K - 1}, 0)))
                      AS t(i)
@@ -555,7 +555,7 @@ QC_WEIGHT_SHIFT = 1000
         ),
         w AS (
             SELECT doc_id,
-                   (({_duck_hexparse8("word")}) % {QC_WEIGHT_MOD})
+                   ({_hash32_sql("word")} % {QC_WEIGHT_MOD})
                        - {QC_WEIGHT_SHIFT} AS wt
             FROM tok
         ),

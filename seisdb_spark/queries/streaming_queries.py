@@ -318,14 +318,14 @@ def _share_quality_oracle() -> None:
     from seisdb_spark.queries.extensions import (
         QC_WEIGHT_MOD,
         QC_WEIGHT_SHIFT,
-        _duck_hexparse8,
+        _hash32_sql,
     )
 
     sql = f"""
         WITH per AS (
             SELECT lang,
                    list_aggregate(list_transform(string_split(text, ' '),
-                       w -> ({_duck_hexparse8("w")}) % {QC_WEIGHT_MOD}
+                       w -> {_hash32_sql("w")} % {QC_WEIGHT_MOD}
                             - {QC_WEIGHT_SHIFT}), 'sum') AS sum_w
             FROM documents
         )

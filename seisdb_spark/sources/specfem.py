@@ -199,7 +199,15 @@ def _local_abspath(path: str) -> str:
 
 def read_ibool(spark: SparkSession, path_glob: str, nspec: int) -> DataFrame:
     """Distributed S4: every proc's ibool file -> long (proc, i_spec, i_gll,
-    gll_id) rows.  One task per file; ids already 0-based."""
+    gll_id) rows.  One task per file; ids already 0-based.
+
+    ``path_glob`` is a directory plus a file-name pattern (``proc*_ibool.bin``
+    or one file's name).  The directory is loaded under a
+    ``pathGlobFilter``, as in :func:`snapshot_frames`, so Spark lists it
+    once, on the driver: no listing job at any file count.  A missing
+    directory fails with PATH_NOT_FOUND, which names it; a pattern that
+    matches no file in it raises ``FileNotFoundError`` naming
+    ``path_glob``."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -219,7 +227,10 @@ def read_ibool(spark: SparkSession, path_glob: str, nspec: int) -> DataFrame:
                     }
                 )
 
-    files = spark.read.format("binaryFile").load(_local_abspath(path_glob))
+    directory, pattern = os.path.split(_local_abspath(path_glob))
+    files = spark.read.format("binaryFile").option("pathGlobFilter", pattern).load(directory)
+    if not files.inputFiles():
+        raise FileNotFoundError(f"no ibool file matches {path_glob}")
     return files.select("path", "content").mapInPandas(decode, IBOOL_SCHEMA)
 
 

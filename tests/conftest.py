@@ -35,6 +35,19 @@ NSPEC = 3
 NPROCS = 2
 
 
+def jobs_run(spark, action) -> int:
+    """Number of Spark jobs ``action()`` runs, through ``statusTracker``."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{id(action)}"
+    sc.setJobGroup(group, "counted action")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def fixture_meta(tmp_path_factory):
     from seisdb_spark.pipeline import generate_fixture

@@ -8,6 +8,7 @@ round-trip."""
 
 from __future__ import annotations
 
+import glob
 import struct
 
 import numpy as np
@@ -208,15 +209,12 @@ def test_reference_header_files_match_parquet_table(spark, sgt_records, tmp_path
     fixture) -> reference export -> literal .hdf5 header files; every
     file's datasets/attrs must equal its parquet header row (the surface
     DSGT.py:172-194 writes)."""
-    from seisdb_spark.pipeline.export import (
-        export_reference_format,
-        write_hdf5_headers,
-    )
+    from seisdb_spark.pipeline.export import export_reference_format
 
     pdf, meta, _steps = sgt_records
     out = str(tmp_path / "db")
     export_reference_format(spark.createDataFrame(pdf), meta, out)
-    paths = write_hdf5_headers(spark, out)
+    paths = sorted(glob.glob(f"{out}/*.hdf5"))
     assert len(paths) == 2 and all(p.endswith("_header.hdf5") for p in paths)
 
     table = (

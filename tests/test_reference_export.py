@@ -5,25 +5,21 @@ carry the HDF5 datasets/attrs (DSGT.py:118-196) in blob order."""
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
 
-from seisdb_spark.pipeline import (
-    export_reference_format,
-    sgt_build,
-    write_hdf5_headers,
-)
+from seisdb_spark.pipeline import export_reference_format, sgt_build
 from tests import golden_numpy as golden
-from tests.conftest import NPROCS
+from tests.conftest import NPROCS, jobs_run
 
 
 @pytest.fixture(scope="session")
 def exported(spark, tmp_path_factory, sgt_records, dgf_records):
     """``exported(kind)`` -> (out, summary): one export per kind per
     session of the session build (``sgt_records``/``dgf_records``), shared
-    by the tests that only read the export (writing HDF5 headers next to it
-    adds files no other test reads)."""
+    by the tests that only read the export."""
     cache = {}
 
     def get(kind):
@@ -87,6 +83,18 @@ def test_header_table_matches_golden(spark, fixture_meta, exported):
         assert row["proc_name"] == f"proc{proc:06d}"
 
 
+def test_header_table_keeps_its_schema(spark, exported):
+    """The stored header table keeps its column names, order and types
+    (``index`` stays array<int>, the type of ``gll_id``)."""
+    out, _ = exported("SGT")
+    assert spark.read.parquet(os.path.join(out, "headers_parquet")).schema.simpleString() == (
+        "struct<proc:int,index:array<int>,start:array<bigint>,length:array<bigint>,"
+        "length_sizeof:array<bigint>,offset:array<double>,scale:array<double>,"
+        "proc_name:string,ngll:bigint,nstep:bigint,nforce:int,nparas:int,dt:double,"
+        "nspec:int,type:string,forder:string,version:string>"
+    )
+
+
 def test_empty_proc_still_gets_bin_and_header(spark, fixture_meta, tmp_path):
     """A proc present in db_meta but with zero surviving records must still
     produce its per-proc .bin file (empty) and a header row with empty
@@ -123,6 +131,14 @@ def test_empty_proc_still_gets_bin_and_header(spark, fixture_meta, tmp_path):
     h0 = hdr[hdr.proc == 0].iloc[0]
     assert len(h0["index"]) == 0 and len(h0["start"]) == 0
     assert h0["proc_name"] == "proc000000"  # attrs still come from meta
+    from tests.test_hdf5_min import read_hdf5
+
+    ds, attrs = read_hdf5(os.path.join(out, "proc000000_header.hdf5"))
+    assert set(ds) == {"index", "start", "length", "offset", "scale"}
+    assert all(len(v) == 0 for v in ds.values())
+    want = meta.filter("proc = 0").first()
+    assert attrs["ngll"] == want.ngll and attrs["nstep"] == want.nstep
+    assert attrs["nspec"] == want.nspec and attrs["type"] == want.kind
 
 
 def test_hdf5_headers_written_without_h5py(spark, fixture_meta, exported):
@@ -132,7 +148,7 @@ def test_hdf5_headers_written_without_h5py(spark, fixture_meta, exported):
     in tests/test_hdf5_min.py)."""
     m = fixture_meta
     out, _ = exported("SGT")
-    paths = write_hdf5_headers(spark, out)
+    paths = sorted(glob.glob(os.path.join(out, "*.hdf5")))
     assert [os.path.basename(p) for p in paths] == [
         f"proc{p:06d}_header.hdf5" for p in range(m["nprocs"])
     ]
@@ -150,7 +166,7 @@ def test_dgf_hdf5_header_names(spark, fixture_meta, exported):
     next to ``proc%06d_dgf_data.bin``."""
     m = fixture_meta
     out, _ = exported("DGF")
-    paths = write_hdf5_headers(spark, out)
+    paths = sorted(glob.glob(os.path.join(out, "*.hdf5")))
     assert [os.path.basename(p) for p in paths] == [
         f"proc{p:06d}_dgf_header.hdf5" for p in range(m["nprocs"])
     ]
@@ -179,3 +195,66 @@ def test_export_rejects_meta_with_two_kinds(spark, fixture_meta, tmp_path):
     with pytest.raises(ValueError, match="exactly one kind"):
         export_reference_format(records, mixed, out)
     assert not os.path.exists(out)
+
+
+def test_inconsistent_start_fails_and_leaves_no_partial_file(spark, sgt_records, tmp_path):
+    """A blob whose ``start`` is not its file position aborts the export:
+    the pack drops its partial temp file and publishes no ``.bin``."""
+    pdf, meta, _steps = sgt_records
+    bad = pdf.copy()
+    third = bad.sort_values(["proc", "start"]).groupby("proc").nth(2).index
+    bad.loc[third, "start"] += 1  # every proc: two blobs written, then the check
+    out = str(tmp_path / "refdb_bad")
+    from pyspark.errors import PythonException
+
+    with pytest.raises(PythonException, match="file position"):
+        export_reference_format(spark.createDataFrame(bad), meta, out)
+    assert glob.glob(os.path.join(out, "*.tmp")) == []
+    assert glob.glob(os.path.join(out, "*_sgt_data.bin")) == []
+    assert glob.glob(os.path.join(out, "*.hdf5")) == []
+
+
+def test_second_export_overwrites_and_sweeps_temps(spark, sgt_records, exported, tmp_path):
+    """Exporting again into the same dir replaces every file (here a .bin
+    and an .hdf5 with trailing junk) and removes a dead attempt's temp."""
+    first, _ = exported("SGT")
+    pdf, meta, _steps = sgt_records
+    out = str(tmp_path / "refdb_twice")
+    export_reference_format(spark.createDataFrame(pdf), meta, out)
+    for name in ("proc000000_sgt_data.bin", "proc000001_header.hdf5"):
+        with open(os.path.join(out, name), "ab") as fh:
+            fh.write(b"junk")
+    open(os.path.join(out, "proc000000_sgt_data.bin.attempt-999999.tmp"), "wb").close()
+    summary = export_reference_format(spark.createDataFrame(pdf), meta, out)
+    assert list(summary.proc) == list(range(NPROCS))
+    assert glob.glob(os.path.join(out, "*.tmp")) == []
+    files = sorted(f for f in os.listdir(out) if f.endswith((".bin", ".hdf5")))
+    assert files == sorted(f for f in os.listdir(first) if f.endswith((".bin", ".hdf5")))
+    for name in files:
+        with open(os.path.join(out, name), "rb") as a, open(os.path.join(first, name), "rb") as b:
+            assert a.read() == b.read(), name
+
+
+def test_proc_absent_from_meta_is_not_exported(spark, sgt_records, tmp_path):
+    """Records of a proc that meta does not list have no header attrs: the
+    proc gets no file, no header row and no summary row."""
+    pdf, meta, _steps = sgt_records
+    out = str(tmp_path / "refdb_meta_subset")
+    summary = export_reference_format(spark.createDataFrame(pdf), meta.filter("proc = 0"), out)
+    assert list(summary.proc) == [0]
+    assert not [f for f in os.listdir(out) if f.startswith("proc000001")]
+    hdr = spark.read.parquet(os.path.join(out, "headers_parquet")).toPandas()
+    assert list(hdr.proc) == [0]
+
+
+def test_export_of_local_records_runs_at_most_10_jobs(spark, sgt_records, tmp_path):
+    """The full layout (.bin, .hdf5 and header table) comes from one pass:
+    exporting the session build's collected SGT records runs at most 10
+    Spark jobs (17 when the headers were a second pass over the records
+    and the .hdf5 files a driver-side collect of the header table)."""
+    pdf, meta, _steps = sgt_records
+    records = spark.createDataFrame(pdf)
+    out = str(tmp_path / "refdb_jobs")
+    jobs = jobs_run(spark, lambda: export_reference_format(records, meta, out))
+    assert 0 < jobs <= 10, jobs
+    assert len(glob.glob(os.path.join(out, "*.hdf5"))) == NPROCS

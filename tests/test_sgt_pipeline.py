@@ -34,7 +34,7 @@ from tests import golden_numpy as golden
 # fixture_meta (and NSPEC/NPROCS) and the session builds sgt_built/dgf_built,
 # sgt_records/dgf_records live in tests/conftest.py, shared with the other
 # build-level modules
-from tests.conftest import NPROCS, NSPEC  # noqa: F401,E402
+from tests.conftest import NPROCS, NSPEC, jobs_run  # noqa: F401,E402
 
 
 # ---------------------------------------------------------------- decode path
@@ -265,6 +265,46 @@ def test_element_lookup_out_of_range(spark, fixture_meta):
         assert rows == [], f"out-of-range element fabricated rows at ppe={ppe}"
 
 
+def test_read_ibool_lists_a_large_dir_without_a_job(spark, fixture_meta, tmp_path):
+    """The ibool dir is loaded under a pathGlobFilter and listed on the
+    driver: making the frame over 40 ibool files (more than the 32 at which
+    a glob path's listing becomes a parallel Spark job) runs no job."""
+    src = os.path.join(fixture_meta["model_dir"], "proc000000_ibool.bin")
+    for proc in range(40):
+        os.symlink(src, tmp_path / f"proc{proc:06d}_ibool.bin")
+    frames = []
+    jobs = jobs_run(
+        spark,
+        lambda: frames.append(
+            specfem.read_ibool(spark, str(tmp_path / "proc*_ibool.bin"), fixture_meta["nspec"])
+        ),
+    )
+    assert jobs == 0, jobs
+    assert len(frames[0].inputFiles()) == 40
+
+
+def test_read_ibool_single_file_reads_only_that_file(spark, fixture_meta):
+    m = fixture_meta
+    path = os.path.join(m["model_dir"], "proc000001_ibool.bin")
+    ibool = specfem.read_ibool(spark, path, m["nspec"])
+    assert [f.removeprefix("file://") for f in ibool.inputFiles()] == [path]
+    assert {r.proc for r in ibool.select("proc").distinct().collect()} == {1}
+
+
+@pytest.mark.parametrize(
+    "name", ["nothing*_ibool.bin", "proc000099_ibool.bin", "absent/proc*_ibool.bin"]
+)
+def test_read_ibool_missing_path_names_it(spark, fixture_meta, name):
+    """A glob that matches no file, a missing single file and a missing
+    directory all fail at once, naming what is missing."""
+    path = os.path.join(fixture_meta["model_dir"], name)
+    missing = os.path.dirname(path) if name.startswith("absent/") else path
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises((AnalysisException, FileNotFoundError), match=re.escape(missing)):
+        specfem.read_ibool(spark, path, fixture_meta["nspec"])
+
+
 # ---------------------------------------------------------------- sink + meta
 def test_write_read_db_partitioned(spark, fixture_meta, sgt_records, tmp_path):
     m = fixture_meta
@@ -472,19 +512,6 @@ def test_scale_stress_sgt_plan_contract_holds(request, kind):
     assert plan_ok(final_plan(records)) == (True, "ok")
 
 
-def _jobs_run(spark, action) -> int:
-    """Number of Spark jobs ``action()`` runs, through ``statusTracker``."""
-    sc = spark.sparkContext
-    group = f"test-jobs-{id(action)}"
-    sc.setJobGroup(group, "counted action")
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_build_and_write_run_at_most_11_jobs(spark, fixture_meta, tmp_path):
     """One build + write lists the snapshot dirs once, on the driver, and
     runs the snapshot lineage once: the records write and the meta write
@@ -500,7 +527,7 @@ def test_build_and_write_run_at_most_11_jobs(spark, fixture_meta, tmp_path):
         )
         write_db(records, meta, str(tmp_path / "db"), network="CI", station="USC")
 
-    jobs = _jobs_run(spark, build_and_write)
+    jobs = jobs_run(spark, build_and_write)
     assert 0 < jobs <= 11, jobs
 
 
@@ -553,7 +580,7 @@ def test_build_reads_only_snapshot_files_in_the_stride(spark, every_step_tree):
         for d in m["force_dirs"] for name in os.listdir(d)
     )
     read = _files_read(records)
-    snapshot_reads = [n for root, n in read.items() if "_ibool" not in root]
+    snapshot_reads = [n for root, n in read.items() if root.removeprefix("file:") != m["model_dir"]]
     assert len(snapshot_reads) == len(m["force_dirs"]), read
     assert sum(snapshot_reads) == in_stride == 32, read
 
@@ -573,7 +600,7 @@ def test_valid_steps_on_large_dirs_runs_at_most_one_job(spark, every_step_tree):
     m = every_step_tree
     assert all(len(os.listdir(d)) > 32 for d in m["force_dirs"])
     got = []
-    jobs = _jobs_run(
+    jobs = jobs_run(
         spark,
         lambda: got.extend(
             valid_steps(spark, m["force_dirs"], "strain_field", 0, 60, 10).collect()
