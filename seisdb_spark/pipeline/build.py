@@ -7,8 +7,8 @@ n_para]`` RAM buffer per processor and loops; here the same semantics are a
 declarative plan over long tables — no buffer, no loop, and the only driver
 work is one listing of the snapshot dirs (file names, not data):
 
-    ibool long table
-      -> P1 27-of-125 positional filter        (filter isin, pushdown)
+    ibool element rows (proc, i_spec, gll_ids[125])
+      -> P1 27-of-125 positional filter        (posexplode, filter isin)
       -> D1 first-occurrence dedup             (row_number window per gll_id)
       -> J1 gather                             (broadcast equi-join on cell)
       -> P3 temporal stride + existence        (driver step list; semi-join)
@@ -38,6 +38,13 @@ task and AQE handles the rest — nothing below ever sees more than one
 point's series at once.  What differs between SGT and DGF is data:
 ``specfem.KINDS``; the batch build and the staged stream share one tail,
 :func:`build_records`.
+
+Read path: ``read_db`` reads ``records`` and ``db_meta`` with
+``DB_SCHEMAS``, the schemas the writer selects its columns from, so building
+its plans infers no footer.  ``element_gll_ids`` is a
+projection of the ibool element rows (no aggregate, no exchange), and
+``decode_records`` decodes one Arrow batch of records at a time.  A lookup
+in perfbench's shape runs 2 jobs: the element's ids and the decode.
 
 Determinism contract (golden-tested): float32 arithmetic end-to-end in the
 encode (min/subtract/max/divide/scale in float32, truncating cast), matching
@@ -75,6 +82,8 @@ from seisdb_spark.sources.specfem import KINDS
 def select_gll_points(ibool: DataFrame, points_per_element: int = 27) -> DataFrame:
     """(proc, gll_id, i_spec, i_gll): one owner cell per unique global point.
 
+    The element rows of ``read_ibool`` are exploded JVM-side to one
+    (i_gll, gll_id) cell each (``posexplode``: i_gll is the list position).
     P1: keep only the 27 corner/edge/center cells (DSEM_Utils/__init__.py:6-8)
     when points_per_element == 27; all 125 otherwise (D2 dispatcher,
     ibool_reader.py:177-194).
@@ -85,13 +94,14 @@ def select_gll_points(ibool: DataFrame, points_per_element: int = 27) -> DataFra
     (proc, gll_id) ordered by the scan key (i_spec, i_gll).  Equivalence and
     the divergence counterexample are pytest-asserted.
     """
+    cells = ibool.select("proc", "i_spec", F.posexplode("gll_ids").alias("i_gll", "gll_id"))
     if points_per_element == 27:
-        ibool = ibool.filter(F.col("i_gll").isin(list(INDEX27)))
+        cells = cells.filter(F.col("i_gll").isin(list(INDEX27)))
     elif points_per_element not in (125, -1):
         raise ValueError("points_per_element must be 27 or 125")
     w = Window.partitionBy("proc", "gll_id").orderBy("i_spec", "i_gll")
     return (
-        ibool.withColumn("rn", F.row_number().over(w))
+        cells.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("proc", "gll_id", "i_spec", "i_gll")
     )
@@ -305,18 +315,39 @@ def db_meta(
     )
 
 
+def _schema(ddl: str) -> T.StructType:
+    """A StructType from ``name type, ...`` pairs of Spark SQL type names."""
+    types = {"int": T.IntegerType(), "bigint": T.LongType(), "double": T.DoubleType(),
+             "string": T.StringType(), "binary": T.BinaryType()}
+    pairs = (col.split() for col in ddl.split(","))
+    return T.StructType([T.StructField(name, types[typ]) for name, typ in pairs])
+
+
+#: The two tables of a DB as Parquet returns them: the written columns in
+#: file order, then the (network, station) partition columns.  The writer
+#: selects these columns and ``read_db`` reads with these schemas, so no
+#: footer is inferred at plan build.
+DB_SCHEMAS = {
+    "records": _schema(
+        "proc int, gll_id int, i_spec int, i_gll int, n_values bigint, offset double, "
+        "scale double, length bigint, start bigint, blob binary, network string, station string"
+    ),
+    "db_meta": _schema(
+        "proc int, proc_name string, ngll bigint, nstep bigint, nforce int, nparas int, "
+        "dt double, nspec int, kind string, forder string, version string, "
+        "network string, station string"
+    ),
+}
+
+
 def _write_partitioned(
     records: DataFrame, meta: DataFrame, path: str, network: str, station: str, **options
 ) -> None:
     out = records.withColumn("network", F.lit(network)).withColumn("station", F.lit(station))
-    cols = (
-        "network", "station", "proc", "gll_id", "i_spec", "i_gll",
-        "n_values", "offset", "scale", "length", "start", "blob",
-    )
-    for df, name in ((out.select(*cols), "records"), (meta, "db_meta")):
-        df.write.mode("overwrite").options(**options).partitionBy(
-            "network", "station"
-        ).parquet(f"{path}/{name}")
+    for name, df in (("records", out), ("db_meta", meta)):
+        df.select(*DB_SCHEMAS[name].fieldNames()).write.mode("overwrite").options(
+            **options
+        ).partitionBy("network", "station").parquet(f"{path}/{name}")
 
 
 def write_db(records: DataFrame, meta: DataFrame, path: str, network: str, station: str) -> None:
@@ -344,7 +375,11 @@ def append_to_db(
 
 
 def read_db(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
-    return spark.read.parquet(f"{path}/records"), spark.read.parquet(f"{path}/db_meta")
+    """(records, db_meta) of the DB at ``path``, read with ``DB_SCHEMAS``:
+    building the plans infers no footer.  Up to 32 station dirs per network
+    (Spark's parallel partition discovery threshold) they are listed without
+    a job; above that each table's listing is one Spark job."""
+    return tuple(spark.read.schema(DB_SCHEMAS[n]).parquet(f"{path}/{n}") for n in DB_SCHEMAS)
 
 
 # ---------------------------------------------------------------------------
@@ -352,11 +387,18 @@ def read_db(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
 # ---------------------------------------------------------------------------
 def element_gll_ids(ibool: DataFrame, points_per_element: int = 27) -> DataFrame:
     """L2/L3: per (proc, i_spec), the element's global ids in the reference's
-    emission order.  For 27 points that is the x-outer/z-inner reorder
-    (ibool_reader.py:82-88) — INDEX27-gather then the REORDER27 permutation,
-    both literal arrays, applied JVM-side.  For 125 points, plain i_gll
-    order (ibool_reader.py:37-54).  Point queries push the (proc, i_spec)
-    predicate to the scan.
+    emission order, as a projection of the ``read_ibool`` element rows: no
+    aggregate, no exchange.  For 27 points that is the x-outer/z-inner
+    reorder (ibool_reader.py:82-88) — the INDEX27 gather then the REORDER27
+    permutation, composed into one literal array of positions and applied
+    JVM-side.  For 125 points it is the element's list as decoded, in plain
+    i_gll order (ibool_reader.py:37-54).
+
+    A (proc, i_spec) filter on the result stays above the decode: it cannot
+    pass the Python map, so the binaryFile scan pushes no filter and reads
+    every ibool file the glob matched, and the filter runs on the decoded
+    element rows.  A point query therefore narrows the glob to its proc's
+    one file.
 
     DOCUMENTED DEVIATION (SURVEY §1.1): for an out-of-range element the
     reference ZERO-FILLS — ``extract_element_125`` returns
@@ -367,21 +409,12 @@ def element_gll_ids(ibool: DataFrame, points_per_element: int = 27) -> DataFrame
     fabricated ids.  Tested in
     tests/test_sgt_pipeline.py::test_element_lookup_out_of_range."""
     if points_per_element == 27:
-        sub = ibool.filter(F.col("i_gll").isin(list(INDEX27)))
+        ids = F.array(*[F.col("gll_ids")[INDEX27[p]] for p in REORDER27])
     elif points_per_element in (125, -1):
-        sub = ibool
+        ids = F.col("gll_ids")
     else:
         raise ValueError("points_per_element must be 27 or 125")
-    gathered = sub.groupBy("proc", "i_spec").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("i_gll", "gll_id"))),
-            lambda x: x["gll_id"],
-        ).alias("ids_scan_order")
-    )
-    if points_per_element != 27:
-        return gathered.withColumnRenamed("ids_scan_order", "gll_ids")
-    perm = [F.element_at("ids_scan_order", p + 1) for p in REORDER27]
-    return gathered.select("proc", "i_spec", F.array(*perm).alias("gll_ids"))
+    return ibool.select("proc", "i_spec", ids.alias("gll_ids"))
 
 
 def decode_records(
@@ -413,27 +446,33 @@ def decode_records(
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                codes = np.frombuffer(zlib.decompress(row.blob), dtype=code_dtype)
-                vals = codes.astype(np.float64) / max_code * row.scale + row.offset
-                size = {"force": n_force, "para": n_para, "step": codes.size // (n_force * n_para)}
-                idx = np.unravel_index(np.arange(codes.size), [size[f] for f in order])
-                pos = {f: i.astype(np.int32) for f, i in zip(order, idx)}
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "proc": np.full(codes.size, row.proc, dtype=np.int32),
-                            "gll_id": np.full(codes.size, row.gll_id, dtype=np.int32),
-                            "force": pos["force"],
-                            "para": pos["para"],
-                            "step_idx": pos["step"],
-                            "value": vals,
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+            raw = [zlib.decompress(b) for b in pdf["blob"]]
+            n = np.fromiter(map(len, raw), np.int64, len(raw)) // np.dtype(code_dtype).itemsize
+            if np.any(n % (n_force * n_para)):
+                raise ValueError(f"a series length is not a multiple of {n_force}x{n_para}")
+            codes = np.frombuffer(b"".join(raw), dtype=code_dtype)
+            vals = codes.astype(np.float64) / max_code * np.repeat(
+                pdf["scale"].to_numpy(np.float64), n
+            ) + np.repeat(pdf["offset"].to_numpy(np.float64), n)
+            # mixed-radix unravel of each value's position in its record;
+            # the step extent is per record, so a batch may mix nstep
+            rem = np.arange(codes.size) - np.repeat(np.cumsum(n) - n, n)
+            n_step = np.repeat(n // (n_force * n_para), n)
+            radix = {"force": n_force, "para": n_para, "step": n_step}
+            pos = {}
+            for f in reversed(order[1:]):
+                rem, pos[f] = np.divmod(rem, radix[f])
+            pos[order[0]] = rem
+            yield pd.DataFrame(
+                {
+                    "proc": np.repeat(pdf["proc"].to_numpy(np.int32), n),
+                    "gll_id": np.repeat(pdf["gll_id"].to_numpy(np.int32), n),
+                    "force": pos["force"].astype(np.int32),
+                    "para": pos["para"].astype(np.int32),
+                    "step_idx": pos["step"].astype(np.int32),
+                    "value": vals,
+                }
+            )
 
     return records.select("proc", "gll_id", "offset", "scale", "blob").mapInPandas(
         decode, out_schema

@@ -44,14 +44,14 @@ DB_VERSION = "0.1.0"
 
 # ---------------------------------------------------------------- schemas
 
-# Spatial index (ibool), long form: element-local cell -> global GLL id.
-# 1-based on disk, 0-based in tables (shift applied at decode,
-# ibool_reader.py:31).
+# Spatial index (ibool), one row per element: the element's 125 global GLL
+# ids in element-local (i_gll) order.  1-based on disk, 0-based in tables
+# (shift applied at decode, ibool_reader.py:31).  The 27-point selection
+# explodes the list JVM-side; an element lookup gathers from it.
 IBOOL_SCHEMA = T.StructType(
     [
         T.StructField("proc", T.IntegerType(), False),
         T.StructField("i_spec", T.IntegerType(), False),
-        T.StructField("i_gll", T.IntegerType(), False),
-        T.StructField("gll_id", T.IntegerType(), False),
+        T.StructField("gll_ids", T.ArrayType(T.IntegerType(), False), False),
     ]
 )

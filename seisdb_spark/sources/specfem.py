@@ -8,8 +8,9 @@ handles and raw byte offsets on a single node
 *distributedly*: files arrive as ``(path, content)`` rows from Spark's
 ``binaryFile`` source (the driver lists each snapshot dir once, by name
 only; the bytes are read in the tasks, one input split per file), and
-pure-numpy kernels inside ``mapInPandas`` (Arrow-batched) turn each file
-into long rows against an explicit schema.
+pure-numpy kernels inside Arrow-batched maps turn each snapshot file into
+long rows and each ibool file into one row per element, against explicit
+schemas.
 Everything that differs between the SGT and DGF databases (file name,
 paras, decode kernel, serialization order, suffixes) is one entry of
 ``KINDS``; the build, the stream and the export read it from there.
@@ -21,7 +22,8 @@ Decode kernels are format knowledge, not ported code:
   (``offset=1``, ``inter_offset=2`` at ``strainfield_reader.py:43-45``);
   we parse the framing explicitly and validate the trailing marker.
 * ibool payload: ``NSPEC*125`` int32, **1-based** on disk; shifted to
-  0-based at decode (reference does the same at ``ibool_reader.py:31``).
+  0-based at decode (reference does the same at ``ibool_reader.py:31``);
+  each element's 125 ids stay together as one list.
 * strain payload: 6 records of ``NSPEC*125`` float32 in order
   ``(trace, xx_dev, yy_dev, xy, xz, yz)``; full-tensor completion
   (``strainfield_reader.py:57-59``) is float32 arithmetic:
@@ -43,6 +45,7 @@ from urllib.parse import urlparse
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -198,8 +201,11 @@ def _local_abspath(path: str) -> str:
 
 
 def read_ibool(spark: SparkSession, path_glob: str, nspec: int) -> DataFrame:
-    """Distributed S4: every proc's ibool file -> long (proc, i_spec, i_gll,
-    gll_id) rows.  One task per file; ids already 0-based.
+    """Distributed S4: every proc's ibool file -> one ``IBOOL_SCHEMA`` row
+    per element, (proc, i_spec, gll_ids), its 125 ids in i_gll order.  One
+    task per file; ids already 0-based.  The list column is built from the
+    flat decode (one Arrow ``ListArray`` per file, no per-element Python
+    object).
 
     ``path_glob`` is a directory plus a file-name pattern (``proc*_ibool.bin``
     or one file's name).  The directory is loaded under a
@@ -209,29 +215,29 @@ def read_ibool(spark: SparkSession, path_glob: str, nspec: int) -> DataFrame:
     matches no file in it raises ``FileNotFoundError`` naming
     ``path_glob``."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, content in zip(pdf["path"], pdf["content"]):
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for path, content in zip(batch["path"].to_pylist(), batch["content"].to_pylist()):
                 m = IBOOL_RE.search(os.path.basename(path))
                 if not m:
                     continue
-                proc = int(m.group(1))
-                ib = decode_ibool(bytes(content), nspec)
+                ib = decode_ibool(content, nspec)
                 nsp, ng = ib.shape
-                yield pd.DataFrame(
-                    {
-                        "proc": np.full(nsp * ng, proc, dtype=np.int32),
-                        "i_spec": np.repeat(np.arange(nsp, dtype=np.int32), ng),
-                        "i_gll": np.tile(np.arange(ng, dtype=np.int32), nsp),
-                        "gll_id": ib.ravel().astype(np.int32),
-                    }
+                bounds = pa.array(np.arange(0, nsp * ng + 1, ng, dtype=np.int32))
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.full(nsp, int(m.group(1)), dtype=np.int32)),
+                        pa.array(np.arange(nsp, dtype=np.int32)),
+                        pa.ListArray.from_arrays(bounds, pa.array(ib.ravel())),
+                    ],
+                    names=IBOOL_SCHEMA.names,
                 )
 
     directory, pattern = os.path.split(_local_abspath(path_glob))
     files = spark.read.format("binaryFile").option("pathGlobFilter", pattern).load(directory)
     if not files.inputFiles():
         raise FileNotFoundError(f"no ibool file matches {path_glob}")
-    return files.select("path", "content").mapInPandas(decode, IBOOL_SCHEMA)
+    return files.select("path", "content").mapInArrow(decode, IBOOL_SCHEMA)
 
 
 def snapshot_frames(

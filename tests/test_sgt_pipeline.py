@@ -185,6 +185,54 @@ def test_roundtrip_randomized_property(spark):
         assert np.max(np.abs(xhat - x)) <= scale / 255 * 1.0001 + 1e-12 + abs(offset) * 1e-7
 
 
+@pytest.mark.parametrize("level", [8, 16])
+@pytest.mark.parametrize("kind", ["SGT", "DGF"])
+def test_decode_records_batch_equals_per_record_reference(spark, kind, level):
+    """The batched decode equals a per-record numpy decode exactly, on one
+    Arrow batch that mixes series lengths (stations of different nstep)."""
+    spec = specfem.KINDS[kind]
+    n_force, n_para = 3, len(spec.paras)
+    dtype = np.uint8 if level == 8 else np.uint16
+    rng = np.random.default_rng(level)
+    rows = []
+    for gll_id, n_step in enumerate((1, 4, 7, 4, 2, 9)):
+        codes = rng.integers(0, 2**level, n_force * n_para * n_step).astype(dtype)
+        rows.append((gll_id % 2, gll_id, float(rng.normal()), float(rng.uniform(0, 3)),
+                     zlib.compress(codes.tobytes())))
+    pdf = pd.DataFrame(rows, columns=["proc", "gll_id", "offset", "scale", "blob"])
+    got = (
+        decode_records(spark.createDataFrame(pdf).coalesce(1), n_force, n_para, kind, level)
+        .toPandas()
+    )
+    want = []
+    for proc, gll_id, offset, scale, blob in rows:
+        codes = np.frombuffer(zlib.decompress(blob), dtype=dtype)
+        shape = {"force": n_force, "para": n_para, "step": codes.size // (n_force * n_para)}
+        idx = dict(zip(spec.series_order, np.unravel_index(
+            np.arange(codes.size), [shape[f] for f in spec.series_order]
+        )))
+        want.append(pd.DataFrame({
+            "proc": np.int32(proc), "gll_id": np.int32(gll_id),
+            "force": idx["force"].astype(np.int32), "para": idx["para"].astype(np.int32),
+            "step_idx": idx["step"].astype(np.int32),
+            "value": codes.astype(np.float64) / (2**level - 1) * scale + offset,
+        }))
+    pd.testing.assert_frame_equal(got, pd.concat(want, ignore_index=True), check_exact=True)
+
+
+def test_decode_records_rejects_a_series_of_partial_steps(spark):
+    """A blob whose length is not a whole number of (force, para) steps
+    fails the decode instead of yielding out-of-range indices."""
+    from pyspark.errors import PythonException
+
+    pdf = pd.DataFrame(
+        [(0, 0, 0.0, 1.0, zlib.compress(bytes(18 * 2 + 1)))],
+        columns=["proc", "gll_id", "offset", "scale", "blob"],
+    )
+    with pytest.raises(PythonException, match="not a multiple of 3x6"):
+        decode_records(spark.createDataFrame(pdf), 3, 6).collect()
+
+
 # ---------------------------------------------------------------- dedup semantics
 def test_dedup_equivalence_on_conforming_input(spark, fixture_meta):
     """D1: window first-occurrence == reference running-max on conforming
@@ -305,6 +353,82 @@ def test_read_ibool_missing_path_names_it(spark, fixture_meta, name):
         specfem.read_ibool(spark, path, fixture_meta["nspec"])
 
 
+def test_element_gll_ids_plan_has_no_exchange(spark, fixture_meta):
+    """The element lookup is a projection of the element rows: its executed
+    plan has no exchange and no aggregate."""
+    from seisdb_spark.plancheck import count_exchanges, final_plan, has_node, run_plan
+
+    m = fixture_meta
+    ibool = specfem.read_ibool(
+        spark, os.path.join(m["model_dir"], "proc*_ibool.bin"), m["nspec"]
+    )
+    for ppe in (27, 125):
+        ids = element_gll_ids(ibool, ppe).filter("proc = 1 AND i_spec = 2")
+        run_plan(ids)
+        plan = final_plan(ids)
+        assert count_exchanges(plan) == 0, plan
+        assert not has_node(plan, "Aggregate"), plan
+
+
+def _written_db(spark, records_pdf, meta, path: str) -> str:
+    write_db(spark.createDataFrame(records_pdf), meta, path, network="CI", station="USC")
+    return path
+
+
+@pytest.mark.parametrize("kind", ["SGT", "DGF"])
+def test_read_db_schema_equals_written_schema(spark, request, tmp_path, kind):
+    """DB_SCHEMAS is what Parquet infers from a written DB: same names,
+    types and order, for records and db_meta; read_db returns it."""
+    from seisdb_spark.pipeline.build import DB_SCHEMAS
+
+    pdf, meta, _steps = request.getfixturevalue(f"{kind.lower()}_records")
+    db = _written_db(spark, pdf, meta, str(tmp_path / "db"))
+
+    def fields(schema):
+        return [(f.name, f.dataType) for f in schema]
+
+    for name, df in zip(DB_SCHEMAS, read_db(spark, db)):
+        inferred = spark.read.parquet(f"{db}/{name}").schema
+        assert fields(DB_SCHEMAS[name]) == fields(inferred), name
+        assert fields(df.schema) == fields(inferred), name
+
+
+def test_read_db_runs_no_job(spark, sgt_records, tmp_path):
+    pdf, meta, _steps = sgt_records
+    db = _written_db(spark, pdf, meta, str(tmp_path / "db"))
+    assert jobs_run(spark, lambda: read_db(spark, db)) == 0
+
+
+def test_lookup_runs_at_most_2_jobs(spark, fixture_meta, sgt_records, tmp_path):
+    """One element lookup in the shape of perfbench's op (the element's ids
+    from its proc's ibool file, the DB records of those ids, their decode)
+    runs at most 2 Spark jobs, and returns every value of the 27 series."""
+    from pyspark.sql import functions as F
+
+    m = fixture_meta
+    pdf, meta, _steps = sgt_records
+    db = _written_db(spark, pdf, meta, str(tmp_path / "db"))
+    proc, i_spec, out = 1, 2, []
+
+    def lookup():
+        ibool = specfem.read_ibool(
+            spark, os.path.join(m["model_dir"], f"proc{proc:06d}_ibool.bin"), m["nspec"]
+        )
+        [row] = element_gll_ids(ibool).filter(
+            (F.col("proc") == proc) & (F.col("i_spec") == i_spec)
+        ).collect()
+        records, _ = read_db(spark, db)
+        hits = records.filter(
+            (F.col("network") == "CI") & (F.col("station") == "USC")
+            & (F.col("proc") == proc) & F.col("gll_id").isin(list(row["gll_ids"]))
+        )
+        out.extend(decode_records(hits, 3, 6).collect())
+
+    jobs = jobs_run(spark, lookup)
+    assert 0 < jobs <= 2, jobs
+    assert len(out) == 27 * 18 * len(m["valid_steps"])
+
+
 # ---------------------------------------------------------------- sink + meta
 def test_write_read_db_partitioned(spark, fixture_meta, sgt_records, tmp_path):
     m = fixture_meta
@@ -401,7 +525,8 @@ def test_append_to_db_incremental_station(spark, fixture_meta, sgt_records, tmp_
     got_records2, _ = read_db(spark, out)
     assert got_records2.count() == 2 * len(pdf)
     assert got_records2.filter("station = 'LAX'").count() == len(pdf)
-    # the conf flip is scoped: static default restored after the call
+    # the dynamic mode is a writer option: the session conf keeps its
+    # static default
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
 
 
