@@ -1,4 +1,6 @@
-"""Text-analysis expression builders: tokenization, k-shingling, MinHash,
+"""Text-analysis expression builders: tokenization, k-shingling, MinHash
+and its LSH primitives (:func:`minhash_bands`, the band table, and
+:func:`band_pairs`, the band-bucket join every near-dup path runs),
 SimHash, and language scoring — all pure ``pyspark.sql.functions`` column
 math (JVM-side, whole-stage-codegen'd; no Python boundary).
 
@@ -143,6 +145,50 @@ def band_key_exprs(
         )
         for b in range(n // rows_per_band)
     ]
+
+
+def minhash_sig(sh: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh11): the MinHash signature of every document in a
+    (doc_id, sh) shingle table — one digest per row, then one groupBy whose
+    lanes partial-aggregate map-side. ``min()`` ignores duplicate rows, so
+    a table built with ``distinct=False`` gives the same signatures."""
+    return with_token_hash(sh).groupBy("doc_id").agg(*minhash_agg_exprs())
+
+
+def minhash_bands(sh: DataFrame) -> DataFrame:
+    """(doc_id, band, bk): the LSH band table of a (doc_id, sh) shingle
+    table, one row per document and band — the input of :func:`band_pairs`."""
+    return minhash_sig(sh).select(
+        "doc_id", F.posexplode(F.array(*band_key_exprs())).alias("band", "bk")
+    )
+
+
+def band_pairs(
+    a: DataFrame,
+    b: DataFrame | None = None,
+    key: str = "doc_id",
+    out: tuple[str, str] = ("doc_a", "doc_b"),
+) -> DataFrame:
+    """DISTINCT (out[0], out[1]) pairs of rows that share a (band, bk)
+    bucket of two band tables keyed by ``key`` — the LSH candidate join.
+
+    With ``b=None`` it is the self-join of ``a`` under ``a.key < b.key``,
+    so each unordered pair appears once; both sides are one lineage, so
+    the second side reuses the first side's exchanges (ReusedExchange,
+    pinned for the MinHash and the embedding band joins in
+    tests/test_extensions.py). Otherwise ``a`` (a batch) probes ``b`` (a
+    corpus) and every matching pair is kept. One equi-join on (band, bk),
+    then one distinct: a pair that collides in several bands is emitted
+    once."""
+    on = (F.col("a.band") == F.col("b.band")) & (F.col("a.bk") == F.col("b.bk"))
+    if b is None:
+        b, on = a, on & (F.col(f"a.{key}") < F.col(f"b.{key}"))
+    return (
+        a.alias("a")
+        .join(b.alias("b"), on)
+        .select(F.col(f"a.{key}").alias(out[0]), F.col(f"b.{key}").alias(out[1]))
+        .distinct()
+    )
 
 
 def simhash_agg(tokens: DataFrame) -> DataFrame:

@@ -1,15 +1,17 @@
 """Shared machinery for the §2.11 extension-surface family modules:
-LSH/shingle oracle CTE fragments (kept in lockstep with functions/text.py),
-the candidates-only Jaccard verify stack, and the md5 hash-to-integer SQL
-helpers every family reuses.  Split out of the former monolithic
-extensions.py (round 12); seisdb_spark.queries.extensions re-exports
-everything, so external imports are unchanged."""
+LSH/shingle oracle CTE fragments (kept in lockstep with functions/text.py:
+``_shingle_cte``, ``_SIG_CTE``, ``_BANDS_CTE``, ``_cand_cte`` — the twin of
+``band_pairs`` — and ``_SCORED_CTE``), the candidates-only Jaccard verify
+stack (``_lsh_candidates`` and ``_jaccard_on_candidates``, both over
+``minhash_bands`` + ``band_pairs``; ``_verify_jaccard``), and the md5
+hash-to-integer SQL helpers every family reuses.  Split out of the former
+monolithic extensions.py (round 12); seisdb_spark.queries.extensions
+re-exports everything, so external imports are unchanged."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from seisdb_spark.sources.tables import spread
 from seisdb_spark.functions.text import (
     MINHASH_A,
     MINHASH_B,
@@ -18,10 +20,9 @@ from seisdb_spark.functions.text import (
     N_MINHASH,
     ROWS_PER_BAND,
     SHINGLE_K,
-    band_key_exprs,
-    minhash_agg_exprs,
+    band_pairs,
+    minhash_bands,
     shingle_tokens,
-    with_token_hash,
 )
 
 
@@ -55,19 +56,25 @@ _TOK_CTE = """
     )
 """
 
-def _shingle_cte(src: str = "documents") -> str:
-    """The word-k-shingle CTE over any source relation carrying
-    (doc_id, text) — lockstep with functions/text.py::shingle_tokens."""
+def _shingle_cte(
+    src: str = "documents",
+    k: int = SHINGLE_K,
+    name: str = "shingle",
+    id_col: str = "doc_id",
+) -> str:
+    """CTEs ``{name}_starts`` and ``{name}(id_col, sh)``: the distinct word
+    k-shingles of any source relation carrying (doc_id, text) — lockstep
+    with functions/text.py::shingle_tokens."""
     return f"""
-    starts AS (
+    {name}_starts AS (
         SELECT doc_id, w,
-               unnest(generate_series(1, greatest(len(w) - {SHINGLE_K - 1}, 0))) AS i
+               unnest(generate_series(1, greatest(len(w) - {k - 1}, 0))) AS i
         FROM (SELECT doc_id, string_split(text, ' ') AS w FROM {src})
     ),
-    shingle AS (
-        SELECT DISTINCT doc_id,
-               {" || ' ' || ".join(f"w[i + {j}]" for j in range(SHINGLE_K))} AS sh
-        FROM starts
+    {name} AS (
+        SELECT DISTINCT doc_id AS {id_col},
+               {" || ' ' || ".join(f"w[i + {j}]" for j in range(k))} AS sh
+        FROM {name}_starts
     )
 """
 
@@ -128,49 +135,66 @@ _BANDS_CTE = (
     + "\n    )"
 )
 
-_CAND_CTE = """
+
+def _cand_cte(pair: str = "a.doc_id < b.doc_id") -> str:
+    """``cand(doc_a, doc_b)``: the band-bucket join of ``bands`` with itself
+    under ``pair`` — the oracle twin of functions/text.py::band_pairs."""
+    return f"""
     cand AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id
+          ON a.band = b.band AND a.bk = b.bk AND {pair}
+    )
+"""
+
+
+_CAND_CTE = _cand_cte()
+_LSH_CTES = ",".join((_SHINGLE_CTE, _SIG_CTE, _BANDS_CTE, _CAND_CTE))
+
+# scored(doc_a, doc_b, jaccard): exact shingle Jaccard of every cand pair,
+# unrounded — the oracle twin of _verify_jaccard
+_SCORED_CTE = """
+    cnt AS (SELECT doc_id, count(*) AS n_sh FROM shingle GROUP BY doc_id),
+    shared AS (
+        SELECT c.doc_a, c.doc_b, count(*) AS n_shared
+        FROM cand c
+        JOIN shingle ta ON ta.doc_id = c.doc_a
+        JOIN shingle tb ON tb.doc_id = c.doc_b AND tb.sh = ta.sh
+        GROUP BY c.doc_a, c.doc_b
+    ),
+    scored AS (
+        SELECT doc_a, doc_b,
+               CAST(n_shared AS DOUBLE) / (ca.n_sh + cb.n_sh - n_shared) AS jaccard
+        FROM shared
+        JOIN cnt ca ON shared.doc_a = ca.doc_id
+        JOIN cnt cb ON shared.doc_b = cb.doc_id
     )
 """
 
 
 def _jaccard_on_candidates(docs: DataFrame) -> DataFrame:
-    """Exact shingle-Jaccard scored ONLY on LSH candidate pairs, built so the
-    shingle explode runs ONCE: signatures, band join, set sizes, and the
-    intersection count all consume the same distinct-shingle DataFrame, and
-    every branch's plan bottoms out at the same distinct Exchange, which
-    Spark de-duplicates (ReusedExchange).  (``min()`` is duplicate-
-    insensitive, so signatures over the distinct table equal
-    :func:`_lsh_candidates`'s.)
+    """Exact shingle-Jaccard scored ONLY on LSH candidate pairs of ``docs``
+    (callers pass it through ``spread``).  Signatures, band join, set sizes
+    and the intersection count all consume one distinct-shingle DataFrame
+    (``min()`` ignores duplicates, so the signatures equal
+    :func:`_lsh_candidates`'s).
 
-    The verify stage never touches non-candidate shingles: the shingle table
-    is semi-filtered through the broadcast candidate-doc set before the
-    intersection join, so verify cost scales with the (tiny, when LSH prunes
-    well) candidate set rather than the corpus — at sf0.1 that is 486 of
-    5000 docs; at 100 TB it is the difference between a corpus-sized
-    shuffle and a candidate-sized one.  Returns (doc_a, doc_b, jaccard)
-    unrounded.
+    The shingle explode still runs more than once in the executed plan.
+    Over a plain documents scan (dedup_jaccard_pairs) the table is read
+    once, and the corpus-wide explode, the one feeding the signatures,
+    runs once.  The verify stage semi-filters the shingle table
+    through the broadcast candidate-doc set, and Catalyst pushes that
+    LeftSemi below the distinct and the explode: each of the verify
+    branches (set sizes, both sides of the intersection join) re-explodes
+    only the candidate docs, over reused ``[doc_id, text]`` and
+    ``[doc_id, w]`` exchanges.  So verify cost scales with the candidate
+    set (486 of 5000 docs at sf0.1), not the corpus — at 100 TB that is
+    the difference between a corpus-sized shuffle and a candidate-sized
+    one.  Pinned by ``test_jaccard_on_candidates_explodes_the_corpus_once``.
+    Returns (doc_a, doc_b, jaccard) unrounded.
     """
     sh = shingle_tokens(docs)
-    sig = with_token_hash(sh).groupBy("doc_id").agg(*minhash_agg_exprs())
-    bands = sig.select(
-        "doc_id", F.posexplode(F.array(*band_key_exprs())).alias("band", "bk")
-    )
-    ba, bb = bands.alias("a"), bands.alias("b")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    return _verify_jaccard(sh, cand)
+    return _verify_jaccard(sh, band_pairs(minhash_bands(sh)))
 
 
 def _verify_jaccard(sh: DataFrame, cand: DataFrame) -> DataFrame:
@@ -205,24 +229,12 @@ def _verify_jaccard(sh: DataFrame, cand: DataFrame) -> DataFrame:
 
 
 def _lsh_candidates(docs: DataFrame) -> DataFrame:
-    """shingle -> minhash -> band -> ONE bucket self-join.
+    """shingle -> minhash -> band -> ONE bucket self-join over ``docs``
+    (callers pass it through ``spread``).
 
-    The self-join's two sides share one computation of the signature table:
-    both sides' plans end at identical Exchanges, which Spark de-duplicates
-    (ReusedExchange) — round 1 recomputed the signature lineage 4x."""
-    sh = shingle_tokens(spread(docs), distinct=False)  # min() absorbs dups
-    sig = with_token_hash(sh).groupBy("doc_id").agg(*minhash_agg_exprs())
-    bands = sig.select(
-        "doc_id", F.posexplode(F.array(*band_key_exprs())).alias("band", "bk")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    The self-join's two sides share one computation of the signature
+    table: the executed plan has one documents scan and one shingle
+    explode, and the second side reads the signature aggregate's Exchange
+    as a ReusedExchange — round 1 recomputed the signature lineage 4x.
+    Pinned by ``test_lsh_candidates_share_one_signature_exchange``."""
+    return band_pairs(minhash_bands(shingle_tokens(docs, distinct=False)))

@@ -16,8 +16,9 @@ from seisdb_spark.functions.text import (
     N_MINHASH,
     ROWS_PER_BAND,
     SHINGLE_K,
-    band_key_exprs,
-    minhash_agg_exprs,
+    band_pairs,
+    minhash_bands,
+    minhash_sig,
     shingle_tokens,
     with_token_hash,
 )
@@ -41,8 +42,11 @@ from seisdb_spark.queries.ext_common import (
     STOPWORD_PATTERN,
     _BANDS_CTE,
     _CAND_CTE,
+    _LSH_CTES,
+    _SCORED_CTE,
     _SHINGLE_CTE,
     _SIG_CTE,
+    _cand_cte,
     _hash32_sql,
     _hash_bucket_sql,
     _jaccard_on_candidates,
@@ -299,17 +303,14 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "groupBy is one shuffle; lanes partial-aggregate map-side.",
 )
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = shingle_tokens(spread(load_table(spark, sf_dir, "documents")), distinct=False)
-    return with_token_hash(sh).groupBy("doc_id").agg(*minhash_agg_exprs())
+    docs = spread(load_table(spark, sf_dir, "documents"))
+    return minhash_sig(shingle_tokens(docs, distinct=False))
 
 
 @query(
     "minhash_lsh_candidates",
     oracle=f"""
-        WITH {_SHINGLE_CTE},
-        {_SIG_CTE},
-        {_BANDS_CTE},
-        {_CAND_CTE}
+        WITH {_LSH_CTES}
         SELECT doc_a, doc_b FROM cand
     """,
     doc=f"MinHash-LSH candidate pairs: {SHINGLE_K}-shingles -> {N_MINHASH} "
@@ -322,32 +323,15 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _lsh_candidates(load_table(spark, sf_dir, "documents"))
+    return _lsh_candidates(spread(load_table(spark, sf_dir, "documents")))
 
 
 @query(
     "dedup_jaccard_pairs",
     oracle=f"""
-        WITH {_SHINGLE_CTE},
-        {_SIG_CTE},
-        {_BANDS_CTE},
-        {_CAND_CTE},
-        cnt AS (SELECT doc_id, count(*) AS n_sh FROM shingle GROUP BY doc_id),
-        shared AS (
-            SELECT c.doc_a, c.doc_b, count(*) AS n_shared
-            FROM cand c
-            JOIN shingle ta ON ta.doc_id = c.doc_a
-            JOIN shingle tb ON tb.doc_id = c.doc_b AND tb.sh = ta.sh
-            GROUP BY c.doc_a, c.doc_b
-        )
-        SELECT doc_a, doc_b,
-               round(CAST(n_shared AS DOUBLE) / (ca.n_sh + cb.n_sh - n_shared), 4)
-                   AS jaccard
-        FROM shared
-        JOIN cnt ca ON shared.doc_a = ca.doc_id
-        JOIN cnt cb ON shared.doc_b = cb.doc_id
-        WHERE CAST(n_shared AS DOUBLE) / (ca.n_sh + cb.n_sh - n_shared)
-              >= {JACCARD_THRESHOLD}
+        WITH {_LSH_CTES}, {_SCORED_CTE}
+        SELECT doc_a, doc_b, round(jaccard, 4) AS jaccard
+        FROM scored WHERE jaccard >= {JACCARD_THRESHOLD}
     """,
     doc=f"Near-dup verification: exact {SHINGLE_K}-shingle Jaccard computed "
     "ONLY on LSH candidate pairs (the round-1 version token-self-joined the "
@@ -363,29 +347,11 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "dedup_cluster_components",
-    oracle=f"""
-        WITH RECURSIVE {_SHINGLE_CTE},
-        {_SIG_CTE},
-        {_BANDS_CTE},
-        {_CAND_CTE},
-        cnt AS (SELECT doc_id, count(*) AS n_sh FROM shingle GROUP BY doc_id),
-        shared AS (
-            SELECT c.doc_a, c.doc_b, count(*) AS n_shared
-            FROM cand c
-            JOIN shingle ta ON ta.doc_id = c.doc_a
-            JOIN shingle tb ON tb.doc_id = c.doc_b AND tb.sh = ta.sh
-            GROUP BY c.doc_a, c.doc_b
-        ),
-        ver AS (
-            SELECT doc_a, doc_b
-            FROM shared
-            JOIN cnt ca ON shared.doc_a = ca.doc_id
-            JOIN cnt cb ON shared.doc_b = cb.doc_id
-            WHERE CAST(n_shared AS DOUBLE) / (ca.n_sh + cb.n_sh - n_shared)
-                  >= {JACCARD_THRESHOLD}
-        ),
+# The transitive closure of the verified ``scored`` pairs as ``reach(v, l)``:
+# every doc v of a near-dup component with every label l it reaches; min(l)
+# is the component's canonical doc.
+_REACH_CTE = f"""
+        ver AS (SELECT doc_a, doc_b FROM scored WHERE jaccard >= {JACCARD_THRESHOLD}),
         und AS (
             SELECT doc_a AS src, doc_b AS dst FROM ver
             UNION ALL
@@ -396,6 +362,13 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             UNION
             SELECT u.src, r.l FROM und u JOIN reach r ON r.v = u.dst
         )
+"""
+
+
+@query(
+    "dedup_cluster_components",
+    oracle=f"""
+        WITH RECURSIVE {_LSH_CTES}, {_SCORED_CTE}, {_REACH_CTE}
         SELECT v AS doc_id, min(l) AS canonical_id
         FROM reach
         GROUP BY v
@@ -426,31 +399,10 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_incremental_probe",
     oracle=f"""
-        WITH {_SHINGLE_CTE},
-        {_SIG_CTE},
-        {_BANDS_CTE},
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.bk = b.bk
-            WHERE a.doc_id % 10 = 0 AND b.doc_id % 10 <> 0
-        ),
-        cnt AS (SELECT doc_id, count(*) AS n_sh FROM shingle GROUP BY doc_id),
-        shared AS (
-            SELECT c.doc_a, c.doc_b, count(*) AS n_shared
-            FROM cand c
-            JOIN shingle ta ON ta.doc_id = c.doc_a
-            JOIN shingle tb ON tb.doc_id = c.doc_b AND tb.sh = ta.sh
-            GROUP BY c.doc_a, c.doc_b
-        )
-        SELECT doc_a AS batch_doc, doc_b AS corpus_doc,
-               round(CAST(n_shared AS DOUBLE) / (ca.n_sh + cb.n_sh - n_shared), 4)
-                   AS jaccard
-        FROM shared
-        JOIN cnt ca ON shared.doc_a = ca.doc_id
-        JOIN cnt cb ON shared.doc_b = cb.doc_id
-        WHERE CAST(n_shared AS DOUBLE) / (ca.n_sh + cb.n_sh - n_shared)
-              >= {JACCARD_THRESHOLD}
+        WITH {_SHINGLE_CTE}, {_SIG_CTE}, {_BANDS_CTE},
+        {_cand_cte("a.doc_id % 10 = 0 AND b.doc_id % 10 <> 0")}, {_SCORED_CTE}
+        SELECT doc_a AS batch_doc, doc_b AS corpus_doc, round(jaccard, 4) AS jaccard
+        FROM scored WHERE jaccard >= {JACCARD_THRESHOLD}
     """,
     doc="Incremental-ingest dedup: probe an EXISTING corpus's LSH band index "
     "with a new batch (here: docs with doc_id%10==0 stand in for the "
@@ -463,22 +415,19 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    sh = shingle_tokens(docs)
-    sig = with_token_hash(sh).groupBy("doc_id").agg(*minhash_agg_exprs())
-    bands = sig.select(
-        "doc_id", F.posexplode(F.array(*band_key_exprs())).alias("band", "bk")
+    sh = shingle_tokens(spread(load_table(spark, sf_dir, "documents")))
+    bands = minhash_bands(sh)
+    cand = band_pairs(
+        bands.filter(F.col("doc_id") % 10 == 0), bands.filter(F.col("doc_id") % 10 != 0)
     )
-    batch = bands.filter(F.col("doc_id") % 10 == 0).alias("a")
-    corpus = bands.filter(F.col("doc_id") % 10 != 0).alias("b")
-    cand = (
-        batch.join(
-            corpus,
-            (F.col("a.band") == F.col("b.band")) & (F.col("a.bk") == F.col("b.bk")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return verified_probe_pairs(sh, cand)
+
+
+def verified_probe_pairs(sh: DataFrame, cand: DataFrame) -> DataFrame:
+    """(batch_doc, corpus_doc, jaccard): the batch x corpus candidate pairs
+    ``cand`` whose exact Jaccard over the distinct shingle table ``sh``
+    reaches JACCARD_THRESHOLD, rounded to 4 places — the tail
+    dedup_incremental_probe shares with its streaming twin."""
     return (
         _verify_jaccard(sh, cand)
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
@@ -515,25 +464,9 @@ def _split_name_sql(c: str) -> str:
 @query(
     "split_leakage_audit",
     oracle=f"""
-        WITH {_SHINGLE_CTE},
-        {_SIG_CTE},
-        {_BANDS_CTE},
-        {_CAND_CTE},
-        cnt AS (SELECT doc_id, count(*) AS n_sh FROM shingle GROUP BY doc_id),
-        shared AS (
-            SELECT c.doc_a, c.doc_b, count(*) AS n_shared
-            FROM cand c
-            JOIN shingle ta ON ta.doc_id = c.doc_a
-            JOIN shingle tb ON tb.doc_id = c.doc_b AND tb.sh = ta.sh
-            GROUP BY c.doc_a, c.doc_b
-        ),
+        WITH {_LSH_CTES}, {_SCORED_CTE},
         verified AS (
-            SELECT doc_a, doc_b
-            FROM shared
-            JOIN cnt ca ON shared.doc_a = ca.doc_id
-            JOIN cnt cb ON shared.doc_b = cb.doc_id
-            WHERE CAST(n_shared AS DOUBLE) / (ca.n_sh + cb.n_sh - n_shared)
-                  >= {JACCARD_THRESHOLD}
+            SELECT doc_a, doc_b FROM scored WHERE jaccard >= {JACCARD_THRESHOLD}
         ),
         cls AS (
             SELECT doc_id,
@@ -606,52 +539,56 @@ DECON_BENCH_MOD = 10  # doc_id % 10 == 0: a 10% holdout stands in for the eval s
 # The train/bench shingle CTE pair, shared by the decontamination_overlap
 # oracle and the composed curation_keep_set oracle (which applies the same
 # drop as a gate stage) — one definition so the two can't drift.
-_DECON_SH_CTES = f"""
-        train_starts AS (
-            SELECT doc_id, w,
-                   unnest(generate_series(1, greatest(len(w) - {DECON_SHINGLE_K - 1}, 0))) AS i
-            FROM (SELECT doc_id, string_split(text, ' ') AS w
-                  FROM documents WHERE doc_id % {DECON_BENCH_MOD} <> 0)
-        ),
-        train_sh AS (
-            SELECT DISTINCT doc_id,
-                   {" || ' ' || ".join(f"w[i + {j}]" for j in range(DECON_SHINGLE_K))} AS sh
-            FROM train_starts
-        ),
-        bench_starts AS (
-            SELECT doc_id, w,
-                   unnest(generate_series(1, greatest(len(w) - {DECON_SHINGLE_K - 1}, 0))) AS i
-            FROM (SELECT doc_id, string_split(text, ' ') AS w
-                  FROM documents WHERE doc_id % {DECON_BENCH_MOD} = 0)
-        ),
-        bench_sh AS (
-            SELECT DISTINCT doc_id AS bench_id,
-                   {" || ' ' || ".join(f"w[i + {j}]" for j in range(DECON_SHINGLE_K))} AS sh
-            FROM bench_starts
-        )
-"""
+_DECON_SH_CTES = ",".join((
+    _shingle_cte(
+        f"documents WHERE doc_id % {DECON_BENCH_MOD} <> 0", DECON_SHINGLE_K, "train_sh"
+    ),
+    _shingle_cte(
+        f"documents WHERE doc_id % {DECON_BENCH_MOD} = 0",
+        DECON_SHINGLE_K,
+        "bench_sh",
+        "bench_id",
+    ),
+))
+
+
+def decon_bench_sh(docs: DataFrame) -> DataFrame:
+    """(bench_id, sh): the distinct 8-shingles of the benchmark docs
+    (doc_id % DECON_BENCH_MOD == 0 stands in for an eval suite) — the side
+    every decontamination join BROADCASTS, since eval suites are MBs
+    against a 100 TB corpus.  Distinct shrinks the broadcast."""
+    bench = docs.filter(F.col("doc_id") % DECON_BENCH_MOD == 0)
+    return shingle_tokens(bench, k=DECON_SHINGLE_K).select(
+        F.col("doc_id").alias("bench_id"), "sh"
+    )
+
+
+def decon_train_sh(docs: DataFrame) -> DataFrame:
+    """(doc_id, sh): the training docs' 8-shingles, the side that streams
+    through the broadcast join.  Not distinct: deduping (doc_id, sh) would
+    shuffle the full corpus shingle table before the join, and every
+    consumer dedups AFTER the (tiny) hit set exists — the overlap report
+    via countDistinct, the curate() gate via doc_id distinct."""
+    train = docs.filter(F.col("doc_id") % DECON_BENCH_MOD != 0)
+    return shingle_tokens(train, k=DECON_SHINGLE_K, distinct=False)
+
+
+def decon_report(hits: DataFrame) -> DataFrame:
+    """The per-train-doc overlap report of a (sh, doc_id, bench_id) hit
+    set: distinct shared shingles and distinct benchmark docs hit.  Only
+    the hit set shuffles."""
+    return hits.groupBy("doc_id").agg(
+        F.countDistinct("sh").alias("n_shared_shingles"),
+        F.countDistinct("bench_id").alias("n_bench_docs"),
+    )
 
 
 def decon_join(docs: DataFrame) -> DataFrame:
     """The train-x-benchmark shingle hit set: (sh, doc_id, bench_id) rows,
-    one per train-doc 8-shingle colliding with a benchmark shingle.  The
-    benchmark side (doc_id % {mod} == 0 stands in for an eval suite) is
-    BROADCAST — eval suites are MBs against a 100 TB corpus — so the train
-    side streams through a map-side hash join.  Shared by the standalone
-    overlap report and curate()'s decontamination gate."""
-    is_bench = F.col("doc_id") % DECON_BENCH_MOD == 0
-    bench_sh = shingle_tokens(docs.filter(is_bench), k=DECON_SHINGLE_K).select(
-        F.col("doc_id").alias("bench_id"), "sh"
-    )
-    # distinct=False on the TRAIN side: deduping (doc_id, sh) would shuffle
-    # the full corpus shingle table before the broadcast join, and every
-    # consumer already dedups AFTER the (tiny) hit set exists — the overlap
-    # report via countDistinct, the curate() gate via doc_id distinct.  The
-    # bench side keeps distinct (it shrinks the broadcast and is eval-sized).
-    train_sh = shingle_tokens(
-        docs.filter(~is_bench), k=DECON_SHINGLE_K, distinct=False
-    )
-    return train_sh.join(F.broadcast(bench_sh), "sh")
+    one per train-doc 8-shingle colliding with a benchmark shingle, by a
+    map-side hash join against the broadcast benchmark side.  Shared by
+    the standalone overlap report and curate()'s decontamination gate."""
+    return decon_train_sh(docs).join(F.broadcast(decon_bench_sh(docs)), "sh")
 
 
 @query(
@@ -676,11 +613,7 @@ def decon_join(docs: DataFrame) -> DataFrame:
     bench=True,
 )
 def decontamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return decon_join(docs).groupBy("doc_id").agg(
-        F.countDistinct("sh").alias("n_shared_shingles"),
-        F.countDistinct("bench_id").alias("n_bench_docs"),
-    )
+    return decon_report(decon_join(spread(load_table(spark, sf_dir, "documents"))))
 
 
 @query(
@@ -713,34 +646,22 @@ def bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    is_bench = F.col("doc_id") % DECON_BENCH_MOD == 0
-    bench_sh = shingle_tokens(docs.filter(is_bench), k=DECON_SHINGLE_K).select(
-        F.col("doc_id").alias("bench_id"), "sh"
-    )
+    bench_sh = decon_bench_sh(docs)
     bench_keys = bench_sh.select("sh").distinct()
     # one eval-sized count sizes the filter (the ann_signbucket adaptive-
     # width pattern); the bench side is re-derived inside the final plan —
     # it is MBs against the corpus, and production would persist it
     m_bits = bloom_bits_for(max(bench_keys.count(), 1))
     words = build_bloom(bench_keys, "sh", m_bits)
-    train_sh = shingle_tokens(
-        docs.filter(~is_bench), k=DECON_SHINGLE_K, distinct=False
-    )
     cand = (
-        train_sh.crossJoin(F.broadcast(words))
+        decon_train_sh(docs)
+        .crossJoin(F.broadcast(words))
         .filter(
             bloom_hit(F.col("words"), F.col("sh"), built_k=F.col("bloom_k"))
         )
         .drop("words", "bloom_k")
     )
-    return (
-        cand.join(F.broadcast(bench_sh), "sh")
-        .groupBy("doc_id")
-        .agg(
-            F.countDistinct("sh").alias("n_shared_shingles"),
-            F.countDistinct("bench_id").alias("n_bench_docs"),
-        )
-    )
+    return decon_report(cand.join(F.broadcast(bench_sh), "sh"))
 
 
 def _share_bloom_decon_oracle() -> None:
@@ -1001,25 +922,10 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "curation_pipeline_stats",
     oracle=f"""
-        WITH {_SHINGLE_CTE},
-        {_SIG_CTE},
-        {_BANDS_CTE},
-        {_CAND_CTE},
-        cnt AS (SELECT doc_id, count(*) AS n_sh FROM shingle GROUP BY doc_id),
-        shared AS (
-            SELECT c.doc_a, c.doc_b, count(*) AS n_shared
-            FROM cand c
-            JOIN shingle ta ON ta.doc_id = c.doc_a
-            JOIN shingle tb ON tb.doc_id = c.doc_b AND tb.sh = ta.sh
-            GROUP BY c.doc_a, c.doc_b
-        ),
+        WITH {_LSH_CTES}, {_SCORED_CTE},
         losers AS (
-            SELECT DISTINCT doc_b AS doc_id
-            FROM shared
-            JOIN cnt ca ON shared.doc_a = ca.doc_id
-            JOIN cnt cb ON shared.doc_b = cb.doc_id
-            WHERE CAST(n_shared AS DOUBLE) / (ca.n_sh + cb.n_sh - n_shared)
-                  >= {JACCARD_THRESHOLD}
+            SELECT DISTINCT doc_b AS doc_id FROM scored
+            WHERE jaccard >= {JACCARD_THRESHOLD}
         ),
         kept AS (
             SELECT doc_id, lang, text
@@ -1118,36 +1024,8 @@ CURATION_MAX_STOPWORD_RATIO = 0.5
                 FROM gated
             ) WHERE rn = 1
         ),
-        {_shingle_cte("exact")},
-        {_SIG_CTE},
-        {_BANDS_CTE},
-        {_CAND_CTE},
-        cnt AS (SELECT doc_id, count(*) AS n_sh FROM shingle GROUP BY doc_id),
-        shared AS (
-            SELECT c.doc_a, c.doc_b, count(*) AS n_shared
-            FROM cand c
-            JOIN shingle ta ON ta.doc_id = c.doc_a
-            JOIN shingle tb ON tb.doc_id = c.doc_b AND tb.sh = ta.sh
-            GROUP BY c.doc_a, c.doc_b
-        ),
-        ver AS (
-            SELECT doc_a, doc_b
-            FROM shared
-            JOIN cnt ca ON shared.doc_a = ca.doc_id
-            JOIN cnt cb ON shared.doc_b = cb.doc_id
-            WHERE CAST(n_shared AS DOUBLE) / (ca.n_sh + cb.n_sh - n_shared)
-                  >= {JACCARD_THRESHOLD}
-        ),
-        und AS (
-            SELECT doc_a AS src, doc_b AS dst FROM ver
-            UNION ALL
-            SELECT doc_b AS src, doc_a AS dst FROM ver
-        ),
-        reach (v, l) AS (
-            SELECT src, src FROM und
-            UNION
-            SELECT u.src, r.l FROM und u JOIN reach r ON r.v = u.dst
-        ),
+        {_shingle_cte("exact")}, {_SIG_CTE}, {_BANDS_CTE}, {_CAND_CTE},
+        {_SCORED_CTE}, {_REACH_CTE},
         losers AS (SELECT v FROM reach GROUP BY v HAVING min(l) <> v)
         SELECT doc_id, lang FROM exact
         WHERE doc_id NOT IN (SELECT v FROM losers)
@@ -1205,10 +1083,7 @@ EDITDIST_FULL_BOUND = EDITDIST_FULL_CAP // 4  # banded-DP cutoff (-1 past)
 @query(
     "editdist_neardup_join",
     oracle=f"""
-        WITH {_SHINGLE_CTE},
-        {_SIG_CTE},
-        {_BANDS_CTE},
-        {_CAND_CTE},
+        WITH {_LSH_CTES},
         txt AS (
             SELECT doc_id, substr(text, 1, {EDITDIST_PREFIX}) AS p,
                    CASE WHEN length(text) <= {EDITDIST_FULL_CAP}

@@ -12,6 +12,7 @@ from pyspark.sql import (
 from pyspark.sql import functions as F
 from seisdb_spark.queries.registry import REGISTRY, query
 from seisdb_spark.sources.tables import load_table, spread
+from seisdb_spark.functions.text import band_pairs
 from seisdb_spark.functions.vectors import (
     EMBEDDING_DIM,
     MAX_SIGN_BITS,
@@ -246,7 +247,8 @@ def neardup_band_candidates(
     """Banded sign-bit LSH candidate generation for embedding near-dup.
 
     Returns ``(sb, cand)``: the per-vector sign-string/norm projection and the
-    DISTINCT candidate pairs agreeing in any band.  Shared by the production
+    DISTINCT candidate pairs agreeing in any band (:func:`band_pairs`, the
+    MinHash-LSH paths' band join, keyed by vec_id).  Shared by the production
     query and the two-scale probe-shrinkage test so the test measures the
     exact production blocking stage, not a re-derivation.
     """
@@ -274,18 +276,7 @@ def neardup_band_candidates(
             .alias("bk"),
         )
     )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
-    return sb, cand
+    return sb, band_pairs(bands, key="vec_id", out=("vec_a", "vec_b"))
 
 
 @query(

@@ -21,7 +21,10 @@ Scale notes (the round-1 verdict's fix list, addressed):
   * MinHash-LSH is real LSH now: word 3-shingles, 12 hashes in 4 bands x 3
     rows, ONE band-bucket self-join over an exploded band table whose
     lineage both join sides share via ReusedExchange — candidate rate at
-    sf0.01 drops from 74% of all pairs to 0.02%.
+    sf0.01 drops from 74% of all pairs to 0.02%.  Every LSH path builds
+    it from functions/text.py's ``minhash_bands`` (the band table) and
+    ``band_pairs`` (the join); every decontamination path from
+    ext_dedup's ``decon_bench_sh``/``decon_train_sh``/``decon_report``.
   * Jaccard verification runs ONLY on LSH candidate pairs (no quadratic
     token self-join).
   * top-k rankings use orderBy().limit(k) — Spark plans TakeOrderedAndProject

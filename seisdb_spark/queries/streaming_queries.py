@@ -186,23 +186,9 @@ def streaming_incremental_dedup(
 ) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from seisdb_spark.functions.text import (
-        band_key_exprs,
-        minhash_agg_exprs,
-        shingle_tokens,
-        with_token_hash,
-    )
-    from seisdb_spark.queries.extensions import (
-        JACCARD_THRESHOLD,
-        _verify_jaccard,
-    )
+    from seisdb_spark.functions.text import band_pairs, minhash_bands, shingle_tokens
+    from seisdb_spark.queries.extensions import verified_probe_pairs
     from seisdb_spark.sources.tables import load_table
-
-    def bands_of(sh):
-        sig = with_token_hash(sh).groupBy("doc_id").agg(*minhash_agg_exprs())
-        return sig.select(
-            "doc_id", F.posexplode(F.array(*band_key_exprs())).alias("band", "bk")
-        )
 
     corpus = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 0)
     # The corpus index must be computed ONCE and reused across microbatches
@@ -210,29 +196,12 @@ def streaming_incremental_dedup(
     # persist both the shingle table and the band index; production would
     # write the band index as a bucketed parquet table instead.
     corpus_sh = shingle_tokens(corpus).persist()
-    corpus_bands = bands_of(corpus_sh).persist()
+    corpus_bands = minhash_bands(corpus_sh).persist()
 
     def pairs(bdf: DataFrame) -> DataFrame:
         bsh = shingle_tokens(bdf.filter(F.col("doc_id") % 10 == 0))
-        cand = (
-            bands_of(bsh)
-            .alias("a")
-            .join(
-                corpus_bands.alias("b"),
-                (F.col("a.band") == F.col("b.band")) & (F.col("a.bk") == F.col("b.bk")),
-            )
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .distinct()
-        )
-        return (
-            _verify_jaccard(corpus_sh.unionByName(bsh), cand)
-            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-            .select(
-                F.col("doc_a").alias("batch_doc"),
-                F.col("doc_b").alias("corpus_doc"),
-                F.round("jaccard", 4).alias("jaccard"),
-            )
-        )
+        cand = band_pairs(minhash_bands(bsh), corpus_bands)
+        return verified_probe_pairs(corpus_sh.unionByName(bsh), cand)
 
     [out] = run_logs(
         read_table_stream(spark, sf_dir, "documents"),
@@ -363,34 +332,17 @@ def streaming_decontamination(
 ) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from seisdb_spark.functions.text import shingle_tokens
-    from seisdb_spark.queries.extensions import DECON_BENCH_MOD, DECON_SHINGLE_K
+    from seisdb_spark.queries.extensions import (
+        decon_bench_sh,
+        decon_report,
+        decon_train_sh,
+    )
     from seisdb_spark.sources.tables import load_table
 
-    is_bench = F.col("doc_id") % DECON_BENCH_MOD == 0
-    bench_sh = (
-        shingle_tokens(
-            load_table(spark, sf_dir, "documents").filter(is_bench),
-            k=DECON_SHINGLE_K,
-        )
-        .select(F.col("doc_id").alias("bench_id"), "sh")
-        .persist()
-    )
+    bench_sh = decon_bench_sh(load_table(spark, sf_dir, "documents")).persist()
 
     def hits(bdf: DataFrame) -> DataFrame:
-        # distinct=False: the countDistinct aggregate dedups after the tiny
-        # hit set exists — same redundant-shuffle removal as decon_join
-        batch_sh = shingle_tokens(
-            bdf.filter(~is_bench), k=DECON_SHINGLE_K, distinct=False
-        )
-        return (
-            batch_sh.join(F.broadcast(bench_sh), "sh")
-            .groupBy("doc_id")
-            .agg(
-                F.countDistinct("sh").alias("n_shared_shingles"),
-                F.countDistinct("bench_id").alias("n_bench_docs"),
-            )
-        )
+        return decon_report(decon_train_sh(bdf).join(F.broadcast(bench_sh), "sh"))
 
     [out] = run_logs(
         read_table_stream(spark, sf_dir, "documents"),

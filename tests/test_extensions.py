@@ -9,6 +9,7 @@ these tests assert the *quality* properties the oracles can't express.
 from __future__ import annotations
 
 import itertools
+import re
 
 import numpy as np
 import pandas as pd
@@ -249,6 +250,106 @@ def test_neardup_band_self_join_reuses_exchange(spark):
     df = REGISTRY["embedding_neardup_pairs"].spark(spark, SF_DIR)
     df.collect()
     assert has_node(final_plan(df), "ReusedExchange")
+
+
+# the 3-shingle explode of functions/text.py::shingle_tokens, as the
+# executed plan prints it
+_SHINGLE_GENERATE = re.compile(
+    r"Generate explode\(transform\(sequence\(1, \(size\(w#\d+, false\) - "
+    rf"{SHINGLE_K - 1}\)"
+)
+
+
+def _subtrees(plan: str, pattern: re.Pattern) -> list[str]:
+    """Each node line of a tree-string plan that matches ``pattern``,
+    together with the indented lines of the subtree under it."""
+    lines = plan.splitlines()
+    depth = lambda line: len(line) - len(line.lstrip(" :+-"))  # noqa: E731
+    out = []
+    for i, line in enumerate(lines):
+        if pattern.search(line):
+            j = i + 1
+            while j < len(lines) and depth(lines[j]) > depth(line):
+                j += 1
+            out.append("\n".join(lines[i:j]))
+    return out
+
+
+def test_lsh_candidates_share_one_signature_exchange(spark):
+    """The band self-join of ``_lsh_candidates`` computes the signature
+    table once: one documents scan, one shingle explode, and the second
+    join side reads the signature aggregate's Exchange as a
+    ReusedExchange."""
+    from seisdb_spark.plancheck import final_plan, run_plan
+
+    df = REGISTRY["minhash_lsh_candidates"].spark(spark, SF_DIR)
+    run_plan(df)
+    plan = final_plan(df)
+    assert plan.count("FileScan parquet") == 1
+    assert len(_SHINGLE_GENERATE.findall(plan)) == 1
+    assert re.search(
+        r"ReusedExchange \[doc_id#\d+L, min#\d+L.*Exchange hashpartitioning\(doc_id", plan
+    )
+
+
+@pytest.mark.parametrize(
+    ("name", "n_scans"), [("dedup_jaccard_pairs", 1), ("curation_keep_set", 4)]
+)
+def test_jaccard_on_candidates_explodes_the_corpus_once(spark, name, n_scans):
+    """``_jaccard_on_candidates`` explodes the whole corpus into shingles
+    once, for the signatures.  Its three verify branches (set sizes, both
+    sides of the intersection join) each re-explode only the candidate
+    docs: their Generate sits above the LeftSemi join with the broadcast
+    candidate set.  curation_keep_set reads the documents table 4 times
+    because its decontamination and gate filters are pushed into
+    separate scans."""
+    from seisdb_spark.plancheck import final_plan, run_plan
+
+    df = REGISTRY[name].spark(spark, SF_DIR)
+    run_plan(df)
+    plan = final_plan(df)
+    assert plan.count("FileScan parquet") == n_scans
+    semi = ["LeftSemi" in t for t in _subtrees(plan, _SHINGLE_GENERATE)]
+    assert sorted(semi) == [False, True, True, True]
+
+
+DEGENERATE_DOCS = {
+    "empty": [],
+    "short": [(1, "en", ""), (2, "en", "one"), (3, "en", "a b"), (10, "en", "a b")],
+    "duplicate": [(1, "en", "a b c d"), (2, "en", "a b c d")],
+}
+
+
+@pytest.mark.parametrize("case", sorted(DEGENERATE_DOCS))
+def test_near_dup_primitives_on_degenerate_docs(spark, case):
+    """The LSH band join, the Jaccard verify, the decontamination join and
+    curate() hold under the session's ANSI settings on inputs the fixtures
+    never contain: no documents; 0/1/2-word documents (fewer words than a
+    shingle, a benchmark doc among them); and one exact-duplicate pair,
+    which is a candidate with Jaccard 1.0.  None gives a decontamination
+    hit or a kept doc (the duplicate pair is shorter than the curation
+    length gate)."""
+    from seisdb_spark.curation import curate
+    from seisdb_spark.functions.graph import cc_auto, cc_exact_lazy
+    from seisdb_spark.queries.extensions import (
+        _jaccard_on_candidates,
+        _lsh_candidates,
+        decon_join,
+        decon_report,
+    )
+    from seisdb_spark.sources.tables import spread
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    docs = spread(
+        spark.createDataFrame(DEGENERATE_DOCS[case], "doc_id long, lang string, text string")
+    )
+    rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+    dup = case == "duplicate"
+    assert rows(_lsh_candidates(docs)) == ([(1, 2)] if dup else [])
+    assert rows(_jaccard_on_candidates(docs)) == ([(1, 2, 1.0)] if dup else [])
+    assert rows(decon_report(decon_join(docs))) == []
+    for cc in (cc_exact_lazy, cc_auto):
+        assert rows(curate(docs, cc=cc)) == []
 
 
 @pytest.mark.parametrize("n_vecs", [64, 4096])
