@@ -1,15 +1,15 @@
 """SGT/DGF build + read pipelines as composable DataFrame transformations.
 
 This is the Spark-first re-expression of the reference's entire reason to
-exist: `/root/reference/seisdb/DSGT.py:40-196` (SGT) and `DDGF.py:40-190`
-(DGF).  The reference materializes a dense ``float32[n_gll, n_step, 3,
-n_para]`` RAM buffer per processor and loops; here the same semantics are a
-declarative plan over long tables — no buffer, no loop, and the only driver
-work is one listing of the snapshot dirs (file names, not data):
+exist: its `seisdb/DSGT.py:40-196` (SGT) and `DDGF.py:40-190` (DGF).
+The reference materializes a dense ``float32[n_gll, n_step, 3, n_para]``
+RAM buffer per processor and loops; here the same semantics are a
+declarative plan over long tables — no buffer, no loop:
 
     ibool element rows (proc, i_spec, gll_ids[125])
       -> P1 27-of-125 positional filter        (posexplode, filter isin)
       -> D1 first-occurrence dedup             (row_number window per gll_id)
+         ... collected: the selected points are driver data
       -> J1 gather                             (broadcast equi-join on cell)
       -> P3 temporal stride + existence        (driver step list; semi-join)
       -> R1/R2 ordered assembly + flatten      (sort_array(collect_list(struct)))
@@ -17,27 +17,35 @@ work is one listing of the snapshot dirs (file names, not data):
       -> A4 start offsets                      (cumulative window per proc)
       -> E4/E5/E6 partitioned parquet + db_meta
 
-Scale posture: the driver lists each force dir once per build (one
-``pathGlobFilter`` directory listing, no Spark job) and keeps the (proc,
-force, step) names as Python data.  The P3 check over that listing gives
-the valid (proc, step) list: the emptiness check, the semi-join's build side
-and db_meta's ``nstep`` all read it as a local relation.  The decode reads
-only the files whose step is in the stride: a ``_metadata.file_name`` filter
-prunes the same frames' file index before any byte is read.  The fact
-side shuffles twice — the groupBy(proc, gll_id) assembly, keyed on the
-natural output key, and the A4 start-offset window, which re-shuffles the
-encoded records (one compressed blob per point) by proc.  The dimension
-sides (selected points, valid steps) are broadcast; the per-force snapshot
+One rule for the build's small tables: they are driver data, and they
+become frames one way, as local relations (:func:`local_frame`; a
+``LocalTableScan``, so collecting or broadcasting one runs no Spark job and
+reads no file).  The reference holds the same tables as Python lists
+(DSGT.py:81-84, 186-194):
+
+  - the valid (proc, step) list: the driver lists each force dir once per
+    build (one ``pathGlobFilter`` directory listing, no Spark job) and the
+    P3 check over those names (:func:`stride_steps`) gives it;
+  - the selected points: :func:`build_records` runs the selection once
+    (the one ibool decode of a build) and collects it through Arrow.  The
+    gather broadcasts them anyway, so this adds no driver memory;
+  - db_meta: one row per proc, built in Python from the per-proc point
+    counts and the step list (:func:`db_meta`).
+
+The decode reads only the snapshot files whose step is in the stride: a
+``_metadata.file_name`` filter prunes the same frames' file index before
+any byte is read.  The records plan reads no ibool file and shuffles
+twice — the groupBy(proc, gll_id) assembly, keyed on the natural output
+key, and the A4 start-offset window, which re-shuffles the encoded records
+(one compressed blob per point) by proc.  The dimension sides (selected
+points, valid steps) are broadcast local relations; the per-force snapshot
 scans are unioned under one decode and semi-joined with the valid steps
 once; encode is embarrassingly parallel per row (pinned by
 tests/test_sgt_pipeline.py::test_build_plan_decodes_snapshots_once_and_semi_joins_once).
-db_meta is computed from the selected points and the step list, not from
-the records, so writing it never re-runs the decode/assemble/encode
-lineage.  At 100 TB each (proc, step, force) snapshot file is one input
-task and AQE handles the rest — nothing below ever sees more than one
-point's series at once.  What differs between SGT and DGF is data:
-``specfem.KINDS``; the batch build and the staged stream share one tail,
-:func:`build_records`.
+At 100 TB each (proc, step, force) snapshot file is one input task and AQE
+handles the rest — nothing below ever sees more than one point's series at
+once.  What differs between SGT and DGF is data: ``specfem.KINDS``; the
+batch build and the staged stream share one tail, :func:`build_records`.
 
 Read path: ``read_db`` reads ``records`` and ``db_meta`` with
 ``DB_SCHEMAS``, the schemas the writer selects its columns from, so building
@@ -62,18 +70,45 @@ Deviations from the reference (documented in SURVEY §7):
 from __future__ import annotations
 
 import zlib
-from collections import defaultdict
+from collections import Counter, defaultdict
 from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from seisdb_spark.schemas import DB_VERSION, ENCODING_LEVEL_DEFAULT, INDEX27, REORDER27
 from seisdb_spark.sources import specfem
 from seisdb_spark.sources.specfem import KINDS
+
+
+# ---------------------------------------------------------------------------
+# driver data: the build's small tables as local relations
+# ---------------------------------------------------------------------------
+def _schema(ddl: str) -> T.StructType:
+    """A StructType from ``name type, ...`` pairs of Spark SQL type names."""
+    types = {"int": T.IntegerType(), "bigint": T.LongType(), "double": T.DoubleType(),
+             "string": T.StringType(), "binary": T.BinaryType()}
+    pairs = (col.split() for col in ddl.split(","))
+    return T.StructType([T.StructField(name, types[typ]) for name, typ in pairs])
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple], schema) -> DataFrame:
+    """``rows`` (tuples in the column order of ``schema``, a StructType or
+    ``name type, ...`` string) as a local relation.
+    Created from an Arrow table, the frame plans as a ``LocalTableScan``:
+    collecting or broadcasting it runs no Spark job and it reads no file
+    (``createDataFrame`` of a list plans a ``Scan ExistingRDD``, one job per
+    use).  Driver rows hold no null, so every column is non-nullable, as a
+    literal's is."""
+    fields = (_schema(schema) if isinstance(schema, str) else schema).fields
+    schema = T.StructType([T.StructField(f.name, f.dataType, False) for f in fields])
+    rows = [dict(zip(schema.names, r)) for r in rows]
+    return spark.createDataFrame(pa.Table.from_pylist(rows, to_arrow_schema(schema)), schema)
 
 
 # ---------------------------------------------------------------------------
@@ -140,13 +175,13 @@ def valid_steps(
     The reference's DCheck_valid_step (DDBbase.py:55-84) is a driver-side
     os.path.exists loop; here the driver lists each dir once
     (``specfem.snapshot_frames``) and :func:`stride_steps` checks the
-    listed names.  No Spark job runs and no file is read.
+    listed names.  No Spark job runs and no file is read, collect included.
     """
     frames = specfem.snapshot_frames(spark, force_dirs, name_data)
     step_list = stride_steps(
         specfem.snapshot_listing(frames), len(force_dirs), range(step0, step1, dstep)
     )
-    return spark.createDataFrame(step_list, "proc int, step int")
+    return local_frame(spark, step_list, "proc int, step int")
 
 
 # ---------------------------------------------------------------------------
@@ -271,58 +306,6 @@ def add_start_offsets(records: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # E4/E5/E6: partitioned sink + db_meta
 # ---------------------------------------------------------------------------
-def db_meta(
-    points: DataFrame,
-    steps: DataFrame,
-    *,
-    network: str,
-    station: str,
-    kind: str,
-    n_force: int,
-    dt: float,
-    nspec: int,
-) -> DataFrame:
-    """The HDF5 scalar attrs (DSGT.py:186-194) as a per-proc metadata table;
-    ``nparas`` and ``forder`` come from the kind table.  ``proc_name`` is
-    the reference's zero-padded processor prefix (L4, DWidgets.py:9-11) so
-    consumers can resolve original filenames.
-
-    ``ngll`` counts the selected ``points`` of each proc and ``nstep`` its
-    valid ``steps``; the inner join keeps the procs with at least one valid
-    step.  Every snapshot file holds every cell of its proc, so each of
-    those points becomes exactly one record: the meta equals a count over
-    the records without running their lineage."""
-    spec = KINDS[kind]
-    ngll = points.groupBy("proc").agg(F.count(F.lit(1)).alias("ngll"))
-    nstep = steps.groupBy("proc").agg(F.count(F.lit(1)).alias("nstep"))
-    return (
-        ngll.join(nstep, "proc")
-        .select(
-            F.lit(network).alias("network"),
-            F.lit(station).alias("station"),
-            "proc",
-            F.format_string("proc%06d", F.col("proc")).alias("proc_name"),
-            F.col("ngll").cast("long"),
-            F.col("nstep").cast("long"),
-            F.lit(n_force).alias("nforce"),
-            F.lit(len(spec.paras)).alias("nparas"),
-            F.lit(float(dt)).alias("dt"),
-            F.lit(nspec).alias("nspec"),
-            F.lit(kind).alias("kind"),
-            F.lit(spec.forder).alias("forder"),
-            F.lit(DB_VERSION).alias("version"),
-        )
-    )
-
-
-def _schema(ddl: str) -> T.StructType:
-    """A StructType from ``name type, ...`` pairs of Spark SQL type names."""
-    types = {"int": T.IntegerType(), "bigint": T.LongType(), "double": T.DoubleType(),
-             "string": T.StringType(), "binary": T.BinaryType()}
-    pairs = (col.split() for col in ddl.split(","))
-    return T.StructType([T.StructField(name, types[typ]) for name, typ in pairs])
-
-
 #: The two tables of a DB as Parquet returns them: the written columns in
 #: file order, then the (network, station) partition columns.  The writer
 #: selects these columns and ``read_db`` reads with these schemas, so no
@@ -340,21 +323,53 @@ DB_SCHEMAS = {
 }
 
 
+def db_meta(
+    spark: SparkSession, ngll: dict[int, int], step_list: Iterable[tuple[int, int]], *,
+    network: str, station: str, kind: str, n_force: int, dt: float, nspec: int,
+) -> DataFrame:
+    """The HDF5 scalar attrs (DSGT.py:186-194) as a per-proc metadata table,
+    built on the driver as the reference builds them (its ``ngll`` and
+    ``nstep`` are the lengths of lists it holds): a local relation with
+    ``DB_SCHEMAS``'s db_meta schema, sorted by proc.  ``nparas`` and
+    ``forder`` come from the kind table; ``proc_name`` is the reference's
+    zero-padded processor prefix (L4, DWidgets.py:9-11) so consumers can
+    resolve original filenames.
+
+    ``ngll`` maps each proc to its number of selected points and ``nstep``
+    counts its pairs in ``step_list``; a proc gets a row when it has both.
+    Every snapshot file holds every cell of its proc, so each selected
+    point becomes exactly one record: the meta equals a count over the
+    records without running their lineage."""
+    spec = KINDS[kind]
+    nstep = Counter(proc for proc, _step in step_list)
+    rows = [
+        (proc, f"proc{proc:06d}", n, nstep[proc], n_force, len(spec.paras), float(dt), nspec,
+         kind, spec.forder, DB_VERSION, network, station)
+        for proc, n in sorted(ngll.items())
+        if proc in nstep
+    ]
+    return local_frame(spark, rows, DB_SCHEMAS["db_meta"])
+
+
 def _write_partitioned(
     records: DataFrame, meta: DataFrame, path: str, network: str, station: str, **options
 ) -> None:
-    out = records.withColumn("network", F.lit(network)).withColumn("station", F.lit(station))
-    for name, df in (("records", out), ("db_meta", meta)):
-        df.select(*DB_SCHEMAS[name].fieldNames()).write.mode("overwrite").options(
-            **options
-        ).partitionBy("network", "station").parquet(f"{path}/{name}")
+    # both tables land under the writer's labels; the meta, one row per
+    # proc, is one file per station
+    label = {"network": F.lit(network), "station": F.lit(station)}
+    for name, df in (("records", records), ("db_meta", meta.coalesce(1))):
+        df.withColumns(label).select(*DB_SCHEMAS[name].fieldNames()).write.mode(
+            "overwrite"
+        ).options(**options).partitionBy("network", "station").parquet(f"{path}/{name}")
 
 
 def write_db(records: DataFrame, meta: DataFrame, path: str, network: str, station: str) -> None:
     """E4/E5/E6: records partitioned by (network, station) — the reference's
     ``saving_dir/network/station/proc*`` directory layout (DDBbase.py:37-48)
     as Parquet partition pruning — plus the db_meta sidecar table (same
-    partitioning, so appends and station-replaces stay atomic per station)."""
+    partitioning, so appends and station-replaces stay atomic per station).
+    Both tables are stamped with ``network`` and ``station``, whatever
+    labels the build gave the meta."""
     _write_partitioned(records, meta, path, network, station)
 
 
@@ -491,14 +506,21 @@ def build_records(
     kind: str = "SGT",
     points_per_element: int = 27,
     encoding_level: int = ENCODING_LEVEL_DEFAULT,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[dict[int, int], DataFrame]:
     """The create_db tail over decoded ``snapshots`` and valid ``steps``:
     ibool -> 27-point selection -> assembly -> encode -> start offsets.
-    Returns (selected points, records_with_start).  The batch build and
-    the staged stream (``streaming.finalize_sgt_from_staging``) both run it."""
-    points = select_gll_points(specfem.read_ibool(spark, model_glob, nspec), points_per_element)
-    series = assemble_series(snapshots, points, steps, kind)
-    return points, add_start_offsets(encode_records(series, encoding_level))
+
+    The selection runs here, as the build's one ibool decode: its points
+    are collected through Arrow and become the local relation that the
+    gather broadcasts, so the records plan reads no ibool file and an ibool
+    decode error raises from this call.  Returns (selected points per proc,
+    records_with_start).  The batch build and the staged stream
+    (``streaming.finalize_sgt_from_staging``) both run it."""
+    ibool = specfem.read_ibool(spark, model_glob, nspec)
+    points = select_gll_points(ibool, points_per_element).toArrow()
+    ngll = Counter(points["proc"].to_pylist())
+    series = assemble_series(snapshots, spark.createDataFrame(points), steps, kind)
+    return ngll, add_start_offsets(encode_records(series, encoding_level))
 
 
 def _make_build(kind: str, doc: str):
@@ -522,19 +544,20 @@ def _make_build(kind: str, doc: str):
     ) -> tuple[DataFrame, DataFrame, DataFrame]:
         # each dir is listed once, here; the step check, the semi-join,
         # db_meta and the stride-pruned decode all read that listing, and
-        # the reference raises when no step survives P3 (DDBbase.py:82-84)
+        # the reference raises when no step survives P3 (DDBbase.py:82-84),
+        # before any ibool is read
         frames = specfem.snapshot_frames(spark, force_dirs, spec.name_data)
         stride = range(step0, step1, dstep)
         step_list = stride_steps(specfem.snapshot_listing(frames), len(force_dirs), stride)
         if not step_list:
             raise ValueError("no valid steps: no snapshot step exists in all force dirs")
-        steps = spark.createDataFrame(step_list, "proc int, step int")
+        steps = local_frame(spark, step_list, "proc int, step int")
         snaps = specfem.read_snapshots(specfem.stride_frames(frames, stride), nspec, kind)
-        points, records = build_records(
+        ngll, records = build_records(
             spark, model_glob, nspec, snaps, steps, kind, points_per_element, encoding_level
         )
         meta = db_meta(
-            points, steps, network=network, station=station, kind=kind,
+            spark, ngll, step_list, network=network, station=station, kind=kind,
             n_force=len(force_dirs), dt=dt, nspec=nspec,
         )
         return records, meta, steps
@@ -546,14 +569,20 @@ def _make_build(kind: str, doc: str):
 
 sgt_build = _make_build(
     "SGT",
-    """The full SGT create_db (DSGT.py:40-196) as one lazy plan.
+    """The full SGT create_db (DSGT.py:40-196).
 
     Returns (records_with_start, db_meta, valid_steps); caller writes with
-    write_db.  Only the snapshot file names are read on the driver; data
-    stays lazy.""",
+    write_db.  The call lists the snapshot dirs (names only) and runs the
+    point selection, the one ibool decode of the build, so an ibool decode
+    error raises here (after the "no valid steps" check, which reads no
+    ibool).  The records are a lazy plan over the snapshot files; db_meta
+    and valid_steps are local relations.""",
 )
 dgf_build = _make_build(
     "DGF",
     """The full DGF create_db (DDGF.py:40-190): displacement scan S5,
-    id-gather J2, [para][force][time] flatten, same encode tail.""",
+    id-gather J2, [para][force][time] flatten, same encode tail.  Like
+    ``sgt_build``, the call runs the point selection (so an ibool decode
+    error raises here); the records are a lazy plan, db_meta and
+    valid_steps local relations.""",
 )

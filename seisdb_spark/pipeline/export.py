@@ -17,12 +17,14 @@ processor it writes, like the reference's one loop per proc:
     (array columns = the datasets, scalar columns = the attrs).
 
 Execution shape: ONE distributed pass.  ``db_meta`` holds one row per proc,
-so it is collected once and its attrs reach the tasks as driver data.  The
-meta procs, as a local relation, are left-joined to the records; the rows
-hash-partition by ``proc`` and each task streams its procs' blobs to disk in
-``start`` order (a proc never spans tasks, so every task owns whole files),
-then writes the proc's ``.hdf5`` and yields its header row.  Writing those
-rows as ``headers_parquet`` is the only action over the records; the
+so it is collected once and its attrs reach the tasks as driver data (a
+build's meta is a local relation: that collect runs no Spark job).  The
+meta procs, a ``LocalTableScan`` made by ``build.local_frame``, are
+left-joined to the records; the rows hash-partition by ``proc`` and each
+task streams its procs' blobs to disk in ``start`` order (a proc never
+spans tasks, so every task owns whole files), then writes the proc's
+``.hdf5`` and yields its header row.  Writing those rows as
+``headers_parquet`` is the only action over the records; the
 returned summary reads back one count per proc from that table, so no
 header array reaches the driver.  On a cluster the files land on the
 executor-visible filesystem (the reference's layout is inherently
@@ -49,6 +51,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from seisdb_spark.pipeline.build import local_frame
 from seisdb_spark.sources.specfem import KINDS
 
 # CPython bytes-object overhead baked into the reference's header `length`
@@ -112,7 +115,7 @@ def export_reference_format(records: DataFrame, meta: DataFrame, saving_dir: str
         return os.path.join(saving_dir, attrs[proc]["proc_name"])
 
     spark = records.sparkSession
-    procs = spark.createDataFrame([(p,) for p in sorted(attrs)], "proc int")
+    procs = local_frame(spark, [(p,) for p in sorted(attrs)], "proc int")
     parts = (
         procs.join(
             records.select("proc", "start", "gll_id", "length", "offset", "scale", "blob"),

@@ -400,14 +400,14 @@ def finalize_sgt_from_staging(
     in all forces *in the staged data*: the distinct (proc, force, step) of
     the staged log, collected in one job, is the listing, checked by the
     batch build's own predicate (``pipeline.build.stride_steps``)."""
-    from seisdb_spark.pipeline.build import build_records, stride_steps
+    from seisdb_spark.pipeline.build import build_records, local_frame, stride_steps
 
     snaps = read_log(spark, staging_dir, SNAPSHOT_LOG)
     listing = snaps.select("proc", "force", "step").distinct().collect()
     # forder names one force per letter (N, E, Z)
     step_list = stride_steps(listing, len(KINDS["SGT"].forder), range(step0, step1, dstep))
-    steps = spark.createDataFrame(step_list, "proc int, step int")
-    _points, records = build_records(
+    steps = local_frame(spark, step_list, "proc int, step int")
+    _ngll, records = build_records(
         spark, model_glob, nspec, snaps, steps, "SGT", points_per_element, encoding_level
     )
     return records

@@ -353,6 +353,25 @@ def test_read_ibool_missing_path_names_it(spark, fixture_meta, name):
         specfem.read_ibool(spark, path, fixture_meta["nspec"])
 
 
+def test_build_raises_an_ibool_decode_error_at_call_time(spark, tmp_path):
+    """The build selects its points when it is called, so a corrupt ibool
+    file fails sgt_build itself, not a later action on its frames."""
+    from pyspark.errors import PythonException
+
+    from seisdb_spark.pipeline import generate_fixture
+
+    m = generate_fixture(str(tmp_path / "fx"), nprocs=1, nspec=2, step1=20)
+    path = os.path.join(m["model_dir"], "proc000000_ibool.bin")
+    raw = open(path, "rb").read()
+    with open(path, "wb") as fh:
+        fh.write(raw[:-4])  # chop the trailing marker
+    with pytest.raises(PythonException, match="truncated Fortran record"):
+        sgt_build(
+            spark, f"{m['model_dir']}/proc*_ibool.bin", m["force_dirs"], m["nspec"],
+            m["step0"], m["step1"], m["dstep"],
+        )
+
+
 def test_element_gll_ids_plan_has_no_exchange(spark, fixture_meta):
     """The element lookup is a projection of the element rows: its executed
     plan has no exchange and no aggregate."""
@@ -500,9 +519,8 @@ def test_dgf_roundtrip_error_bound(spark, fixture_meta, dgf_records):
 def test_append_to_db_incremental_station(spark, fixture_meta, sgt_records, tmp_path):
     """append_to_db adds one station per call via dynamic partition
     overwrite: existing stations untouched, re-appending a station replaces
-    (never duplicates) it."""
-    import pyspark.sql.functions as F
-
+    (never duplicates) it.  One build's meta serves every station: the
+    writer stamps it with the station it writes."""
     from seisdb_spark.pipeline import append_to_db
 
     pdf, meta, _steps = sgt_records
@@ -510,8 +528,7 @@ def test_append_to_db_incremental_station(spark, fixture_meta, sgt_records, tmp_
     out = str(tmp_path / "db")
 
     write_db(records, meta, out, network="CI", station="USC")
-    meta_lax = meta.withColumn("station", F.lit("LAX"))
-    append_to_db(records, meta_lax, out, network="CI", station="LAX")
+    append_to_db(records, meta, out, network="CI", station="LAX")
 
     got_records, got_meta = read_db(spark, out)
     assert got_records.count() == 2 * len(pdf)
@@ -521,13 +538,26 @@ def test_append_to_db_incremental_station(spark, fixture_meta, sgt_records, tmp_
     assert os.path.isdir(os.path.join(out, "records", "network=CI", "station=USC"))
 
     # idempotent replace: appending LAX again must not duplicate it
-    append_to_db(records, meta_lax, out, network="CI", station="LAX")
+    append_to_db(records, meta, out, network="CI", station="LAX")
     got_records2, _ = read_db(spark, out)
     assert got_records2.count() == 2 * len(pdf)
     assert got_records2.filter("station = 'LAX'").count() == len(pdf)
     # the dynamic mode is a writer option: the session conf keeps its
     # static default
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
+
+
+def test_write_db_stamps_meta_with_the_writers_station(spark, sgt_records, tmp_path):
+    """A meta built under one (network, station) and written under another
+    lands beside its records, under the writer's labels."""
+    pdf, meta, _steps = sgt_records
+    assert {(r["network"], r["station"]) for r in meta.collect()} == {("CI", "USC")}
+    out = str(tmp_path / "db")
+    write_db(spark.createDataFrame(pdf), meta, out, network="IU", station="ANMO")
+    got_records, got_meta = read_db(spark, out)
+    for df in (got_records, got_meta):
+        labels = {tuple(r) for r in df.select("network", "station").distinct().collect()}
+        assert labels == {("IU", "ANMO")}, labels
 
 
 # ---------------------------------------------------------------- plan shape
@@ -606,23 +636,39 @@ def test_stray_snapshot_files_are_skipped(spark, tmp_path):
 
 def test_semi_join_build_side_reads_no_file(sgt_built):
     """The valid steps are collected once per build: the LeftSemi's
-    broadcast side is that local list, not another listing of the
-    snapshot dirs."""
+    broadcast side is that local list, a LocalTableScan, not another
+    listing of the snapshot dirs."""
     records, _meta, _steps = sgt_built
     [semi] = [sub for node, sub in _executed_nodes(records) if "LeftSemi" in node]
     broadcast = "\n".join(
         sub for node, sub in _subtrees(semi) if node.startswith("BroadcastExchange")
     )
     assert broadcast and "binaryFile" not in broadcast, broadcast
+    assert "LocalTableScan" in broadcast, broadcast
 
 
-def test_db_meta_reads_no_snapshot_file(sgt_built):
-    """db_meta comes from the selected points and the step list: its plan
-    reads the ibool files and no snapshot file."""
+def test_db_meta_is_driver_data(spark, sgt_built):
+    """db_meta is built on the driver from the per-proc point counts and the
+    step list: a local relation that reads no file, runs no job when
+    collected and has the schema the writer writes and read_db reads."""
+    from seisdb_spark.pipeline.build import DB_SCHEMAS
+
     _records, meta, _steps = sgt_built
-    files = meta.inputFiles()
-    assert files and all(specfem.IBOOL_RE.search(f) for f in files), files
-    assert not any("_Step_" in f for f in files), files
+    assert meta.inputFiles() == []
+    assert jobs_run(spark, meta.collect) == 0
+    assert [(f.name, f.dataType) for f in meta.schema] == [
+        (f.name, f.dataType) for f in DB_SCHEMAS["db_meta"]
+    ]
+
+
+@pytest.mark.parametrize("kind", ["SGT", "DGF"])
+def test_records_plan_reads_no_ibool_file(request, fixture_meta, kind):
+    """The build decodes the ibool files once, when it selects the points:
+    the executed records plan scans the snapshot dirs and no file under the
+    model dir."""
+    records, _meta, _steps = request.getfixturevalue(f"{kind.lower()}_built")
+    roots = {root.removeprefix("file:") for root in _files_read(records)}
+    assert roots == set(fixture_meta["force_dirs"]), roots
 
 
 @pytest.mark.parametrize("kind", ["SGT", "DGF"])
@@ -638,11 +684,13 @@ def test_scale_stress_sgt_plan_contract_holds(request, kind):
 
 
 def test_build_and_write_run_at_most_11_jobs(spark, fixture_meta, tmp_path):
-    """One build + write lists the snapshot dirs once, on the driver, and
-    runs the snapshot lineage once: the records write and the meta write
-    together run at most 11 Spark jobs on the default fixture (24 when the
-    meta recomputed every record and the steps were listed three times, 15
-    while the step check was a Spark listing plan)."""
+    """One build + write lists the snapshot dirs once, on the driver,
+    decodes the ibool files once and runs the snapshot lineage once: the
+    point selection, the records write and the meta write together run at
+    most 8 Spark jobs on the default fixture (24 when the meta recomputed
+    every record and the steps were listed three times, 15 while the step
+    check was a Spark listing plan, 11 while the meta was a Spark plan over
+    the ibool files)."""
     m = fixture_meta
 
     def build_and_write():
@@ -653,7 +701,7 @@ def test_build_and_write_run_at_most_11_jobs(spark, fixture_meta, tmp_path):
         write_db(records, meta, str(tmp_path / "db"), network="CI", station="USC")
 
     jobs = jobs_run(spark, build_and_write)
-    assert 0 < jobs <= 11, jobs
+    assert 0 < jobs <= 8, jobs
 
 
 @pytest.fixture(scope="module")

@@ -16,12 +16,13 @@ synthesizes x10/x100 fixtures and asserts the executed-plan scale claims:
   frame: the point and step dimension sides stay BROADCAST (never a
   fact-side SortMergeJoin), no CartesianProduct, no rangepartitioning,
   and the TOTAL shuffle-exchange count is CONSTANT across scales —
-  exactly three: one fact-side (proc, gll_id) assembly exchange, one
-  (proc, gll_id) exchange on the tiny ibool dimension side (D1 dedup,
-  per-proc mesh — orders of magnitude below the snapshot stream), and
-  the (proc) exchange of the A4 start-offset window.  The valid-step
-  list is a local relation (the driver's one listing of the snapshot
-  dirs, checked in Python), so no listing aggregate is in the plan.  A
+  exactly two: the fact-side (proc, gll_id) assembly exchange and the
+  (proc) exchange of the A4 start-offset window.  Both dimension sides
+  are local relations: the valid-step list (the driver's one listing of
+  the snapshot dirs, checked in Python) and the selected points (the
+  ibool decode and its D1 dedup window run once, at build time, and are
+  collected), so neither a listing aggregate nor the D1 exchange is in
+  the records plan.  A
   scale-dependent plan shape (AQE flipping a broadcast to SMJ, a new
   exchange appearing) fails the run.
 * decode parallelism: snapshots arrive via the binaryFile source (one
@@ -101,12 +102,12 @@ def plan_ok(plan: str) -> tuple[bool, str]:
         "no_smj": not has_node(plan, "SortMergeJoin"),
         "no_cartesian": not has_node(plan, "CartesianProduct"),
         "no_rangepart": not has_node(plan, "rangepartitioning"),
-        # assembly + ibool-D1 (both (proc, gll_id)-keyed) + the A4
-        # start-offset window's (proc) = 3, at EVERY scale
-        "const_exchanges": count_exchanges(plan) == 3,
-        "two_gll_exchanges": len(
+        # the (proc, gll_id) assembly + the A4 start-offset window's
+        # (proc) = 2, at EVERY scale
+        "const_exchanges": count_exchanges(plan) == 2,
+        "one_gll_exchange": len(
             re.findall(r"(?i)hashpartitioning\(proc#\d+,\s*gll_id", plan)
-        ) == 2,
+        ) == 1,
         "one_proc_exchange": len(
             re.findall(r"(?i)hashpartitioning\(proc#\d+,\s*\d+\)", plan)
         ) == 1,
