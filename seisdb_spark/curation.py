@@ -22,12 +22,15 @@ actions (the shard write and the manifest):
    ``pack=True`` each doc additionally carries its sequence-packing
    (seq, offset) assignment and shards coincide with packing shards.
 
-Every stage is the already-verified registry operator (the per-stage
-oracles live on ``quality_filter_pipeline`` / ``dedup_exact`` /
-``dedup_cluster_components`` / ``stratified_sample`` /
-``training_shard_manifest``); this module owns only the composition.
-The composed keep-set is cross-checked against an independent pandas
-re-implementation in tests/test_curation_build.py.
+The stages call the same definitions as the registry operators that
+carry their oracles: the gate's ``word_count``/``stopword_ratio``
+(``quality_filter_pipeline``), ``decon_join`` (the decontamination
+queries), ``_jaccard_on_candidates`` (``dedup_cluster_components``) and
+``stratified_keep`` (``stratified_sample``).  The exact-dedup window
+(the ``dedup_exact`` rule) and the canonical keep over the components
+are composed inline here.  The composed keep-set is hash-checked by the
+``curation_keep_set`` oracle and cross-checked against an independent
+pandas re-implementation in tests/test_curation_build.py.
 """
 
 from __future__ import annotations
@@ -50,12 +53,13 @@ from seisdb_spark.queries.extensions import (
 from seisdb_spark.queries.extensions import (
     DECON_BENCH_MOD,
     JACCARD_THRESHOLD,
-    SAMPLE_RATES,
-    STOPWORD_PATTERN,
     _jaccard_on_candidates,
     budgeted_selection,
     decon_join,
     packing_assignment,
+    stopword_ratio,
+    stratified_keep,
+    word_count,
 )
 from seisdb_spark.sources.tables import load_table, spread, write_training_shards
 
@@ -91,15 +95,11 @@ def curate(
     tests/test_curation_build.py, or the driver hash gate silently
     breaks."""
     contaminated = decon_join(docs).select("doc_id").distinct()
-    n_words = F.length("text") - F.length(F.translate(F.col("text"), " ", "")) + 1
-    stopword_hits = F.size(
-        F.regexp_extract_all(F.col("text"), F.lit(STOPWORD_PATTERN), 0)
-    )
     gated = (
         docs.filter(
             (F.col("doc_id") % DECON_BENCH_MOD != 0)
-            & n_words.between(MIN_WORDS, MAX_WORDS)
-            & (stopword_hits.cast("double") / n_words <= MAX_STOPWORD_RATIO)
+            & word_count().between(MIN_WORDS, MAX_WORDS)
+            & (stopword_ratio() <= MAX_STOPWORD_RATIO)
         )
         # the contaminated set is overlap-dependent: AQE broadcasts this
         # anti-join when it is small, as with the near-dup losers below
@@ -131,12 +131,7 @@ def curate(
         raise ValueError(f"unknown sample mode {sample!r}")
 
     # deterministic stratified sample (content-stable hash bucket)
-    h = F.md5(F.col("doc_id").cast("string").cast("binary"))
-    bucket = F.conv(F.substring(h, 1, 4), 16, 10).cast("int")
-    rate = F.lit(0.5)
-    for lang, r in SAMPLE_RATES.items():
-        rate = F.when(F.col("lang") == lang, F.lit(r)).otherwise(rate)
-    return neardup_kept.filter(bucket < 65536 * rate).select("doc_id", "lang", "text")
+    return neardup_kept.filter(stratified_keep()).select("doc_id", "lang", "text")
 
 
 def build_training_set(

@@ -84,25 +84,24 @@ _SHINGLE_CTE = _shingle_cte()
 _HEX_ALPHA = "0123456789abcdef"
 
 
+def _md5_hex_sql(expr: str, n: int) -> str:
+    """First ``n`` hex digits of md5 -> integer, DuckDB side: a sum of
+    per-digit strpos lookups (Spark's twin is conv(substring(md5, 1, n), 16, 10))."""
+    return "(" + " + ".join(
+        f"(strpos('{_HEX_ALPHA}', substr(md5({expr}), {k}, 1)) - 1) * {16 ** (n - k)}"
+        for k in range(1, n + 1)
+    ) + ")"
+
+
 def _hash_bucket_sql(expr: str) -> str:
     """First 4 hex digits of md5 -> integer in [0, 65536), DuckDB side."""
-    digits = [
-        f"(strpos('{_HEX_ALPHA}', substr(md5({expr}), {k}, 1)) - 1)"
-        for k in (1, 2, 3, 4)
-    ]
-    return f"({digits[0]} * 4096 + {digits[1]} * 256 + {digits[2]} * 16 + {digits[3]})"
+    return _md5_hex_sql(expr, 4)
 
 
 def _hash32_sql(expr: str) -> str:
     """First 8 hex digits of md5 -> BIGINT in [0, 2^32), DuckDB side
     (mirrors sources/tables.py::shard_assignment digit for digit)."""
-    digits = [
-        f"(strpos('{_HEX_ALPHA}', substr(md5({expr}), {k}, 1)) - 1)"
-        for k in range(1, 9)
-    ]
-    return "(" + " + ".join(
-        f"{d} * {16 ** (8 - k)}" for k, d in enumerate(digits, start=1)
-    ) + ")"
+    return _md5_hex_sql(expr, 8)
 
 
 # One md5 per shingle, parsed to a 32-bit int by summing per-hex-digit
@@ -174,56 +173,47 @@ _SCORED_CTE = """
 
 def _jaccard_on_candidates(docs: DataFrame) -> DataFrame:
     """Exact shingle-Jaccard scored ONLY on LSH candidate pairs of ``docs``
-    (callers pass it through ``spread``).  Signatures, band join, set sizes
-    and the intersection count all consume one distinct-shingle DataFrame
-    (``min()`` ignores duplicates, so the signatures equal
-    :func:`_lsh_candidates`'s).
+    (callers pass it through ``spread``).  Signatures, band join and verify
+    all consume one shingle DataFrame with no corpus-wide distinct:
+    ``min()`` ignores duplicates, so the signatures equal
+    :func:`_lsh_candidates`'s, and the verify's ``collect_set`` dedups
+    within each doc.
 
-    The shingle explode still runs more than once in the executed plan.
-    Over a plain documents scan (dedup_jaccard_pairs) the table is read
-    once, and the corpus-wide explode, the one feeding the signatures,
-    runs once.  The verify stage semi-filters the shingle table
-    through the broadcast candidate-doc set, and Catalyst pushes that
-    LeftSemi below the distinct and the explode: each of the verify
-    branches (set sizes, both sides of the intersection join) re-explodes
-    only the candidate docs, over reused ``[doc_id, text]`` and
-    ``[doc_id, w]`` exchanges.  So verify cost scales with the candidate
-    set (486 of 5000 docs at sf0.1), not the corpus — at 100 TB that is
-    the difference between a corpus-sized shuffle and a candidate-sized
-    one.  Pinned by ``test_jaccard_on_candidates_explodes_the_corpus_once``.
+    The executed plan reads the table once and explodes it into shingles
+    twice: once over the whole corpus for the signatures, and once over
+    the candidate docs for the verify (Catalyst pushes the LeftSemi with
+    the broadcast candidate-doc set below the explode).  So verify cost
+    scales with the candidate set (486 of 5000 docs at sf0.1), not the
+    corpus.  Pinned by ``test_jaccard_on_candidates_explodes_the_corpus_once``.
     Returns (doc_a, doc_b, jaccard) unrounded.
     """
-    sh = shingle_tokens(docs)
+    sh = shingle_tokens(docs, distinct=False)
     return _verify_jaccard(sh, band_pairs(minhash_bands(sh)))
 
 
 def _verify_jaccard(sh: DataFrame, cand: DataFrame) -> DataFrame:
     """Exact shingle Jaccard for GIVEN (doc_a, doc_b) candidate pairs over a
-    distinct shingle table — the verify tail shared by the self-join dedup
-    and the incremental batch-vs-corpus probe.  Cost scales with the
-    candidate set, never the corpus."""
+    (doc_id, sh) shingle table, repeated rows allowed — the verify tail
+    shared by the self-join dedup and the incremental batch-vs-corpus
+    probe.  Each candidate doc's shingles are collected once, as a set;
+    each pair joins its two sets and scores ``n / (|A| + |B| - n)`` with
+    ``n = |A ∩ B|``.  Pairs sharing no shingle give no row.  Cost scales
+    with the candidate set, never the corpus."""
     cand_docs = cand.select(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
     ).distinct()
-    sh_c = sh.join(cand_docs, "doc_id", "left_semi")
-    cnt = sh_c.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    ta, tb = sh_c.alias("ta"), sh_c.alias("tb")
-    shared = (
-        cand.join(ta, F.col("doc_a") == F.col("ta.doc_id"))
-        .join(
-            tb,
-            (F.col("doc_b") == F.col("tb.doc_id")) & (F.col("ta.sh") == F.col("tb.sh")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
+    sets = (
+        sh.join(cand_docs, "doc_id", "left_semi")
+        .groupBy("doc_id")
+        .agg(F.collect_set("sh").alias("s"))
     )
-    ca, cb = cnt.alias("ca"), cnt.alias("cb")
-    jac = F.col("n_shared").cast("double") / (
-        F.col("ca.n_sh") + F.col("cb.n_sh") - F.col("n_shared")
-    )
+    a, b = sets.alias("a"), sets.alias("b")
+    n = F.size(F.array_intersect("a.s", "b.s"))
+    jac = n.cast("double") / (F.size("a.s") + F.size("b.s") - n)
     return (
-        shared.join(ca, F.col("doc_a") == F.col("ca.doc_id"))
-        .join(cb, F.col("doc_b") == F.col("cb.doc_id"))
+        cand.join(a, F.col("doc_a") == F.col("a.doc_id"))
+        .join(b, F.col("doc_b") == F.col("b.doc_id"))
+        .filter(n > 0)
         .select("doc_a", "doc_b", jac.alias("jaccard"))
     )
 

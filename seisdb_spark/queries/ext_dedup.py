@@ -30,8 +30,14 @@ from seisdb_spark.functions.vectors import (
     sign_string_expr,
     sign_string_sql,
 )
-from seisdb_spark.queries.ext_sampling import SAMPLE_RATES
-from seisdb_spark.queries.ext_text import QC_WEIGHT_MOD, QC_WEIGHT_SHIFT
+from seisdb_spark.queries.ext_sampling import STRATIFIED_KEEP_SQL, stratified_keep
+from seisdb_spark.queries.ext_text import (
+    QC_WEIGHT_MOD,
+    QC_WEIGHT_SHIFT,
+    STOPWORD_RATIO_SQL,
+    WORD_COUNT_SQL,
+    word_count,
+)
 from seisdb_spark.queries.ext_common import (
     JACCARD_THRESHOLD,
     NEARDUP_BANDS,
@@ -39,7 +45,6 @@ from seisdb_spark.queries.ext_common import (
     NEARDUP_COSINE,
     NEARDUP_MIN_BITS,
     NEARDUP_TARGET_BUCKET_ROWS,
-    STOPWORD_PATTERN,
     _BANDS_CTE,
     _CAND_CTE,
     _LSH_CTES,
@@ -48,7 +53,6 @@ from seisdb_spark.queries.ext_common import (
     _SIG_CTE,
     _cand_cte,
     _hash32_sql,
-    _hash_bucket_sql,
     _jaccard_on_candidates,
     _lsh_candidates,
     _shingle_cte,
@@ -337,7 +341,7 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ONLY on LSH candidate pairs (the round-1 version token-self-joined the "
     "whole corpus — quadratic in frequent tokens; this one touches "
     "candidates * shingles). Pairs sharing no shingle can't reach the "
-    f"{JACCARD_THRESHOLD} threshold, so the inner-join shared-count is exact.",
+    f"{JACCARD_THRESHOLD} threshold, so dropping them in the verify is exact.",
 )
 def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"))
@@ -415,7 +419,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = shingle_tokens(spread(load_table(spark, sf_dir, "documents")))
+    sh = shingle_tokens(spread(load_table(spark, sf_dir, "documents")), distinct=False)
     bands = minhash_bands(sh)
     cand = band_pairs(
         bands.filter(F.col("doc_id") % 10 == 0), bands.filter(F.col("doc_id") % 10 != 0)
@@ -425,8 +429,8 @@ def dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def verified_probe_pairs(sh: DataFrame, cand: DataFrame) -> DataFrame:
     """(batch_doc, corpus_doc, jaccard): the batch x corpus candidate pairs
-    ``cand`` whose exact Jaccard over the distinct shingle table ``sh``
-    reaches JACCARD_THRESHOLD, rounded to 4 places — the tail
+    ``cand`` whose exact Jaccard over the shingle table ``sh`` reaches
+    JACCARD_THRESHOLD, rounded to 4 places — the tail
     dedup_incremental_probe shares with its streaming twin."""
     return (
         _verify_jaccard(sh, cand)
@@ -930,18 +934,13 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         kept AS (
             SELECT doc_id, lang, text
             FROM documents
-            WHERE length(text) - length(replace(text, ' ', '')) + 1
-                      BETWEEN 20 AND 1000
+            WHERE {WORD_COUNT_SQL} BETWEEN 20 AND 1000
               AND doc_id NOT IN (SELECT doc_id FROM losers)
-              AND {_hash_bucket_sql("CAST(doc_id AS VARCHAR)")}
-                  < 65536 * (CASE lang
-                      {" ".join(f"WHEN '{lang}' THEN {rate}" for lang, rate in SAMPLE_RATES.items())}
-                      ELSE 0.5 END)
+              AND {STRATIFIED_KEEP_SQL}
         )
         SELECT lang,
                count(*) AS n_docs,
-               CAST(sum(length(text) - length(replace(text, ' ', '')) + 1) AS BIGINT)
-                   AS total_tokens
+               CAST(sum({WORD_COUNT_SQL}) AS BIGINT) AS total_tokens
         FROM kept
         GROUP BY lang
     """,
@@ -963,15 +962,9 @@ def curation_pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
-    n_words = F.length("text") - F.length(F.translate(F.col("text"), " ", "")) + 1
-    h = F.md5(F.col("doc_id").cast("string").cast("binary"))
-    bucket = F.conv(F.substring(h, 1, 4), 16, 10).cast("int")
-    rate = F.lit(0.5)
-    for lang, r in SAMPLE_RATES.items():
-        rate = F.when(F.col("lang") == lang, F.lit(r)).otherwise(rate)
     kept = (
-        docs.filter(n_words.between(20, 1000))
-        .filter(bucket < 65536 * rate)
+        docs.filter(word_count().between(20, 1000))
+        .filter(stratified_keep())
         # No broadcast hint: ``losers`` is data-dependent (every doc losing a
         # near-dup comparison) and at a realistic 20-40 % corpus dup rate it
         # is corpus-fraction-sized — forcing a broadcast would OOM at scale.
@@ -979,7 +972,7 @@ def curation_pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(losers, "doc_id", "left_anti")
     )
     return (
-        kept.select("lang", n_words.alias("nw"))
+        kept.select("lang", word_count().alias("nw"))
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1010,11 +1003,8 @@ CURATION_MAX_STOPWORD_RATIO = 0.5
             SELECT doc_id, lang, text FROM documents
             WHERE doc_id % {DECON_BENCH_MOD} <> 0
               AND doc_id NOT IN (SELECT doc_id FROM decon)
-              AND length(text) - length(replace(text, ' ', '')) + 1
-                  BETWEEN {CURATION_MIN_WORDS} AND {CURATION_MAX_WORDS}
-              AND CAST(len(regexp_extract_all(text, '{STOPWORD_PATTERN}')) AS DOUBLE)
-                  / (length(text) - length(replace(text, ' ', '')) + 1)
-                  <= {CURATION_MAX_STOPWORD_RATIO}
+              AND {WORD_COUNT_SQL} BETWEEN {CURATION_MIN_WORDS} AND {CURATION_MAX_WORDS}
+              AND {STOPWORD_RATIO_SQL} <= {CURATION_MAX_STOPWORD_RATIO}
         ),
         exact AS (
             SELECT doc_id, lang, text FROM (
@@ -1029,10 +1019,7 @@ CURATION_MAX_STOPWORD_RATIO = 0.5
         losers AS (SELECT v FROM reach GROUP BY v HAVING min(l) <> v)
         SELECT doc_id, lang FROM exact
         WHERE doc_id NOT IN (SELECT v FROM losers)
-          AND {_hash_bucket_sql("CAST(doc_id AS VARCHAR)")}
-              < 65536 * (CASE lang
-                  {" ".join(f"WHEN '{lang}' THEN {rate}" for lang, rate in SAMPLE_RATES.items())}
-                  ELSE 0.5 END)
+          AND {STRATIFIED_KEEP_SQL}
     """,
     doc="The COMPOSED curation closure as one hash-checked query: "
     "benchmark DECONTAMINATION (drop the eval holdout and any train doc "

@@ -4,17 +4,34 @@ sampling without replacement.  Split out of extensions.py (round 12)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from seisdb_spark.queries.registry import REGISTRY, query
 from seisdb_spark.sources.tables import load_table, spread
-from seisdb_spark.queries.ext_common import (
-    _HEX_ALPHA,
-    _hash_bucket_sql,
-)
+from seisdb_spark.queries.ext_common import _hash_bucket_sql, _md5_hex_sql
 
 
 SAMPLE_RATES = {"en": 0.2, "de": 0.5, "es": 0.5, "fr": 0.5, "zh": 0.5}
+
+
+def stratified_keep() -> Column:
+    """The stratified-sample predicate: md5(doc_id)'s first 4 hex digits,
+    a content-stable bucket in [0, 65536), below 65536 x the doc's
+    ``SAMPLE_RATES`` rate (0.5 for other languages).  The one Spark
+    definition every sampling stage calls; ``STRATIFIED_KEEP_SQL`` is its
+    DuckDB twin."""
+    h = F.md5(F.col("doc_id").cast("string").cast("binary"))
+    rate = F.lit(0.5)
+    for lang, r in SAMPLE_RATES.items():
+        rate = F.when(F.col("lang") == lang, F.lit(r)).otherwise(rate)
+    return F.conv(F.substring(h, 1, 4), 16, 10).cast("int") < 65536 * rate
+
+
+STRATIFIED_KEEP_SQL = (
+    f"{_hash_bucket_sql('CAST(doc_id AS VARCHAR)')} < 65536 * (CASE lang "
+    + " ".join(f"WHEN '{lang}' THEN {rate}" for lang, rate in SAMPLE_RATES.items())
+    + " ELSE 0.5 END)"
+)
 
 
 @query(
@@ -22,10 +39,7 @@ SAMPLE_RATES = {"en": 0.2, "de": 0.5, "es": 0.5, "fr": 0.5, "zh": 0.5}
     oracle=f"""
         SELECT doc_id, lang
         FROM documents
-        WHERE {_hash_bucket_sql("CAST(doc_id AS VARCHAR)")}
-              < 65536 * (CASE lang
-                  {" ".join(f"WHEN '{lang}' THEN {rate}" for lang, rate in SAMPLE_RATES.items())}
-                  ELSE 0.5 END)
+        WHERE {STRATIFIED_KEEP_SQL}
     """,
     doc="Deterministic stratified sampling: per-language keep rates applied "
     "via a content-stable hash bucket (md5(doc_id) -> [0, 65536)), so the "
@@ -35,12 +49,7 @@ SAMPLE_RATES = {"en": 0.2, "de": 0.5, "es": 0.5, "fr": 0.5, "zh": 0.5}
 )
 def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    h = F.md5(F.col("doc_id").cast("string").cast("binary"))
-    bucket = F.conv(F.substring(h, 1, 4), 16, 10).cast("int")
-    rate = F.lit(0.5)
-    for lang, r in SAMPLE_RATES.items():
-        rate = F.when(F.col("lang") == lang, F.lit(r)).otherwise(rate)
-    return docs.filter(bucket < 65536 * rate).select("doc_id", "lang")
+    return docs.filter(stratified_keep()).select("doc_id", "lang")
 
 
 N_SALT = 8
@@ -99,16 +108,6 @@ ES_HASH_HEX = 15  # 15 hex digits = 60 bits
 ES_U_DENOM = 1 << 60
 
 
-def _duck_hexparse15(expr: str) -> str:
-    """DuckDB twin of Spark's conv(substring(md5(x),1,15),16,10) —
-    a 60-bit BIGINT from the md5 prefix."""
-    return " + ".join(
-        f"(strpos('{_HEX_ALPHA}', substr(md5({expr}), {j + 1}, 1)) - 1)"
-        f" * {16 ** (ES_HASH_HEX - 1 - j)}"
-        for j in range(ES_HASH_HEX)
-    )
-
-
 def _es_oracle_sql() -> str:
     from seisdb_spark.functions.ngram_lm import nll_nano_sql
 
@@ -116,7 +115,7 @@ def _es_oracle_sql() -> str:
     return f"""
         WITH h AS (
             SELECT lang, doc_id, CAST(n_chars AS BIGINT) AS weight,
-                   ({_duck_hexparse15("CAST(doc_id AS VARCHAR)")}) + 1
+                   {_md5_hex_sql("CAST(doc_id AS VARCHAR)", ES_HASH_HEX)} + 1
                        AS bb,
                    CAST({ES_U_DENOM} AS BIGINT) AS a
             FROM documents

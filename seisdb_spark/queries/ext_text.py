@@ -7,7 +7,7 @@ portability discipline notes."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from seisdb_spark.functions.multimodal import (
     decode_payload_features,
@@ -35,14 +35,33 @@ from seisdb_spark.queries.ext_common import (
 # ---------------------------------------------------------------------------
 # Text analysis
 # ---------------------------------------------------------------------------
+def word_count() -> Column:
+    """Whitespace word count of ``text``: its spaces + 1 (so '' is one
+    word).  The one Spark definition every length gate and token budget
+    calls; ``WORD_COUNT_SQL`` is its DuckDB twin."""
+    return F.length("text") - F.length(F.translate(F.col("text"), " ", "")) + 1
+
+
+def stopword_ratio() -> Column:
+    """Stopword hits (``STOPWORD_PATTERN``) per word of ``text``, the
+    content gate's ratio; ``STOPWORD_RATIO_SQL`` is its DuckDB twin."""
+    hits = F.size(F.regexp_extract_all(F.col("text"), F.lit(STOPWORD_PATTERN), 0))
+    return hits.cast("double") / word_count()
+
+
+WORD_COUNT_SQL = "(length(text) - length(replace(text, ' ', '')) + 1)"
+STOPWORD_RATIO_SQL = (
+    f"CAST(len(regexp_extract_all(text, '{STOPWORD_PATTERN}')) AS DOUBLE) / {WORD_COUNT_SQL}"
+)
+
+
 @query(
     "text_stats",
-    oracle="""
+    oracle=f"""
         SELECT doc_id, lang,
                length(text) AS n_chars_calc,
-               length(text) - length(replace(text, ' ', '')) + 1 AS n_words,
-               round(CAST(length(replace(text, ' ', '')) AS DOUBLE) /
-                     (length(text) - length(replace(text, ' ', '')) + 1), 4)
+               {WORD_COUNT_SQL} AS n_words,
+               round(CAST(length(replace(text, ' ', '')) AS DOUBLE) / {WORD_COUNT_SQL}, 4)
                    AS avg_word_len
         FROM documents
     """,
@@ -52,7 +71,7 @@ from seisdb_spark.queries.ext_common import (
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     nosp = F.length(F.translate(F.col("text"), " ", ""))
-    n_words = F.length("text") - nosp + 1
+    n_words = word_count()
     return docs.select(
         "doc_id",
         "lang",
@@ -64,13 +83,11 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "token_count_by_lang",
-    oracle="""
+    oracle=f"""
         SELECT lang,
                count(*) AS n_docs,
-               CAST(sum(length(text) - length(replace(text, ' ', '')) + 1) AS BIGINT)
-                   AS total_tokens,
-               round(avg(length(text) - length(replace(text, ' ', '')) + 1), 4)
-                   AS avg_tokens
+               CAST(sum({WORD_COUNT_SQL}) AS BIGINT) AS total_tokens,
+               round(avg({WORD_COUNT_SQL}), 4) AS avg_tokens
         FROM documents
         GROUP BY lang
     """,
@@ -80,9 +97,8 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def token_count_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    n_words = F.length("text") - F.length(F.translate(F.col("text"), " ", "")) + 1
     return (
-        docs.select("lang", n_words.alias("nw"))
+        docs.select("lang", word_count().alias("nw"))
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -96,11 +112,8 @@ def token_count_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_quality_score",
     oracle=f"""
         SELECT doc_id,
-               round(CAST(len(regexp_extract_all(text, '{STOPWORD_PATTERN}')) AS DOUBLE)
-                     / (length(text) - length(replace(text, ' ', '')) + 1), 4)
-                   AS stopword_ratio,
-               CASE WHEN length(text) - length(replace(text, ' ', '')) + 1
-                         BETWEEN 20 AND 1000
+               round({STOPWORD_RATIO_SQL}, 4) AS stopword_ratio,
+               CASE WHEN {WORD_COUNT_SQL} BETWEEN 20 AND 1000
                     THEN 1 ELSE 0 END AS length_ok
         FROM documents
     """,
@@ -110,12 +123,10 @@ def token_count_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    n_words = F.length("text") - F.length(F.translate(F.col("text"), " ", "")) + 1
-    hits = F.size(F.regexp_extract_all(F.col("text"), F.lit(STOPWORD_PATTERN), 0))
     return docs.select(
         "doc_id",
-        F.round(hits.cast("double") / n_words, 4).alias("stopword_ratio"),
-        F.when(n_words.between(20, 1000), 1).otherwise(0).alias("length_ok"),
+        F.round(stopword_ratio(), 4).alias("stopword_ratio"),
+        F.when(word_count().between(20, 1000), 1).otherwise(0).alias("length_ok"),
     )
 
 
@@ -502,14 +513,9 @@ def multimodal_header_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         SELECT doc_id,
                CASE
-                   WHEN length(text) - length(replace(text, ' ', '')) + 1 < 20
-                       THEN 'drop:too_short'
-                   WHEN length(text) - length(replace(text, ' ', '')) + 1 > 1000
-                       THEN 'drop:too_long'
-                   WHEN CAST(len(regexp_extract_all(text, '{STOPWORD_PATTERN}'))
-                             AS DOUBLE)
-                        / (length(text) - length(replace(text, ' ', '')) + 1) > 0.5
-                       THEN 'drop:stopword_heavy'
+                   WHEN {WORD_COUNT_SQL} < 20 THEN 'drop:too_short'
+                   WHEN {WORD_COUNT_SQL} > 1000 THEN 'drop:too_long'
+                   WHEN {STOPWORD_RATIO_SQL} > 0.5 THEN 'drop:stopword_heavy'
                    ELSE 'keep'
                END AS verdict
         FROM documents
@@ -521,17 +527,11 @@ def multimodal_header_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def quality_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    n_words = F.length("text") - F.length(F.translate(F.col("text"), " ", "")) + 1
-    ratio = (
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(STOPWORD_PATTERN), 0)).cast(
-            "double"
-        )
-        / n_words
-    )
+    n_words = word_count()
     verdict = (
         F.when(n_words < 20, "drop:too_short")
         .when(n_words > 1000, "drop:too_long")
-        .when(ratio > 0.5, "drop:stopword_heavy")
+        .when(stopword_ratio() > 0.5, "drop:stopword_heavy")
         .otherwise("keep")
     )
     return docs.select("doc_id", verdict.alias("verdict"))

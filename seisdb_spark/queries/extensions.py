@@ -14,8 +14,11 @@ Portability discipline for the oracles:
   * dot products are generated as an explicit left-associated term chain so
     both engines accumulate in the same IEEE-754 order (bit-identical);
   * hex-digit parsing: Spark ``conv(d,16,10)`` vs DuckDB ``strpos(alphabet,d)-1``;
-  * Jaccard is computed relationally (shingle join + integer counts), never
-    via engine-specific list set-ops.
+  * the oracles compute Jaccard relationally (shingle join + integer
+    counts), never via engine-specific list set-ops.  The Spark side may
+    use ``collect_set``/``array_intersect``: it needs only the set sizes,
+    which are exact integers in any engine, so both sides divide the same
+    two integers.
 
 Scale notes (the round-1 verdict's fix list, addressed):
   * MinHash-LSH is real LSH now: word 3-shingles, 12 hashes in 4 bands x 3

@@ -297,20 +297,22 @@ def test_lsh_candidates_share_one_signature_exchange(spark):
 )
 def test_jaccard_on_candidates_explodes_the_corpus_once(spark, name, n_scans):
     """``_jaccard_on_candidates`` explodes the whole corpus into shingles
-    once, for the signatures.  Its three verify branches (set sizes, both
-    sides of the intersection join) each re-explode only the candidate
-    docs: their Generate sits above the LeftSemi join with the broadcast
-    candidate set.  curation_keep_set reads the documents table 4 times
-    because its decontamination and gate filters are pushed into
-    separate scans."""
-    from seisdb_spark.plancheck import final_plan, run_plan
+    once, for the signatures.  Its verify explodes only the candidate
+    docs, once, to collect each one's shingle set: that Generate sits
+    above the LeftSemi join with the broadcast candidate set.
+    dedup_jaccard_pairs runs 7 shuffle exchanges at sf0.01.
+    curation_keep_set reads the documents table 4 times because its
+    decontamination and gate filters are pushed into separate scans."""
+    from seisdb_spark.plancheck import count_exchanges, final_plan, run_plan
 
     df = REGISTRY[name].spark(spark, SF_DIR)
     run_plan(df)
     plan = final_plan(df)
     assert plan.count("FileScan parquet") == n_scans
     semi = ["LeftSemi" in t for t in _subtrees(plan, _SHINGLE_GENERATE)]
-    assert sorted(semi) == [False, True, True, True]
+    assert sorted(semi) == [False, True]
+    if name == "dedup_jaccard_pairs":
+        assert count_exchanges(plan) == 7
 
 
 DEGENERATE_DOCS = {
@@ -350,6 +352,34 @@ def test_near_dup_primitives_on_degenerate_docs(spark, case):
     assert rows(decon_report(decon_join(docs))) == []
     for cc in (cc_exact_lazy, cc_auto):
         assert rows(curate(docs, cc=cc)) == []
+
+
+# (shingle rows, candidate pairs, expected (doc_a, doc_b, jaccard) rows)
+VERIFY_CASES = {
+    # no shared shingle; doc 3 has no shingle at all
+    "disjoint": ([(1, "x"), (1, "y"), (2, "z")], [(1, 2), (1, 3)], []),
+    # repeated (doc_id, sh) rows: the sets are {x, y} and {x, z}
+    "repeated": (
+        [(1, "x"), (1, "x"), (1, "y"), (2, "x"), (2, "x"), (2, "z")],
+        [(1, 2)],
+        [(1, 2, 1 / 3)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(VERIFY_CASES))
+def test_verify_jaccard_scores_shingle_sets(spark, case):
+    """``_verify_jaccard`` scores each candidate pair from its two shingle
+    sets: a pair that shares no shingle gives no row, and a shingle table
+    with repeated (doc_id, sh) rows scores as its distinct table does."""
+    from seisdb_spark.queries.extensions import _verify_jaccard
+
+    sh_rows, cand_rows, want = VERIFY_CASES[case]
+    sh = spark.createDataFrame(sh_rows, "doc_id long, sh string")
+    cand = spark.createDataFrame(cand_rows, "doc_a long, doc_b long")
+    rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+    assert rows(_verify_jaccard(sh, cand)) == want
+    assert rows(_verify_jaccard(sh.distinct(), cand)) == want
 
 
 @pytest.mark.parametrize("n_vecs", [64, 4096])

@@ -14,7 +14,7 @@ which is exactly what records them.
 Usage:
     python tools/dump_plans.py before [query ...]      # default: bench set
     python tools/dump_plans.py after graph_kcore_membership ...
-Writes plans/r26/<query>_<tag>.txt (override dir with --out-dir).
+Writes plans/r27/<query>_<tag>.txt (override dir with --out-dir).
 """
 
 from __future__ import annotations
@@ -40,7 +40,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("tag", choices=["before", "after"])
     ap.add_argument("names", nargs="*")
-    ap.add_argument("--out-dir", default="plans/r26")
+    ap.add_argument("--out-dir", default="plans/r27")
     ap.add_argument(
         "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
