@@ -37,7 +37,8 @@ Two forms:
   list once, counts it, and picks the single-task form below
   :data:`CC_SINGLE_TASK_MAX_EDGES` edges and the distributed form above.
   ``build_training_set`` (the production composition) routes through
-  this, so a web-scale dup-pair list never funnels into one task.
+  it (as :func:`cc_auto_held`, which hands back the checkpoints for
+  release), so a web-scale dup-pair list never funnels into one task.
 """
 
 from __future__ import annotations
@@ -68,7 +69,9 @@ def release_checkpoint(df: DataFrame) -> None:
     round's blocks for the query lifetime (r14 advice).  Safe ONLY for
     checkpoints the caller created and will never read again: a
     localCheckpointed RDD has no lineage to recompute from once its
-    blocks are dropped.
+    blocks are dropped.  ``df`` may be the checkpoint itself or column
+    projections of it (the labeling :func:`connected_components`
+    returns).
 
     A py4j surface drift (``queryExecution().analyzed().rdd()`` moving)
     would silently turn every release into a no-op and let long cascades
@@ -78,7 +81,11 @@ def release_checkpoint(df: DataFrame) -> None:
     the persistent-RDD count does not grow with the round count."""
     global _RELEASE_FAILED_ONCE
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        plan = df._jdf.queryExecution().analyzed()
+        # a column selection or rename over a checkpoint reads its blocks
+        while plan.nodeName() == "Project":
+            plan = plan.child()
+        plan.rdd().unpersist(False)
     except Exception:
         # non-checkpoint input / py4j drift: leak, don't crash — the
         # blocks die with the session either way.  But say so ONCE.
@@ -575,6 +582,27 @@ def connected_components(
 CC_SINGLE_TASK_MAX_EDGES = 5_000_000
 
 
+def cc_auto_held(
+    pairs: DataFrame,
+    src: str = "doc_a",
+    dst: str = "doc_b",
+    max_single_task_edges: int = CC_SINGLE_TASK_MAX_EDGES,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """:func:`cc_auto` that hands its checkpoints to the caller: returns
+    ``(members, checkpoints)``, the persisted frames ``members`` reads —
+    the pair checkpoint, and on the distributed branch the final
+    labeling too.  Release each with :func:`release_checkpoint` once
+    ``members`` will not be read again; otherwise they stay persisted for
+    the session's lifetime."""
+    edges = pairs.select(
+        F.col(src).cast("long").alias(src), F.col(dst).cast("long").alias(dst)
+    ).localCheckpoint(eager=True)
+    if edges.count() <= max_single_task_edges:
+        return cc_exact_lazy(edges, src, dst), [edges]
+    labels, _rounds = connected_components(edges, src, dst)
+    return labels, [edges, labels]
+
+
 def cc_auto(
     pairs: DataFrame,
     src: str = "doc_a",
@@ -586,11 +614,7 @@ def cc_auto(
     form without recomputing the LSH verify), count it, and dispatch:
     single-task union-find when the edge list fits one task, distributed
     pointer jumping when it doesn't.  Runs jobs — never use in a lazy
-    ``queries()`` plan builder (those hard-code :func:`cc_exact_lazy`)."""
-    edges = pairs.select(
-        F.col(src).cast("long").alias(src), F.col(dst).cast("long").alias(dst)
-    ).localCheckpoint(eager=True)
-    if edges.count() <= max_single_task_edges:
-        return cc_exact_lazy(edges, src, dst)
-    labels, _rounds = connected_components(edges, src, dst)
-    return labels
+    ``queries()`` plan builder (those hard-code :func:`cc_exact_lazy`).
+    Its checkpoints live as long as the session; :func:`cc_auto_held`
+    returns them for release."""
+    return cc_auto_held(pairs, src, dst, max_single_task_edges)[0]

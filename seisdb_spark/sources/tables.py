@@ -360,7 +360,9 @@ def write_training_shards(
         .partitionBy("shard")
         .parquet(path)
     )
-    written = df.sparkSession.read.parquet(path)
+    # read back with the schema written: inferring it would run a footer
+    # job, and the partition column reads back as the int it was written
+    written = df.sparkSession.read.schema(out.schema).parquet(path)
     return shard_manifest(written, key, salt)
 
 

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 
 import duckdb
@@ -35,10 +36,15 @@ NSPEC = 3
 NPROCS = 2
 
 
+_JOB_GROUPS = itertools.count()
+
+
 def jobs_run(spark, action) -> int:
     """Number of Spark jobs ``action()`` runs, through ``statusTracker``."""
     sc = spark.sparkContext
-    group = f"test-jobs-{id(action)}"
+    # a fresh group per call: an id() is reused once its object is
+    # collected, and a reused group would count the earlier call's jobs too
+    group = f"test-jobs-{next(_JOB_GROUPS)}"
     sc.setJobGroup(group, "counted action")
     try:
         action()

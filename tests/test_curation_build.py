@@ -10,6 +10,7 @@ import os
 import re
 
 import pandas as pd
+import pytest
 
 from seisdb_spark.curation import (
     MAX_STOPWORD_RATIO,
@@ -19,7 +20,7 @@ from seisdb_spark.curation import (
 )
 from seisdb_spark.queries.extensions import JACCARD_THRESHOLD, SAMPLE_RATES
 from seisdb_spark.queries.registry import REGISTRY
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_run
 
 
 def _decon_dropped(docs: pd.DataFrame) -> set[int]:
@@ -126,6 +127,42 @@ def test_build_training_set_matches_independent_pipeline(spark, tmp_path):
     man = manifest.toPandas()  # the returned manifest is a lazy plan
     assert int(man.n_rows.sum()) == len(want)
     assert len(want) > 0
+
+
+def test_build_training_set_runs_at_most_25_jobs(spark, tmp_path):
+    """One build reads the documents footer, checkpoints the gated,
+    exact-deduped survivors once, checkpoints and counts the verified
+    pairs, and writes the shards: at most 25 Spark jobs at sf0.01 (33
+    while the pairs and the shard write each re-ran the decontamination,
+    gate and exact-dedup lineage from the raw table, and the written
+    shards' schema was inferred back)."""
+    jobs = jobs_run(
+        spark, lambda: build_training_set(spark, SF_DIR, str(tmp_path / "t"), n_shards=4)
+    )
+    assert 0 < jobs <= 25, jobs
+
+
+def test_build_training_set_releases_its_checkpoints(spark, tmp_path):
+    """The survivor checkpoint (corpus text) and cc_auto's pair checkpoint
+    are released once the shards are written: a build leaves the
+    session's persistent-RDD count unchanged (it grew by one per build
+    while cc_auto's checkpoint was kept)."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    manifest = build_training_set(spark, SF_DIR, str(tmp_path / "t"), n_shards=4)
+    after = jsc.getPersistentRDDs().size()
+    # <= 0: the async ContextCleaner may reclaim an earlier test's RDD
+    # between the two samples
+    assert after - before <= 0, f"{after - before} checkpoints retained"
+    assert manifest.count() == 4  # the manifest reads the written shards
+
+
+def test_build_training_set_rejects_unknown_sample_before_any_job(spark, tmp_path):
+    def build():
+        with pytest.raises(ValueError, match="unknown sample mode"):
+            build_training_set(spark, SF_DIR, str(tmp_path / "t"), sample="uniform")
+
+    assert jobs_run(spark, build) == 0
 
 
 def test_curate_stopword_gate_fires(spark):

@@ -8,7 +8,14 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from seisdb_spark.functions.graph import cc_auto, cc_exact_lazy, connected_components
+from seisdb_spark.functions.graph import (
+    CC_SINGLE_TASK_MAX_EDGES,
+    cc_auto,
+    cc_auto_held,
+    cc_exact_lazy,
+    connected_components,
+    release_checkpoint,
+)
 from seisdb_spark.queries.registry import REGISTRY
 from tests.conftest import SF_DIR
 
@@ -132,6 +139,25 @@ def test_cc_auto_dispatches_by_edge_count(spark):
     dist_path = cc_auto(pairs, max_single_task_edges=0)
     assert {r.v: r.component for r in dist_path.collect()} == lazy
     assert len(lazy) > 0
+
+
+@pytest.mark.parametrize("max_edges", [CC_SINGLE_TASK_MAX_EDGES, 0])
+def test_cc_auto_held_hands_back_every_checkpoint(spark, max_edges):
+    """cc_auto_held returns the checkpoints its members read — the pair
+    checkpoint, and on the distributed branch the final labeling too —
+    and releasing them leaves the persistent-RDD count where it was."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    pairs = _pairs_df(spark, [(1, 2), (2, 3), (5, 4)])
+    members, held = cc_auto_held(pairs, max_single_task_edges=max_edges)
+    assert {r.v: r.component for r in members.collect()} == {
+        1: 1, 2: 1, 3: 1, 4: 4, 5: 4
+    }
+    assert len(held) == (1 if max_edges else 2)
+    for df in held:
+        release_checkpoint(df)
+    after = jsc.getPersistentRDDs().size()
+    assert after - before <= 0, f"{after - before} checkpoints retained"
 
 
 def test_dedup_cluster_query_is_closure_of_pairs(spark):

@@ -8,14 +8,16 @@ import hashlib
 import os
 
 import pandas as pd
+import pytest
 
+from seisdb_spark.queries.extensions import packing_assignment
 from seisdb_spark.sources.tables import (
     load_table,
     shard_assignment,
     shard_manifest,
     write_training_shards,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_run
 
 N = 8
 
@@ -85,3 +87,27 @@ def test_salt_changes_assignment(spark):
     a = docs.select(shard_assignment("doc_id", N).alias("s")).toPandas().s
     b = docs.select(shard_assignment("doc_id", N, salt="v2").alias("s")).toPandas().s
     assert not (a == b).all(), "salt must reshuffle shard assignment"
+
+@pytest.mark.parametrize(("key", "n_jobs"), [("doc_id", 2), ("text", 3)])
+def test_write_training_shards_reads_back_the_written_schema(spark, tmp_path, key, n_jobs):
+    """The manifest is built over the shards read back with the schema
+    that was written (the frame's columns plus ``shard int``), so the
+    read-back runs no footer job: the call runs the write's jobs only, 2
+    for a plain frame and 3 for a packed one with its extra columns (3
+    and 4 while the schema was inferred).  The manifest still equals the
+    one over the frame itself."""
+    docs = spark.createDataFrame(
+        [(i, "en", f"w{i} x y{i % 3}") for i in range(40)],
+        "doc_id long, lang string, text string",
+    )
+    df = docs if key == "doc_id" else packing_assignment(docs, n_shards=4)
+    manifests = []
+
+    def write():
+        manifests.append(write_training_shards(df, str(tmp_path / key), key, n_shards=4))
+
+    assert jobs_run(spark, write) == n_jobs
+    want = shard_manifest(df.withColumn("shard", shard_assignment(key, 4)), key)
+    assert sorted(map(tuple, manifests[0].collect())) == sorted(
+        map(tuple, want.collect())
+    )

@@ -11,10 +11,17 @@ appends the loop's per-round executed plans from
 ``functions.graph.LAST_SUPERSTEPS``; building the plan runs the loop once,
 which is exactly what records them.
 
+``build_training_set`` is an action path that runs several SQL
+executions — checkpoints, a count, the shard write, the manifest
+collect — so for it the tool runs the build once and dumps every
+execution it ran, in order, with the executed (AQE-final) plan from the
+session's SQL status store.
+
 Usage:
     python tools/dump_plans.py before [query ...]      # default: bench set
     python tools/dump_plans.py after graph_kcore_membership ...
-Writes plans/r27/<query>_<tag>.txt (override dir with --out-dir).
+    python tools/dump_plans.py after build_training_set
+Writes plans/r28/<query>_<tag>.txt (override dir with --out-dir).
 """
 
 from __future__ import annotations
@@ -23,6 +30,7 @@ import argparse
 import io
 import os
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -36,11 +44,30 @@ ROUND_PLAN_SOURCES = {
 }
 
 
+def executed_plans(spark, action) -> list[str]:
+    """Run ``action()`` and return one block per SQL execution it ran:
+    its id, the API call that ran it and its executed (AQE-final)
+    formatted plan."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    listeners = spark.sparkContext._jsc.sc().listenerBus()
+    listeners.waitUntilEmpty(30_000)
+    first = store.executionsCount()
+    action()
+    listeners.waitUntilEmpty(30_000)
+    execs = store.executionsList(first, store.executionsCount() - first)
+    return [
+        # the description is "<call> at <file>:<line>"; keep the call
+        f"\n-- execution {e.executionId()}: {e.description().split(' at ')[0]} --\n"
+        f"{e.physicalPlanDescription()}\n"
+        for e in (execs.apply(i) for i in range(execs.size()))
+    ]
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("tag", choices=["before", "after"])
     ap.add_argument("names", nargs="*")
-    ap.add_argument("--out-dir", default="plans/r27")
+    ap.add_argument("--out-dir", default="plans/r28")
     ap.add_argument(
         "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
@@ -57,6 +84,21 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     for name in sorted(names):
+        if name == "build_training_set":
+            from seisdb_spark.curation import build_training_set
+
+            with tempfile.TemporaryDirectory() as tmp:
+                blocks = executed_plans(
+                    spark,
+                    lambda: build_training_set(spark, args.sf_dir, tmp).collect(),
+                )
+            head = (f"== {name} [{args.tag}] sf_dir={args.sf_dir}: "
+                    f"{len(blocks)} SQL executions ==\n")
+            path = os.path.join(args.out_dir, f"{name}_{args.tag}.txt")
+            with open(path, "w") as fh:
+                fh.write("".join([head, *blocks]))
+            print(f"wrote {path}")
+            continue
         # a fixpoint loop runs in this call, recording the round plans
         # appended below
         df = REGISTRY[name].spark(spark, args.sf_dir)
